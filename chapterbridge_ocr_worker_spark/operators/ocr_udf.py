@@ -26,15 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..engine.base import get_engine
-from ..engine.inner import dispatch, lines_to_text, run_adaptive
+from ..engine.inner import lines_to_text, run_adaptive
 from ..schemas import ERROR_TRUNCATE, OCR_RESULT
 
 
-def _ocr_batches(
-    batches: Iterator[pd.DataFrame], mode: str = "adaptive"
-) -> Iterator[pd.DataFrame]:
+def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     engine = get_engine()  # per-worker lazy singleton
-    runner = run_adaptive if mode == "adaptive" else dispatch
     for pdf in batches:
         out: dict[str, list] = {f.name: [] for f in OCR_RESULT.fields}
         for doc_id, offset, media_ref, content in zip(
@@ -55,7 +52,7 @@ def _ocr_batches(
             try:
                 if content is None:
                     raise ValueError("media_ref has no content (missing blob)")
-                res = runner(bytes(content), engine)
+                res = run_adaptive(bytes(content), engine)
                 lines = res["lines"]
                 row.update(
                     text=lines_to_text(lines),
@@ -75,22 +72,15 @@ def _ocr_batches(
         yield pd.DataFrame(out)
 
 
-def ocr_media_spans(media_spans: DataFrame, mode: str = "adaptive") -> DataFrame:
+def ocr_media_spans(media_spans: DataFrame) -> DataFrame:
     """media_spans: (doc_id, offset, media_ref, content) -> OCR_RESULT rows.
 
     Input should already be repartitioned by xxhash64(doc_id, offset) (see
-    operators/skew.py) so heavy pages spread across the cluster.
-
-    mode: "adaptive" (default) pins the flagship per-image loop
-    (run_adaptive — the path the reference runs in production with
-    OCR_ADAPTIVE=true); "env" defers to the reference's env-driven mode
-    dispatch (main.py:129-166), whose out-of-the-box default is the legacy
-    auto-tiling path. Explicit here so executors never depend on env drift.
+    operators/skew.py) so heavy pages spread across the cluster. The
+    per-image loop is pinned to run_adaptive (the path the reference runs
+    in production with OCR_ADAPTIVE=true), so executors never depend on env
+    drift.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from _ocr_batches(batches, mode=mode)
-
     return media_spans.select("doc_id", "offset", "media_ref", "content").mapInPandas(
-        run, schema=OCR_RESULT
+        _ocr_batches, schema=OCR_RESULT
     )

@@ -36,11 +36,13 @@ def split_media_text(spans: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def reassemble(text_spans: DataFrame, ocr_spans: DataFrame) -> DataFrame:
     """Merge untouched text spans with OCR'd media spans back into ordered
-    per-doc span arrays.
+    per-doc span arrays: (doc_id, spans, failed).
 
-    ocr_spans: (doc_id, offset, media_ref, text) — text is the recognized
-    content (null if that span dead-lettered; the span is still emitted so
-    the sequence stays complete).
+    ocr_spans: (doc_id, offset, media_ref, text, error) — text is the
+    recognized content (null if that span dead-lettered; the span is still
+    emitted so the sequence stays complete). ``failed`` is true for a doc
+    with >= 1 dead-lettered span, carried out of the same groupBy so the
+    committed/failed split downstream is a filter, not a join.
     """
     media_out = ocr_spans.select(
         "doc_id",
@@ -48,8 +50,11 @@ def reassemble(text_spans: DataFrame, ocr_spans: DataFrame) -> DataFrame:
         "text",
         "media_ref",
         "offset",
+        F.col("error").isNotNull().alias("failed"),
     )
-    text_out = text_spans.select("doc_id", "kind", "text", "media_ref", "offset")
+    text_out = text_spans.select(
+        "doc_id", "kind", "text", "media_ref", "offset", F.lit(False).alias("failed")
+    )
     merged = text_out.unionByName(media_out)
     # struct field order puts offset first so array_sort's lexicographic
     # struct comparison sorts by offset; then restore the input field order.
@@ -58,7 +63,8 @@ def reassemble(text_spans: DataFrame, ocr_spans: DataFrame) -> DataFrame:
         .agg(
             F.array_sort(
                 F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-            ).alias("ordered")
+            ).alias("ordered"),
+            F.max("failed").alias("failed"),
         )
         .select(
             "doc_id",
@@ -71,5 +77,6 @@ def reassemble(text_spans: DataFrame, ocr_spans: DataFrame) -> DataFrame:
                     s["offset"].alias("offset"),
                 ),
             ).alias("spans"),
+            "failed",
         )
     )

@@ -47,26 +47,21 @@ def split_failures(ocr_results: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ok, failures
 
 
-def build_lineage(assembled: DataFrame, failures: DataFrame | None = None) -> DataFrame:
+def build_lineage(completed: DataFrame) -> DataFrame:
     """Lineage rows for completed docs: output_ref derived from the first
     media span's key (fallback: doc_id — the unknown/unknown path,
     key_parser.py:53-60), sha256 + byte size of the serialized span JSON
     (utils.py:25-27 sha256; main.py:186-203).
 
-    ``failures`` (the dead-letter rows of this run): docs with >=1 failed
-    span are EXCLUDED from lineage, so the resume anti-join retries them on
+    ``completed`` must hold only fully-successful docs: a doc with >= 1
+    failed span stays out of lineage, so the resume anti-join retries it on
     the next run — the reference marks failed jobs retryable
     (set_job_failed, main.py:236-242) and only skips work whose output
-    already exists (main.py:107-120). Without the exclusion a transient
-    failure (missing blob, OOM'd decode) would be skipped forever."""
-    if failures is not None:
-        assembled = assembled.join(
-            failures.select("doc_id").distinct(), "doc_id", "left_anti"
-        )
+    already exists (main.py:107-120)."""
     serialized = F.to_json(F.col("spans"))
     # F.get (not [0]) — null, not error, for docs with no media spans
     first_media = F.get(F.filter("spans", lambda s: s["kind"] == F.lit("media")), 0)
-    return assembled.select(
+    return completed.select(
         "doc_id",
         output_key(first_media["media_ref"], F.col("doc_id")).alias("output_ref"),
         F.length(serialized).cast("long").alias("byte_size"),

@@ -3,14 +3,16 @@
 One declarative DataFrame job replacing the reference's poll/claim/process
 daemon (workers/ocr/main.py:220-255). Stages (SURVEY.md §3.1):
 
-    documents ──anti-join lineage──> pending
-    pending ──posexplode spans──> span rows
+    documents ──anti-join lineage──> pending (persisted)
+    pending ──explode spans──> span rows
         ├─ kind='text'  ──────────────────────────┐
         └─ kind='media' ─join media blobs─ repartition(xxhash64(doc_id,offset))
-                          ─mapInPandas OCR─ split ok/failures
-                                              │            └─> failures table
-    text ∪ ok ──groupBy doc_id, array_sort(collect_list)──> output docs
-    output ──> output table, lineage table, checkpoint metrics
+                          ─mapInPandas OCR (persisted)
+    text ∪ OCR'd ──groupBy doc_id, array_sort(collect_list), max(failed)──> output
+    commit, in this order (write_run):
+        ocr_output (output where not failed) -> failures (OCR error rows)
+        -> checkpoint (per-partition metrics) -> ocr_json (committed docs'
+        pages) -> lineage (the resume marker, last)
 
 Plan properties to preserve at 100 TB (verify with .explain("formatted")):
 - the media-blob join is a plain shuffled hash join on media_ref (both sides
@@ -24,7 +26,7 @@ Plan properties to preserve at 100 TB (verify with .explain("formatted")):
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,11 +42,11 @@ from .sources import tables
 
 @dataclass
 class PipelineResult:
+    # every pending doc as (doc_id, spans, failed); failed docs keep their
+    # dead-lettered media spans with text=null
     output: DataFrame
-    failures: DataFrame
-    lineage: DataFrame
+    # one OCR_RESULT row per media span, ok and failed
     ocr_all: DataFrame
-    stats: dict = field(default_factory=dict)
 
 
 def run_extraction(
@@ -53,29 +55,24 @@ def run_extraction(
     media: DataFrame,
     lineage: DataFrame | None = None,
     num_partitions: int | None = None,
-    explicit_repartition: bool = True,
 ) -> PipelineResult:
     """Build (lazily) the full extraction DAG. Caller materializes via
     write_run / collect. ``lineage`` (previous runs' done docs) enables
     resume.
 
-    explicit_repartition: hash-spread span work units (xxhash64(doc_id,
-    offset)) to num_partitions before the OCR UDF. Default ON, and the
-    reason is AQE: AQE sizes post-shuffle partitions by BYTES (64 MB
-    advisory), but the OCR UDF is COMPUTE-bound — on a corpus of small
-    images AQE coalesces the media-join output to a handful of partitions
-    and strangles the UDF (measured 42 s -> 18 s at local[32] with a
-    calibrated compute-bound stub when the explicit repartition pins the
-    partition count). Turn OFF only for decode-light/IO-bound passes where
-    the extra shuffle of image bytes (~25-35% of wall) isn't paid back."""
+    Span work units are hash-spread (xxhash64(doc_id, offset)) to
+    num_partitions before the OCR UDF, because AQE sizes post-shuffle
+    partitions by BYTES (64 MB advisory) while the OCR UDF is
+    COMPUTE-bound: on a corpus of small images AQE would coalesce the
+    media-join output to a handful of partitions and strangle the UDF
+    (measured 42 s -> 18 s at local[32] with a calibrated compute-bound
+    stub when the repartition pins the partition count)."""
     # 4 tasks per slot: per-image cost varies 10-20x (NO_TILE page vs a
     # 30k-px webtoon), so 1 task/slot lets one slow partition gate the whole
     # stage (measured 2.3x run-to-run variance at local[32]); finer tasks
     # let the scheduler rebalance.
     n = num_partitions or spark.sparkContext.defaultParallelism * 4
-    pending = pending_documents(documents, lineage)
-
-    spans = explode_spans(pending)
+    spans = explode_spans(pending_documents(documents, lineage))
     media_spans, text_spans = split_media_text(spans)
 
     # join span -> blob bytes on media_ref. Media side carries the bytes, so
@@ -84,25 +81,14 @@ def run_extraction(
     with_bytes = media_spans.select("doc_id", "offset", "media_ref").join(
         media.select("media_ref", "content"), "media_ref", "left"
     )
-
-    distributed = repartition_spans(with_bytes, n) if explicit_repartition else with_bytes
-    ocr_results = ocr_media_spans(distributed)
-    _, failures = split_failures(ocr_results)
+    ocr_results = ocr_media_spans(repartition_spans(with_bytes, n))
 
     # ALL media spans (failed ones keep text=null) re-enter the document so
     # the span sequence stays complete; failures additionally dead-letter.
     assembled = reassemble(
-        text_spans, ocr_results.select("doc_id", "offset", "media_ref", "text")
+        text_spans, ocr_results.select("doc_id", "offset", "media_ref", "text", "error")
     )
-    # docs with a failed span stay OUT of lineage -> the next run's anti-join
-    # retries them (reference retryable-failure semantics, main.py:236-242)
-    lineage_out = build_lineage(assembled, failures)
-    return PipelineResult(
-        output=assembled,
-        failures=failures,
-        lineage=lineage_out,
-        ocr_all=ocr_results,
-    )
+    return PipelineResult(output=assembled, ocr_all=ocr_results)
 
 
 def write_run(
@@ -113,68 +99,75 @@ def write_run(
     num_partitions: int | None = None,
     force: bool = False,
 ) -> dict:
-    """Materialize one (resumable) run into the warehouse directory.
+    """Materialize one (resumable) run into the warehouse directory — the
+    one commit path, shared by the batch job and the streaming foreachBatch.
 
-    Reads existing lineage for the anti-join; appends output/lineage/
-    failures as immutable snapshots; writes per-partition checkpoint rows.
-    Returns run stats.
+    Reads existing lineage for the resume anti-join, computes the pending
+    docs and the OCR results once each (persisted), and derives every
+    table from them. Only fully-successful docs are committed:
+    output-exists <=> lineage-row, exactly the reference's skip rule
+    (main.py:107-120 skips iff the output object exists; failed jobs stay
+    retryable, main.py:236-242). Docs with >= 1 dead-lettered span are
+    retried by the next run's anti-join. Returns run stats.
+
+    Commit order: ocr_output -> failures -> checkpoint -> ocr_json ->
+    lineage. Lineage is the resume marker, so it goes last (the reference
+    uploads the JSON before it records the job done, main.py:191-216). A
+    crash before the lineage append leaves this run's docs pending; the
+    rerun appends them again, and the duplicates are absorbed by
+    latest-wins reads: read_table_latest(..., "ocr_output", keys=["doc_id"])
+    and read_table_latest(..., "ocr_json", keys=["doc_id", "offset"]).
+    failures and checkpoint are per-attempt logs (one snapshot per
+    attempt). A crash after the lineage append loses nothing.
 
     force=True skips the lineage anti-join and reprocesses everything —
     the reference's `--force` reprocess flag (enqueue.py / main.py:107:
-    "if not force: skip when output exists"). Output/lineage append new
-    snapshots, so reprocessed doc_ids exist in MULTIPLE snapshots
-    afterwards: plain tables.read_table surfaces the duplicates (union
-    semantics); readers that want latest-wins use
-    tables.read_table_latest(spark, wh, "ocr_output", keys=["doc_id"]),
-    and compaction of such a table must pass the same keys
-    (tables.compact_table(..., keys=["doc_id"]) resolves the per-key
-    winners during the rewrite; a plain compact merges the snapshots and
-    forfeits latest-wins, which read_table_latest then refuses).
+    "if not force: skip when output exists"). Reprocessed doc_ids then
+    exist in MULTIPLE snapshots of every table, lineage included: plain
+    tables.read_table surfaces the duplicates (union semantics); readers
+    that want latest-wins use the keyed reads above, and compaction of
+    such a table must pass the same keys (tables.compact_table(...,
+    keys=["doc_id"]) resolves the per-key winners during the rewrite; a
+    plain compact merges the snapshots and forfeits latest-wins, which
+    read_table_latest then refuses).
     """
     prior = None if force else tables.read_table(spark, warehouse, "lineage")
-    res = run_extraction(
-        spark, documents, media, lineage=prior, num_partitions=num_partitions
-    )
+    pending = pending_documents(documents, prior)
+    # With no lineage, pending IS the caller's documents DataFrame, whose
+    # cache this function must not own (unpersist would drop the caller's).
+    cached = [] if prior is None else [pending.persist()]
+    try:
+        res = run_extraction(spark, pending, media, num_partitions=num_partitions)
+        # persisted in this order, so output reads the OCR rows and the
+        # pending docs from their caches: no second OCR pass or anti-join
+        ocr, output = res.ocr_all.persist(), res.output.persist()
+        cached += [ocr, output]
 
-    # Cache the OCR stage (the expensive part) so reassembly, metrics and
-    # the failure split all reuse it instead of re-running the UDF.
-    t0 = time.time()
-    ocr_cached = res.ocr_all.persist()
-    ocr_cached.count()  # materialize the OCR work under the timer
-    wall = time.time() - t0
+        t0 = time.time()
+        ocr.count()  # materialize the OCR work under the timer
+        wall = time.time() - t0
 
-    ok, failures = split_failures(ocr_cached)
-    assembled = reassemble(
-        explode_spans(pending_documents(documents, prior)).filter(
-            F.col("kind") == "text"
-        ),
-        ocr_cached.select("doc_id", "offset", "media_ref", "text"),
-    )
-    # Only fully-successful docs are committed: output-exists <=> lineage-row,
-    # exactly the reference's skip rule (main.py:107-120 skips iff the output
-    # object exists; failed jobs stay retryable, main.py:236-242). Docs with
-    # >=1 dead-lettered span are retried by the next run's anti-join.
-    completed = assembled.join(
-        failures.select("doc_id").distinct(), "doc_id", "left_anti"
-    ).persist()
-    n_docs = completed.count()
-    n_failed = failures.select("doc_id").distinct().count()
+        n_docs, n_failed = output.agg(
+            F.count_if(~F.col("failed")), F.count_if("failed")
+        ).first()
+        completed = output.filter(~F.col("failed")).drop("failed")
+        # per-page reference-shaped JSON output docs (F13), the upload
+        # payload the reference puts to R2 per job, for committed docs only:
+        # pages with no match in the (small) failed-id set
+        ok, failures = split_failures(ocr)
+        failed_ids = output.filter("failed").select("doc_id", "failed")
+        pages = ok.join(failed_ids, "doc_id", "left").filter(F.col("failed").isNull())
 
-    tables.append_snapshot(completed, warehouse, "ocr_output")
-    tables.append_snapshot(build_lineage(completed), warehouse, "lineage")
-    tables.append_snapshot(failures, warehouse, "failures")
-    tables.append_snapshot(checkpoint_rows(ok, wall), warehouse, "checkpoint")
-    # per-page reference-shaped JSON output docs (F13) — the upload payload
-    # the reference puts to R2 per job. Restricted to committed docs so the
-    # ocr_json table stays exactly-once under the retry semantics above.
-    ok_committed = ok.join(
-        failures.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    tables.append_snapshot(
-        serialize_output_documents(build_output_documents(ok_committed)),
-        warehouse,
-        "ocr_json",
-    )
-    completed.unpersist()
-    ocr_cached.unpersist()
+        tables.append_snapshot(completed, warehouse, "ocr_output")
+        tables.append_snapshot(failures, warehouse, "failures")
+        tables.append_snapshot(checkpoint_rows(ok, wall), warehouse, "checkpoint")
+        tables.append_snapshot(
+            serialize_output_documents(build_output_documents(pages)),
+            warehouse,
+            "ocr_json",
+        )
+        tables.append_snapshot(build_lineage(completed), warehouse, "lineage")
+    finally:
+        for df in cached:
+            df.unpersist()
     return {"docs": n_docs, "failed_docs": n_failed, "wall_seconds": wall}

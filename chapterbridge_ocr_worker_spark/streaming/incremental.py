@@ -10,8 +10,9 @@ Spark modes:
    ``trigger(availableNow=True)`` — Spark's own checkpointing tracks which
    files/snapshots were processed, giving the daemon's incremental
    semantics (new docs picked up per trigger) without a queue. Each
-   micro-batch runs the SAME batch DAG via foreachBatch, so correctness
-   and code are shared with the batch path.
+   micro-batch is committed by the batch path's own commit function,
+   pipeline.write_run, so both modes write the same tables in the same
+   order with the same crash semantics.
 
 At production scale the source would be an Iceberg table stream
 (spark.readStream.format("iceberg")); here it is the parquet directory
@@ -22,9 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import run_extraction
+from ..pipeline import write_run
 from ..schemas import DOCUMENTS
-from ..sources import tables
 
 
 def run_incremental(
@@ -38,27 +38,16 @@ def run_incremental(
     """Process any not-yet-seen document files, then stop (availableNow).
 
     Re-invoking later picks up only new files — Spark's streaming
-    checkpoint replaces the reference's job-queue claim protocol. The
-    per-doc lineage anti-join inside run_extraction additionally guards
-    against replays of a partially committed micro-batch (idempotent sink,
-    at-least-once -> effectively-once).
+    checkpoint replaces the reference's job-queue claim protocol. A
+    micro-batch that crashed mid-commit is replayed on the next trigger;
+    write_run's lineage anti-join and its lineage-last commit order make
+    the replay exactly-once under latest-wins reads (at-least-once ->
+    effectively-once).
     """
     stream = spark.readStream.schema(DOCUMENTS).parquet(docs_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        prior = tables.read_table(spark, warehouse, "lineage")
-        res = run_extraction(
-            spark, batch_df, media, lineage=prior, num_partitions=num_partitions
-        )
-        # same commit rule as write_run: output-exists <=> lineage-row, so
-        # docs with a dead-lettered span are not committed (a rerun of the
-        # doc — e.g. its file rewritten with a fixed blob — retries them)
-        completed = res.output.join(
-            res.failures.select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-        tables.append_snapshot(completed, warehouse, "ocr_output")
-        tables.append_snapshot(res.lineage, warehouse, "lineage")
-        tables.append_snapshot(res.failures, warehouse, "failures")
+        write_run(spark, batch_df, media, warehouse, num_partitions=num_partitions)
 
     q = (
         stream.writeStream.foreachBatch(process_batch)

@@ -1,3 +1,7 @@
+import contextlib
+import os
+from collections import Counter
+
 import pytest
 
 from chapterbridge_ocr_worker_spark.conf import get_spark
@@ -8,3 +12,118 @@ def spark():
     s = get_spark("tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+# --- crash-exactness: one small corpus shared by the batch and streaming
+# fault-injection tests, and the tables a crash-free write_run leaves -------
+
+
+@pytest.fixture(scope="session")
+def crash_corpus():
+    """8 docs, 8 media blobs; 2 corrupt blobs fail 2 docs, one doc has no
+    media at all."""
+    from chapterbridge_ocr_worker_spark import datagen, golden
+    from chapterbridge_ocr_worker_spark.engine.stub import StubEngine
+
+    docs, media = datagen.generate_corpus(n_docs=8, seed=4, corrupt_fraction=0.1)
+    expected, errors = golden.golden_output(docs, media, StubEngine())
+    return docs, media, expected, errors
+
+
+@pytest.fixture(scope="session")
+def crash_dfs(spark, crash_corpus):
+    from chapterbridge_ocr_worker_spark import schemas
+
+    docs, media, _, _ = crash_corpus
+    return (
+        spark.createDataFrame(docs, schema=schemas.DOCUMENTS),
+        spark.createDataFrame(media, schema=schemas.MEDIA),
+    )
+
+
+@pytest.fixture
+def crash_appends(monkeypatch):
+    """crash_appends(k, commit) is a context in which the k-th
+    tables.append_snapshot call raises "injected crash": after its snapshot
+    commits when ``commit``, before it writes anything otherwise."""
+    from chapterbridge_ocr_worker_spark.sources import tables
+
+    @contextlib.contextmanager
+    def crash(k: int, commit: bool):
+        real = tables.append_snapshot
+        calls = []
+
+        def append(df, root, name, *a, **kw):
+            calls.append(name)
+            if len(calls) != k:
+                return real(df, root, name, *a, **kw)
+            if commit:
+                real(df, root, name, *a, **kw)
+            raise RuntimeError(f"injected crash at append {k} ({name})")
+
+        with monkeypatch.context() as m:
+            m.setattr(tables, "append_snapshot", append)
+            yield calls
+
+    return crash
+
+
+def _table_state(spark, wh) -> dict:
+    """What a reader sees: lineage with multiplicity, latest-wins ocr_output
+    and ocr_json, the latest failures snapshot, and the doc_ids in any
+    ocr_output snapshot."""
+    from chapterbridge_ocr_worker_spark.sources import tables
+
+    def rows(df):
+        return [] if df is None else df.collect()
+
+    last_failures = tables.list_snapshots(wh, "failures")[-1]["name"]
+    return {
+        "lineage": Counter(r["doc_id"] for r in rows(tables.read_table(spark, wh, "lineage"))),
+        "ocr_output": {
+            r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+            for r in rows(tables.read_table_latest(spark, wh, "ocr_output", keys=["doc_id"]))
+        },
+        "ocr_json": Counter(
+            tuple(r) for r in rows(
+                tables.read_table_latest(spark, wh, "ocr_json", keys=["doc_id", "offset"])
+            )
+        ),
+        "failures": {
+            (r["doc_id"], r["media_ref"])
+            for r in spark.read.parquet(os.path.join(wh, "failures", last_failures)).collect()
+        },
+        "ocr_output_ids": {
+            r["doc_id"] for r in rows(tables.read_table(spark, wh, "ocr_output"))
+        },
+    }
+
+
+@pytest.fixture(scope="session")
+def table_state(spark):
+    return lambda wh: _table_state(spark, wh)
+
+
+@pytest.fixture(scope="session")
+def clean_state(spark, crash_corpus, crash_dfs, tmp_path_factory):
+    """Tables of one crash-free write_run over crash_corpus, checked against
+    the golden spans and error set."""
+    from chapterbridge_ocr_worker_spark.pipeline import write_run
+
+    _, _, expected, errors = crash_corpus
+    wh = str(tmp_path_factory.mktemp("clean") / "wh")
+    write_run(spark, *crash_dfs, wh)
+    state = _table_state(spark, wh)
+    failed = {d for d, spans in expected.items() if any(s[2] in errors for s in spans)}
+    committed = {d: spans for d, spans in expected.items() if d not in failed}
+    assert failed and committed
+    assert {d for d, _ in state["failures"]} == failed
+    assert {ref for _, ref in state["failures"]} == set(errors)
+    assert state["lineage"] == Counter(list(committed))  # each committed doc once
+    assert state["ocr_output"] == committed
+    assert state["ocr_output_ids"] == set(committed)
+    # one JSON page per media span of a committed doc
+    assert Counter((r[0], r[1]) for r in state["ocr_json"]) == Counter(
+        (d, s[3]) for d, spans in committed.items() for s in spans if s[0] == "media"
+    )
+    return state

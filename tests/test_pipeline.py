@@ -1,11 +1,13 @@
 """End-to-end Spark pipeline tests: span-sequence equality against the
-single-process golden, dead-letter routing, resume anti-join, lineage."""
+single-process golden, dead-letter routing, resume anti-join, lineage,
+crash-exact commits."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from chapterbridge_ocr_worker_spark import datagen, golden, schemas
 from chapterbridge_ocr_worker_spark.engine.stub import StubEngine
+from chapterbridge_ocr_worker_spark.operators.resume import build_lineage, split_failures
 from chapterbridge_ocr_worker_spark.pipeline import run_extraction, write_run
 from chapterbridge_ocr_worker_spark.sources import tables
 
@@ -55,7 +57,8 @@ def test_dead_letter_rows(spark, corpus, dfs):
     docs, media = corpus
     docs_df, media_df = dfs
     res = run_extraction(spark, docs_df, media_df)
-    fails = res.failures.collect()
+    _, failures = split_failures(res.ocr_all)
+    fails = failures.collect()
     _, errors = golden.golden_output(docs, media, StubEngine())
     # media_refs may appear in several docs; compare the set of failing refs
     assert {f["media_ref"] for f in fails} == set(errors)
@@ -148,7 +151,7 @@ def test_failed_doc_recovers_when_blob_fixed(spark, tmp_path):
 def test_lineage_schema_and_output_keys(spark, dfs):
     docs_df, media_df = dfs
     res = run_extraction(spark, docs_df, media_df)
-    rows = res.lineage.limit(50).collect()
+    rows = build_lineage(res.output.filter(~F.col("failed"))).limit(50).collect()
     assert rows
     for r in rows:
         assert r["output_ref"].startswith("derived/manhwa/")
@@ -167,3 +170,19 @@ def test_force_reprocesses_done_docs(spark, tmp_path):
     assert write_run(spark, ddf, mdf, wh)["docs"] == 0  # resume skips
     # --force semantics: reprocess despite lineage (reference enqueue --force)
     assert write_run(spark, ddf, mdf, wh, force=True)["docs"] == 6
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 4, 5])
+def test_crash_after_each_append_then_rerun_is_exact(
+    spark, crash_dfs, clean_state, table_state, crash_appends, tmp_path, k
+):
+    """A crash right after write_run's k-th table append, then a rerun
+    without the fault, leaves the tables a crash-free run leaves: lineage
+    exactly-once, latest-wins ocr_output == golden, latest-wins ocr_json ==
+    the crash-free rows, latest failures == the golden error set, and
+    ocr_output doc_ids == lineage doc_ids (see conftest.clean_state)."""
+    wh = str(tmp_path / "wh")
+    with crash_appends(k, commit=True), pytest.raises(RuntimeError, match="injected crash"):
+        write_run(spark, *crash_dfs, wh)
+    write_run(spark, *crash_dfs, wh)
+    assert table_state(wh) == clean_state

@@ -33,8 +33,8 @@ def test_dimension_joins_broadcast(spark):
 
 def test_extraction_shuffle_budget(spark):
     """The extraction DAG over pre-materialized input must stay at its
-    designed shuffle count: media join + reassembly groupBy (+1 each in the
-    AQE initial-plan echo). The explicit pre-UDF repartition is opt-in."""
+    designed shuffle count: media join (both sides), the pre-UDF
+    repartition (always on) and the reassembly groupBy."""
     import chapterbridge_ocr_worker_spark.sources.tables  # noqa: F401
     from chapterbridge_ocr_worker_spark import datagen, schemas
     from chapterbridge_ocr_worker_spark.pipeline import run_extraction

@@ -1,6 +1,8 @@
 """Streaming (availableNow) incremental extraction: new files picked up per
-trigger, previously-seen files skipped via the streaming checkpoint."""
+trigger, previously-seen files skipped via the streaming checkpoint, and a
+micro-batch that crashed mid-commit replayed exactly-once."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from chapterbridge_ocr_worker_spark import datagen, schemas
@@ -20,6 +22,10 @@ def test_incremental_two_triggers(spark, tmp_path):
     run_incremental(spark, docs_dir, media_df, wh, ckpt)
     out1 = tables.read_table(spark, wh, "ocr_output")
     assert out1.count() == 12
+    # the trigger commits every table write_run does
+    n_pages = sum(s["kind"] == "media" for d in docs[:12] for s in d["spans"])
+    assert tables.read_table(spark, wh, "ocr_json").count() == n_pages
+    assert tables.read_table(spark, wh, "checkpoint").count() > 0
 
     # new arrivals only
     second = spark.createDataFrame(docs[12:], schema=schemas.DOCUMENTS)
@@ -36,6 +42,27 @@ def test_incremental_two_triggers(spark, tmp_path):
     # lineage exactly-once
     lin = tables.read_table(spark, wh, "lineage")
     assert lin.groupBy("doc_id").count().filter(F.col("count") > 1).count() == 0
+
+
+@pytest.mark.parametrize("k", [1, 5])
+def test_replayed_epoch_after_crash_is_exact(
+    spark, crash_dfs, clean_state, table_state, crash_appends, tmp_path, k
+):
+    """foreachBatch crashes at its first table append (k=1, nothing
+    committed) or at its lineage append (k=5, everything but the resume
+    marker committed). Re-triggering on the same checkpoint replays the
+    epoch, which must leave the tables a crash-free write_run leaves."""
+    docs_df, media_df = crash_dfs
+    docs_dir = str(tmp_path / "docs_in")
+    wh = str(tmp_path / "wh")
+    ckpt = str(tmp_path / "ckpt")
+    docs_df.coalesce(1).write.parquet(docs_dir)
+
+    with crash_appends(k, commit=False) as calls, pytest.raises(Exception, match="injected crash"):
+        run_incremental(spark, docs_dir, media_df, wh, ckpt)
+    assert calls[-1] == ("ocr_output" if k == 1 else "lineage")
+    run_incremental(spark, docs_dir, media_df, wh, ckpt)
+    assert table_state(wh) == clean_state
 
 
 def test_windowed_append_watermark_drops_late_rows(spark, tmp_path):
