@@ -220,105 +220,3 @@ def lines_to_text(lines: list[LineDict]) -> str:
     """Reading-order line texts joined with newlines — the text that
     replaces a media span's content in the output document."""
     return "\n".join(l["text"] for l in lines)
-
-
-# ---------------------------------------------------------------------------
-# Legacy pipeline + mode dispatch (reference parity)
-# ---------------------------------------------------------------------------
-
-
-def deduplicate_boxes(
-    lines: list[LineDict],
-    iou_threshold: float = 0.5,
-    text_sim_threshold: float = 0.7,
-) -> list[LineDict]:
-    """Dedup v1 (reference ocr_engine.py:196-244): greedy over candidates
-    sorted by confidence DESCENDING; a later (lower-confidence) candidate
-    overlapping a kept one is dropped. Unlike v2 there is no spatial
-    early-break and no retroactive eviction — the kept set is monotone."""
-    if len(lines) <= 1:
-        return list(lines)
-    ordered = sorted(lines, key=lambda l: l["confidence"], reverse=True)
-    keep: list[LineDict] = []
-    dropped: set[int] = set()
-    for i, line1 in enumerate(ordered):
-        if i in dropped:
-            continue
-        keep.append(line1)
-        for j in range(i + 1, len(ordered)):
-            if j in dropped:
-                continue
-            line2 = ordered[j]
-            if bbox_iou(line1["bbox"], line2["bbox"]) > iou_threshold and (
-                text_similarity(line1["text"], line2["text"]) > text_sim_threshold
-            ):
-                dropped.add(j)
-    return keep
-
-
-def run_plain(data: bytes, engine: Engine) -> dict[str, Any]:
-    """Single-pass whole-image OCR (reference run_ocr, ocr_engine.py:296-353;
-    note the reference does NOT sort this path — the ordering invariant is
-    applied only by the tiling/adaptive paths)."""
-    image = engine.decode(data)
-    width, height = engine.dimensions(image)
-    lines = engine.recognize(engine.crop(image, 0, height))
-    return {"width": width, "height": height, "strategy": "PLAIN", "lines": lines}
-
-
-def run_with_tiling(data: bytes, engine: Engine) -> dict[str, Any]:
-    """Legacy fixed-tile pipeline (reference run_ocr_with_tiling,
-    ocr_engine.py:758-869): tile at OCR_TILE_HEIGHT (2000) / OCR_TILE_OVERLAP
-    (200), dedup v1 at OCR_IOU_THRESHOLD (0.5 on this path), reading-order
-    sort; any fatal error falls back to run_plain (reference :864-869).
-
-    Reference parity corners: OCR_TWO_PASS is read but DEAD in the reference
-    (run_ocr_with_tiling logs use_two_pass and never runs a second pass) —
-    same here; and a single tile's failure skips just that tile (per-tile
-    try/except continue, reference :817-836), not the whole image."""
-    try:
-        image = engine.decode(data)
-        width, height = engine.dimensions(image)
-        tile_height = _env_int("OCR_TILE_HEIGHT", 2000)
-        overlap = _env_int("OCR_TILE_OVERLAP", 200)
-        _ = _ENV("OCR_TWO_PASS", "false")  # dead flag, reference :767-771
-        iou_thr = float(_ENV("OCR_IOU_THRESHOLD", "0.5"))
-        sim_thr = float(_ENV("OCR_TEXT_SIM_THRESHOLD", "0.7"))
-
-        all_lines: list[LineDict] = []
-        for y0, y1 in tile_spans(height, tile_height, overlap):
-            try:
-                tile = engine.crop(image, y0, y1)
-                all_lines.extend(_translate(engine.recognize(tile), y0))
-            except Exception:
-                continue  # skip the bad tile, keep the rest (reference :834-836)
-        deduped = deduplicate_boxes(all_lines, iou_thr, sim_thr)
-        return {
-            "width": width,
-            "height": height,
-            "strategy": "TILING_LEGACY",
-            "lines": _reading_order(deduped),
-        }
-    except Exception:
-        return run_plain(data, engine)
-
-
-def dispatch(data: bytes, engine: Engine) -> dict[str, Any]:
-    """Mode dispatch (reference main.py:129-166): OCR_ADAPTIVE -> adaptive;
-    else OCR_USE_TILING in {always, never, auto}, auto = tile iff
-    height > 2000. Default OCR_ADAPTIVE=false matches the reference
-    (main.py:132) — out of the box this dispatches exactly like the worker.
-    The flagship Spark pipeline selects adaptive EXPLICITLY (ocr_udf.py
-    mode="adaptive"), not via this env default."""
-    if _ENV("OCR_ADAPTIVE", "false").lower() == "true":
-        return run_adaptive(data, engine)
-    use_tiling = _ENV("OCR_USE_TILING", "auto").lower()
-    if use_tiling == "always":
-        return run_with_tiling(data, engine)
-    if use_tiling == "never":
-        return run_plain(data, engine)
-    image = engine.decode(data)
-    _, height = engine.dimensions(image)
-    if height > _env_int("OCR_AUTO_TILING_MIN_HEIGHT", 2000):
-        return run_with_tiling(data, engine)
-    return run_plain(data, engine)

@@ -77,9 +77,9 @@ def ocr_media_spans(media_spans: DataFrame) -> DataFrame:
 
     Input should already be repartitioned by xxhash64(doc_id, offset) (see
     operators/skew.py) so heavy pages spread across the cluster. The
-    per-image loop is pinned to run_adaptive (the path the reference runs
-    in production with OCR_ADAPTIVE=true), so executors never depend on env
-    drift.
+    per-image loop is run_adaptive, the path the reference runs in
+    production with OCR_ADAPTIVE=true; its legacy fixed-tile and plain
+    modes are not carried.
     """
     return media_spans.select("doc_id", "offset", "media_ref", "content").mapInPandas(
         _ocr_batches, schema=OCR_RESULT

@@ -35,6 +35,33 @@ def pending_documents(docs: DataFrame, lineage: DataFrame | None) -> DataFrame:
     return docs.join(done, "doc_id", "left_anti")
 
 
+def pending_slice(
+    slice_df: DataFrame, marker: DataFrame | None, key: str
+) -> tuple[DataFrame, dict]:
+    """The weekly jobs' resume step (protocol in sources/tables.py): the
+    rows of ``slice_df`` whose ``key`` is not an ``id`` of the ``marker``
+    table, plus ONE aggregate over the slice joined to the marker ids:
+    ``{n_in, n_skipped, lo, hi}`` with lo/hi the min/max pending key
+    (None when nothing is pending). Marker ids are unique: each is appended
+    once, by the run that commits it."""
+    if marker is None:
+        pending, flagged = slice_df, slice_df.withColumn("_done", F.lit(False))
+    else:
+        ids = marker.select(F.col("id").alias(key))
+        pending = slice_df.join(ids, key, "left_anti")
+        flagged = slice_df.join(
+            ids.withColumn("_done", F.lit(True)), key, "left"
+        ).fillna(False, ["_done"])
+    todo = F.when(~F.col("_done"), F.col(key))
+    row = flagged.agg(
+        F.count(F.lit(1)).alias("n_in"),
+        F.count_if("_done").alias("n_skipped"),
+        F.min(todo).alias("lo"),
+        F.max(todo).alias("hi"),
+    ).first()
+    return pending, row.asDict()
+
+
 def split_failures(ocr_results: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(ok_rows, failure_rows). failure_rows matches schemas.FAILURES."""
     ok = ocr_results.filter(F.col("error").isNull())

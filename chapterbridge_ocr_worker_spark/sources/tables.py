@@ -11,6 +11,32 @@ Scale notes baked in:
   key they're joined/grouped on, so re-reads co-locate;
 - appends use unique subdirectories per job run (Iceberg snapshot analogue)
   so a killed job never corrupts previous commits — resume reads the union.
+
+Weekly-job protocol (jobs/dedup_job.py, exactdedup_job.py, spandedup_job.py,
+embdedup_job.py). Each job owns a state directory of tables and runs:
+
+1. resume: anti-join the slice against the job's MARKER table, the table it
+   appends LAST (operators.resume.pending_slice). A fully committed slice
+   is a resume-noop; otherwise the pending ids span [lo, hi].
+2. rollback (rollback_uncommitted): drop from the manifest every snapshot a
+   crashed attempt at this slice left in the other state tables, so prior
+   state reads are plain reads and every state table holds each row once.
+3. judge the pending rows, then append the state tables with the marker
+   last, then compaction (compact_tables).
+
+Rollback drops a snapshot only when both hold: (a) its recorded id-column
+stats reach the pending slice (max >= lo), and (b) it was committed after
+the marker's newest snapshot (by the commit millisecond in the snapshot
+names). When in doubt it keeps: snapshots without
+stats (compaction outputs, adopted legacy files), tables without a
+manifest and everything committed before the marker's newest snapshot stay.
+Rule (b) is what keeps a slice that breaks crawl order from dropping
+committed state, where (a) alone would match every committed snapshot.
+Caller contract: ids are unique across slices and crawl-ordered (every new
+id above every committed id); a slice that breaks it keeps all committed
+state but is judged against it as-is. Tables with no id column are exempt
+and must absorb a redo on their own — exactdedup's bloom words re-set bits
+that are already set, which the bit_or fold makes idempotent.
 """
 
 from __future__ import annotations
@@ -716,6 +742,62 @@ def compact_table(
         "snapshots_before": len(old_snaps),
         "legacy_files_adopted": legacy_adopted,
     }
+
+
+def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
+    """Iceberg rollback_to_snapshot for a crashed weekly-job attempt (the
+    rule is in the module docstring): for each ``{table: id column}``, drop
+    from the manifest the snapshots whose recorded ``max(id column) >= lo``
+    and that were committed after ``marker``'s newest snapshot. Metadata
+    only: the dropped directories (and their stats entries) stay until the
+    next compaction removes them. Returns ``{table: snapshots dropped}`` for
+    tables that dropped any."""
+    mpath = table_path(root, marker)
+    m = _read_manifest(mpath)
+    if lo is None or (m is None and os.path.isdir(mpath)):
+        return {}  # nothing pending, or a manifest-less marker: keep all
+    cutoff = _snap_millis(m["snapshots"][-1]) if m and m["snapshots"] else -1
+    if cutoff is None:
+        return {}
+
+    def reaches(rng):
+        try:
+            return rng is not None and rng[1] is not None and rng[1] >= lo
+        except TypeError:  # JSON-degraded stats: keep
+            return False
+
+    dropped = {}
+    for name, col in id_cols.items():
+        path = table_path(root, name)
+        if _read_manifest(path) is None:
+            continue
+        with _manifest_lock(path):
+            m = _read_manifest(path)
+            stats = m.get("column_stats", {})
+            gone = [
+                s for s in m["snapshots"]
+                if reaches(stats.get(s, {}).get(col))
+                and (_snap_millis(s) or -1) > cutoff
+            ]
+            if gone:
+                extra = {k: v for k, v in m.items() if k != "snapshots"}
+                live = [s for s in m["snapshots"] if s not in gone]
+                _write_manifest(path, live, **extra)
+                dropped[name] = len(gone)
+    return dropped
+
+
+def compact_tables(spark: SparkSession, root: str, how: dict, after: int) -> dict:
+    """Compact each table of ``how`` (``{table: keys list, fold callable or
+    None}``, as compact_table takes them) that holds more than ``after``
+    live snapshots. Returns ``{table: snapshots_before}`` for those."""
+    compacted = {}
+    for name, keys_or_fold in how.items():
+        if len(_live_snapshots(table_path(root, name)) or []) <= after:
+            continue
+        kw = {"fold": keys_or_fold} if callable(keys_or_fold) else {"keys": keys_or_fold}
+        compacted[name] = compact_table(spark, root, name, **kw)["snapshots_before"]
+    return compacted
 
 
 def zorder_key(cols: list, ranges: list, bits: int = 4):

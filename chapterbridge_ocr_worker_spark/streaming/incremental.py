@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline import write_run
 from ..schemas import DOCUMENTS
+from ..sources import tables
 
 
 def run_incremental(
@@ -34,8 +35,10 @@ def run_incremental(
     warehouse: str,
     checkpoint_dir: str,
     num_partitions: int | None = None,
-) -> None:
+) -> int:
     """Process any not-yet-seen document files, then stop (availableNow).
+    Returns the number of distinct committed doc_ids (lineage is the
+    commit record; ocr_output may hold a replayed epoch's rows twice).
 
     Re-invoking later picks up only new files — Spark's streaming
     checkpoint replaces the reference's job-queue claim protocol. A
@@ -56,3 +59,5 @@ def run_incremental(
         .start()
     )
     q.awaitTermination()
+    lineage = tables.read_table(spark, warehouse, "lineage")
+    return 0 if lineage is None else lineage.select("doc_id").distinct().count()

@@ -10,31 +10,24 @@ without recomputing a single prior signature or pair.
         --out /data/dedup_out/w33 \
         [--threshold 0.6] [--cores 8]
 
-State directory (owned by this job, carried run-to-run):
+State directory (owned by this job, carried run-to-run; the resume,
+rollback and compaction protocol is in sources/tables.py):
     signatures/     MinHash signature table (id, toks, sig, bands) of every
-                    doc ever processed — appended per run as a crash-safe
-                    snapshot (sources.tables.append_snapshot), never
-                    rewritten. Appended LAST: it doubles as the RESUME
-                    MARKER (the anti-join below), so a rerun after any
-                    mid-commit crash redoes the run instead of silently
-                    skipping the tables that never got their append.
+                    doc ever processed, appended per run and never
+                    rewritten. Appended LAST: it is the resume marker.
     clusters/       (id, cluster_id) labels — the FULL refreshed relabeling
                     appended per run, read back latest-wins per id, so a new
                     doc chaining two prior clusters updates the prior
                     members' labels too (no stale labels between runs).
-                    Committed FIRST: latest-wins absorbs the duplicate
-                    snapshot a crash-rerun appends.
     buckets/        (id, bh) exploded band-bucket rows — the narrow table
                     the weekly band join runs against, so the wide
-                    signature table never re-explodes. Crash-rerun
-                    duplicates are harmless to candidates (distinct pairs)
-                    and physically deduped by keys=["id"] compaction.
+                    signature table never re-explodes.
     bucket_counts/  (run_id, bh, n) per-run bucket-population deltas; the
                     union-wide degeneracy caps = SUM(n) per bh — a narrow
                     pre-aggregated read instead of a corpus-sized re-count.
-                    Read latest-wins per run_id (run_id = the slice's max
-                    doc_id, deterministic), so a crash-rerun's duplicate
-                    delta snapshot can never double a bucket's count.
+                    run_id is the slice's max doc_id.
+    clusters, buckets and bucket_counts record id / run_id stats, so a
+    crashed attempt's snapshots roll back before the redo reads them.
 
 Outputs under --out:
     decisions/    (id, keep, cluster_id) for THIS run's docs
@@ -43,10 +36,10 @@ First run bootstraps: full neardup_clusters + jaccard_keep over the slice.
 Every later run hashes ONLY the new slice, band-joins it against the
 materialized union buckets (operators.dedup.incremental_dedup), and emits
 keep/drop + cluster labels. Prior decisions are frozen (docs already
-shipped to training are never retro-dropped). Both state tables auto-
-compact once they accumulate more than COMPACT_AFTER snapshots — clusters
-with keys=["id"] so latest-wins survives the rewrite and superseded label
-rows are physically dropped.
+shipped to training are never retro-dropped). State tables auto-compact
+once they accumulate more than COMPACT_AFTER snapshots — clusters with
+keys=["id"] so latest-wins survives the rewrite and superseded label rows
+are physically dropped.
 
 Caller contract: doc_ids are unique across slices and crawl-ordered (new
 ids greater than all prior ids) — what any ingest sequence number gives.
@@ -72,17 +65,18 @@ from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
 COMPACT_AFTER = 4
 
 
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description="incremental corpus dedup job")
     ap.add_argument("--documents", required=True, help="new crawl slice parquet")
     ap.add_argument("--state", required=True, help="persistent dedup state dir")
     ap.add_argument("--out", required=True, help="output dir for this run")
     ap.add_argument("--threshold", type=float, default=0.6, help="near-dup Jaccard")
     ap.add_argument("--cores", type=int, default=None, help="local[] cores (dev only)")
-    args = ap.parse_args(argv)
+    return ap.parse_args(argv)
 
-    spark = get_spark("dedup-job", cores=args.cores)
-    spark.sparkContext.setLogLevel("WARN")
+
+def run(spark, args: argparse.Namespace) -> dict:
+    """One weekly run over ``args.documents``; returns the stats line."""
     # reliable checkpoints for the connected-components rounds
     spark.sparkContext.setCheckpointDir(os.path.join(args.state, "_checkpoints"))
 
@@ -95,41 +89,37 @@ def main(argv: list[str] | None = None) -> int:
         minhash_signatures,
         neardup_clusters,
     )
+    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
     from chapterbridge_ocr_worker_spark.sources import tables
 
-    docs = spark.read.parquet(args.documents).select("doc_id", "text")
-
-    # RESUME anti-join (the extraction pipeline's skip rule, applied to
-    # dedup state): docs whose ids are already in the signature table were
-    # committed by a previous run — a rerun of the same slice (crash
-    # recovery, accidental resubmit) must not re-append their signatures,
-    # which would double bucket counts and skew every later cap decision.
-    n_in = docs.count()
+    # resume: docs whose ids are already in the signature table were
+    # committed by a previous run and must not be re-appended
     prior_sigs = tables.read_table(spark, args.state, "signatures")
-    if prior_sigs is not None:
-        docs = docs.join(
-            prior_sigs.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
-        )
-    n_skipped = n_in - docs.count()
-
-    if prior_sigs is not None and n_skipped == n_in:
+    docs, sl = pending_slice(
+        spark.read.parquet(args.documents).select("doc_id", "text"),
+        prior_sigs,
+        "doc_id",
+    )
+    n_skipped = sl["n_skipped"]
+    if prior_sigs is not None and n_skipped == sl["n_in"]:
         # full rerun of an already-committed slice: answer from state,
         # mutate nothing (idempotent recovery path)
-        print(
-            json.dumps(
-                {
-                    "mode": "resume-noop",
-                    "docs_in": 0,
-                    "skipped_done": n_skipped,
-                    "kept": 0,
-                    "dropped_as_dups": 0,
-                    "corpus_total": prior_sigs.count(),
-                    "compacted": {},
-                }
-            )
-        )
-        spark.stop()
-        return 0
+        return {
+            "mode": "resume-noop",
+            "docs_in": 0,
+            "skipped_done": n_skipped,
+            "kept": 0,
+            "dropped_as_dups": 0,
+            "corpus_total": prior_sigs.count(),
+            "compacted": {},
+            "rolled_back": {},
+        }
+    rolled_back = tables.rollback_uncommitted(
+        args.state,
+        "signatures",
+        {"clusters": "id", "buckets": "id", "bucket_counts": "run_id"},
+        sl["lo"],
+    )
 
     new_sigs = minhash_signatures(docs).persist()
     new_ids = docs.select(F.col("doc_id").alias("id"))
@@ -155,18 +145,9 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         mode = "incremental"
-        # CRASH-WINDOW BOUNDARY: state appends happen in the order clusters
-        # -> buckets -> bucket_counts -> signatures(marker); a crash between
-        # any two leaves partial week-N rows in the earlier tables. Because
-        # ids are crawl-ordered (caller contract), "the prior corpus" is
-        # EXACTLY the rows below this slice's min id — filtering every
-        # prior-state read by it makes a post-crash rerun bit-identical to
-        # a clean run (no double-counted caps, no self-as-prior rows), and
-        # the filters are parquet-pushdown-pruned at scale.
-        min_new_id = docs.agg(F.min("doc_id")).first()[0]
         prior_clusters = tables.read_table_latest(
             spark, args.state, "clusters", keys=["id"]
-        ).filter(F.col("id") < min_new_id)
+        )
         # bucket state: the narrow (id, bh) table + pre-aggregated (bh, n)
         # counts make the weekly run fully |new|-sized. State dirs from
         # before these tables existed are backfilled ONCE from the prior
@@ -186,20 +167,10 @@ def main(argv: list[str] | None = None) -> int:
                 ),
                 args.state,
                 "bucket_counts",
+                stats_cols=["run_id"],
             )
-        # pruned prior read: ids are crawl-ordered integers (caller
-        # contract), so `id < min_new` == `id <= min_new - 1`, and the
-        # manifest min/max stats let a post-crash rerun SKIP the crashed
-        # attempt's own bucket snapshot at the metadata level instead of
-        # scanning-and-filtering it row by row
-        prior_buckets = tables.read_table_pruned(
-            spark, args.state, "buckets", "id", None, min_new_id - 1
-        )
         prior_counts = (
-            tables.read_table_latest(
-                spark, args.state, "bucket_counts", keys=["run_id"]
-            )
-            .filter(F.col("run_id") < min_new_id)
+            tables.read_table(spark, args.state, "bucket_counts")
             .groupBy("bh")
             .agg(F.sum("n").alias("n"))
         )
@@ -217,27 +188,22 @@ def main(argv: list[str] | None = None) -> int:
     n_kept = decisions.filter("keep = 1").count()
     decisions.write.mode("overwrite").parquet(os.path.join(args.out, "decisions"))
 
-    # commit this run's rows into the rolling state: crash-safe snapshot
-    # appends — a killed run leaves state readable at the previous commit.
-    # ORDER MATTERS: signatures go LAST because they are the resume marker
-    # — a crash between any two appends makes the rerun redo the whole run,
-    # and every earlier table absorbs its duplicate snapshot (clusters +
-    # bucket_counts via latest-wins keys, buckets via distinct candidates /
-    # keyed compaction). Committing signatures earlier would turn a crash
-    # into a resume-noop with the OTHER tables permanently missing this
-    # slice — silently splitting clusters and skewing caps forever.
+    # commit: signatures (the marker) LAST; every other table records id
+    # (bucket_counts: run_id) stats, so a crashed attempt's snapshots roll
+    # back on the rerun
     tables.append_snapshot(
-        all_labels.select("id", "cluster_id"), args.state, "clusters"
+        all_labels.select("id", "cluster_id"), args.state, "clusters",
+        stats_cols=["id"],
     )
     new_buckets = bucket_rows(new_sigs)
     tables.append_snapshot(new_buckets, args.state, "buckets", stats_cols=["id"])
-    run_id = docs.agg(F.max("doc_id")).first()[0]
     tables.append_snapshot(
         bucket_count_rows(new_buckets).withColumn(
-            "run_id", F.lit(run_id).cast("long")
+            "run_id", F.lit(sl["hi"]).cast("long")
         ),
         args.state,
         "bucket_counts",
+        stats_cols=["run_id"],
     )
     tables.append_snapshot(new_sigs, args.state, "signatures", stats_cols=["id"])
     n_corpus = tables.read_table(spark, args.state, "signatures").count()
@@ -245,41 +211,42 @@ def main(argv: list[str] | None = None) -> int:
     new_sigs.unpersist()
     release_caches()
 
-    # small-file hygiene: weekly appends accumulate snapshots; compact once
-    # they pile up (keyed tables keep latest-wins through the rewrite and
-    # physically drop superseded/duplicate rows)
-    compacted = {}
-    for tbl, keys in (
-        ("signatures", None),
-        ("clusters", ["id"]),
-        ("buckets", ["id"]),
-        ("bucket_counts", ["run_id"]),
-    ):
-        path = tables.table_path(args.state, tbl)
-        live = tables._live_snapshots(path) or []
-        if len(live) > COMPACT_AFTER:
-            stats = tables.compact_table(spark, args.state, tbl, keys=keys)
-            compacted[tbl] = stats["snapshots_before"]
-
-    print(
-        json.dumps(
-            {
-                "mode": mode,
-                "docs_in": n_new,
-                "skipped_done": n_skipped,
-                "kept": n_kept,
-                "dropped_as_dups": n_new - n_kept,
-                "corpus_total": n_corpus,
-                "compacted": compacted,
-                "backfilled_bucket_state": backfilled,
-                # closure telemetry: a long-running operator watches rounds
-                # / pair counts drift instead of discovering divergence by
-                # eye (cc_* empty on resume-noop runs)
-                **cc_stats,
-            }
-        )
+    # clusters compact latest-wins per id (superseded labels drop out)
+    compacted = tables.compact_tables(
+        spark,
+        args.state,
+        {
+            "signatures": None,
+            "clusters": ["id"],
+            "buckets": ["id"],
+            "bucket_counts": ["run_id"],
+        },
+        COMPACT_AFTER,
     )
-    spark.stop()
+    return {
+        "mode": mode,
+        "docs_in": n_new,
+        "skipped_done": n_skipped,
+        "kept": n_kept,
+        "dropped_as_dups": n_new - n_kept,
+        "corpus_total": n_corpus,
+        "compacted": compacted,
+        "rolled_back": rolled_back,
+        "backfilled_bucket_state": backfilled,
+        # closure telemetry: a long-running operator watches rounds / pair
+        # counts drift instead of discovering divergence by eye
+        **cc_stats,
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+    spark = get_spark("dedup-job", cores=args.cores)
+    spark.sparkContext.setLogLevel("WARN")
+    try:
+        print(json.dumps(run(spark, args)))
+    finally:
+        spark.stop()
     return 0
 
 

@@ -15,19 +15,12 @@ and appends the batch's signatures to the persistent state.
         [--threshold 0.95] [--bits 10] [--cores 8] \
         [--ivf-index /data/ivf] [--rebuild-if-skewed]
 
-State directory (owned by this job, carried run-to-run):
+State directory (owned by this job, carried run-to-run; the resume,
+rollback and compaction protocol is in sources/tables.py):
     sigs/   (id, vec, bucket) — the materialized LSH signature of every
-            vector the corpus has committed. Appended per run as a
-            crash-safe snapshot; keys=["id"] compaction drops the
-            byte-identical duplicates a crash-rerun can add.
-    vecs/   (id) — the committed-batch marker table, appended LAST: the
-            RESUME anti-join. A crash between the sigs append and the
-            vecs append leaves the marker absent, so the rerun REDOES the
-            batch — and because every prior-state read filters
-            id < min(new ids), the crashed attempt's orphaned signature
-            rows are invisible to the redo, which is bit-identical to a
-            clean run (same crash discipline as jobs/dedup_job.py and
-            jobs/spandedup_job.py).
+            vector the corpus has committed, appended per run with id
+            stats, so a crashed attempt's snapshot rolls back.
+    vecs/   (id) — the committed-batch marker table, appended LAST.
 
 Outputs under --out:
     pairs/  (id_a, id_b, cos_r) near-dup pairs with >=1 new side
@@ -63,11 +56,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
 
-# compact the sigs table once it exceeds this many live snapshots
+# compact a state table once it exceeds this many live snapshots
 COMPACT_AFTER = 4
 
 
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description="incremental embedding near-dup job")
     ap.add_argument("--embeddings", required=True, help="new embedding batch parquet")
     ap.add_argument("--state", required=True, help="persistent signature state dir")
@@ -81,12 +74,13 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="run ivf_rebuild_index when the health stats recommend it",
     )
-    args = ap.parse_args(argv)
+    return ap.parse_args(argv)
 
-    spark = get_spark("embdedup-job", cores=args.cores)
-    spark.sparkContext.setLogLevel("WARN")
 
+def run(spark, args: argparse.Namespace) -> dict:
+    """One weekly run over ``args.embeddings``; returns the stats line."""
     from chapterbridge_ocr_worker_spark.operators.cache import release_caches
+    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
     from chapterbridge_ocr_worker_spark.operators.similarity import (
         cosine_neardup_pairs,
         incremental_cosine_neardup,
@@ -97,37 +91,31 @@ def main(argv: list[str] | None = None) -> int:
     )
     from chapterbridge_ocr_worker_spark.sources import tables
 
-    batch = spark.read.parquet(args.embeddings).select("vec_id", "embedding")
-
-    # RESUME anti-join on the committed-batch marker table
-    n_in = batch.count()
+    # resume on the committed-batch marker table
     done = tables.read_table(spark, args.state, "vecs")
-    if done is not None:
-        batch = batch.join(
-            done.select(F.col("id").alias("vec_id")), "vec_id", "left_anti"
-        )
-    n_skipped = n_in - batch.count()
-
-    if done is not None and n_skipped == n_in:
-        print(
-            json.dumps(
-                {
-                    "mode": "resume-noop",
-                    "vectors_in": 0,
-                    "skipped_done": n_skipped,
-                    "pairs": 0,
-                    "dups": 0,
-                    "corpus_vectors": done.count(),
-                    "compacted": {},
-                    "ivf": None,
-                }
-            )
-        )
-        spark.stop()
-        return 0
+    batch, sl = pending_slice(
+        spark.read.parquet(args.embeddings).select("vec_id", "embedding"),
+        done,
+        "vec_id",
+    )
+    n_skipped = sl["n_skipped"]
+    if done is not None and n_skipped == sl["n_in"]:
+        return {
+            "mode": "resume-noop",
+            "vectors_in": 0,
+            "skipped_done": n_skipped,
+            "pairs": 0,
+            "dups": 0,
+            "corpus_vectors": done.count(),
+            "rolled_back": {},
+            "compacted": {},
+            "ivf": None,
+        }
+    rolled_back = tables.rollback_uncommitted(
+        args.state, "vecs", {"sigs": "id"}, sl["lo"]
+    )
 
     prior = tables.read_table(spark, args.state, "sigs")
-    n_orphans = 0
     if prior is None:
         mode = "bootstrap"
         pairs = cosine_neardup_pairs(
@@ -135,17 +123,6 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         mode = "incremental"
-        # CRASH-WINDOW BOUNDARY: filter the prior read by the batch's min
-        # id so a redo after a crash between the two appends cannot see
-        # the crashed attempt's own signature rows as "prior". Orphans
-        # (ids at/after the boundary) mean this IS a crash redo: our own
-        # append will then duplicate those rows, and duplicate sig rows
-        # would inflate future runs' union-wide bucket counts — so their
-        # presence forces a keys=["id"] compaction after the commit,
-        # restoring one-row-per-id before any future run reads the table.
-        min_new_id = batch.agg(F.min("vec_id")).first()[0]
-        n_orphans = prior.filter(F.col("id") >= min_new_id).count()
-        prior = prior.filter(F.col("id") < min_new_id)
         pairs = incremental_cosine_neardup(
             batch, prior, threshold=args.threshold, bits=args.bits
         )
@@ -164,7 +141,7 @@ def main(argv: list[str] | None = None) -> int:
     keep.write.mode("overwrite").parquet(os.path.join(args.out, "keep"))
     n_dups = keep.filter("is_dup").count()
 
-    # commit: sigs FIRST, vecs marker LAST (see module docstring)
+    # commit: sigs FIRST, vecs marker LAST
     tables.append_snapshot(
         vector_signatures(batch, bits=args.bits), args.state, "sigs",
         stats_cols=["id"],
@@ -186,31 +163,30 @@ def main(argv: list[str] | None = None) -> int:
             ivf = ivf_rebuild_index(spark, args.ivf_index)
             ivf["rebuilt"] = True
 
-    compacted = {}
-    for tbl, keys in (("sigs", ["id"]), ("vecs", ["id"])):
-        path = tables.table_path(args.state, tbl)
-        live = tables._live_snapshots(path) or []
-        force = tbl == "sigs" and n_orphans > 0  # crash-redo dedup (above)
-        if len(live) > COMPACT_AFTER or force:
-            stats = tables.compact_table(spark, args.state, tbl, keys=keys)
-            compacted[tbl] = stats["snapshots_before"]
-
-    print(
-        json.dumps(
-            {
-                "mode": mode,
-                "vectors_in": n_in - n_skipped,
-                "skipped_done": n_skipped,
-                "pairs": n_pairs,
-                "dups": n_dups,
-                "corpus_vectors": n_corpus,
-                "crash_orphans": n_orphans,
-                "compacted": compacted,
-                "ivf": ivf,
-            }
-        )
+    compacted = tables.compact_tables(
+        spark, args.state, {"sigs": ["id"], "vecs": ["id"]}, COMPACT_AFTER
     )
-    spark.stop()
+    return {
+        "mode": mode,
+        "vectors_in": sl["n_in"] - n_skipped,
+        "skipped_done": n_skipped,
+        "pairs": n_pairs,
+        "dups": n_dups,
+        "corpus_vectors": n_corpus,
+        "rolled_back": rolled_back,
+        "compacted": compacted,
+        "ivf": ivf,
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+    spark = get_spark("embdedup-job", cores=args.cores)
+    spark.sparkContext.setLogLevel("WARN")
+    try:
+        print(json.dumps(run(spark, args)))
+    finally:
+        spark.stop()
     return 0
 
 

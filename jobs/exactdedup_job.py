@@ -11,12 +11,10 @@ the persistent state, never re-hashing a prior document.
         --out /data/exactdedup_out/w33 \
         [--m-bits 262144] [--k 5] [--cores 8]
 
-State directory (owned by this job, carried run-to-run):
-    hashes/   (id, h) — the 33-byte/doc exact-dedup state, appended per
-              run as a crash-safe snapshot with id min/max stats. Appended
-              LAST: it is the RESUME MARKER (anti-join below), so a rerun
-              after a mid-commit crash redoes the run instead of silently
-              skipping the bloom append.
+State directory (owned by this job, carried run-to-run; the resume,
+rollback and compaction protocol is in sources/tables.py):
+    hashes/   (id, h) — the 33-byte/doc exact-dedup state, appended LAST
+              per run: it is the resume marker.
     bloom_params.json  the (m_bits, k) the bitmap was built with —
               persisted at bootstrap and read back by every later run,
               because bit positions are functions of these values: a
@@ -29,18 +27,13 @@ State directory (owned by this job, carried run-to-run):
               — pinned by test). The weekly probe reads THIS bounded
               table, never rebuilds the bitmap from the corpus; the full
               hashes table is touched only by the confirm join's
-              bloom-positive sliver. A crash-rerun's duplicate bloom
-              snapshot only re-sets bits that are already set — the fold
-              is idempotent, and answers are exact regardless (the bloom
-              is a prefilter, never the verdict).
+              bloom-positive sliver. bloom has no id column, so it is
+              exempt from rollback: a crash-redo's duplicate snapshot only
+              re-sets bits that are already set, and answers are exact
+              regardless (the bloom is a prefilter, never the verdict).
 
 Outputs under --out:
     decisions/  (id, keep) for THIS run's docs
-
-Prior reads are pruned to `id < min(new ids)` via the manifest's id stats
-(caller contract as in dedup_job: doc_ids unique and crawl-ordered), so a
-post-crash rerun is bit-identical to a clean run. The bloom table needs
-no such filter — extra bits cost false-positive confirms, never answers.
 
 At 100 TB: the bitmap is ~10 bits per prior key (1.2 GB of longs at 10^9
 keys — broadcastable) and the per-run state growth is one bounded bloom
@@ -68,7 +61,11 @@ from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
 COMPACT_AFTER = 4
 
 
-def main(argv: list[str] | None = None) -> int:
+class ParamsConflict(ValueError):
+    """A --m-bits/--k override that contradicts the state's bitmap."""
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description="incremental exact dedup job")
     ap.add_argument("--documents", required=True, help="new crawl slice parquet")
     ap.add_argument("--state", required=True, help="persistent state dir")
@@ -76,11 +73,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--m-bits", type=int, default=None, help="bloom bitmap bits")
     ap.add_argument("--k", type=int, default=None, help="bloom probes per key")
     ap.add_argument("--cores", type=int, default=None, help="local[] cores (dev only)")
-    args = ap.parse_args(argv)
+    return ap.parse_args(argv)
 
-    spark = get_spark("exactdedup-job", cores=args.cores)
-    spark.sparkContext.setLogLevel("WARN")
 
+def run(spark, args: argparse.Namespace) -> dict:
+    """One weekly run over ``args.documents``; returns the stats line.
+    Raises ParamsConflict before touching state on a conflicting override."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         BLOOM_K,
         BLOOM_M_BITS,
@@ -88,6 +86,7 @@ def main(argv: list[str] | None = None) -> int:
         bloom_gated_incremental_exact,
         exact_hashes,
     )
+    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
     from chapterbridge_ocr_worker_spark.sources import tables
 
     # BITMAP PARAMS ARE STATE: bit positions are functions of (m_bits, k),
@@ -103,52 +102,42 @@ def main(argv: list[str] | None = None) -> int:
         for flag, key in (("m_bits", "m_bits"), ("k", "k")):
             given = getattr(args, flag)
             if given is not None and given != persisted[key]:
-                print(
+                raise ParamsConflict(
                     f"--{flag.replace('_', '-')} {given} conflicts with the "
                     f"state's persisted {key}={persisted[key]}; the bitmap "
                     "was built with the persisted value — rebuild state to "
-                    "change it",
-                    file=sys.stderr,
+                    "change it"
                 )
-                spark.stop()
-                return 2
         m_bits, k = persisted["m_bits"], persisted["k"]
     else:
         m_bits = args.m_bits or BLOOM_M_BITS
         k = args.k or BLOOM_K
 
-    docs = spark.read.parquet(args.documents).select("doc_id", "text")
-
-    # RESUME anti-join: docs already in the hashes table were committed by
-    # a previous run — re-appending them would duplicate state rows.
-    n_in = docs.count()
-    prior_any = tables.read_table(spark, args.state, "hashes")
-    if prior_any is not None:
-        docs = docs.join(
-            prior_any.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
-        )
-    n_skipped = n_in - docs.count()
-
-    if prior_any is not None and n_skipped == n_in:
-        print(
-            json.dumps(
-                {
-                    "mode": "resume-noop",
-                    "docs_in": 0,
-                    "skipped_done": n_skipped,
-                    "kept": 0,
-                    "dropped_as_dups": 0,
-                    "corpus_total": prior_any.count(),
-                    "compacted": {},
-                }
-            )
-        )
-        spark.stop()
-        return 0
+    # resume on the hashes table (the marker). It never holds pending ids,
+    # and bloom has no id column, so this job has nothing to roll back: a
+    # redo's duplicate bloom snapshot only re-sets bits under the bit_or fold
+    prior_h = tables.read_table(spark, args.state, "hashes")
+    docs, sl = pending_slice(
+        spark.read.parquet(args.documents).select("doc_id", "text"),
+        prior_h,
+        "doc_id",
+    )
+    n_skipped = sl["n_skipped"]
+    if prior_h is not None and n_skipped == sl["n_in"]:
+        return {
+            "mode": "resume-noop",
+            "docs_in": 0,
+            "skipped_done": n_skipped,
+            "kept": 0,
+            "dropped_as_dups": 0,
+            "corpus_total": prior_h.count(),
+            "compacted": {},
+            "rolled_back": {},
+        }
 
     new_h = exact_hashes(docs).persist()
 
-    if prior_any is None:
+    if prior_h is None:
         # bootstrap: exact dedup within the first slice (keep-first per hash)
         mode = "bootstrap"
         first = new_h.groupBy("h").agg(F.min("id").alias("first_new"))
@@ -160,14 +149,6 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         mode = "incremental"
-        # CRASH-WINDOW BOUNDARY: prune the confirm-join side to ids below
-        # this slice (metadata-level skip of a crashed attempt's own rows);
-        # the bloom fold needs no filter — duplicate snapshots are
-        # idempotent under bit_or and cost only false-positive confirms.
-        min_new_id = docs.agg(F.min("doc_id")).first()[0]
-        prior_h = tables.read_table_pruned(
-            spark, args.state, "hashes", "id", None, min_new_id - 1
-        )
         words = (
             tables.read_table(spark, args.state, "bloom")
             .groupBy("widx")
@@ -183,9 +164,7 @@ def main(argv: list[str] | None = None) -> int:
     decisions.write.mode("overwrite").parquet(os.path.join(args.out, "decisions"))
 
     # state commits: params first (idempotent — same content every run),
-    # then bloom, hashes LAST (the resume marker) — a crash between any
-    # two makes the rerun redo the run, and the bloom table absorbs its
-    # duplicate snapshot idempotently.
+    # then bloom, hashes LAST (the resume marker)
     if persisted is None:
         os.makedirs(args.state, exist_ok=True)
         tmp = params_path + ".tmp"
@@ -202,37 +181,38 @@ def main(argv: list[str] | None = None) -> int:
     # count grows per append; compaction pre-folds them into one snapshot
     # of at most m/64 word rows. Hashes compact by plain union (no
     # superseded rows — the resume anti-join guarantees unique ids).
-    compacted = {}
-    for tbl, agg_fold in (("hashes", False), ("bloom", True)):
-        path = tables.table_path(args.state, tbl)
-        live = tables._live_snapshots(path) or []
-        if len(live) > COMPACT_AFTER:
-            stats = tables.compact_table(
-                spark,
-                args.state,
-                tbl,
-                fold=(
-                    (lambda d: d.groupBy("widx").agg(F.bit_or("word").alias("word")))
-                    if agg_fold
-                    else None
-                ),
-            )
-            compacted[tbl] = stats["snapshots_before"]
-
-    print(
-        json.dumps(
-            {
-                "mode": mode,
-                "docs_in": n_new,
-                "skipped_done": n_skipped,
-                "kept": n_kept,
-                "dropped_as_dups": n_new - n_kept,
-                "corpus_total": n_corpus,
-                "compacted": compacted,
-            }
-        )
+    compacted = tables.compact_tables(
+        spark,
+        args.state,
+        {
+            "hashes": None,
+            "bloom": lambda d: d.groupBy("widx").agg(F.bit_or("word").alias("word")),
+        },
+        COMPACT_AFTER,
     )
-    spark.stop()
+    return {
+        "mode": mode,
+        "docs_in": n_new,
+        "skipped_done": n_skipped,
+        "kept": n_kept,
+        "dropped_as_dups": n_new - n_kept,
+        "corpus_total": n_corpus,
+        "compacted": compacted,
+        "rolled_back": {},
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+    spark = get_spark("exactdedup-job", cores=args.cores)
+    spark.sparkContext.setLogLevel("WARN")
+    try:
+        print(json.dumps(run(spark, args)))
+    except ParamsConflict as e:
+        print(e, file=sys.stderr)
+        return 2
+    finally:
+        spark.stop()
     return 0
 
 

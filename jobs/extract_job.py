@@ -63,12 +63,11 @@ def main(argv: list[str] | None = None) -> int:
     if args.incremental:
         if not args.checkpoint:
             ap.error("--incremental requires --checkpoint")
-        from chapterbridge_ocr_worker_spark.sources import tables
         from chapterbridge_ocr_worker_spark.streaming.incremental import (
             run_incremental,
         )
 
-        run_incremental(
+        docs_total = run_incremental(
             spark,
             args.documents,
             media,
@@ -76,8 +75,7 @@ def main(argv: list[str] | None = None) -> int:
             args.checkpoint,
             num_partitions=args.num_partitions,
         )
-        out = tables.read_table(spark, args.warehouse, "ocr_output")
-        stats = {"mode": "incremental", "docs_total": out.count() if out else 0}
+        stats = {"mode": "incremental", "docs_total": docs_total}
     else:
         from chapterbridge_ocr_worker_spark.pipeline import write_run
 

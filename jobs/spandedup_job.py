@@ -13,27 +13,14 @@ prior corpus's text is never re-read or re-segmented.
         --out /data/span_out/w33 \
         [--k 3] [--cores 8]
 
-State directory (owned by this job, carried run-to-run):
+State directory (owned by this job, carried run-to-run; the resume,
+rollback and compaction protocol is in sources/tables.py):
     segments/   (seg, owner_id) — every distinct segment the corpus has
-                ever owned, with the doc that owns it. Appended per run
-                as a crash-safe snapshot (sources.tables.append_snapshot):
-                each run appends ONLY the segments it newly owns (absent
-                from all prior state), so a segment appears at most once
-                across clean commits, and keys=["seg"] compaction
-                physically drops the byte-identical duplicates a
-                crash-rerun can add. owner_id exists so prior-state reads
-                can be filtered by the slice boundary (below) — it is the
-                same min-new-id crash discipline as jobs/dedup_job.py.
+                ever owned, with the doc that owns it. Each run appends
+                ONLY the segments it newly owns (absent from all prior
+                state), so a segment appears once. owner_id carries the
+                stats a crashed attempt's snapshot rolls back by.
     docs/       (id) — the committed-slice marker table, appended LAST.
-                It is the RESUME anti-join: a rerun whose ids are all
-                present answers resume-noop and mutates nothing; a crash
-                between the segments append and the docs append leaves
-                the marker absent, so the rerun REDOES the slice — and
-                because every prior-state read filters owner_id <
-                min(new ids), the orphaned segments from the crashed
-                attempt are invisible to the redo, which is therefore
-                bit-identical to a clean run (the duplicate snapshot it
-                appends is byte-identical and compacted away).
 
 Outputs under --out:
     cleaned/    (doc_id, n_segs, n_removed, text_clean) for THIS slice
@@ -42,7 +29,7 @@ First run bootstraps: full segment_dedup over the slice; state = the
 slice's distinct segments with their owners. Every later run segments
 ONLY the new slice and judges it against the state's one-column segment
 set (operators.curation.incremental_segment_dedup) — |new|-sized except
-that narrow read. The segments table auto-compacts once it accumulates
+that narrow read. Both state tables auto-compact once they accumulate
 more than COMPACT_AFTER snapshots.
 
 Caller contract (same as dedup_job): doc_ids are unique across slices
@@ -65,97 +52,73 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
 
-# compact the segments table once it exceeds this many live snapshots
+# compact a state table once it exceeds this many live snapshots
 COMPACT_AFTER = 4
 
 
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description="incremental span-dedup job")
     ap.add_argument("--documents", required=True, help="new crawl slice parquet")
     ap.add_argument("--state", required=True, help="persistent segment state dir")
     ap.add_argument("--out", required=True, help="output dir for this run")
     ap.add_argument("--k", type=int, default=3, help="tokens per segment")
     ap.add_argument("--cores", type=int, default=None, help="local[] cores (dev only)")
-    args = ap.parse_args(argv)
+    return ap.parse_args(argv)
 
-    spark = get_spark("spandedup-job", cores=args.cores)
-    spark.sparkContext.setLogLevel("WARN")
 
+def run(spark, args: argparse.Namespace) -> dict:
+    """One weekly run over ``args.documents``; returns the stats line."""
     from chapterbridge_ocr_worker_spark.operators.curation import (
         doc_segments,
         incremental_segment_dedup,
         segment_dedup,
     )
+    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
     from chapterbridge_ocr_worker_spark.sources import tables
 
-    docs = spark.read.parquet(args.documents).select("doc_id", "text")
-
-    # RESUME anti-join on the committed-docs marker table
-    n_in = docs.count()
+    # resume on the committed-docs marker table
     done = tables.read_table(spark, args.state, "docs")
-    if done is not None:
-        docs = docs.join(
-            done.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
-        )
-    n_skipped = n_in - docs.count()
-
-    if done is not None and n_skipped == n_in:
-        print(
-            json.dumps(
-                {
-                    "mode": "resume-noop",
-                    "docs_in": 0,
-                    "skipped_done": n_skipped,
-                    "segments_removed": 0,
-                    "segments_added": 0,
-                    "corpus_docs": done.count(),
-                    "compacted": {},
-                }
-            )
-        )
-        spark.stop()
-        return 0
+    docs, sl = pending_slice(
+        spark.read.parquet(args.documents).select("doc_id", "text"), done, "doc_id"
+    )
+    n_skipped = sl["n_skipped"]
+    if done is not None and n_skipped == sl["n_in"]:
+        return {
+            "mode": "resume-noop",
+            "docs_in": 0,
+            "skipped_done": n_skipped,
+            "segments_removed": 0,
+            "segments_added": 0,
+            "corpus_docs": done.count(),
+            "compacted": {},
+            "rolled_back": {},
+        }
+    rolled_back = tables.rollback_uncommitted(
+        args.state, "docs", {"segments": "owner_id"}, sl["lo"]
+    )
 
     prior = tables.read_table(spark, args.state, "segments")
+    # each segment's globally-first owner among the slice's docs
+    owned = (
+        doc_segments(docs, args.k)
+        .groupBy("seg")
+        .agg(F.min(F.struct("doc_id", "seg_idx")).alias("own"))
+    )
     if prior is None:
         mode = "bootstrap"
         cleaned = segment_dedup(docs, k=args.k)
-        # state = every distinct segment of the slice, owned by its
-        # globally-first doc (the same owner the dedup elected)
-        fresh = (
-            doc_segments(docs, args.k)
-            .groupBy("seg")
-            .agg(F.min(F.struct("doc_id", "seg_idx")).alias("own"))
-            .select("seg", F.col("own.doc_id").alias("owner_id"))
-        )
     else:
         mode = "incremental"
-        # CRASH-WINDOW BOUNDARY: filter the prior read by the slice's min
-        # id so a redo after a crash between the two appends cannot see
-        # the crashed attempt's own segment rows as "prior"
-        min_new_id = docs.agg(F.min("doc_id")).first()[0]
-        # pruned re-read: doc ids are crawl-ordered integers, so the
-        # manifest min/max stats skip a crashed attempt's own segment
-        # snapshot (owner_id >= min_new) at the metadata level — the
-        # crash-redo pays |prior|, not |prior + crashed slice|
-        prior = tables.read_table_pruned(
-            spark, args.state, "segments", "owner_id", None, min_new_id - 1
-        )
         cleaned = incremental_segment_dedup(docs, prior, k=args.k)
-        fresh = (
-            doc_segments(docs, args.k)
-            .groupBy("seg")
-            .agg(F.min(F.struct("doc_id", "seg_idx")).alias("own"))
-            .join(prior.select("seg"), "seg", "left_anti")
-            .select("seg", F.col("own.doc_id").alias("owner_id"))
-        )
+        owned = owned.join(prior.select("seg"), "seg", "left_anti")
+    fresh = owned.select("seg", F.col("own.doc_id").alias("owner_id"))
 
     cleaned = cleaned.persist()
     n_new = cleaned.count()  # materialize before state mutation
     n_removed = int(cleaned.agg(F.sum("n_removed")).first()[0] or 0)
     cleaned.write.mode("overwrite").parquet(os.path.join(args.out, "cleaned"))
 
-    # commit: segments FIRST, docs marker LAST (see module docstring)
+    # commit: segments FIRST, docs marker LAST
     n_added = fresh.count()
     tables.append_snapshot(
         fresh, args.state, "segments", stats_cols=["owner_id"]
@@ -167,28 +130,29 @@ def main(argv: list[str] | None = None) -> int:
     n_corpus = tables.read_table(spark, args.state, "docs").count()
     cleaned.unpersist()
 
-    compacted = {}
-    for tbl, keys in (("segments", ["seg"]), ("docs", ["id"])):
-        path = tables.table_path(args.state, tbl)
-        live = tables._live_snapshots(path) or []
-        if len(live) > COMPACT_AFTER:
-            stats = tables.compact_table(spark, args.state, tbl, keys=keys)
-            compacted[tbl] = stats["snapshots_before"]
-
-    print(
-        json.dumps(
-            {
-                "mode": mode,
-                "docs_in": n_new,
-                "skipped_done": n_skipped,
-                "segments_removed": n_removed,
-                "segments_added": n_added,
-                "corpus_docs": n_corpus,
-                "compacted": compacted,
-            }
-        )
+    compacted = tables.compact_tables(
+        spark, args.state, {"segments": ["seg"], "docs": ["id"]}, COMPACT_AFTER
     )
-    spark.stop()
+    return {
+        "mode": mode,
+        "docs_in": n_new,
+        "skipped_done": n_skipped,
+        "segments_removed": n_removed,
+        "segments_added": n_added,
+        "corpus_docs": n_corpus,
+        "compacted": compacted,
+        "rolled_back": rolled_back,
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+    spark = get_spark("spandedup-job", cores=args.cores)
+    spark.sparkContext.setLogLevel("WARN")
+    try:
+        print(json.dumps(run(spark, args)))
+    finally:
+        spark.stop()
     return 0
 
 

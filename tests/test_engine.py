@@ -88,6 +88,14 @@ def test_dedup_requires_both_iou_and_text():
     assert len(deduplicate_lines([a, c])) == 2  # same text, far apart
 
 
+def test_dedup_keeps_both_below_iou_threshold():
+    # IoU ~0.55 is under the adaptive path's 0.6 threshold: both boxes stay
+    a = {"text": "hello there", "confidence": 0.9, "bbox": box(0, 0, 100, 20)}
+    b = {"text": "hello there", "confidence": 0.8, "bbox": box(0, 6, 100, 26)}
+    assert 0.5 < bbox_iou(a["bbox"], b["bbox"]) < 0.6
+    assert len(deduplicate_lines([a, b], iou_threshold=0.6)) == 2
+
+
 def test_adaptive_no_tile_reading_order():
     eng = StubEngine()
     lines = [

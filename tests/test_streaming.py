@@ -61,7 +61,8 @@ def test_replayed_epoch_after_crash_is_exact(
     with crash_appends(k, commit=False) as calls, pytest.raises(Exception, match="injected crash"):
         run_incremental(spark, docs_dir, media_df, wh, ckpt)
     assert calls[-1] == ("ocr_output" if k == 1 else "lineage")
-    run_incremental(spark, docs_dir, media_df, wh, ckpt)
+    # docs_total counts committed docs once, not the replayed ocr_output rows
+    assert run_incremental(spark, docs_dir, media_df, wh, ckpt) == len(clean_state["ocr_output"])
     assert table_state(wh) == clean_state
 
 

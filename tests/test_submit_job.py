@@ -42,8 +42,8 @@ def test_extract_job_cli(spark, tmp_path):
 def test_dedup_job_cli_bootstrap_then_incremental(spark, tmp_path):
     """The weekly-crawl dedup entrypoint: run 1 bootstraps the state dir
     (full dedup + signature table), run 2 judges a new slice against the
-    materialized state incrementally. Clean subprocess, two invocations
-    sharing --state."""
+    materialized state incrementally. Clean subprocess, invocations sharing
+    --state; crash recovery is tests/test_weekly_jobs.py."""
     import random
 
     rng = random.Random(777)
@@ -136,63 +136,6 @@ def test_dedup_job_cli_bootstrap_then_incremental(spark, tmp_path):
         ).collect()
     }
     assert state_labels == full_labels
-
-    # CRASH WINDOW: kill the run "between the bucket_counts append and the
-    # signatures append" by un-committing week2's signature snapshot; the
-    # rerun (resume marker gone) must redo the slice and leave state
-    # IDENTICAL to the clean path — labels equal the full recompute and no
-    # bucket count is double-counted by the orphaned week2 delta rows.
-    import json as _json
-
-    sig_path = os.path.join(state, "signatures")
-    with open(os.path.join(sig_path, "_live_snapshots.json")) as f:
-        manifest = _json.load(f)
-    victim = manifest["snapshots"].pop()  # week2's commit
-    with open(os.path.join(sig_path, "_live_snapshots.json"), "w") as f:
-        _json.dump(manifest, f)
-    shutil.rmtree(os.path.join(sig_path, victim))
-    assert tables.read_table(spark, state, "signatures").count() == 24
-
-    s2c = run(w2, str(tmp_path / "out2c"))
-    assert s2c["mode"] == "incremental"  # marker gone -> full redo
-    assert s2c["dropped_as_dups"] == 2 and s2c["corpus_total"] == 40
-    relabeled = {
-        r["id"]: r["cluster_id"]
-        for r in tables.read_table_latest(
-            spark, state, "clusters", keys=["id"]
-        ).collect()
-    }
-    assert relabeled == full_labels
-    # counts state: SUM over latest-wins deltas == true union bucket counts
-    from chapterbridge_ocr_worker_spark.operators.dedup import (
-        bucket_count_rows,
-        bucket_rows,
-        minhash_signatures,
-    )
-    from pyspark.sql import functions as F
-
-    got_counts = {
-        r["bh"]: r["n"]
-        for r in tables.read_table_latest(
-            spark, state, "bucket_counts", keys=["run_id"]
-        )
-        .groupBy("bh")
-        .agg(F.sum("n").alias("n"))
-        .collect()
-    }
-    true_counts = {
-        r["bh"]: r["n"]
-        for r in bucket_count_rows(
-            bucket_rows(
-                minhash_signatures(
-                    spark.createDataFrame(
-                        [(i, texts[i]) for i in range(40)], ["doc_id", "text"]
-                    )
-                )
-            )
-        ).collect()
-    }
-    assert got_counts == true_counts
 
 
 def test_curate_job_cli(spark, tmp_path):
@@ -335,9 +278,8 @@ def test_corpus_job_span_dedup_stage(spark, tmp_path):
 
 def test_spandedup_job_cli(spark, tmp_path):
     """Weekly span-dedup entrypoint (jobs/spandedup_job.py): bootstrap,
-    incremental run equal to a full recompute on the new slice,
-    resume-noop on rerun, and the crash window (segments appended, docs
-    marker not) redone bit-identically."""
+    incremental run equal to a full recompute on the new slice, and
+    resume-noop on rerun (crash recovery: tests/test_weekly_jobs.py)."""
     rows = {
         0: "a b c d e f",        # owns "a b" "c d" "e f"
         1: "a b x y",            # loses "a b", owns "x y"
@@ -402,46 +344,12 @@ def test_spandedup_job_cli(spark, tmp_path):
     s2b = run(w2, str(tmp_path / "out2b"))
     assert s2b["mode"] == "resume-noop" and s2b["skipped_done"] == 3
 
-    # CRASH WINDOW: un-commit week2's docs marker (the LAST append); the
-    # rerun must redo the slice bit-identically even though the crashed
-    # attempt's segment rows are already in state
-    import json as _json
-    import shutil
-
-    docs_path = os.path.join(state, "docs")
-    with open(os.path.join(docs_path, "_live_snapshots.json")) as f:
-        manifest = _json.load(f)
-    victim = manifest["snapshots"].pop()  # week2's marker
-    with open(os.path.join(docs_path, "_live_snapshots.json"), "w") as f:
-        _json.dump(manifest, f)
-    shutil.rmtree(os.path.join(docs_path, victim))
-
-    s2c = run(w2, str(tmp_path / "out2c"))
-    assert s2c["mode"] == "incremental"
-    assert s2c["segments_removed"] == 2 and s2c["segments_added"] == 4
-    redo = {
-        r["doc_id"]: (r["n_segs"], r["n_removed"], r["text_clean"])
-        for r in spark.read.parquet(str(tmp_path / "out2c" / "cleaned")).collect()
-    }
-    assert redo == full
-    # state membership equals the union's distinct segments (duplicate
-    # snapshot rows are membership-invisible and compacted away later)
-    from chapterbridge_ocr_worker_spark.sources import tables
-
-    segs = {
-        r["seg"]
-        for r in tables.read_table(spark, state, "segments").collect()
-    }
-    assert segs == {"a b", "c d", "e f", "x y", "p q", "r s", "n m", "zz ww"}
-
 
 def test_embdedup_job_cli(spark, tmp_path):
     """Weekly embedding near-dup entrypoint (jobs/embdedup_job.py):
-    bootstrap, incremental equal to full-on-new-pairs, resume-noop, the
-    crash window (sigs appended, vecs marker not) redone with forced
-    keys-dedup compaction, and IVF index maintenance stats."""
+    bootstrap, incremental equal to full-on-new-pairs, resume-noop, and IVF
+    index maintenance stats (crash recovery: tests/test_weekly_jobs.py)."""
     import json as _json
-    import shutil
 
     e1 = [1.0, 0.0, 0.0, 0.0]
     e2 = [0.0, 1.0, 0.0, 0.0]
@@ -498,33 +406,6 @@ def test_embdedup_job_cli(spark, tmp_path):
 
     s2b = run(w2, str(tmp_path / "out2b"))
     assert s2b["mode"] == "resume-noop" and s2b["skipped_done"] == 3
-
-    # CRASH WINDOW: un-commit week2's vecs marker (the LAST append); the
-    # redo must produce identical outputs AND force a keys=["id"] sig
-    # compaction so the duplicate snapshot never inflates bucket counts
-    vecs_path = os.path.join(state, "vecs")
-    with open(os.path.join(vecs_path, "_live_snapshots.json")) as f:
-        manifest = _json.load(f)
-    victim = manifest["snapshots"].pop()
-    with open(os.path.join(vecs_path, "_live_snapshots.json"), "w") as f:
-        _json.dump(manifest, f)
-    shutil.rmtree(os.path.join(vecs_path, victim))
-
-    s2c = run(w2, str(tmp_path / "out2c"))
-    assert s2c["mode"] == "incremental"
-    assert s2c["crash_orphans"] == 3 and "sigs" in s2c["compacted"]
-    assert s2c["pairs"] == 3 and s2c["dups"] == 2
-    redo = {
-        (r["id_a"], r["id_b"], r["cos_r"])
-        for r in spark.read.parquet(str(tmp_path / "out2c" / "pairs")).collect()
-    }
-    assert redo == got
-    # post-compaction state: exactly one signature row per vector
-    from chapterbridge_ocr_worker_spark.sources import tables
-
-    sig_rows = tables.read_table(spark, state, "sigs").collect()
-    assert len(sig_rows) == 6
-    assert sorted(r["id"] for r in sig_rows) == [0, 1, 2, 10, 11, 12]
 
 
 def test_corpus_job_url_and_lm_stages(spark, tmp_path):
@@ -665,11 +546,7 @@ def test_exactdedup_job_cli(spark, tmp_path):
     """The weekly exact-dedup entrypoint (jobs/exactdedup_job.py):
     bootstrap materializes the hash + bloom state, the incremental run
     judges a new slice through the folded-bitmap gate, a committed-slice
-    rerun is a no-op, and a crash between the bloom append and the hashes
-    append (the resume marker) redoes the slice bit-identically — the
-    orphaned duplicate bloom snapshot is idempotent under the fold."""
-    import shutil
-
+    rerun is a no-op (crash recovery: tests/test_weekly_jobs.py)."""
     texts = {i: f"exact doc body number {i}" for i in range(40)}
     texts[24] = texts[3]   # prior-vs-new dup
     texts[26] = texts[25]  # new-vs-new dup
@@ -703,11 +580,8 @@ def test_exactdedup_job_cli(spark, tmp_path):
     assert s1 == {
         "mode": "bootstrap", "docs_in": 24, "skipped_done": 0, "kept": 24,
         "dropped_as_dups": 0, "corpus_total": 24, "compacted": {},
+        "rolled_back": {},
     }
-
-    # snapshot the bootstrap state BEFORE week2 commits (crash sim below)
-    pre_w2_hashes = str(tmp_path / "hashes_backup")
-    shutil.copytree(os.path.join(state, "hashes"), pre_w2_hashes)
 
     s2 = run(w2, str(tmp_path / "out2"))
     assert s2["mode"] == "incremental"
@@ -724,25 +598,6 @@ def test_exactdedup_job_cli(spark, tmp_path):
     s2b = run(w2, str(tmp_path / "out2b"))
     assert s2b["mode"] == "resume-noop"
     assert s2b["skipped_done"] == 16 and s2b["corpus_total"] == 40
-
-    # CRASH WINDOW: bloom committed, hashes marker not — restore the
-    # hashes table to its pre-week2 state while keeping week2's bloom
-    # snapshot. The rerun must redo the slice (marker gone) and produce
-    # the SAME decisions: the duplicate bloom snapshot only re-sets bits.
-    from chapterbridge_ocr_worker_spark.sources import tables
-
-    shutil.rmtree(os.path.join(state, "hashes"))
-    shutil.copytree(pre_w2_hashes, os.path.join(state, "hashes"))
-    assert tables.read_table(spark, state, "hashes").count() == 24
-
-    s2c = run(w2, str(tmp_path / "out2c"))
-    assert s2c["mode"] == "incremental"
-    assert s2c["dropped_as_dups"] == 2 and s2c["corpus_total"] == 40
-    dec_c = {
-        r["id"]: r["keep"]
-        for r in spark.read.parquet(str(tmp_path / "out2c" / "decisions")).collect()
-    }
-    assert dec_c == dec
 
     # incremental-vs-full equivalence over the whole corpus: the union of
     # per-run decisions == plain keep-first exact dedup of all 40 docs
@@ -762,7 +617,7 @@ def test_exactdedup_job_cli(spark, tmp_path):
         r["id"]: r["keep"]
         for r in spark.read.parquet(str(tmp_path / "out1" / "decisions")).collect()
     }
-    assert {**dec1, **dec_c} == full_keep
+    assert {**dec1, **dec} == full_keep
 
 
 def test_exactdedup_job_bloom_fold_compaction(spark, tmp_path):
