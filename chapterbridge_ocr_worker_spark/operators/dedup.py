@@ -692,13 +692,11 @@ def neardup_clusters(
 
 
 def incremental_dedup(
-    new_docs: DataFrame,
+    new_sigs: DataFrame,
     prior_sigs: DataFrame,
     prior_clusters: DataFrame | None = None,
     threshold: float = 0.6,
     min_est: float = 0.35,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket: int = 256,
     storage_level: str | None = None,
     scope: str = "new",
@@ -715,7 +713,9 @@ def incremental_dedup(
     exists for: the prior corpus was deduped once, its signature table
     (``materialize_signatures``) and cluster labels (``neardup_clusters``)
     were kept, and next week's crawl must be judged against the union
-    WITHOUT recomputing 100 TB of signatures. Only new docs are hashed;
+    WITHOUT recomputing 100 TB of signatures. ``new_sigs`` are the new
+    slice's signature rows (``minhash_signatures``), hashed once by the
+    caller, which usually appends the same rows to its signature table;
     the band join runs new-vs-(new ∪ prior); prior pairs are never
     re-derived (prior connectivity enters as the linear-sized cluster-label
     edge list). This is the dedup analogue of the extraction pipeline's
@@ -744,7 +744,10 @@ def incremental_dedup(
     prior ids (crawl-ordered ids) and no band bucket crosses max_bucket
     between the prior corpus and the union, keep and cluster labels for
     new docs are IDENTICAL to running jaccard_keep / neardup_clusters on
-    the union from scratch (tests/test_operators.py pins this). A bucket
+    the union from scratch (tests/test_operators.py pins this). An EMPTY
+    prior is the limiting case: the result is then jaccard_keep /
+    neardup_clusters over the slice alone, which is how jobs/dedup_job.py
+    runs its first slice (tests/test_properties.py pins cut=0). A bucket
     that outgrows the cap only in the union makes the incremental run see
     strictly fewer union pairs — same direction the full recompute moves.
 
@@ -769,9 +772,12 @@ def incremental_dedup(
     from prior_sigs (one linear narrow pass each — the r4 shape, still
     correct, kept for table-less callers).
     """
-    new_sigs = persist_tracked(
-        minhash_signatures(new_docs, text_col, id_col), storage_level
-    )
+    from .fastpath import bucket_pair_sig_matches
+
+    # the slice's rows feed the union, the band explode and the output ids:
+    # one barrier, unless the caller already holds one
+    if not new_sigs.is_cached:
+        new_sigs = persist_tracked(new_sigs, storage_level)
     # attach-only union: band rows are derived separately below, so the
     # persisted union never carries the bands column (narrower barrier AND
     # a bands-free prior-table scan — the plan pin checks the ReadSchema)
@@ -816,50 +822,24 @@ def incremental_dedup(
     e = prior_rel.withColumn("is_new", F.lit(False)).unionByName(
         new_e.withColumn("is_new", F.lit(True))
     )
-    e = e.join(kept, "bh", "left_semi")
-    # candidates: one side NEW, other side anything — the prior-vs-prior
-    # quadrant (the expensive one at 100 TB) is never generated.
-    # (r6 note: the full-corpus family fuses this stage into the
-    # bucket-grouped kernel; here the asymmetric narrow-row join over the
-    # materialized bucket table measured at parity or better than the
-    # fused form at every tested scale, so the r5-proven shape stays.)
-    en = e.filter("is_new")
-    cand = (
-        en.alias("a")
-        .join(
-            e.alias("b"),
-            (F.col("a.bh") == F.col("b.bh")) & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
-        )
-        .distinct()
-    )
-
-    # est-prefilter then exact re-rank, same stages as jaccard_pairs_lsh;
-    # is_new flags ride the attach joins (no extra membership join)
-    sa = allsigs.select(
-        F.col("id").alias("id_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("is_new").alias("new_a"),
-    )
-    sb = allsigs.select(
-        F.col("id").alias("id_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("is_new").alias("new_b"),
-    )
-    matching = F.aggregate(
-        F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
+    e = e.join(kept, "bh", "left_semi").join(allsigs.select("id", "sig"), "id")
+    # candidates: the bucket-pair kernel of the full operators (_est_pairs)
+    # in its flagged mode — one side NEW, other side anything, so the
+    # prior-vs-prior quadrant (the expensive one at 100 TB) is never
+    # generated; the flags ride out as (new_a, new_b). Signatures come in
+    # through the one keyed join above, so a pair costs no attach joins.
+    # Measured against the old band self-join + two signature attach joins
+    # + zip_with fold, on a 4-CPU VM: perfbench dedup_weekly (400-doc
+    # state, 100-doc slice) runs 112 Spark jobs instead of 119 and its
+    # median run_s fell 12.7 -> 11.8 s over 10 interleaved pairs; the
+    # registry's dedup_incremental at sf0.1 is at parity (5-7 s warm).
     est = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(F.round(matching / F.lit(float(MH_K)), 4) >= min_est)
+        bucket_pair_sig_matches(e, MH_K, flag_col="is_new")
+        .distinct()
+        .filter(F.round(F.col("matching") / F.lit(float(MH_K)), 4) >= min_est)
         .select("id_a", "id_b", "new_a", "new_b")
     )
+    # exact re-rank, same stage as jaccard_pairs_lsh
     ta = allsigs.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     tb = allsigs.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
     inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))

@@ -1759,7 +1759,11 @@ def dedup_clusters_q(spark, sf_dir):
     "and closes them with a recursive reachability CTE",
 )
 def dedup_incremental_q(spark, sf_dir):
-    from .operators.dedup import incremental_dedup, read_signatures
+    from .operators.dedup import (
+        incremental_dedup,
+        minhash_signatures,
+        read_signatures,
+    )
 
     docs = t(spark, sf_dir, "documents")
     # crawl-ordered 60/40 split; integer arithmetic matches the twin's
@@ -1774,7 +1778,7 @@ def dedup_incremental_q(spark, sf_dir):
     # fully |new|-sized weekly path: caps from the pre-aggregated count
     # table, band rows from the narrow bucket table, frontier closure
     return incremental_dedup(
-        new,
+        minhash_signatures(new),
         prior_sigs,
         prior_clusters,
         threshold=0.6,

@@ -32,14 +32,16 @@ rollback and compaction protocol is in sources/tables.py):
 Outputs under --out:
     decisions/    (id, keep, cluster_id) for THIS run's docs
 
-First run bootstraps: full neardup_clusters + jaccard_keep over the slice.
-Every later run hashes ONLY the new slice, band-joins it against the
-materialized union buckets (operators.dedup.incremental_dedup), and emits
-keep/drop + cluster labels. Prior decisions are frozen (docs already
-shipped to training are never retro-dropped). State tables auto-compact
-once they accumulate more than COMPACT_AFTER snapshots — clusters with
-keys=["id"] so latest-wins survives the rewrite and superseded label rows
-are physically dropped.
+Every run hashes ONLY the new slice, once, and judges those signature
+rows against the materialized union buckets with one decision operator
+(operators.dedup.incremental_dedup), emitting keep/drop + cluster labels.
+The first run ("bootstrap") is the same call over an empty prior, which
+equals a full neardup_clusters + jaccard_keep of the slice. Prior
+decisions are frozen (docs already shipped to training are never
+retro-dropped). State tables auto-compact once they accumulate more than
+COMPACT_AFTER snapshots — clusters with keys=["id"] so latest-wins
+survives the rewrite and superseded label rows are physically dropped;
+the other tables hold each row once and compact by plain union.
 
 Caller contract: doc_ids are unique across slices and crawl-ordered (new
 ids greater than all prior ids) — what any ingest sequence number gives.
@@ -85,9 +87,7 @@ def run(spark, args: argparse.Namespace) -> dict:
         bucket_count_rows,
         bucket_rows,
         incremental_dedup,
-        jaccard_keep,
         minhash_signatures,
-        neardup_clusters,
     )
     from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
     from chapterbridge_ocr_worker_spark.sources import tables
@@ -121,30 +121,17 @@ def run(spark, args: argparse.Namespace) -> dict:
         sl["lo"],
     )
 
+    # the slice is hashed ONCE: these rows are judged, then appended
     new_sigs = minhash_signatures(docs).persist()
     new_ids = docs.select(F.col("doc_id").alias("id"))
     cc_stats: dict = {}
 
-    if prior_sigs is None:
-        # bootstrap: full dedup of the first slice
-        mode = "bootstrap"
-        backfilled = False
-        clusters = neardup_clusters(
-            docs, threshold=args.threshold, cc_stats=cc_stats
-        )
-        kept = jaccard_keep(docs, threshold=args.threshold).withColumn(
-            "keep", F.lit(1)
-        )
-        all_labels = (
-            clusters.join(kept.select("id", "keep"), "id", "left")
-            .select(
-                "id",
-                F.coalesce("keep", F.lit(0)).alias("keep"),
-                "cluster_id",
-            )
-        )
-    else:
-        mode = "incremental"
+    # the first run is an incremental run over an empty prior; later runs
+    # read the prior labels and the bucket state the last run appended
+    mode = "bootstrap" if prior_sigs is None else "incremental"
+    prior_clusters = prior_buckets = prior_counts = None
+    backfilled = False
+    if prior_sigs is not None:
         prior_clusters = tables.read_table_latest(
             spark, args.state, "clusters", keys=["id"]
         )
@@ -174,13 +161,16 @@ def run(spark, args: argparse.Namespace) -> dict:
             .groupBy("bh")
             .agg(F.sum("n").alias("n"))
         )
-        all_labels = incremental_dedup(
-            docs, prior_sigs, prior_clusters, threshold=args.threshold,
-            scope="all",
-            prior_buckets=prior_buckets,
-            prior_bucket_counts=prior_counts,
-            cc_stats=cc_stats,
-        )
+    all_labels = incremental_dedup(
+        new_sigs,
+        new_sigs.limit(0) if prior_sigs is None else prior_sigs,
+        prior_clusters,
+        threshold=args.threshold,
+        scope="all",
+        prior_buckets=prior_buckets,
+        prior_bucket_counts=prior_counts,
+        cc_stats=cc_stats,
+    )
 
     all_labels = all_labels.persist()
     decisions = all_labels.join(new_ids, "id", "left_semi")
@@ -211,15 +201,16 @@ def run(spark, args: argparse.Namespace) -> dict:
     new_sigs.unpersist()
     release_caches()
 
-    # clusters compact latest-wins per id (superseded labels drop out)
+    # clusters compact latest-wins per id (superseded labels drop out); the
+    # other tables hold each row once (rollback), so they compact by union
     compacted = tables.compact_tables(
         spark,
         args.state,
         {
             "signatures": None,
             "clusters": ["id"],
-            "buckets": ["id"],
-            "bucket_counts": ["run_id"],
+            "buckets": None,
+            "bucket_counts": None,
         },
         COMPACT_AFTER,
     )

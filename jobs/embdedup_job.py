@@ -82,7 +82,6 @@ def run(spark, args: argparse.Namespace) -> dict:
     from chapterbridge_ocr_worker_spark.operators.cache import release_caches
     from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
     from chapterbridge_ocr_worker_spark.operators.similarity import (
-        cosine_neardup_pairs,
         incremental_cosine_neardup,
         ivf_append_index,
         ivf_index_stats,
@@ -115,17 +114,15 @@ def run(spark, args: argparse.Namespace) -> dict:
         args.state, "vecs", {"sigs": "id"}, sl["lo"]
     )
 
+    # the first run judges the batch against an empty signature table
+    sigs = vector_signatures(batch, bits=args.bits)
     prior = tables.read_table(spark, args.state, "sigs")
+    mode = "bootstrap" if prior is None else "incremental"
     if prior is None:
-        mode = "bootstrap"
-        pairs = cosine_neardup_pairs(
-            batch, threshold=args.threshold, bits=args.bits
-        )
-    else:
-        mode = "incremental"
-        pairs = incremental_cosine_neardup(
-            batch, prior, threshold=args.threshold, bits=args.bits
-        )
+        prior = sigs.limit(0)
+    pairs = incremental_cosine_neardup(
+        batch, prior, threshold=args.threshold, bits=args.bits
+    )
 
     pairs = pairs.persist()
     n_pairs = pairs.count()  # materialize before state mutation
@@ -142,10 +139,7 @@ def run(spark, args: argparse.Namespace) -> dict:
     n_dups = keep.filter("is_dup").count()
 
     # commit: sigs FIRST, vecs marker LAST
-    tables.append_snapshot(
-        vector_signatures(batch, bits=args.bits), args.state, "sigs",
-        stats_cols=["id"],
-    )
+    tables.append_snapshot(sigs, args.state, "sigs", stats_cols=["id"])
     tables.append_snapshot(
         batch.select(F.col("vec_id").alias("id")), args.state, "vecs",
         stats_cols=["id"],
@@ -164,7 +158,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             ivf["rebuilt"] = True
 
     compacted = tables.compact_tables(
-        spark, args.state, {"sigs": ["id"], "vecs": ["id"]}, COMPACT_AFTER
+        spark, args.state, {"sigs": None, "vecs": None}, COMPACT_AFTER
     )
     return {
         "mode": mode,

@@ -83,7 +83,7 @@ def run(spark, args: argparse.Namespace) -> dict:
         BLOOM_K,
         BLOOM_M_BITS,
         bloom_build,
-        bloom_gated_incremental_exact,
+        bloom_gated_keep,
         exact_hashes,
     )
     from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
@@ -137,16 +137,10 @@ def run(spark, args: argparse.Namespace) -> dict:
 
     new_h = exact_hashes(docs).persist()
 
+    # the first run judges the slice against an empty prior; its bitmap is
+    # then built from that empty prior
     if prior_h is None:
-        # bootstrap: exact dedup within the first slice (keep-first per hash)
-        mode = "bootstrap"
-        first = new_h.groupBy("h").agg(F.min("id").alias("first_new"))
-        decisions = new_h.join(first, "h").select(
-            "id",
-            F.when(F.col("id") == F.col("first_new"), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("keep"),
-        )
+        mode, prior_h, words = "bootstrap", new_h.limit(0), None
     else:
         mode = "incremental"
         words = (
@@ -154,9 +148,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             .groupBy("widx")
             .agg(F.bit_or("word").alias("word"))
         )
-        decisions = bloom_gated_incremental_exact(
-            docs, prior_h, m_bits=m_bits, k=k, bloom_words=words
-        )
+    decisions = bloom_gated_keep(new_h, prior_h, m_bits, k, bloom_words=words)
 
     decisions = decisions.persist()
     n_new = decisions.count()  # materialize before state mutation

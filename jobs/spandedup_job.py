@@ -25,12 +25,12 @@ rollback and compaction protocol is in sources/tables.py):
 Outputs under --out:
     cleaned/    (doc_id, n_segs, n_removed, text_clean) for THIS slice
 
-First run bootstraps: full segment_dedup over the slice; state = the
-slice's distinct segments with their owners. Every later run segments
-ONLY the new slice and judges it against the state's one-column segment
-set (operators.curation.incremental_segment_dedup) — |new|-sized except
-that narrow read. Both state tables auto-compact once they accumulate
-more than COMPACT_AFTER snapshots.
+Every run segments ONLY the new slice and judges it against the state's
+one-column segment set (operators.curation.incremental_segment_dedup) —
+|new|-sized except that narrow read. The first run ("bootstrap") judges
+against an empty segment set, which equals a full segment_dedup of the
+slice. Both state tables hold each row once and auto-compact by plain
+union once they accumulate more than COMPACT_AFTER snapshots.
 
 Caller contract (same as dedup_job): doc_ids are unique across slices
 and crawl-ordered — every new id greater than all committed ids.
@@ -71,7 +71,6 @@ def run(spark, args: argparse.Namespace) -> dict:
     from chapterbridge_ocr_worker_spark.operators.curation import (
         doc_segments,
         incremental_segment_dedup,
-        segment_dedup,
     )
     from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
     from chapterbridge_ocr_worker_spark.sources import tables
@@ -97,21 +96,20 @@ def run(spark, args: argparse.Namespace) -> dict:
         args.state, "docs", {"segments": "owner_id"}, sl["lo"]
     )
 
-    prior = tables.read_table(spark, args.state, "segments")
     # each segment's globally-first owner among the slice's docs
-    owned = (
+    owners = (
         doc_segments(docs, args.k)
         .groupBy("seg")
         .agg(F.min(F.struct("doc_id", "seg_idx")).alias("own"))
+        .select("seg", F.col("own.doc_id").alias("owner_id"))
     )
+    # the first run judges the slice against an empty segment set
+    prior = tables.read_table(spark, args.state, "segments")
+    mode = "bootstrap" if prior is None else "incremental"
     if prior is None:
-        mode = "bootstrap"
-        cleaned = segment_dedup(docs, k=args.k)
-    else:
-        mode = "incremental"
-        cleaned = incremental_segment_dedup(docs, prior, k=args.k)
-        owned = owned.join(prior.select("seg"), "seg", "left_anti")
-    fresh = owned.select("seg", F.col("own.doc_id").alias("owner_id"))
+        prior = owners.limit(0)
+    cleaned = incremental_segment_dedup(docs, prior, k=args.k)
+    fresh = owners.join(prior.select("seg"), "seg", "left_anti")
 
     cleaned = cleaned.persist()
     n_new = cleaned.count()  # materialize before state mutation
@@ -131,7 +129,7 @@ def run(spark, args: argparse.Namespace) -> dict:
     cleaned.unpersist()
 
     compacted = tables.compact_tables(
-        spark, args.state, {"segments": ["seg"], "docs": ["id"]}, COMPACT_AFTER
+        spark, args.state, {"segments": None, "docs": None}, COMPACT_AFTER
     )
     return {
         "mode": mode,

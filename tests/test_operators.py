@@ -316,6 +316,7 @@ def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
         incremental_dedup,
         jaccard_keep,
         materialize_signatures,
+        minhash_signatures,
         neardup_clusters,
     )
 
@@ -327,7 +328,7 @@ def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
     prior_sigs = materialize_signatures(prior, str(tmp_path / "prior_sigs"))
     prior_clusters = neardup_clusters(prior, threshold=0.6)
     inc = incremental_dedup(
-        new, prior_sigs, prior_clusters, threshold=0.6
+        minhash_signatures(new), prior_sigs, prior_clusters, threshold=0.6
     ).collect()
 
     full_keep = {r["id"] for r in jaccard_keep(all_docs, threshold=0.6).collect()}
@@ -360,6 +361,7 @@ def test_incremental_dedup_bucket_tables_equivalent(spark, tmp_path):
         incremental_dedup,
         materialize_bucket_state,
         materialize_signatures,
+        minhash_signatures,
         neardup_clusters,
     )
 
@@ -372,18 +374,20 @@ def test_incremental_dedup_bucket_tables_equivalent(spark, tmp_path):
     prior_sigs = materialize_signatures(prior, sig_path)
     buckets, counts = materialize_bucket_state(prior_sigs, sig_path)
     prior_clusters = neardup_clusters(prior, threshold=0.6)
+    new_sigs = minhash_signatures(new)
 
     for scope in ("new", "all"):
         base = {
             r["id"]: (r["keep"], r["cluster_id"])
             for r in incremental_dedup(
-                new, prior_sigs, prior_clusters, threshold=0.6, scope=scope
+                new_sigs, prior_sigs, prior_clusters, threshold=0.6,
+                scope=scope,
             ).collect()
         }
         tabled = {
             r["id"]: (r["keep"], r["cluster_id"])
             for r in incremental_dedup(
-                new,
+                new_sigs,
                 prior_sigs,
                 prior_clusters,
                 threshold=0.6,
@@ -425,7 +429,7 @@ def test_incremental_dedup_cap_crossing_consistent(spark):
         got = {
             r["id"]: r["keep"]
             for r in incremental_dedup(
-                new, prior_sigs, max_bucket=8, **kwargs
+                minhash_signatures(new), prior_sigs, max_bucket=8, **kwargs
             ).collect()
         }
         # every bucket capped out -> no candidates -> everything kept
@@ -444,7 +448,7 @@ def test_incremental_dedup_cc_stats(spark):
     all_docs = spark.createDataFrame(rows, ["doc_id", "text"])
     stats = {}
     incremental_dedup(
-        all_docs.filter("doc_id >= 24"),
+        minhash_signatures(all_docs.filter("doc_id >= 24")),
         minhash_signatures(all_docs.filter("doc_id < 24")),
         cc_stats=stats,
     ).collect()
@@ -466,7 +470,9 @@ def test_incremental_dedup_defaults_prior_singletons(spark):
     new = all_docs.filter("doc_id >= 24")
     got = {
         r["id"]: (r["keep"], r["cluster_id"])
-        for r in incremental_dedup(new, minhash_signatures(prior)).collect()
+        for r in incremental_dedup(
+            minhash_signatures(new), minhash_signatures(prior)
+        ).collect()
     }
     assert got[24] == (0, 3)
     assert got[26] == (0, 25)

@@ -166,6 +166,7 @@ def test_incremental_dedup_plan_hygiene(spark, tmp_path):
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         materialize_signatures,
+        minhash_signatures,
     )
 
     docs = spark.createDataFrame(
@@ -175,7 +176,9 @@ def test_incremental_dedup_plan_hygiene(spark, tmp_path):
     prior_sigs = materialize_signatures(
         docs.filter("doc_id < 20"), str(tmp_path / "sigs")
     )
-    out = incremental_dedup(docs.filter("doc_id >= 20"), prior_sigs)
+    out = incremental_dedup(
+        minhash_signatures(docs.filter("doc_id >= 20")), prior_sigs
+    )
     plan = pi.formatted(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -195,6 +198,7 @@ def test_incremental_dedup_bucket_tables_plan(spark, tmp_path):
         incremental_dedup,
         materialize_bucket_state,
         materialize_signatures,
+        minhash_signatures,
     )
 
     docs = spark.createDataFrame(
@@ -205,7 +209,7 @@ def test_incremental_dedup_bucket_tables_plan(spark, tmp_path):
     prior_sigs = materialize_signatures(docs.filter("doc_id < 20"), sig_path)
     buckets, counts = materialize_bucket_state(prior_sigs, sig_path)
     out = incremental_dedup(
-        docs.filter("doc_id >= 20"),
+        minhash_signatures(docs.filter("doc_id >= 20")),
         prior_sigs,
         prior_buckets=buckets,
         prior_bucket_counts=counts,

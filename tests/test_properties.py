@@ -1,7 +1,7 @@
 """Property-based spot checks (SURVEY.md §5 item 4) — pure-Python level so
 hypothesis can iterate fast (the Spark plumbing is covered by e2e tests)."""
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from chapterbridge_ocr_worker_spark.engine.inner import (
@@ -194,14 +194,20 @@ _texts_strategy = st.lists(
 )
 
 
-@given(_texts_strategy, st.integers(1, 12))
+@given(_texts_strategy, st.integers(0, 12))
+@example(
+    texts=["alpha beta gamma", "alpha beta gamma delta", "beta gamma delta",
+           "zeta epsilon zeta", "alpha beta gamma"],
+    cut=0,
+)
 @settings(max_examples=6, deadline=None)  # each example runs two pipelines
 def test_incremental_dedup_matches_full_on_random_corpora(spark, texts, cut):
     """The documented equivalence regime, pinned property-style: for ANY
     corpus with crawl-ordered ids (caps never reached at this size), the
     incremental keep set and cluster labels for the new slice equal the
     full-union recompute. The dense tiny-vocab corpora drive chained
-    merges across the split boundary — the hard case."""
+    merges across the split boundary — the hard case. cut=0 is an empty
+    prior: the dedup job's first run, which must equal a full dedup."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         jaccard_keep,
@@ -210,8 +216,6 @@ def test_incremental_dedup_matches_full_on_random_corpora(spark, texts, cut):
     )
 
     cut = min(cut, len(texts) - 1)
-    if cut < 1:
-        return
     rows = [(i, t) for i, t in enumerate(texts)]
     all_docs = spark.createDataFrame(rows, ["doc_id", "text"])
     prior = all_docs.filter(f"doc_id < {cut}")
@@ -220,7 +224,9 @@ def test_incremental_dedup_matches_full_on_random_corpora(spark, texts, cut):
     inc = {
         r["id"]: (r["keep"], r["cluster_id"])
         for r in incremental_dedup(
-            new, minhash_signatures(prior), neardup_clusters(prior, 0.6),
+            minhash_signatures(new),
+            minhash_signatures(prior),
+            neardup_clusters(prior, 0.6),
             threshold=0.6,
         ).collect()
     }

@@ -57,7 +57,7 @@ def _texts(texts, ids):
 
 def _check_dedup(spark, w, state, out):
     """Rolling labels equal a full recompute over the union, and the
-    latest-wins bucket_counts sums equal the true union bucket counts."""
+    bucket_counts sums equal the true union bucket counts."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         bucket_count_rows,
         bucket_rows,
@@ -71,7 +71,7 @@ def _check_dedup(spark, w, state, out):
         r["id"]: r["cluster_id"] for r in neardup_clusters(union, threshold=0.6).collect()
     }
     got = (
-        tables.read_table_latest(spark, state, "bucket_counts", keys=["run_id"])
+        tables.read_table(spark, state, "bucket_counts")
         .groupBy("bh")
         .agg(F.sum("n").alias("n"))
     )

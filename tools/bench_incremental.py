@@ -37,6 +37,7 @@ from chapterbridge_ocr_worker_spark.operators.dedup import (
     jaccard_keep,
     materialize_bucket_state,
     materialize_signatures,
+    minhash_signatures,
     neardup_clusters,
     read_signatures,
 )
@@ -87,7 +88,7 @@ def main() -> None:
         pc = spark.read.parquet(os.path.join(work, "sigs_bucket_counts"))
         t0 = time.time()
         inc = incremental_dedup(
-            new, prior_sigs, prior_clusters, threshold=0.6,
+            minhash_signatures(new), prior_sigs, prior_clusters, threshold=0.6,
             prior_buckets=pb, prior_bucket_counts=pc,
         )
         inc_rows = {r["id"]: (r["keep"], r["cluster_id"]) for r in inc.collect()}
@@ -99,7 +100,7 @@ def main() -> None:
         # components pass their labels through without riding the closure
         t0 = time.time()
         inc_all = incremental_dedup(
-            new, prior_sigs, prior_clusters, threshold=0.6, scope="all",
+            minhash_signatures(new), prior_sigs, prior_clusters, threshold=0.6, scope="all",
             prior_buckets=pb, prior_bucket_counts=pc,
         )
         all_rows = {r["id"]: (r["keep"], r["cluster_id"]) for r in inc_all.collect()}
