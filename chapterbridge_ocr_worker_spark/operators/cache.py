@@ -12,11 +12,11 @@ and callers (bench sweeps, long-running jobs) call ``release_caches()``
 between logical units of work. ``spark.catalog.clearCache()`` also works but
 is a blunt instrument — it drops caches the caller created too.
 
-Storage level is configurable (``SPARK_GRAFT_SIG_STORAGE`` env or the
-``storage_level`` parameter the operators expose): MEMORY_AND_DISK default;
-DISK_ONLY removes the memory-pressure failure mode on very dup-heavy
-corpora at the cost of re-read I/O. At extreme scale write the signature
-table out as a real table instead (see dedup._est_pairs docstring).
+Storage level is configurable through the ``SPARK_GRAFT_SIG_STORAGE`` env
+var (a ``pyspark.StorageLevel`` name): MEMORY_AND_DISK default; DISK_ONLY
+removes the memory-pressure failure mode on very dup-heavy corpora at the
+cost of re-read I/O. At extreme scale write the signature table out as a
+real table instead (see dedup._est_pairs docstring).
 """
 
 from __future__ import annotations
@@ -30,15 +30,11 @@ _LIVE: list[DataFrame] = []
 DEFAULT_STORAGE = "MEMORY_AND_DISK"
 
 
-def persist_tracked(df: DataFrame, storage_level: str | None = None) -> DataFrame:
+def persist_tracked(df: DataFrame) -> DataFrame:
     """persist() with the module-tracked lifetime + configurable level."""
     from pyspark import StorageLevel
 
-    name = (
-        storage_level
-        or os.environ.get("SPARK_GRAFT_SIG_STORAGE")
-        or DEFAULT_STORAGE
-    )
+    name = os.environ.get("SPARK_GRAFT_SIG_STORAGE") or DEFAULT_STORAGE
     out = df.persist(getattr(StorageLevel, name))
     _LIVE.append(out)
     return out

@@ -283,7 +283,6 @@ def _sig_source(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    storage_level: str | None,
     table_path: str | None,
     family: int = 0,
 ) -> DataFrame:
@@ -291,9 +290,7 @@ def _sig_source(
     given (scale path / feeds incremental runs), else a tracked persist."""
     if table_path is not None:
         return materialize_signatures(df, table_path, text_col, id_col, family)
-    return persist_tracked(
-        minhash_signatures(df, text_col, id_col, family), storage_level
-    )
+    return persist_tracked(minhash_signatures(df, text_col, id_col, family))
 
 
 def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int = 256) -> DataFrame:
@@ -337,9 +334,9 @@ def _est_pairs(sigs: DataFrame, min_est: float, max_bucket: int) -> DataFrame:
 
     Cache LIFETIME is caller-owned (operators return lazy plans and have no
     action of their own to unpersist after): long-lived drivers call
-    operators.cache.release_caches() between units of work, or pass
-    storage_level="DISK_ONLY" through the public operators to keep the
-    barrier off the executor heap.
+    operators.cache.release_caches() between units of work, or set
+    SPARK_GRAFT_SIG_STORAGE=DISK_ONLY to keep the barrier off the executor
+    heap.
     """
     # r6 fastpath: candidate generation + signature-match counting fuse
     # into one bucket-grouped kernel (exact integers) — the old
@@ -375,7 +372,6 @@ def minhash_candidates(
     id_col: str = "doc_id",
     min_est: float = 0.5,
     max_bucket: int = 256,
-    storage_level: str | None = None,
     table_path: str | None = None,
     family: int = 0,
 ) -> DataFrame:
@@ -383,7 +379,7 @@ def minhash_candidates(
 
     Persists the signature table internally (see _est_pairs); the CALLER
     owns the cache lifetime — call cache.release_caches() when done, or
-    pass storage_level="DISK_ONLY" to keep it off the executor heap.
+    set SPARK_GRAFT_SIG_STORAGE=DISK_ONLY to keep it off the executor heap.
     table_path switches the barrier to a materialized parquet signature
     table (see materialize_signatures) — the 100-TB mode."""
     if table_path is not None:
@@ -391,8 +387,7 @@ def minhash_candidates(
     else:
         sigs = persist_tracked(
             minhash_signatures(df, text_col, id_col, family)
-            .select("id", "sig", "bands"),  # toks not needed: keep it narrow
-            storage_level,
+            .select("id", "sig", "bands")  # toks not needed: keep it narrow
         )
     return _est_pairs(sigs, min_est, max_bucket)
 
@@ -404,7 +399,6 @@ def jaccard_pairs_lsh(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 256,
-    storage_level: str | None = None,
     table_path: str | None = None,
     family: int = 0,
 ) -> DataFrame:
@@ -422,7 +416,7 @@ def jaccard_pairs_lsh(
     the DuckDB twin recomputes the identical portable-hash pipeline, so the
     output is engine-exact, not merely approximately equal.
     """
-    sigs = _sig_source(df, text_col, id_col, storage_level, table_path, family)
+    sigs = _sig_source(df, text_col, id_col, table_path, family)
     pairs = _est_pairs(sigs, min_est, max_bucket).select("id_a", "id_b")
     ta = sigs.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     tb = sigs.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
@@ -444,7 +438,6 @@ def jaccard_keep(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 256,
-    storage_level: str | None = None,
     table_path: str | None = None,
 ) -> DataFrame:
     """The dedup DECISION: ids to keep — a doc is dropped iff it has a
@@ -458,8 +451,7 @@ def jaccard_keep(
     connected-components pass.
     """
     pairs = jaccard_pairs_lsh(
-        df, threshold, min_est, text_col, id_col, max_bucket, storage_level,
-        table_path,
+        df, threshold, min_est, text_col, id_col, max_bucket, table_path
     )
     dropped = pairs.select(F.col("id_b").alias("id")).distinct()
     return (
@@ -669,7 +661,6 @@ def neardup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 256,
-    storage_level: str | None = None,
     table_path: str | None = None,
     cc_stats: dict | None = None,
 ) -> DataFrame:
@@ -684,8 +675,7 @@ def neardup_clusters(
     doc count (one row per doc) regardless of pair-set size.
     """
     pairs = jaccard_pairs_lsh(
-        df, threshold, min_est, text_col, id_col, max_bucket, storage_level,
-        table_path,
+        df, threshold, min_est, text_col, id_col, max_bucket, table_path
     ).select("id_a", "id_b")
     nodes = df.select(F.col(id_col).alias("id"))
     return connected_components(pairs, nodes, stats=cc_stats)
@@ -698,16 +688,14 @@ def incremental_dedup(
     threshold: float = 0.6,
     min_est: float = 0.35,
     max_bucket: int = 256,
-    storage_level: str | None = None,
-    scope: str = "new",
     prior_buckets: DataFrame | None = None,
     prior_bucket_counts: DataFrame | None = None,
     cc_stats: dict | None = None,
 ) -> DataFrame:
     """Incremental dedup of NEW docs against a prior corpus's materialized
-    signature table: ``(id, keep, cluster_id)`` — one row per new doc
-    (``scope="new"``, default), or one row per doc in the UNION
-    (``scope="all"``) for callers maintaining a rolling label table.
+    signature table: ``(id, keep, cluster_id)`` — one row per new doc, plus
+    one row per prior doc whose label the run recomputed (the members of
+    every prior cluster a new-involving pair touches).
 
     The weekly-crawl workflow the portable-hash design (module docstring)
     exists for: the prior corpus was deduped once, its signature table
@@ -732,24 +720,28 @@ def incremental_dedup(
     - ``cluster_id`` = min member id of the doc's near-dup component over
       (prior cluster edges ∪ new-involving pairs) — a new doc that chains
       two prior clusters together merges their labels in this output.
-      With ``scope="all"`` the REFRESHED labels for prior docs ride along
-      too (the closure computes them anyway — zero extra joins): a state-
-      keeping caller (jobs/dedup_job.py) appends the full relabeling each
-      run and reads it back latest-wins, so prior labels never go stale
-      across merges. Prior rows always carry ``keep=1`` — frozen-prior
-      means a prior doc is never retro-dropped; its historical keep
-      decision lives in the run that ingested it.
+    - the output is the run's DELTA of a rolling label table: a prior doc
+      appears iff the frontier closure relabeled it (the closure computes
+      those labels anyway — zero extra joins), so a state-keeping caller
+      (jobs/dedup_job.py) appends the output and reads the table back
+      latest-wins per id, and prior labels never go stale across merges.
+      Every untouched prior label is already current in that table.
+      Prior rows always carry ``keep=1`` — frozen-prior means a prior doc
+      is never retro-dropped; its historical keep decision lives in the
+      run that ingested it. Callers that want the new docs only semi-join
+      the slice's ids.
 
     Equivalence to a full recompute: when new ids are all greater than
     prior ids (crawl-ordered ids) and no band bucket crosses max_bucket
     between the prior corpus and the union, keep and cluster labels for
-    new docs are IDENTICAL to running jaccard_keep / neardup_clusters on
-    the union from scratch (tests/test_operators.py pins this). An EMPTY
-    prior is the limiting case: the result is then jaccard_keep /
-    neardup_clusters over the slice alone, which is how jobs/dedup_job.py
-    runs its first slice (tests/test_properties.py pins cut=0). A bucket
-    that outgrows the cap only in the union makes the incremental run see
-    strictly fewer union pairs — same direction the full recompute moves.
+    new docs, and the labels of the prior rows in the output, are
+    IDENTICAL to running jaccard_keep / neardup_clusters on the union from
+    scratch (tests/test_operators.py pins this). An EMPTY prior is the
+    limiting case: the result is then jaccard_keep / neardup_clusters over
+    the slice alone, which is how jobs/dedup_job.py runs its first slice
+    (tests/test_properties.py pins cut=0). A bucket that outgrows the cap
+    only in the union makes the incremental run see strictly fewer union
+    pairs — same direction the full recompute moves.
 
     Scale shape — with ``prior_buckets`` + ``prior_bucket_counts`` (the
     materialized bucket state, see materialize_bucket_state / the dedup
@@ -757,11 +749,11 @@ def incremental_dedup(
     join (a week's crawl vs the corpus: |new| << |prior|), union-wide caps
     come from the pre-aggregated (bh, n) table plus the new slice's
     deltas, the prior band rows enter via a semi-join on the set of
-    buckets the new slice touches, and the label
-    closure runs over the FRONTIER only (components a new-involving pair
-    touches; untouched prior components pass their labels through
-    unchanged). No prior signature is recomputed, no prior pair re-scored,
-    no corpus-sized explode or closure remains. HONEST FLOOR: the
+    buckets the new slice touches, and the label closure runs over the
+    FRONTIER only (components a new-involving pair touches; untouched
+    prior components are neither relabeled nor emitted). No prior
+    signature is recomputed, no prior pair re-scored, no corpus-sized
+    explode, closure or label copy remains. HONEST FLOOR: the
     candidate semi-join still READS the (id, bh) table once — narrow
     (16 bytes/row) and linear in the corpus, but a read. For a realistic
     weekly slice that is the floor: |new| x 8 band buckets is a DENSE
@@ -777,7 +769,7 @@ def incremental_dedup(
     # the slice's rows feed the union, the band explode and the output ids:
     # one barrier, unless the caller already holds one
     if not new_sigs.is_cached:
-        new_sigs = persist_tracked(new_sigs, storage_level)
+        new_sigs = persist_tracked(new_sigs)
     # attach-only union: band rows are derived separately below, so the
     # persisted union never carries the bands column (narrower barrier AND
     # a bands-free prior-table scan — the plan pin checks the ReadSchema)
@@ -788,8 +780,7 @@ def incremental_dedup(
             new_sigs.select("id", "toks", "sig").withColumn(
                 "is_new", F.lit(True)
             )
-        ),
-        storage_level,
+        )
     )
 
     # band rows: new slice explodes its (persisted) signatures; the prior
@@ -849,8 +840,7 @@ def incremental_dedup(
         est.join(ta, "id_a")
         .join(tb, "id_b")
         .filter(F.round(jac, 4) >= threshold)
-        .select("id_a", "id_b", "new_a", "new_b"),
-        storage_level,
+        .select("id_a", "id_b", "new_a", "new_b")
     )
 
     if cc_stats is not None:
@@ -904,22 +894,11 @@ def incremental_dedup(
         stats=cc_stats,
     )
 
-    # dropped only ever contains NEW ids (the drop rule above), so prior
-    # rows in scope="all" mode get keep=1 through the same left join;
-    # nodes outside the closure fall back to identity labels (new
-    # singletons) or their untouched prior label (pass-through below)
-    if scope == "all":
-        untouched = prior_clusters.join(
-            labels.select("id"), "id", "left_anti"
-        ).select("id", "cluster_id")
-        labels = labels.unionByName(untouched)
-        base = (
-            prior_clusters.select("id")
-            .unionByName(new_sigs.select("id"))
-            .distinct()
-        )
-    else:
-        base = new_sigs.select("id")
+    # rows: the new docs plus the prior docs the closure labeled. dropped
+    # only ever contains NEW ids (the drop rule above), so prior rows get
+    # keep=1 through the same left join; new docs outside the closure are
+    # singletons and fall back to their own id
+    base = labels.select("id").unionByName(new_sigs.select("id")).distinct()
     return (
         base.join(dropped.withColumn("_drop", F.lit(1)), "id", "left")
         .join(labels, "id", "left")
@@ -939,7 +918,6 @@ def simhash_neardup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 256,
-    storage_level: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: hamming-banded bucket join + popcount
     re-rank.
@@ -950,9 +928,7 @@ def simhash_neardup_pairs(
     Re-rank = bit_count(xor) <= max_hamming, JVM-side. Same degenerate-
     bucket cap as MinHash (identical docs all share all 4 bands).
     """
-    sigs = persist_tracked(
-        simhash_signatures(df, text_col, id_col, use_kernel=True), storage_level
-    )
+    sigs = persist_tracked(simhash_signatures(df, text_col, id_col, use_kernel=True))
     band_cols = []
     for idx, (shift, width) in enumerate(SIM_BAND_EDGES):
         mask = F.lit((1 << width) - 1).cast("long")

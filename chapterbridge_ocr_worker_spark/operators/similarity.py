@@ -641,7 +641,6 @@ def cosine_neardup_pairs(
     max_bucket: int = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    storage_level: str | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via LSH blocking + exact cosine.
 
@@ -654,9 +653,7 @@ def cosine_neardup_pairs(
     """
     from .fastpath import bucket_pair_cos
 
-    sigs = persist_tracked(
-        vector_signatures(corpus, bits, id_col, vec_col), storage_level
-    )
+    sigs = persist_tracked(vector_signatures(corpus, bits, id_col, vec_col))
     keep = (
         sigs.groupBy("bucket")
         .agg(F.count("*").alias("bucket_n"))
@@ -682,7 +679,6 @@ def incremental_cosine_neardup(
     max_bucket: int = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    storage_level: str | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs of a NEW batch against a prior corpus's
     MATERIALIZED signature table: ``(id_a, id_b, cos_r)`` for every
@@ -699,9 +695,7 @@ def incremental_cosine_neardup(
     cosine_neardup_pairs over the union restricted to new-involving pairs
     (tests/test_operators.py pins this).
     """
-    new_sigs = persist_tracked(
-        vector_signatures(new_vectors, bits, id_col, vec_col), storage_level
-    )
+    new_sigs = persist_tracked(vector_signatures(new_vectors, bits, id_col, vec_col))
     allsigs = persist_tracked(
         prior_sigs.select("id", "vec", "bucket")
         .withColumn("is_new", F.lit(False))
@@ -709,8 +703,7 @@ def incremental_cosine_neardup(
             new_sigs.select("id", "vec", "bucket").withColumn(
                 "is_new", F.lit(True)
             )
-        ),
-        storage_level,
+        )
     )
     # union-wide caps from the narrow bucket column (prior side: one
     # column-pruned pass over the materialized table)

@@ -1776,7 +1776,9 @@ def dedup_incremental_q(spark, sf_dir):
     prior_sigs = read_signatures(spark, sig_path)
     prior_clusters = spark.read.parquet(cl_path)
     # fully |new|-sized weekly path: caps from the pre-aggregated count
-    # table, band rows from the narrow bucket table, frontier closure
+    # table, band rows from the narrow bucket table, frontier closure. The
+    # query reports the new docs only: the prior rows the closure relabeled
+    # sit below the split
     return incremental_dedup(
         minhash_signatures(new),
         prior_sigs,
@@ -1784,7 +1786,7 @@ def dedup_incremental_q(spark, sf_dir):
         threshold=0.6,
         prior_buckets=spark.read.parquet(f"{sig_path}_buckets"),
         prior_bucket_counts=spark.read.parquet(f"{sig_path}_bucket_counts"),
-    )
+    ).filter(F.col("id") >= t_split)
 
 
 def ensure_dedup_prior_state(spark, sf_dir) -> tuple[str, str]:

@@ -15,10 +15,11 @@ rollback and compaction protocol is in sources/tables.py):
     signatures/     MinHash signature table (id, toks, sig, bands) of every
                     doc ever processed, appended per run and never
                     rewritten. Appended LAST: it is the resume marker.
-    clusters/       (id, cluster_id) labels — the FULL refreshed relabeling
-                    appended per run, read back latest-wins per id, so a new
-                    doc chaining two prior clusters updates the prior
-                    members' labels too (no stale labels between runs).
+    clusters/       (id, cluster_id) labels — each run appends its delta:
+                    the new docs plus the prior docs whose cluster a new
+                    doc joined. Read back latest-wins per id, so a new doc
+                    chaining two prior clusters updates the prior members'
+                    labels too (no stale labels between runs).
     buckets/        (id, bh) exploded band-bucket rows — the narrow table
                     the weekly band join runs against, so the wide
                     signature table never re-explodes.
@@ -123,7 +124,6 @@ def run(spark, args: argparse.Namespace) -> dict:
 
     # the slice is hashed ONCE: these rows are judged, then appended
     new_sigs = minhash_signatures(docs).persist()
-    new_ids = docs.select(F.col("doc_id").alias("id"))
     cc_stats: dict = {}
 
     # the first run is an incremental run over an empty prior; later runs
@@ -161,28 +161,28 @@ def run(spark, args: argparse.Namespace) -> dict:
             .groupBy("bh")
             .agg(F.sum("n").alias("n"))
         )
-    all_labels = incremental_dedup(
+    labels = incremental_dedup(
         new_sigs,
         new_sigs.limit(0) if prior_sigs is None else prior_sigs,
         prior_clusters,
         threshold=args.threshold,
-        scope="all",
         prior_buckets=prior_buckets,
         prior_bucket_counts=prior_counts,
         cc_stats=cc_stats,
     )
 
-    all_labels = all_labels.persist()
-    decisions = all_labels.join(new_ids, "id", "left_semi")
-    n_new = decisions.count()  # materialize before state mutation
-    n_kept = decisions.filter("keep = 1").count()
+    labels = labels.persist()
+    decisions = labels.join(new_sigs.select("id"), "id", "left_semi")
+    # materialize before state mutation
+    n_new, n_kept = decisions.agg(F.count("*"), F.count_if(F.col("keep") == 1)).first()
     decisions.write.mode("overwrite").parquet(os.path.join(args.out, "decisions"))
 
     # commit: signatures (the marker) LAST; every other table records id
     # (bucket_counts: run_id) stats, so a crashed attempt's snapshots roll
-    # back on the rerun
+    # back on the rerun. clusters gets the label delta, which always holds
+    # the slice's ids
     tables.append_snapshot(
-        all_labels.select("id", "cluster_id"), args.state, "clusters",
+        labels.select("id", "cluster_id"), args.state, "clusters",
         stats_cols=["id"],
     )
     new_buckets = bucket_rows(new_sigs)
@@ -197,7 +197,7 @@ def run(spark, args: argparse.Namespace) -> dict:
     )
     tables.append_snapshot(new_sigs, args.state, "signatures", stats_cols=["id"])
     n_corpus = tables.read_table(spark, args.state, "signatures").count()
-    all_labels.unpersist()
+    labels.unpersist()
     new_sigs.unpersist()
     release_caches()
 

@@ -151,8 +151,8 @@ def run(spark, args: argparse.Namespace) -> dict:
     decisions = bloom_gated_keep(new_h, prior_h, m_bits, k, bloom_words=words)
 
     decisions = decisions.persist()
-    n_new = decisions.count()  # materialize before state mutation
-    n_kept = decisions.filter("keep = 1").count()
+    # materialize before state mutation
+    n_new, n_kept = decisions.agg(F.count("*"), F.count_if(F.col("keep") == 1)).first()
     decisions.write.mode("overwrite").parquet(os.path.join(args.out, "decisions"))
 
     # state commits: params first (idempotent — same content every run),

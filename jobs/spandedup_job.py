@@ -112,8 +112,9 @@ def run(spark, args: argparse.Namespace) -> dict:
     fresh = owners.join(prior.select("seg"), "seg", "left_anti")
 
     cleaned = cleaned.persist()
-    n_new = cleaned.count()  # materialize before state mutation
-    n_removed = int(cleaned.agg(F.sum("n_removed")).first()[0] or 0)
+    # materialize before state mutation
+    n_new, n_removed = cleaned.agg(F.count("*"), F.sum("n_removed")).first()
+    n_removed = int(n_removed or 0)
     cleaned.write.mode("overwrite").parquet(os.path.join(args.out, "cleaned"))
 
     # commit: segments FIRST, docs marker LAST

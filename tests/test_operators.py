@@ -307,11 +307,12 @@ def _crawl_corpus():
 
 def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
     """incremental_dedup over (new docs, prior signature table, prior
-    clusters) must reproduce the full-union recompute exactly for the new
-    docs — keep decisions AND cluster labels — when ids are crawl-ordered
-    and no bucket crosses the cap (the documented equivalence regime).
-    prior_sigs comes through materialize_signatures, so the parquet
-    round-trip of the signature table is covered too."""
+    clusters) must reproduce the full-union recompute exactly — keep
+    decisions for the new docs AND cluster labels for every row — when ids
+    are crawl-ordered and no bucket crosses the cap (the documented
+    equivalence regime). The rows are the new docs plus the one prior doc
+    (3) a new doc joined. prior_sigs comes through materialize_signatures,
+    so the parquet round-trip of the signature table is covered too."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         jaccard_keep,
@@ -337,12 +338,13 @@ def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
         for r in neardup_clusters(all_docs, threshold=0.6).collect()
     }
 
-    assert {r["id"] for r in inc} == set(range(24, 40))  # one row per new doc
+    # new docs plus the closure-labeled prior doc, nothing else
+    assert {r["id"] for r in inc} == set(range(24, 40)) | {3}
     assert {r["id"] for r in inc if r["keep"] == 1} == {
         i for i in range(24, 40) if i in full_keep
-    }
+    } | {3}
     assert {r["id"]: r["cluster_id"] for r in inc} == {
-        i: full_labels[i] for i in range(24, 40)
+        r["id"]: full_labels[r["id"]] for r in inc
     }
     # the planted cases actually fired
     by_id = {r["id"]: r for r in inc}
@@ -355,8 +357,8 @@ def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
 def test_incremental_dedup_bucket_tables_equivalent(spark, tmp_path):
     """The fully |new|-sized path (materialized (id, bh) bucket table +
     (bh, n) count table, frontier-limited closure) must return EXACTLY what
-    the table-less path returns — for new-doc rows AND for the scope='all'
-    rolling relabeling — on the planted crawl corpus."""
+    the table-less path returns — new-doc rows and relabeled prior rows
+    alike — on the planted crawl corpus."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         materialize_bucket_state,
@@ -376,27 +378,24 @@ def test_incremental_dedup_bucket_tables_equivalent(spark, tmp_path):
     prior_clusters = neardup_clusters(prior, threshold=0.6)
     new_sigs = minhash_signatures(new)
 
-    for scope in ("new", "all"):
-        base = {
-            r["id"]: (r["keep"], r["cluster_id"])
-            for r in incremental_dedup(
-                new_sigs, prior_sigs, prior_clusters, threshold=0.6,
-                scope=scope,
-            ).collect()
-        }
-        tabled = {
-            r["id"]: (r["keep"], r["cluster_id"])
-            for r in incremental_dedup(
-                new_sigs,
-                prior_sigs,
-                prior_clusters,
-                threshold=0.6,
-                scope=scope,
-                prior_buckets=buckets,
-                prior_bucket_counts=counts,
-            ).collect()
-        }
-        assert tabled == base, scope
+    base = {
+        r["id"]: (r["keep"], r["cluster_id"])
+        for r in incremental_dedup(
+            new_sigs, prior_sigs, prior_clusters, threshold=0.6
+        ).collect()
+    }
+    tabled = {
+        r["id"]: (r["keep"], r["cluster_id"])
+        for r in incremental_dedup(
+            new_sigs,
+            prior_sigs,
+            prior_clusters,
+            threshold=0.6,
+            prior_buckets=buckets,
+            prior_bucket_counts=counts,
+        ).collect()
+    }
+    assert tabled == base
 
 
 def test_incremental_dedup_cap_crossing_consistent(spark):

@@ -200,14 +200,22 @@ _texts_strategy = st.lists(
            "zeta epsilon zeta", "alpha beta gamma"],
     cut=0,
 )
+@example(
+    texts=["alpha beta gamma delta", "alpha beta gamma delta", "zeta epsilon zeta",
+           "beta gamma delta"],
+    cut=1,
+)
 @settings(max_examples=6, deadline=None)  # each example runs two pipelines
 def test_incremental_dedup_matches_full_on_random_corpora(spark, texts, cut):
     """The documented equivalence regime, pinned property-style: for ANY
     corpus with crawl-ordered ids (caps never reached at this size), the
-    incremental keep set and cluster labels for the new slice equal the
-    full-union recompute. The dense tiny-vocab corpora drive chained
-    merges across the split boundary — the hard case. cut=0 is an empty
-    prior: the dedup job's first run, which must equal a full dedup."""
+    incremental keep set for the new slice, and the cluster label of every
+    row (new docs and the prior docs the closure relabeled), equal the
+    full-union recompute. Prior rows keep (frozen prior). The dense
+    tiny-vocab corpora drive chained merges across the split boundary —
+    the hard case. cut=0 is an empty prior: the dedup job's first run,
+    which must equal a full dedup; the cut=1 example puts a prior doc in
+    the output."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         jaccard_keep,
@@ -235,7 +243,10 @@ def test_incremental_dedup_matches_full_on_random_corpora(spark, texts, cut):
         r["id"]: r["cluster_id"]
         for r in neardup_clusters(all_docs, 0.6).collect()
     }
-    assert set(inc) == {i for i, _ in rows if i >= cut}
+    assert set(inc) >= {i for i, _ in rows if i >= cut}
     for i, (keep, label) in inc.items():
-        assert (keep == 1) == (i in full_keep), (i, texts, cut)
+        if i < cut:
+            assert keep == 1, (i, texts, cut)
+        else:
+            assert (keep == 1) == (i in full_keep), (i, texts, cut)
         assert label == full_labels[i], (i, texts, cut)

@@ -245,6 +245,19 @@ def test_crash_after_state_append_then_rerun_is_exact(
         w.spec["check"](spark, w, state, out)
 
 
+def test_weekly_dedup_appends_only_the_labels_it_recomputed(spark, weekly):
+    """The weekly run's clusters snapshot is the label delta: the slice's
+    docs plus the one prior doc (3) a new doc joined, not a relabeling of
+    the whole corpus. The latest-wins read still equals a full recompute."""
+    w = weekly("dedup_job")
+    state = str(w.root / "clean" / "state")
+    snaps = tables.list_snapshots(state, "clusters")
+    assert len(snaps) == 2  # bootstrap + weekly run, not compacted
+    newest = spark.read.parquet(os.path.join(state, "clusters", snaps[-1]["name"]))
+    assert sorted(r["id"] for r in newest.collect()) == [3, *range(24, 40)]
+    _check_dedup(spark, w, state, str(w.root / "clean" / "out1"))
+
+
 def test_crash_after_compacting_run_rolls_back_only_the_crashed_attempt(
     spark, weekly, crash_appends, monkeypatch, tmp_path
 ):

@@ -90,21 +90,9 @@ def main() -> None:
         inc = incremental_dedup(
             minhash_signatures(new), prior_sigs, prior_clusters, threshold=0.6,
             prior_buckets=pb, prior_bucket_counts=pc,
-        )
+        ).filter(F.col("id") >= split)  # new docs only, not relabeled prior docs
         inc_rows = {r["id"]: (r["keep"], r["cluster_id"]) for r in inc.collect()}
         inc_wall = time.time() - t0
-        release_caches()
-
-        # scope="all" leg: the rolling-label refresh (what jobs/dedup_job
-        # appends) — must stay close to scope="new" because untouched
-        # components pass their labels through without riding the closure
-        t0 = time.time()
-        inc_all = incremental_dedup(
-            minhash_signatures(new), prior_sigs, prior_clusters, threshold=0.6, scope="all",
-            prior_buckets=pb, prior_bucket_counts=pc,
-        )
-        all_rows = {r["id"]: (r["keep"], r["cluster_id"]) for r in inc_all.collect()}
-        inc_all_wall = time.time() - t0
         release_caches()
 
         # the counterfactual: full recompute of the union
@@ -122,18 +110,6 @@ def main() -> None:
             (inc_rows[i][0] == 1) == (i in full_keep) for i in new_ids
         )
         match_labels = all(inc_rows[i][1] == full_labels[i] for i in new_ids)
-        # scope="all" invariants: new ids label identically to scope="new",
-        # prior rows all keep=1 (frozen-prior). Prior LABELS are not
-        # compared to the full recompute: they deliberately preserve the
-        # prior run's connectivity even where union-wide caps would have
-        # hidden it (cap-crossing is exactly the regime where frozen-prior
-        # and recompute-from-scratch legitimately differ; the no-crossing
-        # equivalence is pinned by the unit/property tests).
-        match_all_scope = all(
-            all_rows[i] == inc_rows[i] for i in new_ids
-        ) and all(
-            keep == 1 for i, (keep, _) in all_rows.items() if i not in new_ids
-        )
         print(
             json.dumps(
                 {
@@ -143,12 +119,10 @@ def main() -> None:
                     "n_new": n_new,
                     "setup_wall_s": round(setup_wall, 2),
                     "incremental_wall_s": round(inc_wall, 2),
-                    "incremental_all_scope_wall_s": round(inc_all_wall, 2),
                     "full_recompute_wall_s": round(full_wall, 2),
                     "speedup_vs_full": round(full_wall / max(inc_wall, 1e-9), 2),
                     "keep_matches_full": match_keep,
                     "labels_match_full": match_labels,
-                    "all_scope_consistent": match_all_scope,
                     "new_kept": sum(1 for k, _ in inc_rows.values() if k == 1),
                 }
             )
