@@ -228,7 +228,8 @@ def materialize_signatures(
 
     Goes through sources.tables.write_table so the storage layout matches
     the rest of the warehouse; pass the returned frame (or a later
-    ``read_signatures``) wherever an operator accepts ``prior_sigs``."""
+    ``spark.read.parquet`` of the path) wherever an operator accepts
+    ``prior_sigs``."""
     import os
 
     from ..sources.tables import write_table
@@ -236,47 +237,7 @@ def materialize_signatures(
     sigs = minhash_signatures(df, text_col, id_col, family)
     root, name = os.path.split(table_path.rstrip("/"))
     write_table(sigs, root or ".", name)
-    return read_signatures(df.sparkSession, table_path)
-
-
-def read_signatures(spark, table_path: str) -> DataFrame:
-    """Scan a previously materialized signature table."""
-    return spark.read.parquet(table_path)
-
-
-def bucket_rows(sigs: DataFrame) -> DataFrame:
-    """``(id, bh)`` — the exploded band-bucket rows of a signature table.
-    16 bytes/row; THE table an incremental run band-joins new docs against,
-    so the wide signature table never re-explodes per weekly run."""
-    return sigs.select("id", F.explode("bands").alias("bh"))
-
-
-def bucket_count_rows(buckets: DataFrame) -> DataFrame:
-    """``(bh, n)`` — per-bucket population, pre-aggregated. The union-wide
-    degeneracy caps of an incremental run come from this narrow table plus
-    the new slice's deltas — the r4 verdict's last prior-corpus-sized scan
-    in the weekly path, now a trivially incrementable aggregate."""
-    return buckets.groupBy("bh").agg(F.count("*").alias("n"))
-
-
-def materialize_bucket_state(
-    sigs: DataFrame, table_path: str
-) -> tuple[DataFrame, DataFrame]:
-    """Write the bucket rows and bucket counts of a signature table next to
-    it (``{path}_buckets``, ``{path}_bucket_counts``) and return fresh
-    scans of both. A state-keeping pipeline (jobs/dedup_job.py) appends
-    per-run deltas to the same two tables instead."""
-    import os
-
-    from ..sources.tables import write_table
-
-    root, name = os.path.split(table_path.rstrip("/"))
-    b = bucket_rows(sigs)
-    write_table(b, root or ".", f"{name}_buckets")
-    spark = sigs.sparkSession
-    bt = spark.read.parquet(f"{table_path}_buckets")
-    write_table(bucket_count_rows(bt), root or ".", f"{name}_bucket_counts")
-    return bt, spark.read.parquet(f"{table_path}_bucket_counts")
+    return df.sparkSession.read.parquet(table_path)
 
 
 def _sig_source(
@@ -293,27 +254,33 @@ def _sig_source(
     return persist_tracked(minhash_signatures(df, text_col, id_col, family))
 
 
-def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int = 256) -> DataFrame:
-    """Distinct (id_a, id_b) candidate pairs: docs sharing >=1 band bucket.
-
-    Scale shape: the explode carries only (id, bucket) — 16 bytes/row, NOT
-    the signature — so the bucket shuffle is narrow; wide columns (sig,
-    toks) are attached later by the consumer, keyed on id, uniform.
-
-    Degenerate-bucket cap: a bucket holding b docs yields b^2/2 pairs, so a
-    hot bucket (boilerplate-heavy corpora) turns the join quadratic.
-    Standard LSH hygiene drops buckets above a cap — those collisions carry
-    no discriminative signal. Cap is per-BUCKET, so recall for normal
-    near-dup clusters (<< cap) is unaffected.
-    """
-    e = sigs.select("id", F.explode("bands").alias("bh"))
+def _cap_buckets(e: DataFrame, max_bucket: int) -> DataFrame:
+    """Band rows ``e`` (one row per (id, bh)) restricted to the buckets that
+    hold at most ``max_bucket`` of its rows — the one degenerate-bucket cap
+    rule of every LSH candidate stage. A bucket holding b docs yields b^2/2
+    pairs, so a hot bucket (boilerplate-heavy corpora) turns the pair join
+    quadratic; those collisions carry no discriminative signal. The cap is
+    per BUCKET, so recall for normal near-dup clusters (<< cap) is
+    unaffected. The count is over ``e`` itself, so ``e`` must hold every
+    row of each bucket it touches."""
     keep = (
         e.groupBy("bh")
         .agg(F.count("*").alias("bucket_n"))
         .filter(F.col("bucket_n") <= max_bucket)
         .select("bh")
     )
-    e = e.join(keep, "bh", "left_semi")
+    return e.join(keep, "bh", "left_semi")
+
+
+def lsh_candidate_pairs(sigs: DataFrame, max_bucket: int = 256) -> DataFrame:
+    """Distinct (id_a, id_b) candidate pairs: docs sharing >=1 band bucket.
+
+    Scale shape: the explode carries only (id, bucket) — 16 bytes/row, NOT
+    the signature — so the bucket shuffle is narrow; wide columns (sig,
+    toks) are attached later by the consumer, keyed on id, uniform.
+    Buckets above ``max_bucket`` are dropped (_cap_buckets).
+    """
+    e = _cap_buckets(sigs.select("id", F.explode("bands").alias("bh")), max_bucket)
     a, b = e.alias("a"), e.alias("b")
     return (
         a.join(b, (F.col("a.bh") == F.col("b.bh")) & (F.col("a.id") < F.col("b.id")))
@@ -345,14 +312,9 @@ def _est_pairs(sigs: DataFrame, min_est: float, max_bucket: int) -> DataFrame:
     # stays a JVM filter on the integer match count.
     from .fastpath import bucket_pair_sig_matches
 
-    e = sigs.select("id", "sig", F.explode("bands").alias("bh"))
-    keep = (
-        e.groupBy("bh")
-        .agg(F.count("*").alias("bucket_n"))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .select("bh")
+    e = _cap_buckets(
+        sigs.select("id", "sig", F.explode("bands").alias("bh")), max_bucket
     )
-    e = e.join(keep, "bh", "left_semi")
     cand = bucket_pair_sig_matches(e, MH_K).distinct()
     return (
         cand.select(
@@ -688,8 +650,6 @@ def incremental_dedup(
     threshold: float = 0.6,
     min_est: float = 0.35,
     max_bucket: int = 256,
-    prior_buckets: DataFrame | None = None,
-    prior_bucket_counts: DataFrame | None = None,
     cc_stats: dict | None = None,
 ) -> DataFrame:
     """Incremental dedup of NEW docs against a prior corpus's materialized
@@ -743,26 +703,21 @@ def incremental_dedup(
     only in the union makes the incremental run see strictly fewer union
     pairs — same direction the full recompute moves.
 
-    Scale shape — with ``prior_buckets`` + ``prior_bucket_counts`` (the
-    materialized bucket state, see materialize_bucket_state / the dedup
-    job) the weekly run is fully |new|-sized: new-side rows drive every
-    join (a week's crawl vs the corpus: |new| << |prior|), union-wide caps
-    come from the pre-aggregated (bh, n) table plus the new slice's
-    deltas, the prior band rows enter via a semi-join on the set of
-    buckets the new slice touches, and the label closure runs over the
-    FRONTIER only (components a new-involving pair touches; untouched
+    Scale shape: new-side rows drive every join (a week's crawl vs the
+    corpus: |new| << |prior|), prior band rows enter through a semi-join
+    on the buckets the new slice touches, and the label closure runs over
+    the FRONTIER only (components a new-involving pair touches; untouched
     prior components are neither relabeled nor emitted). No prior
-    signature is recomputed, no prior pair re-scored, no corpus-sized
-    explode, closure or label copy remains. HONEST FLOOR: the
-    candidate semi-join still READS the (id, bh) table once — narrow
-    (16 bytes/row) and linear in the corpus, but a read. For a realistic
-    weekly slice that is the floor: |new| x 8 band buckets is a DENSE
-    subset of the bucket space, so partition pruning / min-max skipping
-    on bh cannot drop meaningful I/O (they pay off only for tiny top-up
-    slices, where an Iceberg bucket(bh) transform would prune the scan).
-    Without the bucket-state tables both caps and band rows are derived
-    from prior_sigs (one linear narrow pass each — the r4 shape, still
-    correct, kept for table-less callers).
+    signature is recomputed and no prior pair re-scored. The signature
+    table is the only bucket state: prior band rows are exploded from its
+    ``bands`` column (a columnar scan reads just that column), and the
+    caps are counted over the touched buckets' rows, which are all of
+    those buckets' union rows. Separate (id, bh) and (bh, n) tables buy
+    nothing here: the run already scans every prior ``toks`` and ``sig``
+    for the attach union, and band buckets are almost all singletons —
+    on perfbench ``dedup_weekly`` (400 prior docs + 100 new, seed 1) a
+    materialized (id, bh) table held 4000 rows over 3822 distinct
+    buckets, and a per-bucket count table 3863 rows.
     """
     from .fastpath import bucket_pair_sig_matches
 
@@ -771,8 +726,7 @@ def incremental_dedup(
     if not new_sigs.is_cached:
         new_sigs = persist_tracked(new_sigs)
     # attach-only union: band rows are derived separately below, so the
-    # persisted union never carries the bands column (narrower barrier AND
-    # a bands-free prior-table scan — the plan pin checks the ReadSchema)
+    # persisted union never carries the bands column (narrower barrier)
     allsigs = persist_tracked(
         prior_sigs.select("id", "toks", "sig")
         .withColumn("is_new", F.lit(False))
@@ -783,37 +737,19 @@ def incremental_dedup(
         )
     )
 
-    # band rows: new slice explodes its (persisted) signatures; the prior
-    # side comes from the materialized narrow (id, bh) table when given —
-    # the wide prior signature table never re-explodes
-    new_e = new_sigs.select("id", F.explode("bands").alias("bh"))
-    if prior_buckets is None:
-        prior_e = prior_sigs.select("id", F.explode("bands").alias("bh"))
-    else:
-        prior_e = prior_buckets.select("id", "bh")
-    # caps are UNION-wide (a bucket's degeneracy is a property of the whole
-    # corpus, not of one slice): prior counts from the pre-aggregated table
-    # (or one narrow pass when absent) + the new slice's deltas
-    if prior_bucket_counts is None:
-        prior_n = prior_e.groupBy("bh").agg(F.count("*").alias("n"))
-    else:
-        prior_n = prior_bucket_counts.select("bh", "n")
-    new_n = new_e.groupBy("bh").agg(F.count("*").alias("n"))
-    kept = (
-        prior_n.unionByName(new_n)
-        .groupBy("bh")
-        .agg(F.sum("n").alias("bucket_n"))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .select("bh")
-    )
+    # band rows: both sides explode the bands column of their signatures;
     # prior rows matter only in buckets the new slice touches (candidates
-    # need a new side) — at 100 TB this semi-join is what lets the (id, bh)
-    # table read be pruned instead of scanned
+    # need a new side)
+    new_e = new_sigs.select("id", F.explode("bands").alias("bh"))
+    prior_e = prior_sigs.select("id", F.explode("bands").alias("bh"))
     prior_rel = prior_e.join(new_e.select("bh").distinct(), "bh", "left_semi")
     e = prior_rel.withColumn("is_new", F.lit(False)).unionByName(
         new_e.withColumn("is_new", F.lit(True))
     )
-    e = e.join(kept, "bh", "left_semi").join(allsigs.select("id", "sig"), "id")
+    # caps are UNION-wide (a bucket's degeneracy is a property of the whole
+    # corpus, not of one slice): e holds every union row of each bucket it
+    # touches, so counting over e before the attach join is that count
+    e = _cap_buckets(e, max_bucket).join(allsigs.select("id", "sig"), "id")
     # candidates: the bucket-pair kernel of the full operators (_est_pairs)
     # in its flagged mode — one side NEW, other side anything, so the
     # prior-vs-prior quadrant (the expensive one at 100 TB) is never

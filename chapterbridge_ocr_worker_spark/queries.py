@@ -1759,11 +1759,7 @@ def dedup_clusters_q(spark, sf_dir):
     "and closes them with a recursive reachability CTE",
 )
 def dedup_incremental_q(spark, sf_dir):
-    from .operators.dedup import (
-        incremental_dedup,
-        minhash_signatures,
-        read_signatures,
-    )
+    from .operators.dedup import incremental_dedup, minhash_signatures
 
     docs = t(spark, sf_dir, "documents")
     # crawl-ordered 60/40 split; integer arithmetic matches the twin's
@@ -1773,55 +1769,41 @@ def dedup_incremental_q(spark, sf_dir):
     t_split = (int(docs.agg(F.max("doc_id")).first()[0]) + 1) * 6 // 10
     new = docs.filter(F.col("doc_id") >= t_split)
     sig_path, cl_path = ensure_dedup_prior_state(spark, sf_dir)
-    prior_sigs = read_signatures(spark, sig_path)
-    prior_clusters = spark.read.parquet(cl_path)
-    # fully |new|-sized weekly path: caps from the pre-aggregated count
-    # table, band rows from the narrow bucket table, frontier closure. The
-    # query reports the new docs only: the prior rows the closure relabeled
-    # sit below the split
+    # the weekly path: band rows and caps from the prior signature table,
+    # frontier closure. The query reports the new docs only: the prior rows
+    # the closure relabeled sit below the split
     return incremental_dedup(
         minhash_signatures(new),
-        prior_sigs,
-        prior_clusters,
+        spark.read.parquet(sig_path),
+        spark.read.parquet(cl_path),
         threshold=0.6,
-        prior_buckets=spark.read.parquet(f"{sig_path}_buckets"),
-        prior_bucket_counts=spark.read.parquet(f"{sig_path}_bucket_counts"),
     ).filter(F.col("id") >= t_split)
 
 
 def ensure_dedup_prior_state(spark, sf_dir) -> tuple[str, str]:
     """Build-once-per-testdata-generation 'last week's run' state for the
-    incremental query: materialized prior signature table + bucket state
-    ((id, bh) rows and pre-aggregated (bh, n) counts) + cluster labels on
-    disk, keyed to source identity (same rationale as the interleave
+    incremental query: materialized prior signature table + cluster labels
+    on disk, keyed to source identity (same rationale as the interleave
     cache — this is the PRIOR run's cost, not the weekly increment's;
-    bench.py builds it outside the timed region). Staging-dir + rename
-    commit: a killed build never leaves a half-written state to poison
-    later runs. Returns (sig_path, clusters_path); the bucket tables live
-    at {sig_path}_buckets / {sig_path}_bucket_counts."""
+    bench.py builds it outside the timed region). The signature table is
+    the only bucket state: the query derives band rows and caps from its
+    bands column. Staging-dir + rename commit: a killed build never leaves
+    a half-written state to poison later runs. Returns (sig_path,
+    clusters_path)."""
     import os
     import shutil
     import uuid
 
-    from .operators.dedup import (
-        materialize_bucket_state,
-        materialize_signatures,
-        neardup_clusters,
-    )
+    from .operators.dedup import materialize_signatures, neardup_clusters
 
     base = f"/tmp/dedup_prior_{_cache_key(sf_dir, '')}"
     sig_path, cl_path = f"{base}/sigs", f"{base}/clusters"
-    if not (
-        os.path.isdir(sig_path)
-        and os.path.isdir(cl_path)
-        and os.path.isdir(f"{sig_path}_bucket_counts")
-    ):
+    if not (os.path.isdir(sig_path) and os.path.isdir(cl_path)):
         docs = t(spark, sf_dir, "documents")
         t_split = (int(docs.agg(F.max("doc_id")).first()[0]) + 1) * 6 // 10
         prior = docs.filter(F.col("doc_id") < t_split)
         staging = f"{base}.building-{uuid.uuid4().hex[:8]}"
-        sigs = materialize_signatures(prior, f"{staging}/sigs")
-        materialize_bucket_state(sigs, f"{staging}/sigs")
+        materialize_signatures(prior, f"{staging}/sigs")
         neardup_clusters(prior, threshold=0.6).write.mode("overwrite").parquet(
             f"{staging}/clusters"
         )

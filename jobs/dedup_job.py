@@ -19,22 +19,18 @@ rollback and compaction protocol is in sources/tables.py):
                     the new docs plus the prior docs whose cluster a new
                     doc joined. Read back latest-wins per id, so a new doc
                     chaining two prior clusters updates the prior members'
-                    labels too (no stale labels between runs).
-    buckets/        (id, bh) exploded band-bucket rows — the narrow table
-                    the weekly band join runs against, so the wide
-                    signature table never re-explodes.
-    bucket_counts/  (run_id, bh, n) per-run bucket-population deltas; the
-                    union-wide degeneracy caps = SUM(n) per bh — a narrow
-                    pre-aggregated read instead of a corpus-sized re-count.
-                    run_id is the slice's max doc_id.
-    clusters, buckets and bucket_counts record id / run_id stats, so a
-    crashed attempt's snapshots roll back before the redo reads them.
+                    labels too (no stale labels between runs). Its
+                    snapshots record id stats, so a crashed attempt's
+                    snapshot rolls back before the redo reads it.
+    The band buckets and their caps are derived from the signatures'
+    bands column each run. buckets/ and bucket_counts/ dirs left by older
+    layouts of this state dir are ignored.
 
 Outputs under --out:
     decisions/    (id, keep, cluster_id) for THIS run's docs
 
 Every run hashes ONLY the new slice, once, and judges those signature
-rows against the materialized union buckets with one decision operator
+rows against the union's band buckets with one decision operator
 (operators.dedup.incremental_dedup), emitting keep/drop + cluster labels.
 The first run ("bootstrap") is the same call over an empty prior, which
 equals a full neardup_clusters + jaccard_keep of the slice. Prior
@@ -42,7 +38,7 @@ decisions are frozen (docs already shipped to training are never
 retro-dropped). State tables auto-compact once they accumulate more than
 COMPACT_AFTER snapshots — clusters with keys=["id"] so latest-wins
 survives the rewrite and superseded label rows are physically dropped;
-the other tables hold each row once and compact by plain union.
+signatures hold each row once and compact by plain union.
 
 Caller contract: doc_ids are unique across slices and crawl-ordered (new
 ids greater than all prior ids) — what any ingest sequence number gives.
@@ -85,8 +81,6 @@ def run(spark, args: argparse.Namespace) -> dict:
 
     from chapterbridge_ocr_worker_spark.operators.cache import release_caches
     from chapterbridge_ocr_worker_spark.operators.dedup import (
-        bucket_count_rows,
-        bucket_rows,
         incremental_dedup,
         minhash_signatures,
     )
@@ -116,10 +110,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             "rolled_back": {},
         }
     rolled_back = tables.rollback_uncommitted(
-        args.state,
-        "signatures",
-        {"clusters": "id", "buckets": "id", "bucket_counts": "run_id"},
-        sl["lo"],
+        args.state, "signatures", {"clusters": "id"}, sl["lo"]
     )
 
     # the slice is hashed ONCE: these rows are judged, then appended
@@ -127,47 +118,18 @@ def run(spark, args: argparse.Namespace) -> dict:
     cc_stats: dict = {}
 
     # the first run is an incremental run over an empty prior; later runs
-    # read the prior labels and the bucket state the last run appended
+    # read the prior labels the last run appended
     mode = "bootstrap" if prior_sigs is None else "incremental"
-    prior_clusters = prior_buckets = prior_counts = None
-    backfilled = False
+    prior_clusters = None
     if prior_sigs is not None:
         prior_clusters = tables.read_table_latest(
             spark, args.state, "clusters", keys=["id"]
-        )
-        # bucket state: the narrow (id, bh) table + pre-aggregated (bh, n)
-        # counts make the weekly run fully |new|-sized. State dirs from
-        # before these tables existed are backfilled ONCE from the prior
-        # signatures (a linear pass — exactly what every weekly run paid
-        # before).
-        prior_buckets = tables.read_table(spark, args.state, "buckets")
-        backfilled = prior_buckets is None
-        if backfilled:
-            tables.append_snapshot(
-                bucket_rows(prior_sigs), args.state, "buckets", stats_cols=["id"]
-            )
-            prior_buckets = tables.read_table(spark, args.state, "buckets")
-            prior_run_id = prior_sigs.agg(F.max("id")).first()[0]
-            tables.append_snapshot(
-                bucket_count_rows(prior_buckets).withColumn(
-                    "run_id", F.lit(prior_run_id).cast("long")
-                ),
-                args.state,
-                "bucket_counts",
-                stats_cols=["run_id"],
-            )
-        prior_counts = (
-            tables.read_table(spark, args.state, "bucket_counts")
-            .groupBy("bh")
-            .agg(F.sum("n").alias("n"))
         )
     labels = incremental_dedup(
         new_sigs,
         new_sigs.limit(0) if prior_sigs is None else prior_sigs,
         prior_clusters,
         threshold=args.threshold,
-        prior_buckets=prior_buckets,
-        prior_bucket_counts=prior_counts,
         cc_stats=cc_stats,
     )
 
@@ -177,23 +139,12 @@ def run(spark, args: argparse.Namespace) -> dict:
     n_new, n_kept = decisions.agg(F.count("*"), F.count_if(F.col("keep") == 1)).first()
     decisions.write.mode("overwrite").parquet(os.path.join(args.out, "decisions"))
 
-    # commit: signatures (the marker) LAST; every other table records id
-    # (bucket_counts: run_id) stats, so a crashed attempt's snapshots roll
-    # back on the rerun. clusters gets the label delta, which always holds
-    # the slice's ids
+    # commit: signatures (the marker) LAST; clusters records id stats, so a
+    # crashed attempt's snapshot rolls back on the rerun. clusters gets the
+    # label delta, which always holds the slice's ids
     tables.append_snapshot(
         labels.select("id", "cluster_id"), args.state, "clusters",
         stats_cols=["id"],
-    )
-    new_buckets = bucket_rows(new_sigs)
-    tables.append_snapshot(new_buckets, args.state, "buckets", stats_cols=["id"])
-    tables.append_snapshot(
-        bucket_count_rows(new_buckets).withColumn(
-            "run_id", F.lit(sl["hi"]).cast("long")
-        ),
-        args.state,
-        "bucket_counts",
-        stats_cols=["run_id"],
     )
     tables.append_snapshot(new_sigs, args.state, "signatures", stats_cols=["id"])
     n_corpus = tables.read_table(spark, args.state, "signatures").count()
@@ -201,18 +152,10 @@ def run(spark, args: argparse.Namespace) -> dict:
     new_sigs.unpersist()
     release_caches()
 
-    # clusters compact latest-wins per id (superseded labels drop out); the
-    # other tables hold each row once (rollback), so they compact by union
+    # clusters compact latest-wins per id (superseded labels drop out);
+    # signatures hold each row once (rollback), so they compact by union
     compacted = tables.compact_tables(
-        spark,
-        args.state,
-        {
-            "signatures": None,
-            "clusters": ["id"],
-            "buckets": None,
-            "bucket_counts": None,
-        },
-        COMPACT_AFTER,
+        spark, args.state, {"signatures": None, "clusters": ["id"]}, COMPACT_AFTER
     )
     return {
         "mode": mode,
@@ -223,7 +166,6 @@ def run(spark, args: argparse.Namespace) -> dict:
         "corpus_total": n_corpus,
         "compacted": compacted,
         "rolled_back": rolled_back,
-        "backfilled_bucket_state": backfilled,
         # closure telemetry: a long-running operator watches rounds / pair
         # counts drift instead of discovering divergence by eye
         **cc_stats,

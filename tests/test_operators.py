@@ -355,13 +355,14 @@ def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
 
 
 def test_incremental_dedup_bucket_tables_equivalent(spark, tmp_path):
-    """The fully |new|-sized path (materialized (id, bh) bucket table +
-    (bh, n) count table, frontier-limited closure) must return EXACTLY what
-    the table-less path returns — new-doc rows and relabeled prior rows
-    alike — on the planted crawl corpus."""
+    """The one weekly path, fed a fresh parquet scan of the materialized
+    signature table (how the dedup job and query read their prior state),
+    must return EXACTLY the full-union recompute on every output row —
+    new-doc rows and relabeled prior rows alike: the band rows and caps it
+    derives from the bands column are the union's."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
-        materialize_bucket_state,
+        jaccard_keep,
         materialize_signatures,
         minhash_signatures,
         neardup_clusters,
@@ -373,39 +374,35 @@ def test_incremental_dedup_bucket_tables_equivalent(spark, tmp_path):
     new = all_docs.filter("doc_id >= 24")
 
     sig_path = str(tmp_path / "sigs")
-    prior_sigs = materialize_signatures(prior, sig_path)
-    buckets, counts = materialize_bucket_state(prior_sigs, sig_path)
-    prior_clusters = neardup_clusters(prior, threshold=0.6)
-    new_sigs = minhash_signatures(new)
-
-    base = {
+    materialize_signatures(prior, sig_path)
+    got = {
         r["id"]: (r["keep"], r["cluster_id"])
         for r in incremental_dedup(
-            new_sigs, prior_sigs, prior_clusters, threshold=0.6
-        ).collect()
-    }
-    tabled = {
-        r["id"]: (r["keep"], r["cluster_id"])
-        for r in incremental_dedup(
-            new_sigs,
-            prior_sigs,
-            prior_clusters,
+            minhash_signatures(new),
+            spark.read.parquet(sig_path),
+            neardup_clusters(prior, threshold=0.6),
             threshold=0.6,
-            prior_buckets=buckets,
-            prior_bucket_counts=counts,
         ).collect()
     }
-    assert tabled == base
+
+    full_keep = {r["id"] for r in jaccard_keep(all_docs, threshold=0.6).collect()}
+    full_labels = {
+        r["id"]: r["cluster_id"]
+        for r in neardup_clusters(all_docs, threshold=0.6).collect()
+    }
+    # prior rows are frozen (keep=1); new rows keep iff the full run does
+    assert got == {
+        i: (int(i < 24 or i in full_keep), full_labels[i]) for i in got
+    }
+    assert set(got) == set(range(24, 40)) | {3}
 
 
 def test_incremental_dedup_cap_crossing_consistent(spark):
     """A band bucket pushed over max_bucket only by the union must be
-    dropped IDENTICALLY by the counts-table path and the derived-counts
-    path (the cap decision is the one place the two compute the same number
-    from different inputs)."""
+    dropped: the caps are counted over the rows of the buckets the new
+    slice touches, which hold every union row of those buckets, so they
+    stay union-wide without a separate count table."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
-        bucket_count_rows,
-        bucket_rows,
         incremental_dedup,
         minhash_signatures,
     )
@@ -419,20 +416,14 @@ def test_incremental_dedup_cap_crossing_consistent(spark):
         [(i, "same text for every doc") for i in range(6, 10)],
         ["doc_id", "text"],
     )
-    prior_sigs = minhash_signatures(prior)
-    b = bucket_rows(prior_sigs)
-    for kwargs in (
-        {},
-        {"prior_buckets": b, "prior_bucket_counts": bucket_count_rows(b)},
-    ):
-        got = {
-            r["id"]: r["keep"]
-            for r in incremental_dedup(
-                minhash_signatures(new), prior_sigs, max_bucket=8, **kwargs
-            ).collect()
-        }
-        # every bucket capped out -> no candidates -> everything kept
-        assert got == {6: 1, 7: 1, 8: 1, 9: 1}, kwargs.keys()
+    got = {
+        r["id"]: r["keep"]
+        for r in incremental_dedup(
+            minhash_signatures(new), minhash_signatures(prior), max_bucket=8
+        ).collect()
+    }
+    # every bucket capped out -> no candidates -> everything kept
+    assert got == {6: 1, 7: 1, 8: 1, 9: 1}
 
 
 def test_incremental_dedup_cc_stats(spark):

@@ -189,14 +189,14 @@ def test_incremental_dedup_plan_hygiene(spark, tmp_path):
 
 
 def test_incremental_dedup_bucket_tables_plan(spark, tmp_path):
-    """The fully |new|-sized weekly path: with the materialized (id, bh)
-    bucket table and (bh, n) count table, the plan must (a) read both
-    narrow tables, (b) scan the WIDE prior signature table without its
-    bands column (proving no prior-side band explode — caps and candidates
-    come from the narrow tables), (c) keep the new-slice-only hash fold."""
+    """The weekly path over a materialized signature table, which is the
+    only bucket state: the plan must (a) read no separate bucket table —
+    band rows and caps come from the signature table's bands column, so
+    this pin no longer requires the (id, bh) and (bh, n) table scans it
+    pinned when those tables existed, (b) stay equi-joins, (c) keep the
+    new-slice-only hash fold."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
-        materialize_bucket_state,
         materialize_signatures,
         minhash_signatures,
     )
@@ -207,25 +207,19 @@ def test_incremental_dedup_bucket_tables_plan(spark, tmp_path):
     )
     sig_path = str(tmp_path / "psigs")
     prior_sigs = materialize_signatures(docs.filter("doc_id < 20"), sig_path)
-    buckets, counts = materialize_bucket_state(prior_sigs, sig_path)
     out = incremental_dedup(
-        minhash_signatures(docs.filter("doc_id >= 20")),
-        prior_sigs,
-        prior_buckets=buckets,
-        prior_bucket_counts=counts,
+        minhash_signatures(docs.filter("doc_id >= 20")), prior_sigs
     )
     plan = pi.formatted(out)
-    assert "psigs_bucket_counts" in plan  # caps: pre-aggregated read
-    assert "psigs_buckets" in plan  # candidates: narrow band rows
+    assert "psigs]" in plan  # the prior side scans the signature table
+    assert "_buckets" not in plan  # and no bucket-state table
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("ascii(") <= 1  # hash fold: new slice only
-    # every scan of the wide prior table is attach-only: bands never read
-    for block in plan.split("Scan parquet"):
-        if "psigs]" in block.split("Location", 1)[-1][:200]:
-            first_line = block.splitlines()[1] if "\n" in block else ""
-            assert "bands" not in first_line, first_line
     assert out.count() >= 0  # and it actually runs off the tables
+
+
+def test_cc_round_plan_hygiene(spark):
     """One connected-components round: neighbor-min propagation + pointer
     jump must stay equi-joins and a key-hash groupBy — no nested-loop or
     cartesian fallback (those would be quadratic in nodes at scale)."""

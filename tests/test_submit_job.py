@@ -89,19 +89,11 @@ def test_dedup_job_cli_bootstrap_then_incremental(spark, tmp_path):
     # closure telemetry surfaces in the run stats (drift watchability)
     assert s1["cc_converged"] is True and s1["cc_rounds"] >= 1
 
-    # simulate a state dir written BEFORE the bucket-state tables existed
-    # (r4 layout): the next incremental run must backfill them once
-    import shutil
-
-    shutil.rmtree(os.path.join(state, "buckets"))
-    shutil.rmtree(os.path.join(state, "bucket_counts"))
-
     s2 = run(w2, str(tmp_path / "out2"))
     assert s2["mode"] == "incremental"
     assert s2["docs_in"] == 16 and s2["corpus_total"] == 40
     assert s2["dropped_as_dups"] == 2  # 24 (dup of prior 3), 26 (dup of 25)
     assert s2["cc_converged"] is True and s2["n_new_pairs"] >= 2
-    assert s2["backfilled_bucket_state"] is True  # r4-era state migrated
 
     # rerunning the committed slice is a no-op: state untouched, no
     # duplicate signature rows to skew later bucket counts

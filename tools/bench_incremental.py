@@ -35,11 +35,9 @@ from chapterbridge_ocr_worker_spark.operators.cache import release_caches
 from chapterbridge_ocr_worker_spark.operators.dedup import (
     incremental_dedup,
     jaccard_keep,
-    materialize_bucket_state,
     materialize_signatures,
     minhash_signatures,
     neardup_clusters,
-    read_signatures,
 )
 
 
@@ -66,11 +64,10 @@ def main() -> None:
 
     work = tempfile.mkdtemp(prefix="bench_inc_")
     try:
-        # "last week's run": signature table + bucket state + cluster
-        # labels, materialized (the r5 state layout)
+        # "last week's run": signature table + cluster labels, materialized
+        # (the dedup job's state layout)
         t0 = time.time()
-        prior_sigs = materialize_signatures(prior, os.path.join(work, "sigs"))
-        materialize_bucket_state(prior_sigs, os.path.join(work, "sigs"))
+        materialize_signatures(prior, os.path.join(work, "sigs"))
         prior_clusters = neardup_clusters(prior, threshold=0.6)
         prior_clusters.write.mode("overwrite").parquet(
             os.path.join(work, "clusters")
@@ -79,17 +76,13 @@ def main() -> None:
         release_caches()
 
         # THIS week's incremental run (warm JVM, cold caches — same basis
-        # as the full-recompute leg below): fully |new|-sized — caps from
-        # the count table, candidates from the narrow bucket table,
-        # frontier-limited closure
+        # as the full-recompute leg below): band rows and caps from the
+        # signature table, frontier-limited closure
         prior_clusters = spark.read.parquet(os.path.join(work, "clusters"))
-        prior_sigs = read_signatures(spark, os.path.join(work, "sigs"))
-        pb = spark.read.parquet(os.path.join(work, "sigs_buckets"))
-        pc = spark.read.parquet(os.path.join(work, "sigs_bucket_counts"))
+        prior_sigs = spark.read.parquet(os.path.join(work, "sigs"))
         t0 = time.time()
         inc = incremental_dedup(
-            minhash_signatures(new), prior_sigs, prior_clusters, threshold=0.6,
-            prior_buckets=pb, prior_bucket_counts=pc,
+            minhash_signatures(new), prior_sigs, prior_clusters, threshold=0.6
         ).filter(F.col("id") >= split)  # new docs only, not relabeled prior docs
         inc_rows = {r["id"]: (r["keep"], r["cluster_id"]) for r in inc.collect()}
         inc_wall = time.time() - t0
