@@ -743,8 +743,13 @@ def incremental_dedup(
     new_e = new_sigs.select("id", F.explode("bands").alias("bh"))
     prior_e = prior_sigs.select("id", F.explode("bands").alias("bh"))
     prior_rel = prior_e.join(new_e.select("bh").distinct(), "bh", "left_semi")
-    e = prior_rel.withColumn("is_new", F.lit(False)).unionByName(
-        new_e.withColumn("is_new", F.lit(True))
+    # persisted: the cap count and the cap semi-join both read e, and
+    # without the barrier each re-scans the prior bands, re-explodes them
+    # and re-runs the touched-bucket semi-join
+    e = persist_tracked(
+        prior_rel.withColumn("is_new", F.lit(False)).unionByName(
+            new_e.withColumn("is_new", F.lit(True))
+        )
     )
     # caps are UNION-wide (a bucket's degeneracy is a property of the whole
     # corpus, not of one slice): e holds every union row of each bucket it

@@ -13,6 +13,9 @@ daemon (workers/ocr/main.py:220-255). Stages (SURVEY.md §3.1):
         ocr_output (output where not failed) -> failures (OCR error rows)
         -> checkpoint (per-partition metrics) -> ocr_json (committed docs'
         pages) -> lineage (the resume marker, last)
+    each append is one byte-sized write (one file per snapshot at these
+    sizes); the run's docs/failed_docs counts are observed on the
+    ocr_output append, not counted by a separate action
 
 Plan properties to preserve at 100 TB (verify with .explain("formatted")):
 - the media-blob join is a plain shuffled hash join on media_ref (both sides
@@ -28,7 +31,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.metrics import checkpoint_rows
@@ -147,9 +150,6 @@ def write_run(
         ocr.count()  # materialize the OCR work under the timer
         wall = time.time() - t0
 
-        n_docs, n_failed = output.agg(
-            F.count_if(~F.col("failed")), F.count_if("failed")
-        ).first()
         completed = output.filter(~F.col("failed")).drop("failed")
         # per-page reference-shaped JSON output docs (F13), the upload
         # payload the reference puts to R2 per job, for committed docs only:
@@ -158,7 +158,20 @@ def write_run(
         failed_ids = output.filter("failed").select("doc_id", "failed")
         pages = ok.join(failed_ids, "doc_id", "left").filter(F.col("failed").isNull())
 
-        tables.append_snapshot(completed, warehouse, "ocr_output")
+        # the run's doc counts are observed on the first append, which
+        # reads every pending doc (failed ones before the filter drops them)
+        counts = Observation()
+        tables.append_snapshot(
+            output.observe(
+                counts,
+                F.count_if(~F.col("failed")).alias("docs"),
+                F.count_if("failed").alias("failed_docs"),
+            )
+            .filter(~F.col("failed"))
+            .drop("failed"),
+            warehouse,
+            "ocr_output",
+        )
         tables.append_snapshot(failures, warehouse, "failures")
         tables.append_snapshot(checkpoint_rows(ok, wall), warehouse, "checkpoint")
         tables.append_snapshot(
@@ -170,4 +183,4 @@ def write_run(
     finally:
         for df in cached:
             df.unpersist()
-    return {"docs": n_docs, "failed_docs": n_failed, "wall_seconds": wall}
+    return {**counts.get, "wall_seconds": wall}

@@ -10,7 +10,16 @@ Scale notes baked in:
 - documents/media/output are written partitioned or bucketed by hash of the
   key they're joined/grouped on, so re-reads co-locate;
 - appends use unique subdirectories per job run (Iceberg snapshot analogue)
-  so a killed job never corrupts previous commits — resume reads the union.
+  so a killed job never corrupts previous commits — resume reads the union;
+- every write sizes its files by BYTES: it goes through one AQE rebalance
+  (`df.hint("rebalance")`), so a few hundred rows land in one file however
+  many upstream tasks produced them (the Iceberg requested-distribution +
+  advisory-size write). The one exception is an append whose caller laid
+  out its own files and asks for per-file stats (``file_stats_cols``, as
+  write_table_zordered does): a rebalance would scatter that layout;
+- each snapshot's row count is observed in the write itself and recorded
+  in the manifest as ``record_count`` (Iceberg's per-file record_count), so
+  row_count answers a table's size from metadata.
 
 Weekly-job protocol (jobs/dedup_job.py, exactdedup_job.py, spandedup_job.py,
 embdedup_job.py). Each job owns a state directory of tables and runs:
@@ -173,7 +182,7 @@ def _snapshot_order(path: str) -> list[str]:
 
 def write_table(df: DataFrame, root: str, name: str, mode: str = "overwrite") -> str:
     path = table_path(root, name)
-    df.write.mode(mode).parquet(path)
+    df.hint("rebalance").write.mode(mode).parquet(path)
     return path
 
 
@@ -184,6 +193,34 @@ def _json_safe_stat(v):
     if v is None or isinstance(v, (bool, int, float, str)):
         return v
     return str(v)
+
+
+def _observed_write(
+    df: DataFrame, path: str, stats_cols: list[str], rebalance: bool = True
+) -> tuple[int, dict]:
+    """Write ``df`` to ``path`` (through the byte-sizing rebalance unless
+    the caller laid out its own files) and return its row count and the
+    ``{col: [min, max]}`` of ``stats_cols``, both observed on the rows as
+    they are written: no second read of the data."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        *[F.min(c).alias(f"mn_{i}") for i, c in enumerate(stats_cols)],
+        *[F.max(c).alias(f"mx_{i}") for i, c in enumerate(stats_cols)],
+    )
+    if rebalance:
+        out = out.hint("rebalance")
+    out.write.mode("overwrite").parquet(path)
+    got = obs.get
+    stats = {
+        c: [_json_safe_stat(got[f"mn_{i}"]), _json_safe_stat(got[f"mx_{i}"])]
+        for i, c in enumerate(stats_cols)
+    }
+    return got["n"], stats
 
 
 def append_snapshot(
@@ -202,20 +239,26 @@ def append_snapshot(
     manifest read-modify-write runs under _manifest_lock so no commit can
     drop another writer's snapshot.
 
+    The rows go through the byte-sizing rebalance (module docstring), and
+    the snapshot's row count is observed in the write and recorded in the
+    manifest as ``record_count``.
+
     ``stats_cols``: record per-snapshot min/max of these columns in the
     manifest (the Iceberg manifest-file column-stats analogue). The stats
-    are aggregated from the just-written parquet — a footer-stats-backed
-    scan of only those columns — and let read_table_pruned skip whole
-    snapshot directories whose range cannot match a predicate. A snapshot
-    appended WITHOUT stats is simply never skipped (conservative).
+    are observed in the write, in the same pass as the row count, and let
+    read_table_pruned skip whole snapshot directories whose range cannot
+    match a predicate. A snapshot appended WITHOUT stats is simply never
+    skipped (conservative).
 
     ``file_stats_cols``: additionally record per-PARQUET-FILE min/max of
     these columns (the Iceberg data-file-stats analogue, one level below
     the snapshot stats). This is what makes a clustered layout pay off:
     after write_table_zordered, a 2-D box predicate prunes most FILES of
-    a surviving snapshot, not just whole snapshots. Computed in the same
-    footer-backed pass, grouped by input_file_name; keyed by basename so
-    the inflight->snap directory rename keeps them valid."""
+    a surviving snapshot, not just whole snapshots. Passing it marks the
+    caller's partitioning as the file layout, so the write skips the
+    rebalance. The file stats are aggregated from the just-written parquet
+    (a footer-backed scan grouped by input_file_name), keyed by basename
+    so the inflight->snap directory rename keeps them valid."""
     snap_name = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
     path = table_path(root, name)
     snap = os.path.join(path, snap_name)
@@ -223,23 +266,9 @@ def append_snapshot(
     # a legacy (manifest-less) table must not mistake this uncommitted data
     # for a committed snapshot, and listings/GC skip dotted dirs
     inflight = os.path.join(path, f".inflight-{snap_name}")
-    df.write.mode("overwrite").parquet(inflight)
-    snap_stats = None
-    if stats_cols:
-        from pyspark.sql import functions as F
-
-        row = (
-            df.sparkSession.read.parquet(inflight)
-            .agg(
-                *[F.min(c).alias(f"mn_{i}") for i, c in enumerate(stats_cols)],
-                *[F.max(c).alias(f"mx_{i}") for i, c in enumerate(stats_cols)],
-            )
-            .collect()[0]
-        )
-        snap_stats = {
-            c: [_json_safe_stat(row[f"mn_{i}"]), _json_safe_stat(row[f"mx_{i}"])]
-            for i, c in enumerate(stats_cols)
-        }
+    n_rows, snap_stats = _observed_write(
+        df, inflight, stats_cols or [], rebalance=not file_stats_cols
+    )
     snap_file_stats = None
     if file_stats_cols:
         from pyspark.sql import functions as F
@@ -277,14 +306,13 @@ def append_snapshot(
         else:
             live = m["snapshots"]
             extra = {k: v for k, v in m.items() if k != "snapshots"}
-        if snap_stats is not None:
-            stats_map = dict(extra.get("column_stats", {}))
-            stats_map[snap_name] = snap_stats
-            extra["column_stats"] = stats_map
-        if snap_file_stats is not None:
-            fstats_map = dict(extra.get("file_stats", {}))
-            fstats_map[snap_name] = snap_file_stats
-            extra["file_stats"] = fstats_map
+        for key, val in (
+            ("record_count", n_rows),
+            ("column_stats", snap_stats or None),
+            ("file_stats", snap_file_stats),
+        ):
+            if val is not None:
+                extra[key] = {**extra.get(key, {}), snap_name: val}
         os.rename(inflight, snap)  # data becomes visible only with the commit
         _write_manifest(path, live + [snap_name], **extra)
     return snap
@@ -468,11 +496,13 @@ def _snap_millis(snap_name: str) -> int | None:
 def list_snapshots(root: str, name: str) -> list[dict]:
     """The table's committed snapshots in COMMIT order (manifest position) —
     the Iceberg `table.snapshots()` analogue. Each entry carries the name,
-    its ordinal, the embedded commit timestamp, and the parquet file count.
+    its ordinal, the embedded commit timestamp, the parquet file count and
+    the recorded row count (None for a snapshot written without one).
     Metadata-only: no data is read, so this is O(snapshots) at any scale."""
     path = table_path(root, name)
     if not os.path.isdir(path):
         return []
+    counts = (_read_manifest(path) or {}).get("record_count", {})
     out = []
     for i, s in enumerate(_snapshot_order(path)):
         d = os.path.join(path, s)
@@ -484,9 +514,41 @@ def list_snapshots(root: str, name: str) -> list[dict]:
                 "ordinal": i,
                 "commit_millis": _snap_millis(s),
                 "n_files": sum(1 for f in os.listdir(d) if f.endswith(".parquet")),
+                "record_count": counts.get(s),
             }
         )
     return out
+
+
+def row_count(root: str, name: str) -> int:
+    """Rows of the table as read_table reads it (0 when it doesn't exist):
+    the sum of the live snapshots' manifest record_count. Snapshots that
+    have none (written before counts were recorded, adopted legacy files,
+    manifest-less tables) are counted from their parquet footers, so no
+    row data is read."""
+    import pyarrow.parquet as pq
+
+    path = table_path(root, name)
+    if not os.path.isdir(path):
+        return 0
+    counts = (_read_manifest(path) or {}).get("record_count", {})
+    live = _live_snapshots(path)
+    if live is None:
+        live = _list_snapshot_dirs(path) or ["."]
+    total = 0
+    for s in live:
+        d = os.path.normpath(os.path.join(path, s))
+        if not os.path.isdir(d):
+            continue
+        if s in counts:
+            total += counts[s]
+            continue
+        total += sum(
+            pq.read_metadata(os.path.join(d, f)).num_rows
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
+    return total
 
 
 def read_table_asof(
@@ -606,15 +668,17 @@ def compact_table(
     spark: SparkSession,
     root: str,
     name: str,
-    target_files: int | None = None,
     keys: list[str] | None = None,
     fold=None,
 ) -> dict:
     """Rewrite all of a table's snapshots into one compacted snapshot —
     the Iceberg `rewrite_data_files` analogue. Every append_snapshot adds a
-    directory with shuffle-partition-count files, so a long-running
-    incremental pipeline accumulates thousands of small files and every
-    read pays the listing + open cost; compaction restores big-file scans.
+    directory of at least one file, so a long-running incremental pipeline
+    accumulates thousands of small files and every read pays the listing +
+    open cost; compaction restores big-file scans. The rewrite goes through
+    the same byte-sizing rebalance as an append, and the compacted
+    snapshot's record_count is observed in it (after ``keys``/``fold``
+    have dropped or folded rows).
 
     ``keys``: compaction MERGES snapshots, which destroys the per-snapshot
     provenance read_table_latest's latest-wins depends on. For tables that
@@ -698,21 +762,26 @@ def compact_table(
         return empty
     if fold is not None:
         df = fold(df)
-    target = target_files or max(1, spark.sparkContext.defaultParallelism)
     # write the compacted snapshot WITHOUT registering it: a reader during
     # this window still unions exactly the old live set
     snap_name = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
     new_snap = os.path.join(path, snap_name)
-    df.repartition(target).write.mode("overwrite").parquet(new_snap)
+    n_rows, _ = _observed_write(df, new_snap, [])
     with _manifest_lock(path):
-        # CAS-style commit: keep snapshots appended while we were rewriting
-        now_live = _live_snapshots(path)
-        late = [
-            d for d in (now_live if now_live is not None else [])
-            if d not in live and d != snap_name
-        ]
+        # CAS-style commit: keep snapshots appended while we were rewriting,
+        # with their recorded counts and stats
+        m = _read_manifest(path) or {"snapshots": []}
+        late = [d for d in m["snapshots"] if d not in live and d != snap_name]
+        per_snap = {
+            key: {s: v for s, v in m.get(key, {}).items() if s in late}
+            for key in ("record_count", "column_stats", "file_stats")
+        }
+        per_snap["record_count"][snap_name] = n_rows
         _write_manifest(
-            path, [snap_name] + late, compacted={"keys": keys}
+            path,
+            [snap_name] + late,
+            compacted={"keys": keys},
+            **{k: v for k, v in per_snap.items() if v},
         )
         # freeze the dead list WHILE holding the lock: an appender blocked
         # on the lock right now will rename+commit its snapshot the moment
@@ -934,7 +1003,7 @@ def merge_upsert(
         updates.select(*keys).distinct(), keys, "left_anti"
     ).unionByName(updates)
     staging = table_path(root, f".{name}.staging")
-    merged.write.mode("overwrite").parquet(staging)
+    merged.hint("rebalance").write.mode("overwrite").parquet(staging)
     final = table_path(root, name)
     old = table_path(root, f".{name}.old")
     if os.path.isdir(old):

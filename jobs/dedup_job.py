@@ -56,6 +56,7 @@ import sys
 # allow `python jobs/dedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -105,7 +106,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             "skipped_done": n_skipped,
             "kept": 0,
             "dropped_as_dups": 0,
-            "corpus_total": prior_sigs.count(),
+            "corpus_total": tables.row_count(args.state, "signatures"),
             "compacted": {},
             "rolled_back": {},
         }
@@ -135,9 +136,17 @@ def run(spark, args: argparse.Namespace) -> dict:
 
     labels = labels.persist()
     decisions = labels.join(new_sigs.select("id"), "id", "left_semi")
-    # materialize before state mutation
-    n_new, n_kept = decisions.agg(F.count("*"), F.count_if(F.col("keep") == 1)).first()
-    decisions.write.mode("overwrite").parquet(os.path.join(args.out, "decisions"))
+    # materialize before state mutation; the run's counts are observed on
+    # the decisions write
+    seen = Observation()
+    tables.write_table(
+        decisions.observe(
+            seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
+        ),
+        args.out,
+        "decisions",
+    )
+    n_new, n_kept = seen.get["n"], seen.get["kept"]
 
     # commit: signatures (the marker) LAST; clusters records id stats, so a
     # crashed attempt's snapshot rolls back on the rerun. clusters gets the
@@ -147,7 +156,7 @@ def run(spark, args: argparse.Namespace) -> dict:
         stats_cols=["id"],
     )
     tables.append_snapshot(new_sigs, args.state, "signatures", stats_cols=["id"])
-    n_corpus = tables.read_table(spark, args.state, "signatures").count()
+    n_corpus = tables.row_count(args.state, "signatures")
     labels.unpersist()
     new_sigs.unpersist()
     release_caches()

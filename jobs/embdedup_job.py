@@ -52,6 +52,7 @@ import sys
 # allow `python jobs/embdedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -105,7 +106,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             "skipped_done": n_skipped,
             "pairs": 0,
             "dups": 0,
-            "corpus_vectors": done.count(),
+            "corpus_vectors": tables.row_count(args.state, "vecs"),
             "rolled_back": {},
             "compacted": {},
             "ivf": None,
@@ -125,8 +126,12 @@ def run(spark, args: argparse.Namespace) -> dict:
     )
 
     pairs = pairs.persist()
-    n_pairs = pairs.count()  # materialize before state mutation
-    pairs.write.mode("overwrite").parquet(os.path.join(args.out, "pairs"))
+    # materialize before state mutation; the run's counts are observed on
+    # the pairs and keep writes
+    seen_pairs, seen_keep = Observation(), Observation()
+    tables.write_table(
+        pairs.observe(seen_pairs, F.count("*").alias("n")), args.out, "pairs"
+    )
 
     # keep decision for THIS batch: dup iff the pair links it to an older id
     # (prior vector, or smaller-id new vector). id_a < id_b by construction,
@@ -135,8 +140,10 @@ def run(spark, args: argparse.Namespace) -> dict:
     keep = batch.select("vec_id").join(
         dup_ids.withColumn("is_dup", F.lit(True)), "vec_id", "left"
     ).select("vec_id", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
-    keep.write.mode("overwrite").parquet(os.path.join(args.out, "keep"))
-    n_dups = keep.filter("is_dup").count()
+    tables.write_table(
+        keep.observe(seen_keep, F.count_if("is_dup").alias("n")), args.out, "keep"
+    )
+    n_pairs, n_dups = seen_pairs.get["n"], seen_keep.get["n"]
 
     # commit: sigs FIRST, vecs marker LAST
     tables.append_snapshot(sigs, args.state, "sigs", stats_cols=["id"])
@@ -144,7 +151,7 @@ def run(spark, args: argparse.Namespace) -> dict:
         batch.select(F.col("vec_id").alias("id")), args.state, "vecs",
         stats_cols=["id"],
     )
-    n_corpus = tables.read_table(spark, args.state, "vecs").count()
+    n_corpus = tables.row_count(args.state, "vecs")
     pairs.unpersist()
     release_caches()
 

@@ -53,6 +53,7 @@ import sys
 # allow `python jobs/exactdedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -130,7 +131,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             "skipped_done": n_skipped,
             "kept": 0,
             "dropped_as_dups": 0,
-            "corpus_total": prior_h.count(),
+            "corpus_total": tables.row_count(args.state, "hashes"),
             "compacted": {},
             "rolled_back": {},
         }
@@ -150,10 +151,17 @@ def run(spark, args: argparse.Namespace) -> dict:
         )
     decisions = bloom_gated_keep(new_h, prior_h, m_bits, k, bloom_words=words)
 
-    decisions = decisions.persist()
-    # materialize before state mutation
-    n_new, n_kept = decisions.agg(F.count("*"), F.count_if(F.col("keep") == 1)).first()
-    decisions.write.mode("overwrite").parquet(os.path.join(args.out, "decisions"))
+    # materialize before state mutation; the run's counts are observed on
+    # the decisions write
+    seen = Observation()
+    tables.write_table(
+        decisions.observe(
+            seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
+        ),
+        args.out,
+        "decisions",
+    )
+    n_new, n_kept = seen.get["n"], seen.get["kept"]
 
     # state commits: params first (idempotent — same content every run),
     # then bloom, hashes LAST (the resume marker)
@@ -165,9 +173,8 @@ def run(spark, args: argparse.Namespace) -> dict:
         os.replace(tmp, params_path)
     tables.append_snapshot(bloom_build(new_h, m_bits, k), args.state, "bloom")
     tables.append_snapshot(new_h, args.state, "hashes", stats_cols=["id"])
-    n_corpus = tables.read_table(spark, args.state, "hashes").count()
+    n_corpus = tables.row_count(args.state, "hashes")
     new_h.unpersist()
-    decisions.unpersist()
 
     # small-file hygiene: bloom snapshots fold at read time but their row
     # count grows per append; compaction pre-folds them into one snapshot

@@ -48,6 +48,7 @@ import sys
 # allow `python jobs/spandedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -88,7 +89,7 @@ def run(spark, args: argparse.Namespace) -> dict:
             "skipped_done": n_skipped,
             "segments_removed": 0,
             "segments_added": 0,
-            "corpus_docs": done.count(),
+            "corpus_docs": tables.row_count(args.state, "docs"),
             "compacted": {},
             "rolled_back": {},
         }
@@ -112,21 +113,32 @@ def run(spark, args: argparse.Namespace) -> dict:
     fresh = owners.join(prior.select("seg"), "seg", "left_anti")
 
     cleaned = cleaned.persist()
-    # materialize before state mutation
-    n_new, n_removed = cleaned.agg(F.count("*"), F.sum("n_removed")).first()
-    n_removed = int(n_removed or 0)
-    cleaned.write.mode("overwrite").parquet(os.path.join(args.out, "cleaned"))
+    # materialize before state mutation; the run's counts are observed on
+    # the cleaned write
+    seen = Observation()
+    tables.write_table(
+        cleaned.observe(
+            seen, F.count("*").alias("n"), F.sum("n_removed").alias("removed")
+        ),
+        args.out,
+        "cleaned",
+    )
+    n_new, n_removed = seen.get["n"], int(seen.get["removed"] or 0)
 
-    # commit: segments FIRST, docs marker LAST
-    n_added = fresh.count()
-    tables.append_snapshot(
+    # commit: segments FIRST, docs marker LAST; segments_added is the
+    # record_count of the segments snapshot
+    seg_snap = os.path.basename(tables.append_snapshot(
         fresh, args.state, "segments", stats_cols=["owner_id"]
+    ))
+    n_added = next(
+        s["record_count"] for s in tables.list_snapshots(args.state, "segments")
+        if s["name"] == seg_snap
     )
     tables.append_snapshot(
         cleaned.select(F.col("doc_id").alias("id")), args.state, "docs",
         stats_cols=["id"],
     )
-    n_corpus = tables.read_table(spark, args.state, "docs").count()
+    n_corpus = tables.row_count(args.state, "docs")
     cleaned.unpersist()
 
     compacted = tables.compact_tables(

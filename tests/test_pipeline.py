@@ -186,3 +186,23 @@ def test_crash_after_each_append_then_rerun_is_exact(
         write_run(spark, *crash_dfs, wh)
     write_run(spark, *crash_dfs, wh)
     assert table_state(wh) == clean_state
+
+
+def test_resumed_run_writes_one_file_per_snapshot(spark, crash_corpus, crash_dfs, tmp_path):
+    """Each snapshot a resumed write_run appends is one parquet file: the
+    commit writes are sized by bytes, not by the upstream task count. The
+    recorded row counts match the run's stats."""
+    docs, _, _, _ = crash_corpus
+    docs_df, media_df = crash_dfs
+    wh = str(tmp_path / "wh")
+    write_run(spark, spark.createDataFrame(docs[:5], schema=schemas.DOCUMENTS), media_df, wh)
+    names = ("ocr_output", "failures", "checkpoint", "ocr_json", "lineage")
+    before = {n: len(tables.list_snapshots(wh, n)) for n in names}
+    stats = write_run(spark, docs_df, media_df, wh)
+    assert stats["docs"] > 0 and stats["failed_docs"] > 0
+    for n in names:
+        snaps = tables.list_snapshots(wh, n)
+        assert len(snaps) == before[n] + 1, n
+        assert snaps[-1]["n_files"] == 1, n
+    assert tables.list_snapshots(wh, "ocr_output")[-1]["record_count"] == stats["docs"]
+    assert tables.list_snapshots(wh, "lineage")[-1]["record_count"] == stats["docs"]

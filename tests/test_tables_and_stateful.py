@@ -80,21 +80,21 @@ def test_compact_table_preserves_rows(spark, tmp_path):
     docs, media = datagen.generate_corpus(n_docs=12, seed=41, corrupt_fraction=0.0)
     mdf = spark.createDataFrame(media, schema=schemas.MEDIA)
     wh = str(tmp_path / "wh_compact")
-    # two runs -> two snapshot dirs per table, many small files
-    write_run(spark, spark.createDataFrame(docs[:6], schema=schemas.DOCUMENTS), mdf, wh)
-    write_run(spark, spark.createDataFrame(docs, schema=schemas.DOCUMENTS), mdf, wh)
+    # three runs -> three snapshot dirs per table, one small file each
+    for n in (4, 8, 12):
+        write_run(spark, spark.createDataFrame(docs[:n], schema=schemas.DOCUMENTS), mdf, wh)
     before = tables.read_table(spark, wh, "ocr_output")
     rows_before = {r["doc_id"] for r in before.select("doc_id").collect()}
 
-    stats = tables.compact_table(spark, wh, "ocr_output", target_files=2)
-    assert stats["snapshots_before"] == 2
+    stats = tables.compact_table(spark, wh, "ocr_output")
+    assert stats["snapshots_before"] == 3
     assert stats["files_after"] <= 2 < stats["files_before"]
 
     after = tables.read_table(spark, wh, "ocr_output")
     assert {r["doc_id"] for r in after.select("doc_id").collect()} == rows_before
     assert after.count() == 12
     # resume still works against the compacted lineage
-    tables.compact_table(spark, wh, "lineage", target_files=1)
+    tables.compact_table(spark, wh, "lineage")
     s = write_run(spark, spark.createDataFrame(docs, schema=schemas.DOCUMENTS), mdf, wh)
     assert s["docs"] == 0
 
@@ -117,7 +117,7 @@ def test_compact_crash_window_never_duplicates(spark, tmp_path):
     df.write.mode("overwrite").parquet(orphan)
     assert tables.read_table(spark, root, "t").count() == 2  # NOT 4
 
-    stats = tables.compact_table(spark, root, "t", target_files=1)
+    stats = tables.compact_table(spark, root, "t")
     assert stats["snapshots_before"] == 1
     assert tables.read_table(spark, root, "t").count() == 2
     assert not os.path.isdir(orphan)  # orphan collected
@@ -213,7 +213,7 @@ def test_compact_with_keys_preserves_latest_wins(spark, tmp_path):
     before = tables.read_table_latest(spark, root, "t", keys=["id"])
     assert {(r["id"], r["v"]) for r in before.collect()} == want
 
-    stats = tables.compact_table(spark, root, "t", target_files=1, keys=["id"])
+    stats = tables.compact_table(spark, root, "t", keys=["id"])
     assert stats["snapshots_before"] == 2
     after = tables.read_table_latest(spark, root, "t", keys=["id"])
     assert {(r["id"], r["v"]) for r in after.collect()} == want
@@ -233,7 +233,7 @@ def test_compact_without_keys_refuses_latest_wins_readers(spark, tmp_path):
     tables.append_snapshot(spark.createDataFrame([(1, "old")], ["id", "v"]), root, "t")
     _time.sleep(0.01)
     tables.append_snapshot(spark.createDataFrame([(1, "new")], ["id", "v"]), root, "t")
-    tables.compact_table(spark, root, "t", target_files=1)
+    tables.compact_table(spark, root, "t")
     assert tables.read_table(spark, root, "t").count() == 2  # union kept
     with pytest.raises(RuntimeError, match="compacted"):
         tables.read_table_latest(spark, root, "t", keys=["id"])
@@ -289,7 +289,7 @@ def test_append_adopts_legacy_toplevel_files(spark, tmp_path):
     }
     assert got == {1: "new", 2: "b", 3: "c"}
     # compaction preserves everything (no data-deleting legacy GC)
-    stats = tables.compact_table(spark, root, "t", target_files=1, keys=["id"])
+    stats = tables.compact_table(spark, root, "t", keys=["id"])
     assert stats["legacy_files_adopted"] == 0  # adopted at append time
     got2 = {
         r["id"]: r["v"]
@@ -316,7 +316,7 @@ def test_compact_adopts_legacy_toplevel_files(spark, tmp_path):
     m = json.load(open(os.path.join(path, "_live_snapshots.json")))
     assert len(m["snapshots"]) == 1
     assert tables.read_table(spark, root, "t").count() == 1  # rows stranded
-    stats = tables.compact_table(spark, root, "t", target_files=1)
+    stats = tables.compact_table(spark, root, "t")
     assert stats["legacy_files_adopted"] >= 1
     assert tables.read_table(spark, root, "t").count() == 3  # recovered
     assert not any(
@@ -487,6 +487,109 @@ def test_snapshot_stats_survive_commit_merges_and_compaction(spark, tmp_path):
     tables.compact_table(spark, root, "t")
     after_df = tables.read_table_pruned(spark, root, "t", "doc_id", 0, 49)
     assert sorted(r["doc_id"] for r in after_df.collect()) == before
+
+
+def test_append_sizes_files_by_bytes(spark, tmp_path):
+    """50 rows from 16 upstream partitions are one small file, not 16."""
+    root = str(tmp_path)
+    tables.append_snapshot(spark.range(50).repartition(16), root, "t")
+    (snap,) = tables.list_snapshots(root, "t")
+    assert snap["n_files"] == 1 and snap["record_count"] == 50
+
+
+def test_observed_stats_equal_read_back_min_max(spark, tmp_path):
+    """The stats observed in the write equal a min/max over the written
+    parquet, on long, string and timestamp columns and on no rows."""
+    import json
+    import os
+
+    root = str(tmp_path)
+    cols = ["id", "s", "ts"]
+    df = spark.range(7, 57).repartition(5).select(
+        "id",
+        F.format_string("k%03d", (F.col("id") * 37) % 101).alias("s"),
+        F.timestamp_seconds(F.lit(1_700_000_000) - F.col("id") * 3600).alias("ts"),
+    )
+    for name, d in (("full", df), ("empty", df.limit(0))):
+        snap = tables.append_snapshot(d, root, name, stats_cols=cols)
+        back = spark.read.parquet(snap).agg(
+            *[F.min(c) for c in cols], *[F.max(c) for c in cols]
+        ).first()
+        want = {
+            c: [tables._json_safe_stat(back[i]), tables._json_safe_stat(back[i + 3])]
+            for i, c in enumerate(cols)
+        }
+        with open(os.path.join(root, name, "_live_snapshots.json")) as f:
+            got = json.load(f)["column_stats"][os.path.basename(snap)]
+        assert got == json.loads(json.dumps(want))
+    assert want == {c: [None, None] for c in cols}
+
+
+def test_row_count_equals_read_count(spark, tmp_path, monkeypatch):
+    """row_count (recorded counts of the live snapshots) equals a full
+    read's count through appends, a rollback, plain and keyed compaction
+    (with an append committed during the rewrite), and on a table whose
+    older snapshots recorded no count."""
+    import json
+    import os
+    import time as _time
+
+    root = str(tmp_path)
+
+    def check(name):
+        assert tables.row_count(root, name) == tables.read_table(spark, root, name).count()
+
+    mk = lambda lo, n: spark.range(lo, lo + n).select(
+        "id", (F.col("id") % 3).alias("k")
+    )
+    tables.append_snapshot(mk(0, 10), root, "t", stats_cols=["id"])
+    tables.append_snapshot(mk(10, 5), root, "t", stats_cols=["id"])
+    check("t")
+    _time.sleep(0.01)  # the marker commits before the crashed attempt
+    tables.append_snapshot(mk(0, 1), root, "marker", stats_cols=["id"])
+    _time.sleep(0.01)
+    tables.append_snapshot(mk(15, 7), root, "t", stats_cols=["id"])
+    assert tables.row_count(root, "t") == 22
+    assert tables.rollback_uncommitted(root, "marker", {"t": "id"}, 15) == {"t": 1}
+    check("t")
+    assert tables.row_count(root, "t") == 15
+    # an append that commits while compaction rewrites keeps its count
+    # and stats
+    real = tables._observed_write
+
+    def rewrite_then_append(*a, **kw):
+        monkeypatch.setattr(tables, "_observed_write", real)
+        out = real(*a, **kw)
+        tables.append_snapshot(mk(50, 3), root, "t", stats_cols=["id"])
+        return out
+
+    monkeypatch.setattr(tables, "_observed_write", rewrite_then_append)
+    tables.compact_table(spark, root, "t")
+    check("t")
+    assert tables.row_count(root, "t") == 18
+    m = tables._read_manifest(tables.table_path(root, "t"))
+    assert m["column_stats"] == {m["snapshots"][1]: {"id": [50, 52]}}
+    # keyed compaction counts after the superseded rows drop out
+    tables.append_snapshot(mk(0, 10), root, "kt")
+    _time.sleep(0.01)
+    tables.append_snapshot(mk(0, 4), root, "kt")
+    assert tables.row_count(root, "kt") == 14
+    tables.compact_table(spark, root, "kt", keys=["id"])
+    check("kt")
+    assert tables.row_count(root, "kt") == 10
+    # snapshots written before counts were recorded: footer-counted
+    tables.append_snapshot(mk(100, 6), root, "old")
+    tables.append_snapshot(mk(200, 3), root, "old")
+    mpath = os.path.join(root, "old", "_live_snapshots.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["record_count"] = {m["snapshots"][1]: 3}
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    tables.append_snapshot(mk(300, 2), root, "old")
+    check("old")
+    assert tables.row_count(root, "old") == 11
+    assert tables.row_count(root, "missing") == 0
 
 
 def _grid_df(spark, n=512):
