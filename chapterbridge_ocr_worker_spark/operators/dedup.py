@@ -131,6 +131,22 @@ def portable_token_hash(tok: Column, mult: int = 31) -> Column:
     )
 
 
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact token-set Jaccard of two token arrays, rounded to 4 places
+    (0 when both are empty): the one scoring rule every exact stage uses."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.round(
+        F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0)), 4
+    )
+
+
+def _est_jaccard() -> Column:
+    """MinHash Jaccard estimate of a candidate pair, rounded to 4 places:
+    the fraction of the MH_K signature slots its ``matching`` column counts."""
+    return F.round(F.col("matching") / F.lit(float(MH_K)), 4)
+
+
 def jaccard_pairs(
     df: DataFrame,
     block_col: str,
@@ -152,15 +168,12 @@ def jaccard_pairs(
     )
     a = base.alias("a")
     b = base.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.col("a.toks")) + F.size(F.col("b.toks")) - inter
-    jac = F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
     return (
         a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")))
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(jac, 4).alias("jaccard"),
+            _jaccard(F.col("a.toks"), F.col("b.toks")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -320,9 +333,7 @@ def _est_pairs(sigs: DataFrame, min_est: float, max_bucket: int) -> DataFrame:
         cand.select(
             "id_a",
             "id_b",
-            F.round(F.col("matching") / F.lit(float(MH_K)), 4).alias(
-                "est_jaccard"
-            ),
+            _est_jaccard().alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= min_est)
     )
@@ -382,13 +393,12 @@ def jaccard_pairs_lsh(
     pairs = _est_pairs(sigs, min_est, max_bucket).select("id_a", "id_b")
     ta = sigs.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     tb = sigs.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.col("toks_a")) + F.size(F.col("toks_b")) - inter
-    jac = F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
     return (
         pairs.join(ta, "id_a")
         .join(tb, "id_b")
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+        .select(
+            "id_a", "id_b", _jaccard(F.col("toks_a"), F.col("toks_b")).alias("jaccard")
+        )
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -768,19 +778,16 @@ def incremental_dedup(
     est = (
         bucket_pair_sig_matches(e, MH_K, flag_col="is_new")
         .distinct()
-        .filter(F.round(F.col("matching") / F.lit(float(MH_K)), 4) >= min_est)
+        .filter(_est_jaccard() >= min_est)
         .select("id_a", "id_b", "new_a", "new_b")
     )
     # exact re-rank, same stage as jaccard_pairs_lsh
     ta = allsigs.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     tb = allsigs.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.col("toks_a")) + F.size(F.col("toks_b")) - inter
-    jac = F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
     pairs = persist_tracked(
         est.join(ta, "id_a")
         .join(tb, "id_b")
-        .filter(F.round(jac, 4) >= threshold)
+        .filter(_jaccard(F.col("toks_a"), F.col("toks_b")) >= threshold)
         .select("id_a", "id_b", "new_a", "new_b")
     )
 

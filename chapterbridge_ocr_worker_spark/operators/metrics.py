@@ -9,8 +9,14 @@ output, plus wall-clock bounds per partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _conf_bucket(conf: Column) -> Column:
+    """Histogram bucket of a line confidence: floor(conf*10), with 1.0 in
+    the top bucket 9."""
+    return F.least(F.floor(conf * 10), F.lit(9)).cast("int")
 
 
 def confidence_histogram(ocr_ok: DataFrame) -> DataFrame:
@@ -20,11 +26,7 @@ def confidence_histogram(ocr_ok: DataFrame) -> DataFrame:
     """
     return (
         ocr_ok.select(F.explode("lines").alias("line"))
-        .select(
-            F.least(F.floor(F.col("line.confidence") * 10), F.lit(9))
-            .cast("int")
-            .alias("bucket")
-        )
+        .select(_conf_bucket(F.col("line.confidence")).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("line_cnt"))
         .orderBy("bucket")
@@ -41,10 +43,7 @@ def checkpoint_rows(ocr_ok: DataFrame, wall_seconds: float) -> DataFrame:
         ocr_ok.withColumn("pid", F.spark_partition_id())
         .withColumn(
             "conf_bucket_counts",
-            F.transform(
-                F.col("lines"),
-                lambda l: F.least(F.floor(l["confidence"] * 10), F.lit(9)).cast("int"),
-            ),
+            F.transform(F.col("lines"), lambda l: _conf_bucket(l["confidence"])),
         )
         .groupBy("pid")
         .agg(

@@ -1,16 +1,21 @@
 """Table IO layer — parquet-backed here, Iceberg in production.
 
 Production target is an Iceberg catalog (`df.writeTo(...).append()`,
-`MERGE INTO` for the segment-link upsert, snapshot isolation for resume —
-SURVEY.md §1.1). The Iceberg runtime jar isn't in this container, so the
-same interface is backed by parquet directories; every call site goes
-through this module, making the swap a one-file change.
+snapshot isolation for resume — SURVEY.md §1.1). The Iceberg runtime jar
+isn't in this container, so the same interface is backed by parquet
+directories; every call site goes through this module, making the swap a
+one-file change.
 
 Scale notes baked in:
 - documents/media/output are written partitioned or bucketed by hash of the
   key they're joined/grouped on, so re-reads co-locate;
 - appends use unique subdirectories per job run (Iceberg snapshot analogue)
   so a killed job never corrupts previous commits — resume reads the union;
+- every commit (append, compaction, rollback) goes through ``_commit``: one
+  read-modify-write of the table's ``_live_snapshots.json`` manifest under
+  a lock, published by one atomic swap (the Iceberg metadata-pointer swap).
+  That swap is the commit point; every reader resolves the live snapshot
+  directories through ``_live_dirs``;
 - every write sizes its files by BYTES: it goes through one AQE rebalance
   (`df.hint("rebalance")`), so a few hundred rows land in one file however
   many upstream tasks produced them (the Iceberg requested-distribution +
@@ -55,7 +60,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 
 def table_path(root: str, name: str) -> str:
@@ -64,6 +68,8 @@ def table_path(root: str, name: str) -> str:
 
 _MANIFEST = "_live_snapshots.json"
 _MANIFEST_LOCK = "_manifest.lock"
+# manifest entries keyed by snapshot name: they cover exactly the live ones
+_PER_SNAPSHOT = ("record_count", "column_stats", "file_stats")
 
 
 def _manifest_path(path: str) -> str:
@@ -90,14 +96,14 @@ def _live_snapshots(path: str) -> list[str] | None:
     return None if m is None else m["snapshots"]
 
 
-def _write_manifest(path: str, snapshots: list[str], **extra) -> None:
-    """Atomically publish the live-snapshot list (os.replace = the commit
-    point; the Iceberg metadata-pointer-swap analogue)."""
+def _write_manifest(path: str, m: dict) -> None:
+    """Atomically publish the manifest (os.replace = the commit point; the
+    Iceberg metadata-pointer-swap analogue)."""
     import json
 
     tmp = _manifest_path(path) + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
-        json.dump({"snapshots": snapshots, **extra}, f)
+        json.dump(m, f)
     os.replace(tmp, _manifest_path(path))
 
 
@@ -142,6 +148,10 @@ def _list_snapshot_dirs(path: str) -> list[str]:
     )
 
 
+def _parquet_files(d: str) -> list[str]:
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
 def _adopt_legacy_files(path: str) -> str | None:
     """Fold top-level parquet files (pre-manifest plain layout, e.g. a
     write_table output later appended to) into a synthetic snapshot dir so
@@ -169,20 +179,60 @@ def _adopt_legacy_files(path: str) -> str | None:
     return snap_name
 
 
-def _snapshot_order(path: str) -> list[str]:
-    """Snapshot names in COMMIT order — the manifest's append order, which
-    is what latest-wins must rank by. Two snapshots committed in the same
-    millisecond would tie-break on random hex under a name sort; the
-    manifest list position is the true commit sequence. Tables without a
-    manifest fall back to the sorted listing (name order ~ commit order,
-    best available)."""
+def _commit(path: str, change) -> str | None:
+    """The one commit of every table write: a manifest read-modify-write
+    under _manifest_lock, published by one atomic swap.
+
+    In order: read the manifest; adopt legacy layouts (a table without a
+    manifest adopts its snapshot listing, and loose top-level parquet
+    becomes a synthetic OLDEST snapshot); apply ``change(snapshots,
+    meta)``, which returns the new live list (None keeps it) and may edit
+    ``meta``, the manifest's other keys; drop the per-snapshot entries of
+    snapshots no longer live; publish. Nothing is published when neither
+    the adoption nor the change altered the table. Returns the name of
+    the adopted legacy snapshot, or None."""
+    with _manifest_lock(path):
+        meta = _read_manifest(path)
+        adopted = meta is None
+        snaps = _list_snapshot_dirs(path) if adopted else meta.pop("snapshots")
+        meta = meta or {}
+        legacy = _adopt_legacy_files(path)
+        if legacy is not None:
+            snaps, adopted = [legacy] + snaps, True
+        new = change(snaps, meta)
+        if new is None and not adopted:
+            return None
+        snaps = snaps if new is None else new
+        live = set(snaps)
+        for key in _PER_SNAPSHOT:
+            kept = {s: v for s, v in meta.pop(key, {}).items() if s in live}
+            if kept:
+                meta[key] = kept
+        _write_manifest(path, {"snapshots": snaps, **meta})
+    return legacy
+
+
+def _live_dirs(path: str) -> list[tuple[str, str]]:
+    """``(name, dir)`` of each live snapshot in COMMIT order — the
+    manifest's append order, which is what latest-wins must rank by (a name
+    sort would tie-break two same-millisecond commits on random hex).
+    Manifest entries whose dir is gone are skipped. A table without a
+    manifest falls back to its sorted listing (name order ~ commit order),
+    or to the table dir itself (a plain parquet directory)."""
     live = _live_snapshots(path)
-    return live if live is not None else _list_snapshot_dirs(path)
+    if live is None:
+        live = _list_snapshot_dirs(path) or ["."]
+    out = []
+    for s in live:
+        d = os.path.normpath(os.path.join(path, s))
+        if os.path.isdir(d):
+            out.append((s, d))
+    return out
 
 
-def write_table(df: DataFrame, root: str, name: str, mode: str = "overwrite") -> str:
+def write_table(df: DataFrame, root: str, name: str) -> str:
     path = table_path(root, name)
-    df.hint("rebalance").write.mode(mode).parquet(path)
+    df.hint("rebalance").write.mode("overwrite").parquet(path)
     return path
 
 
@@ -236,8 +286,8 @@ def append_snapshot(
     mid-write leaves an orphan directory no reader ever sees (cleaned by
     the next compact_table). CONCURRENT appenders are safe: the data write
     happens outside the lock (unique directory per snapshot), then the
-    manifest read-modify-write runs under _manifest_lock so no commit can
-    drop another writer's snapshot.
+    manifest read-modify-write runs in _commit, under _manifest_lock, so no
+    commit can drop another writer's snapshot.
 
     The rows go through the byte-sizing rebalance (module docstring), and
     the snapshot's row count is observed in the write and recorded in the
@@ -292,67 +342,35 @@ def append_snapshot(
             }
             for r in frows
         }
-    with _manifest_lock(path):
-        m = _read_manifest(path)
-        if m is None:  # adopt whatever legacy listing readers were seeing
-            live = _list_snapshot_dirs(path)
-            extra = {}
-            # fold loose top-level parquet (plain write_table layout) into a
-            # synthetic OLDEST snapshot — otherwise those rows are in no
-            # snapshot and vanish from every manifest reader
-            legacy = _adopt_legacy_files(path)
-            if legacy is not None:
-                live = [legacy] + live
-        else:
-            live = m["snapshots"]
-            extra = {k: v for k, v in m.items() if k != "snapshots"}
+
+    def add(snaps, meta):
         for key, val in (
             ("record_count", n_rows),
             ("column_stats", snap_stats or None),
             ("file_stats", snap_file_stats),
         ):
             if val is not None:
-                extra[key] = {**extra.get(key, {}), snap_name: val}
+                meta.setdefault(key, {})[snap_name] = val
         os.rename(inflight, snap)  # data becomes visible only with the commit
-        _write_manifest(path, live + [snap_name], **extra)
+        return snaps + [snap_name]
+
+    _commit(path, add)
     return snap
 
 
-def read_table(
-    spark: SparkSession, root: str, name: str, schema: T.StructType | None = None
-) -> DataFrame | None:
+def read_table(spark: SparkSession, root: str, name: str) -> DataFrame | None:
     """Read a table (all LIVE snapshots). Returns None if it doesn't exist
     yet. Tables without a manifest (legacy / plain parquet dirs) fall back
     to directory listing."""
     path = table_path(root, name)
     if not os.path.isdir(path):
         return None
-    live = _live_snapshots(path)
-    if live is not None:
-        parquet_dirs = [
-            os.path.join(path, d)
-            for d in live
-            if os.path.isdir(os.path.join(path, d))
-        ]
-        if not parquet_dirs:
-            return None
-    else:
-        sub = [os.path.join(path, d) for d in _list_snapshot_dirs(path)]
-        parquet_dirs = sub or [path]
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*parquet_dirs)
+    dirs = [d for _, d in _live_dirs(path)]
+    return spark.read.parquet(*dirs) if dirs else None
 
 
 def read_table_pruned(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    col: str,
-    lo=None,
-    hi=None,
-    schema: T.StructType | None = None,
+    spark: SparkSession, root: str, name: str, col: str, lo=None, hi=None
 ) -> DataFrame | None:
     """Read rows with ``lo <= col <= hi`` (either bound may be None),
     SKIPPING every live snapshot whose manifest min/max range cannot
@@ -369,7 +387,7 @@ def read_table_pruned(
     mixing stats-less appends in costs correctness nothing. Delegates to
     read_table_pruned_box — snapshots that also carry per-FILE stats are
     additionally pruned file-by-file."""
-    return read_table_pruned_box(spark, root, name, {col: (lo, hi)}, schema)
+    return read_table_pruned_box(spark, root, name, {col: (lo, hi)})
 
 
 def _range_disjoint(rng, lo, hi) -> bool:
@@ -404,12 +422,9 @@ def pruned_selection(path: str, preds: dict) -> dict | None:
     fstats = m.get("file_stats", {})
     paths: list[str] = []
     dirs_total = files_total = files_kept = 0
-    for s in m["snapshots"]:
-        d = os.path.join(path, s)
-        if not os.path.isdir(d):
-            continue
+    for s, d in _live_dirs(path):
         dirs_total += 1
-        listing = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        listing = _parquet_files(d)
         files_total += len(listing)
         srng = stats.get(s, {})
         if any(
@@ -439,11 +454,7 @@ def pruned_selection(path: str, preds: dict) -> dict | None:
 
 
 def read_table_pruned_box(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    preds: dict,
-    schema: T.StructType | None = None,
+    spark: SparkSession, root: str, name: str, preds: dict
 ) -> DataFrame | None:
     """Read rows matching a conjunction of range predicates
     ``{col: (lo, hi)}`` (either bound may be None), skipping snapshot
@@ -469,19 +480,13 @@ def read_table_pruned_box(
 
     sel = pruned_selection(path, preds)
     if sel is None:  # legacy table: no stats anywhere, plain filtered read
-        full = read_table(spark, root, name, schema)
+        full = read_table(spark, root, name)
         return None if full is None else full.filter(_pred())
     if sel["dirs_total"] == 0:
         return None
-    reader = spark.read.schema(schema) if schema is not None else spark.read
     if not sel["paths"]:  # everything pruned: empty result, schema preserved
-        live = _live_snapshots(path) or []
-        first = next(
-            (os.path.join(path, d) for d in live if os.path.isdir(os.path.join(path, d))),
-            None,
-        )
-        return reader.parquet(first).limit(0).filter(_pred())
-    return reader.parquet(*sel["paths"]).filter(_pred())
+        return spark.read.parquet(_live_dirs(path)[0][1]).limit(0).filter(_pred())
+    return spark.read.parquet(*sel["paths"]).filter(_pred())
 
 
 def _snap_millis(snap_name: str) -> int | None:
@@ -496,28 +501,17 @@ def _snap_millis(snap_name: str) -> int | None:
 def list_snapshots(root: str, name: str) -> list[dict]:
     """The table's committed snapshots in COMMIT order (manifest position) —
     the Iceberg `table.snapshots()` analogue. Each entry carries the name,
-    its ordinal, the embedded commit timestamp, the parquet file count and
-    the recorded row count (None for a snapshot written without one).
-    Metadata-only: no data is read, so this is O(snapshots) at any scale."""
+    the parquet file count and the recorded row count (None for a snapshot
+    written without one). Metadata-only: no data is read, so this is
+    O(snapshots) at any scale."""
     path = table_path(root, name)
     if not os.path.isdir(path):
         return []
     counts = (_read_manifest(path) or {}).get("record_count", {})
-    out = []
-    for i, s in enumerate(_snapshot_order(path)):
-        d = os.path.join(path, s)
-        if not os.path.isdir(d):
-            continue
-        out.append(
-            {
-                "name": s,
-                "ordinal": i,
-                "commit_millis": _snap_millis(s),
-                "n_files": sum(1 for f in os.listdir(d) if f.endswith(".parquet")),
-                "record_count": counts.get(s),
-            }
-        )
-    return out
+    return [
+        {"name": s, "n_files": len(_parquet_files(d)), "record_count": counts.get(s)}
+        for s, d in _live_dirs(path)
+    ]
 
 
 def row_count(root: str, name: str) -> int:
@@ -532,82 +526,14 @@ def row_count(root: str, name: str) -> int:
     if not os.path.isdir(path):
         return 0
     counts = (_read_manifest(path) or {}).get("record_count", {})
-    live = _live_snapshots(path)
-    if live is None:
-        live = _list_snapshot_dirs(path) or ["."]
-    total = 0
-    for s in live:
-        d = os.path.normpath(os.path.join(path, s))
-        if not os.path.isdir(d):
-            continue
-        if s in counts:
-            total += counts[s]
-            continue
-        total += sum(
-            pq.read_metadata(os.path.join(d, f)).num_rows
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
+    return sum(
+        counts[s]
+        if s in counts
+        else sum(
+            pq.read_metadata(os.path.join(d, f)).num_rows for f in _parquet_files(d)
         )
-    return total
-
-
-def read_table_asof(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    snapshot: str | None = None,
-    as_of_millis: int | None = None,
-    schema: T.StructType | None = None,
-) -> DataFrame | None:
-    """TIME TRAVEL: read the table as it was at a past commit — the union of
-    the live-snapshot prefix up to and including ``snapshot`` (a name from
-    list_snapshots) or the last snapshot committed at or before
-    ``as_of_millis``. The Iceberg `VERSION AS OF` / `TIMESTAMP AS OF`
-    analogue: pure metadata selection over the manifest's commit order, no
-    data rewrite, so it costs the same as a current read at any scale.
-
-    History retention is the compaction policy: compact_table collapses all
-    live snapshots into one (Iceberg `expire_snapshots`), after which as-of
-    reads older than the compaction raise — loudly, because silently
-    returning the post-compaction union would misrepresent history.
-
-    Returns None when the table doesn't exist or no snapshot had been
-    committed at ``as_of_millis``.
-    """
-    if (snapshot is None) == (as_of_millis is None):
-        raise ValueError("pass exactly one of snapshot= or as_of_millis=")
-    path = table_path(root, name)
-    if not os.path.isdir(path):
-        return None
-    order = _snapshot_order(path)
-    if snapshot is not None:
-        if snapshot not in order:
-            raise ValueError(
-                f"snapshot {snapshot!r} is not in table {name!r}'s live "
-                f"history ({len(order)} snapshots) — either it never "
-                "existed or compaction expired it"
-            )
-        idx = order.index(snapshot)
-    else:
-        eligible = [
-            i
-            for i, s in enumerate(order)
-            if (_snap_millis(s) or 0) <= as_of_millis
-        ]
-        if not eligible:
-            return None
-        idx = max(eligible)
-    dirs = [
-        os.path.join(path, s)
-        for s in order[: idx + 1]
-        if os.path.isdir(os.path.join(path, s))
-    ]
-    if not dirs:
-        return None
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*dirs)
+        for s, d in _live_dirs(path)
+    )
 
 
 def read_table_latest(
@@ -647,7 +573,7 @@ def read_table_latest(
     # rank snapshots by COMMIT order (manifest list position), not by name:
     # same-millisecond commits would otherwise tie-break on the random hex
     # suffix and latest-wins could pick the older commit nondeterministically
-    order = _snapshot_order(table_path(root, name))
+    order = [s for s, _ in _live_dirs(table_path(root, name))]
     ordinal = F.create_map(
         *[x for i, s in enumerate(order) for x in (F.lit(s), F.lit(i))]
     )
@@ -691,11 +617,11 @@ def compact_table(
 
     CRASH-SAFE via the manifest: the compacted data is written to a new
     (unregistered) snapshot directory first, then ONE atomic manifest swap
-    (os.replace, under _manifest_lock) makes it live, then dead directories
-    are dropped. A crash before the swap leaves readers on the old
-    snapshots (the new dir is an invisible orphan, removed by the next
-    compaction); a crash after the swap leaves orphan OLD dirs readers
-    also never see — no reader ever observes duplicated rows.
+    (_commit) makes it live, then dead directories are dropped. A crash
+    before the swap leaves readers on the old snapshots (the new dir is an
+    invisible orphan, removed by the next compaction); a crash after the
+    swap leaves orphan OLD dirs readers also never see — no reader ever
+    observes duplicated rows.
 
     CONCURRENT APPEND SAFE: the commit re-reads the manifest under the
     lock and keeps any snapshot committed after compaction started
@@ -720,41 +646,14 @@ def compact_table(
              "legacy_files_adopted": 0}
     if not os.path.isdir(path):
         return empty
-    # fold any loose top-level parquet (mixed legacy layout this module's
-    # older versions left behind) into a synthetic OLDEST snapshot before
-    # reading, so the rewrite includes those rows instead of the GC deleting
-    # data that existed in no snapshot
-    legacy_adopted = 0
-    with _manifest_lock(path):
-        m = _read_manifest(path)
-        legacy = _adopt_legacy_files(path)
-        if legacy is not None:
-            legacy_adopted = sum(
-                1 for f in os.listdir(os.path.join(path, legacy))
-                if f.endswith(".parquet")
-            )
-            if m is not None:
-                extra = {k: v for k, v in m.items() if k != "snapshots"}
-                snaps, extra = m["snapshots"], extra
-            else:  # manifest-less mixed layout: adopt the listing too
-                snaps = [d for d in _list_snapshot_dirs(path) if d != legacy]
-                extra = {}
-            _write_manifest(path, [legacy] + snaps, **extra)
-    live = _live_snapshots(path)
-    if live is None:
-        live = _list_snapshot_dirs(path)
-    old_snaps = [os.path.join(path, d) for d in live]
-
-    def n_files(dirs):
-        return sum(
-            1
-            for d in dirs
-            if os.path.isdir(d)
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    files_before = n_files(old_snaps)
+    # adopt any legacy layout before reading (a commit with no change of its
+    # own), so the rewrite includes loose top-level rows instead of the GC
+    # deleting data that existed in no snapshot
+    legacy = _commit(path, lambda snaps, meta: None)
+    legacy_files = len(_parquet_files(os.path.join(path, legacy))) if legacy else 0
+    live = set(_live_snapshots(path))
+    old = _live_dirs(path)
+    files_before = sum(len(_parquet_files(d)) for _, d in old)
     df = read_table_latest(spark, root, name, keys) if keys else read_table(
         spark, root, name
     )
@@ -767,32 +666,26 @@ def compact_table(
     snap_name = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
     new_snap = os.path.join(path, snap_name)
     n_rows, _ = _observed_write(df, new_snap, [])
-    with _manifest_lock(path):
-        # CAS-style commit: keep snapshots appended while we were rewriting,
-        # with their recorded counts and stats
-        m = _read_manifest(path) or {"snapshots": []}
-        late = [d for d in m["snapshots"] if d not in live and d != snap_name]
-        per_snap = {
-            key: {s: v for s, v in m.get(key, {}).items() if s in late}
-            for key in ("record_count", "column_stats", "file_stats")
-        }
-        per_snap["record_count"][snap_name] = n_rows
-        _write_manifest(
-            path,
-            [snap_name] + late,
-            compacted={"keys": keys},
-            **{k: v for k, v in per_snap.items() if v},
-        )
+    dead: list[str] = []
+
+    def swap(snaps, meta):
+        # CAS-style commit: keep snapshots appended while we were rewriting
+        # (_commit keeps their recorded counts and stats)
+        late = [d for d in snaps if d not in live and d != snap_name]
+        meta.setdefault("record_count", {})[snap_name] = n_rows
+        meta["compacted"] = {"keys": keys}
         # freeze the dead list WHILE holding the lock: an appender blocked
         # on the lock right now will rename+commit its snapshot the moment
         # we release — its dir is still dot-prefixed (invisible to the
         # listing) at this instant, so it can never land in `dead`.
         # Deleting a post-release listing instead would race exactly that
         # commit and rmtree a manifest-referenced directory.
-        dead = [
-            d for d in _list_snapshot_dirs(path)
-            if d != snap_name and d not in late
-        ]
+        dead.extend(
+            d for d in _list_snapshot_dirs(path) if d != snap_name and d not in late
+        )
+        return [snap_name] + late
+
+    _commit(path, swap)
     # everything frozen above is dead: the old live dirs plus any orphans a
     # previously crashed append/compaction left behind
     for d in dead:
@@ -807,9 +700,9 @@ def compact_table(
                 shutil.rmtree(dp, ignore_errors=True)
     return {
         "files_before": files_before,
-        "files_after": n_files([new_snap]),
-        "snapshots_before": len(old_snaps),
-        "legacy_files_adopted": legacy_adopted,
+        "files_after": len(_parquet_files(new_snap)),
+        "snapshots_before": len(old),
+        "legacy_files_adopted": legacy_files,
     }
 
 
@@ -818,9 +711,9 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
     rule is in the module docstring): for each ``{table: id column}``, drop
     from the manifest the snapshots whose recorded ``max(id column) >= lo``
     and that were committed after ``marker``'s newest snapshot. Metadata
-    only: the dropped directories (and their stats entries) stay until the
-    next compaction removes them. Returns ``{table: snapshots dropped}`` for
-    tables that dropped any."""
+    only: the dropped directories stay until the next compaction removes
+    them; their manifest entries (counts, stats) go with the commit.
+    Returns ``{table: snapshots dropped}`` for tables that dropped any."""
     mpath = table_path(root, marker)
     m = _read_manifest(mpath)
     if lo is None or (m is None and os.path.isdir(mpath)):
@@ -840,19 +733,20 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
         path = table_path(root, name)
         if _read_manifest(path) is None:
             continue
-        with _manifest_lock(path):
-            m = _read_manifest(path)
-            stats = m.get("column_stats", {})
-            gone = [
-                s for s in m["snapshots"]
+
+        def drop(snaps, meta):
+            stats = meta.get("column_stats", {})
+            gone = {
+                s for s in snaps
                 if reaches(stats.get(s, {}).get(col))
                 and (_snap_millis(s) or -1) > cutoff
-            ]
-            if gone:
-                extra = {k: v for k, v in m.items() if k != "snapshots"}
-                live = [s for s in m["snapshots"] if s not in gone]
-                _write_manifest(path, live, **extra)
-                dropped[name] = len(gone)
+            }
+            if not gone:
+                return None
+            dropped[name] = len(gone)
+            return [s for s in snaps if s not in gone]
+
+        _commit(path, drop)
     return dropped
 
 
@@ -869,20 +763,23 @@ def compact_tables(spark: SparkSession, root: str, how: dict, after: int) -> dic
     return compacted
 
 
-def zorder_key(cols: list, ranges: list, bits: int = 4):
+_ZORDER_BITS = 4  # quantization levels per z-order column: 2^4
+
+
+def zorder_key(cols: list, ranges: list):
     """Bit-interleaved Z-curve value of numeric columns: each column is
-    linearly quantized to 2^bits levels over its [mn, mx] range, then the
-    quantized values' bits are interleaved (col0 gets bit positions
-    0, k, 2k, ...). Nearby z-values are nearby in EVERY dimension, which
-    is the whole trick: range-partitioning on z makes each output file a
-    tight hyper-rectangle in all zcols at once, where a plain sort gives
-    tight ranges in only the leading column. Pure column expressions —
-    no UDF, stays in whole-stage codegen."""
+    linearly quantized to 2^_ZORDER_BITS levels over its [mn, mx] range,
+    then the quantized values' bits are interleaved (col0 gets bit
+    positions 0, k, 2k, ...). Nearby z-values are nearby in EVERY
+    dimension, which is the whole trick: range-partitioning on z makes each
+    output file a tight hyper-rectangle in all zcols at once, where a plain
+    sort gives tight ranges in only the leading column. Pure column
+    expressions — no UDF, stays in whole-stage codegen."""
     from pyspark.sql import functions as F
 
     k = len(cols)
     z = F.lit(0).cast("long")
-    levels = 1 << bits
+    levels = 1 << _ZORDER_BITS
     for ci, (c, (mn, mx)) in enumerate(zip(cols, ranges)):
         if mn is None or mx is None:
             raise ValueError(f"zorder_key: column {c} has no min/max (all null?)")
@@ -902,7 +799,7 @@ def zorder_key(cols: list, ranges: list, bits: int = 4):
             )
         q = F.floor(scaled / F.lit(span)).cast("long")
         q = F.least(F.lit(levels - 1), F.greatest(F.lit(0), q))
-        for b in range(bits):
+        for b in range(_ZORDER_BITS):
             z = z + F.shiftleft(
                 F.shiftright(q, b).bitwiseAND(F.lit(1)), b * k + ci
             )
@@ -915,7 +812,6 @@ def write_table_zordered(
     name: str,
     zcols: list[str],
     n_partitions: int = 8,
-    bits: int = 4,
 ) -> str:
     """Append a snapshot Z-ORDER clustered on ``zcols`` with per-file
     stats — the Iceberg `rewrite_data_files(strategy => 'sort',
@@ -939,7 +835,7 @@ def write_table_zordered(
     ).collect()[0]
     ranges = [(row[f"mn_{i}"], row[f"mx_{i}"]) for i in range(len(zcols))]
     clustered = (
-        df.withColumn("_z", zorder_key(zcols, ranges, bits))
+        df.withColumn("_z", zorder_key(zcols, ranges))
         .repartitionByRange(n_partitions, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
@@ -983,31 +879,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(name)
-
-
-def merge_upsert(
-    spark: SparkSession, root: str, name: str, updates: DataFrame, keys: list[str]
-) -> None:
-    """MERGE INTO stand-in (Iceberg: WHEN MATCHED UPDATE / NOT MATCHED INSERT;
-    reference upserts segment_assets on conflict keys,
-    supabase_client.py:205-213). Parquet has no row-level ops, so: keep
-    existing rows whose keys DON'T collide (anti-join), union the updates,
-    rewrite via a staging directory and atomic-ish swap."""
-    import shutil
-
-    existing = read_table(spark, root, name)
-    if existing is None:
-        write_table(updates, root, name)
-        return
-    merged = existing.join(
-        updates.select(*keys).distinct(), keys, "left_anti"
-    ).unionByName(updates)
-    staging = table_path(root, f".{name}.staging")
-    merged.hint("rebalance").write.mode("overwrite").parquet(staging)
-    final = table_path(root, name)
-    old = table_path(root, f".{name}.old")
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(final, old)
-    os.rename(staging, final)
-    shutil.rmtree(old)

@@ -1,36 +1,12 @@
-"""merge_upsert (MERGE INTO stand-in) and the stateful streaming operator."""
+"""The table layer (sources/tables.py: manifest commits, legacy adoption,
+compaction, rollback, row counts, pruned, latest-wins and z-ordered reads)
+and the stateful streaming operator."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from chapterbridge_ocr_worker_spark.sources import tables
 from chapterbridge_ocr_worker_spark.streaming.stateful import running_totals_per_type
-
-
-def test_merge_upsert(spark, tmp_path):
-    root = str(tmp_path)
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["id", "k", "v"]
-    )
-    tables.write_table(base, root, "links")
-    updates = spark.createDataFrame(
-        [(2, "b", 99), (4, "d", 40)], ["id", "k", "v"]
-    )
-    tables.merge_upsert(spark, root, "links", updates, keys=["id"])
-    rows = {
-        r["id"]: r["v"] for r in tables.read_table(spark, root, "links").collect()
-    }
-    assert rows == {1: 10, 2: 99, 3: 30, 4: 40}  # matched updated, new inserted
-
-    # idempotent re-apply
-    tables.merge_upsert(spark, root, "links", updates, keys=["id"])
-    assert tables.read_table(spark, root, "links").count() == 4
-
-
-def test_merge_upsert_creates_missing_table(spark, tmp_path):
-    root = str(tmp_path)
-    updates = spark.createDataFrame([(1, 5)], ["id", "v"])
-    tables.merge_upsert(spark, root, "fresh", updates, keys=["id"])
-    assert tables.read_table(spark, root, "fresh").count() == 1
 
 
 def test_stateful_running_totals(spark, tmp_path):
@@ -298,10 +274,12 @@ def test_append_adopts_legacy_toplevel_files(spark, tmp_path):
     assert got2 == got
 
 
-def test_compact_adopts_legacy_toplevel_files(spark, tmp_path):
+@pytest.mark.parametrize("recover", ["compact_table", "append_snapshot"])
+def test_compact_adopts_legacy_toplevel_files(spark, tmp_path, recover):
     """Mixed layout left by OLDER code (manifest exists, loose top-level
-    parquet invisible to it): compaction folds the stranded rows into the
-    rewrite instead of deleting them (ADVICE r4)."""
+    parquet invisible to it): the next commit, a compaction or an append,
+    folds the stranded rows into a snapshot instead of deleting them
+    (ADVICE r4)."""
     import json
     import os
 
@@ -316,9 +294,13 @@ def test_compact_adopts_legacy_toplevel_files(spark, tmp_path):
     m = json.load(open(os.path.join(path, "_live_snapshots.json")))
     assert len(m["snapshots"]) == 1
     assert tables.read_table(spark, root, "t").count() == 1  # rows stranded
-    stats = tables.compact_table(spark, root, "t")
-    assert stats["legacy_files_adopted"] >= 1
-    assert tables.read_table(spark, root, "t").count() == 3  # recovered
+    if recover == "compact_table":
+        stats = tables.compact_table(spark, root, "t")
+        assert stats["legacy_files_adopted"] >= 1
+        assert tables.read_table(spark, root, "t").count() == 3  # recovered
+    else:
+        tables.append_snapshot(spark.createDataFrame([(4, "d")], ["id", "v"]), root, "t")
+        assert tables.read_table(spark, root, "t").count() == 3 + 1  # recovered
     assert not any(
         f.endswith(".parquet")
         for f in os.listdir(path)
@@ -362,68 +344,6 @@ def test_operator_cache_release(spark, tmp_path):
     minhash_candidates(docs).count()
     assert release_caches() == 1  # the signature cache was tracked + freed
     assert release_caches() == 0  # idempotent
-
-
-def test_time_travel_snapshot_and_timestamp(spark, tmp_path):
-    """Iceberg-parity time travel: as-of a snapshot name returns exactly the
-    commit-prefix union; as-of a timestamp resolves to the last commit at or
-    before it; list_snapshots reports commit order."""
-    import time as _time
-
-    from chapterbridge_ocr_worker_spark.sources import tables
-
-    root = str(tmp_path)
-    batches = [[(1, "a")], [(2, "b")], [(3, "c")]]
-    for rows in batches:
-        tables.append_snapshot(
-            spark.createDataFrame(rows, ["id", "v"]), root, "tt"
-        )
-        _time.sleep(0.005)  # distinct commit millis for the timestamp leg
-
-    snaps = tables.list_snapshots(root, "tt")
-    assert [s["ordinal"] for s in snaps] == [0, 1, 2]
-    millis = [s["commit_millis"] for s in snaps]
-    assert millis == sorted(millis) and None not in millis
-
-    def ids(df):
-        return sorted(r["id"] for r in df.collect())
-
-    assert ids(tables.read_table_asof(spark, root, "tt", snapshot=snaps[1]["name"])) == [1, 2]
-    assert ids(tables.read_table_asof(spark, root, "tt", snapshot=snaps[2]["name"])) == [1, 2, 3]
-    # timestamp between commit 0 and 1 -> only the first batch
-    assert ids(tables.read_table_asof(spark, root, "tt", as_of_millis=millis[0])) == [1]
-    # before any commit -> None; unknown snapshot -> loud
-    assert tables.read_table_asof(spark, root, "tt", as_of_millis=millis[0] - 10_000) is None
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="never existed or compaction"):
-        tables.read_table_asof(spark, root, "tt", snapshot="snap-0-deadbeef")
-    with _pytest.raises(ValueError, match="exactly one"):
-        tables.read_table_asof(spark, root, "tt")
-
-
-def test_time_travel_history_expires_on_compaction(spark, tmp_path):
-    """compact_table is the retention policy: pre-compaction snapshots
-    leave the live history and as-of reads on them raise instead of
-    silently returning post-compaction data."""
-    import pytest as _pytest
-
-    from chapterbridge_ocr_worker_spark.sources import tables
-
-    root = str(tmp_path)
-    for rows in ([(1, "a")], [(2, "b")]):
-        tables.append_snapshot(
-            spark.createDataFrame(rows, ["id", "v"]), root, "tt2"
-        )
-    old = tables.list_snapshots(root, "tt2")[0]["name"]
-    tables.compact_table(spark, root, "tt2")
-    snaps = tables.list_snapshots(root, "tt2")
-    assert len(snaps) == 1  # history collapsed
-    with _pytest.raises(ValueError, match="compaction expired"):
-        tables.read_table_asof(spark, root, "tt2", snapshot=old)
-    # the compacted snapshot itself still time-travels (full data)
-    df = tables.read_table_asof(spark, root, "tt2", snapshot=snaps[0]["name"])
-    assert sorted(r["id"] for r in df.collect()) == [1, 2]
 
 
 def test_snapshot_stats_prune_file_skipping(spark, tmp_path):
@@ -552,6 +472,9 @@ def test_row_count_equals_read_count(spark, tmp_path, monkeypatch):
     assert tables.row_count(root, "t") == 22
     assert tables.rollback_uncommitted(root, "marker", {"t": "id"}, 15) == {"t": 1}
     check("t")
+    # the dropped snapshot's count and stats leave the manifest with it
+    m = tables._read_manifest(tables.table_path(root, "t"))
+    assert set(m["record_count"]) == set(m["column_stats"]) == set(m["snapshots"])
     assert tables.row_count(root, "t") == 15
     # an append that commits while compaction rewrites keeps its count
     # and stats
