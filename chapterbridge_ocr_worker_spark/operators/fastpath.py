@@ -51,9 +51,18 @@ def _spread(df: DataFrame) -> DataFrame:
     input already has >= defaultParallelism splits (nothing here is tuned
     to a core COUNT: the floor derives from the session's own
     parallelism). Only candidate-superset/row-local kernels sit downstream,
-    so results are partitioning-independent."""
+    so results are partitioning-independent.
+
+    The floor is decided from the plan, without running it. A plan without
+    an exchange has its partition count at planning time (``df.rdd`` plans
+    the scan, it starts no job). A plan with one is adaptive: its count
+    exists only once AQE has run the upstream stages, and AQE coalesces a
+    small shuffle output below the parallelism, so it is spread. Asking
+    such a plan for its count would run those stages once for the answer
+    and again for the kernel."""
     p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
+    adaptive = df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan"
+    if adaptive or df.rdd.getNumPartitions() < p:
         return df.repartition(p)
     return df
 

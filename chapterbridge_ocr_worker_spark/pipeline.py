@@ -9,13 +9,14 @@ daemon (workers/ocr/main.py:220-255). Stages (SURVEY.md §3.1):
         └─ kind='media' ─join media blobs─ repartition(xxhash64(doc_id,offset))
                           ─mapInPandas OCR (persisted)
     text ∪ OCR'd ──groupBy doc_id, array_sort(collect_list), max(failed)──> output
-    commit, in this order (write_run):
-        ocr_output (output where not failed) -> failures (OCR error rows)
-        -> checkpoint (per-partition metrics) -> ocr_json (committed docs'
-        pages) -> lineage (the resume marker, last)
-    each append is one byte-sized write (one file per snapshot at these
+    commit (write_run, one tables.append_snapshots call): the five
+        snapshot writes are staged concurrently, then published in this
+        order: ocr_output (output where not failed) -> failures (OCR error
+        rows) -> checkpoint (per-partition metrics) -> ocr_json (committed
+        docs' pages) -> lineage (the resume marker, last)
+    each snapshot is one byte-sized write (one file per snapshot at these
     sizes); the run's docs/failed_docs counts are observed on the
-    ocr_output append, not counted by a separate action
+    ocr_output write, not counted by a separate action
 
 Plan properties to preserve at 100 TB (verify with .explain("formatted")):
 - the media-blob join is a plain shuffled hash join on media_ref (both sides
@@ -113,15 +114,19 @@ def write_run(
     retryable, main.py:236-242). Docs with >= 1 dead-lettered span are
     retried by the next run's anti-join. Returns run stats.
 
-    Commit order: ocr_output -> failures -> checkpoint -> ocr_json ->
-    lineage. Lineage is the resume marker, so it goes last (the reference
-    uploads the JSON before it records the job done, main.py:191-216). A
-    crash before the lineage append leaves this run's docs pending; the
-    rerun appends them again, and the duplicates are absorbed by
-    latest-wins reads: read_table_latest(..., "ocr_output", keys=["doc_id"])
-    and read_table_latest(..., "ocr_json", keys=["doc_id", "offset"]).
+    Commit order: the five tables are written concurrently into
+    invisible in-flight snapshots (tables.append_snapshots), and only once
+    every write succeeded are their manifests published, in this order:
+    ocr_output -> failures -> checkpoint -> ocr_json -> lineage. Lineage is
+    the resume marker, so it goes last (the reference uploads the JSON
+    before it records the job done, main.py:191-216). A failure while
+    writing publishes nothing. A crash between publishes, before lineage,
+    leaves this run's docs pending; the rerun appends them again, and the
+    duplicates are absorbed by latest-wins reads:
+    read_table_latest(..., "ocr_output", keys=["doc_id"]) and
+    read_table_latest(..., "ocr_json", keys=["doc_id", "offset"]).
     failures and checkpoint are per-attempt logs (one snapshot per
-    attempt). A crash after the lineage append loses nothing.
+    attempt). A crash after the lineage publish loses nothing.
 
     force=True skips the lineage anti-join and reprocesses everything —
     the reference's `--force` reprocess flag (enqueue.py / main.py:107:
@@ -150,36 +155,33 @@ def write_run(
         ocr.count()  # materialize the OCR work under the timer
         wall = time.time() - t0
 
-        completed = output.filter(~F.col("failed")).drop("failed")
-        # per-page reference-shaped JSON output docs (F13), the upload
-        # payload the reference puts to R2 per job, for committed docs only:
-        # pages with no match in the (small) failed-id set
         ok, failures = split_failures(ocr)
-        failed_ids = output.filter("failed").select("doc_id", "failed")
-        pages = ok.join(failed_ids, "doc_id", "left").filter(F.col("failed").isNull())
+        completed = output.filter(~F.col("failed")).drop("failed")
 
-        # the run's doc counts are observed on the first append, which
+        def pages():
+            # per-page reference-shaped JSON output docs (F13), the upload
+            # payload the reference puts to R2 per job, for committed docs
+            # only: pages with no match in the (small) failed-id set
+            failed_ids = output.filter("failed").select("doc_id", "failed")
+            joined = ok.join(failed_ids, "doc_id", "left")
+            return serialize_output_documents(
+                build_output_documents(joined.filter(F.col("failed").isNull()))
+            )
+
+        # the run's doc counts are observed on the ocr_output write, which
         # reads every pending doc (failed ones before the filter drops them)
         counts = Observation()
-        tables.append_snapshot(
-            output.observe(
+        tables.append_snapshots(spark, warehouse, [
+            ("ocr_output", lambda: output.observe(
                 counts,
                 F.count_if(~F.col("failed")).alias("docs"),
                 F.count_if("failed").alias("failed_docs"),
-            )
-            .filter(~F.col("failed"))
-            .drop("failed"),
-            warehouse,
-            "ocr_output",
-        )
-        tables.append_snapshot(failures, warehouse, "failures")
-        tables.append_snapshot(checkpoint_rows(ok, wall), warehouse, "checkpoint")
-        tables.append_snapshot(
-            serialize_output_documents(build_output_documents(pages)),
-            warehouse,
-            "ocr_json",
-        )
-        tables.append_snapshot(build_lineage(completed), warehouse, "lineage")
+            ).filter(~F.col("failed")).drop("failed")),
+            ("failures", failures),
+            ("checkpoint", lambda: checkpoint_rows(ok, wall)),
+            ("ocr_json", pages),
+            ("lineage", lambda: build_lineage(completed)),
+        ])
     finally:
         for df in cached:
             df.unpersist()

@@ -16,6 +16,16 @@ Scale notes baked in:
   a lock, published by one atomic swap (the Iceberg metadata-pointer swap).
   That swap is the commit point; every reader resolves the live snapshot
   directories through ``_live_dirs``;
+- every snapshot write is two phases, stage then publish (Iceberg writes
+  the data files, then swaps the metadata pointer). Stage (``_stage``)
+  writes the rows into a dot-prefixed ``.inflight-*`` dir that no reader,
+  listing or adoption sees. Publish (``_publish``) is one ``_commit`` that
+  names the snapshot ``snap-<commit millis>-<hex>`` at that moment, under
+  the lock, and renames it into place, so names follow publish order. A
+  multi-table commit (``append_snapshots``: write_run, the weekly jobs)
+  stages all its tables concurrently and publishes them in its order only
+  after every stage succeeded: a failure while staging publishes nothing,
+  and its in-flight dirs are removed by a compaction 1 h later;
 - every write sizes its files by BYTES: it goes through one AQE rebalance
   (`df.hint("rebalance")`), so a few hundred rows land in one file however
   many upstream tasks produced them (the Iceberg requested-distribution +
@@ -35,13 +45,15 @@ embdedup_job.py). Each job owns a state directory of tables and runs:
 2. rollback (rollback_uncommitted): drop from the manifest every snapshot a
    crashed attempt at this slice left in the other state tables, so prior
    state reads are plain reads and every state table holds each row once.
-3. judge the pending rows, then append the state tables with the marker
-   last, then compaction (compact_tables).
+3. judge the pending rows, then commit the state tables through
+   append_snapshots with the marker last (the job's ``--out`` files are
+   staged with them, so they exist before any state publish), then
+   compaction (compact_tables).
 
 Rollback drops a snapshot only when both hold: (a) its recorded id-column
 stats reach the pending slice (max >= lo), and (b) it was committed after
 the marker's newest snapshot (by the commit millisecond in the snapshot
-names). When in doubt it keeps: snapshots without
+names, taken at publish). When in doubt it keeps: snapshots without
 stats (compaction outputs, adopted legacy files), tables without a
 manifest and everything committed before the marker's newest snapshot stay.
 Rule (b) is what keeps a slice that breaks crawl order from dropping
@@ -55,9 +67,11 @@ that are already set, which the bit_or fold makes idempotent.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -212,16 +226,20 @@ def _commit(path: str, change) -> str | None:
     return legacy
 
 
-def _live_dirs(path: str) -> list[tuple[str, str]]:
+def _live_dirs(path: str, live: list[str] | None = None) -> list[tuple[str, str]]:
     """``(name, dir)`` of each live snapshot in COMMIT order — the
     manifest's append order, which is what latest-wins must rank by (a name
     sort would tie-break two same-millisecond commits on random hex).
     Manifest entries whose dir is gone are skipped. A table without a
     manifest falls back to its sorted listing (name order ~ commit order),
-    or to the table dir itself (a plain parquet directory)."""
-    live = _live_snapshots(path)
+    or to the table dir itself when it holds parquet files (a plain parquet
+    directory); a table dir holding only in-flight writes has no snapshot.
+    ``live``: an already-read manifest list to resolve instead of reading
+    it again."""
     if live is None:
-        live = _list_snapshot_dirs(path) or ["."]
+        live = _live_snapshots(path)
+    if live is None:
+        live = _list_snapshot_dirs(path) or (["."] if _parquet_files(path) else [])
     out = []
     for s in live:
         d = os.path.normpath(os.path.join(path, s))
@@ -273,6 +291,131 @@ def _observed_write(
     return got["n"], stats
 
 
+class _Staged(NamedTuple):
+    """A snapshot written but not yet live: its dot-prefixed in-flight dir
+    and what the write observed of it."""
+
+    inflight: str
+    n_rows: int
+    stats: dict
+    file_stats: dict | None
+
+
+def _stage(
+    path: str,
+    df: DataFrame,
+    stats_cols: list[str] | None = None,
+    file_stats_cols: list[str] | None = None,
+) -> _Staged:
+    """Write ``df`` into a fresh ``.inflight-*`` dir of the table at
+    ``path``, observing its row count and ``stats_cols`` min/max in the
+    write (and, with ``file_stats_cols``, per-file min/max from a footer
+    scan of the written files, keyed by file basename). The dir is dot-
+    prefixed, so no reader, listing, adoption or compaction GC (before
+    1 h) treats it as a snapshot until _place renames it."""
+    inflight = os.path.join(path, f".inflight-{uuid.uuid4().hex}")
+    n_rows, stats = _observed_write(
+        df, inflight, stats_cols or [], rebalance=not file_stats_cols
+    )
+    file_stats = None
+    if file_stats_cols:
+        from pyspark.sql import functions as F
+
+        frows = (
+            df.sparkSession.read.parquet(inflight)
+            .groupBy(F.input_file_name().alias("f"))
+            .agg(
+                *[F.min(c).alias(f"mn_{i}") for i, c in enumerate(file_stats_cols)],
+                *[F.max(c).alias(f"mx_{i}") for i, c in enumerate(file_stats_cols)],
+            )
+            .collect()
+        )
+        file_stats = {
+            os.path.basename(r["f"]): {
+                c: [
+                    _json_safe_stat(r[f"mn_{i}"]),
+                    _json_safe_stat(r[f"mx_{i}"]),
+                ]
+                for i, c in enumerate(file_stats_cols)
+            }
+            for r in frows
+        }
+    return _Staged(inflight, n_rows, stats, file_stats)
+
+
+def _place(path: str, staged: _Staged, meta: dict) -> str:
+    """Inside a _commit change: name the staged snapshot by the COMMIT
+    millisecond, record its count and stats in ``meta`` and rename it into
+    place. Returns the snapshot name. Naming here, under the lock, is what
+    makes name order follow publish order across tables (rollback rule (b)
+    compares those milliseconds), however the stage writes overlapped."""
+    name = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
+    for key, val in (
+        ("record_count", staged.n_rows),
+        ("column_stats", staged.stats or None),
+        ("file_stats", staged.file_stats),
+    ):
+        if val is not None:
+            meta.setdefault(key, {})[name] = val
+    os.rename(staged.inflight, os.path.join(path, name))
+    return name
+
+
+def _publish(path: str, staged: _Staged) -> str:
+    """Make one staged snapshot live: one _commit appending it to the
+    manifest. Returns the snapshot dir."""
+    placed = []
+
+    def add(snaps, meta):
+        placed.append(_place(path, staged, meta))
+        return snaps + placed
+
+    _commit(path, add)
+    return os.path.join(path, placed[0])
+
+
+def append_snapshots(
+    spark: SparkSession, root: str, appends: list, writes: list = ()
+) -> list[str]:
+    """Commit one snapshot to each of several tables: stage every write
+    concurrently, then publish the manifests in list order — the
+    multi-table commit of write_run and the weekly jobs. Returns the
+    snapshot dirs in list order.
+
+    ``appends``: ``(name, df[, stats_cols[, file_stats_cols]])`` tuples,
+    with the append_snapshot meaning of the column lists. ``df`` is a
+    DataFrame or a function that builds one; a function runs in its write's
+    thread, so the plan's analysis overlaps the other writes too.
+    ``writes``: functions with no arguments (a job's ``--out`` files) that
+    run alongside the stage and must all finish before any publish.
+
+    Stage: one thread per table or write, each started through
+    ``inheritable_thread_target`` so the caller's local properties (job
+    group and description, a streaming batch's properties) reach its
+    Spark jobs. Publish: only after every stage succeeded, one _commit per
+    table in list order, each naming its snapshot at that moment. A
+    failure while staging publishes nothing and raises the first failure
+    in list order; its in-flight dirs stay invisible until compaction
+    removes them (after 1 h)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    def stage(name, df, *cols):
+        built = df if isinstance(df, DataFrame) else df()
+        return _stage(table_path(root, name), built, *cols)
+
+    tasks = [functools.partial(stage, *a) for a in appends] + list(writes)
+    if len(tasks) == 1:
+        staged = [tasks[0]()]
+    else:
+        with ThreadPoolExecutor(len(tasks)) as pool:
+            futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
+        # leaving the pool waited for every thread: nothing is still writing
+        staged = [f.result() for f in futures]
+    return [_publish(table_path(root, a[0]), s) for a, s in zip(appends, staged)]
+
+
 def append_snapshot(
     df: DataFrame,
     root: str,
@@ -281,13 +424,14 @@ def append_snapshot(
     file_stats_cols: list[str] | None = None,
 ) -> str:
     """Append as a new immutable snapshot directory (atomic-commit stand-in
-    for Iceberg's append). Readers union LIVE snapshots via read_table.
-    The manifest update after the data write is the commit point: a crash
-    mid-write leaves an orphan directory no reader ever sees (cleaned by
-    the next compact_table). CONCURRENT appenders are safe: the data write
-    happens outside the lock (unique directory per snapshot), then the
-    manifest read-modify-write runs in _commit, under _manifest_lock, so no
-    commit can drop another writer's snapshot.
+    for Iceberg's append) — the one-table case of append_snapshots. Readers
+    union LIVE snapshots via read_table. The manifest update after the
+    data write is the commit point: a crash mid-write leaves an orphan
+    in-flight directory no reader ever sees (cleaned by a later
+    compact_table). CONCURRENT appenders are safe: the data write happens
+    outside the lock (unique directory per snapshot), then the manifest
+    read-modify-write runs in _commit, under _manifest_lock, so no commit
+    can drop another writer's snapshot.
 
     The rows go through the byte-sizing rebalance (module docstring), and
     the snapshot's row count is observed in the write and recorded in the
@@ -309,53 +453,9 @@ def append_snapshot(
     rebalance. The file stats are aggregated from the just-written parquet
     (a footer-backed scan grouped by input_file_name), keyed by basename
     so the inflight->snap directory rename keeps them valid."""
-    snap_name = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-    path = table_path(root, name)
-    snap = os.path.join(path, snap_name)
-    # write to a dot-prefixed in-flight dir: a concurrent appender adopting
-    # a legacy (manifest-less) table must not mistake this uncommitted data
-    # for a committed snapshot, and listings/GC skip dotted dirs
-    inflight = os.path.join(path, f".inflight-{snap_name}")
-    n_rows, snap_stats = _observed_write(
-        df, inflight, stats_cols or [], rebalance=not file_stats_cols
-    )
-    snap_file_stats = None
-    if file_stats_cols:
-        from pyspark.sql import functions as F
-
-        frows = (
-            df.sparkSession.read.parquet(inflight)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                *[F.min(c).alias(f"mn_{i}") for i, c in enumerate(file_stats_cols)],
-                *[F.max(c).alias(f"mx_{i}") for i, c in enumerate(file_stats_cols)],
-            )
-            .collect()
-        )
-        snap_file_stats = {
-            os.path.basename(r["f"]): {
-                c: [
-                    _json_safe_stat(r[f"mn_{i}"]),
-                    _json_safe_stat(r[f"mx_{i}"]),
-                ]
-                for i, c in enumerate(file_stats_cols)
-            }
-            for r in frows
-        }
-
-    def add(snaps, meta):
-        for key, val in (
-            ("record_count", n_rows),
-            ("column_stats", snap_stats or None),
-            ("file_stats", snap_file_stats),
-        ):
-            if val is not None:
-                meta.setdefault(key, {})[snap_name] = val
-        os.rename(inflight, snap)  # data becomes visible only with the commit
-        return snaps + [snap_name]
-
-    _commit(path, add)
-    return snap
+    return append_snapshots(
+        df.sparkSession, root, [(name, df, stats_cols, file_stats_cols)]
+    )[0]
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame | None:
@@ -554,13 +654,18 @@ def read_table_latest(
     (compact_table(keys=...)). The manifest records how the table was
     compacted; a mismatch raises here instead of silently resurrecting
     superseded rows."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    df = read_table(spark, root, name)
-    if df is None:
+    path = table_path(root, name)
+    if not os.path.isdir(path):
         return None
-    m = _read_manifest(table_path(root, name))
+    dirs = _live_dirs(path)
+    if not dirs:
+        return None
+    _check_latest_wins(path, name, keys)
+    return _latest_wins(spark, dirs, keys)
+
+
+def _check_latest_wins(path: str, name: str, keys: list[str]) -> None:
+    m = _read_manifest(path)
     if m is not None and "compacted" in m:
         ckeys = m["compacted"].get("keys")
         if ckeys is None or list(ckeys) != list(keys):
@@ -570,12 +675,20 @@ def read_table_latest(
                 "Compact with compact_table(..., keys=...) to preserve "
                 "latest-wins semantics."
             )
+
+
+def _latest_wins(spark: SparkSession, dirs: list, keys: list[str]) -> DataFrame:
+    """Rows of the snapshot ``dirs`` (``(name, dir)`` in commit order) where
+    each key keeps only its newest containing snapshot's rows."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    df = spark.read.parquet(*[d for _, d in dirs])
     # rank snapshots by COMMIT order (manifest list position), not by name:
     # same-millisecond commits would otherwise tie-break on the random hex
     # suffix and latest-wins could pick the older commit nondeterministically
-    order = [s for s, _ in _live_dirs(table_path(root, name))]
     ordinal = F.create_map(
-        *[x for i, s in enumerate(order) for x in (F.lit(s), F.lit(i))]
+        *[x for i, (s, _) in enumerate(dirs) for x in (F.lit(s), F.lit(i))]
     )
     snap = F.regexp_extract(F.input_file_name(), r"/(snap-\d+-[0-9a-z]+)/", 1)
     # rows outside any known snapshot (shouldn't happen post-adoption) rank
@@ -615,18 +728,20 @@ def compact_table(
     manifest records that provenance is gone — read_table_latest refuses
     such tables instead of silently resurrecting superseded rows.
 
-    CRASH-SAFE via the manifest: the compacted data is written to a new
-    (unregistered) snapshot directory first, then ONE atomic manifest swap
-    (_commit) makes it live, then dead directories are dropped. A crash
-    before the swap leaves readers on the old snapshots (the new dir is an
-    invisible orphan, removed by the next compaction); a crash after the
-    swap leaves orphan OLD dirs readers also never see — no reader ever
-    observes duplicated rows.
+    CRASH-SAFE via the manifest: the compacted data is staged like an
+    append (_stage, an in-flight directory), then ONE atomic manifest swap
+    (_commit) names it and makes it live, then dead directories are
+    dropped. A crash before the swap leaves readers on the old snapshots
+    (the in-flight dir is invisible, removed by a later compaction); a
+    crash after the swap leaves orphan OLD dirs readers also never see —
+    no reader ever observes duplicated rows.
 
-    CONCURRENT APPEND SAFE: the commit re-reads the manifest under the
-    lock and keeps any snapshot committed after compaction started
-    (new manifest = [compacted] + late arrivals), so an appender running
-    during the (long) rewrite never loses its commit. Run ONE compactor at
+    CONCURRENT APPEND SAFE: the live snapshot list is read once, and the
+    rewrite reads exactly those dirs. The commit re-reads the manifest
+    under the lock and keeps every snapshot not in that list (new manifest
+    = [compacted] + late arrivals), so an appender running during the
+    (long) rewrite never loses its commit and its rows are never both
+    rewritten and kept. Run ONE compactor at
     a time (two concurrent compactions of the same table would each fold
     the other's output).
 
@@ -651,39 +766,43 @@ def compact_table(
     # deleting data that existed in no snapshot
     legacy = _commit(path, lambda snaps, meta: None)
     legacy_files = len(_parquet_files(os.path.join(path, legacy))) if legacy else 0
-    live = set(_live_snapshots(path))
-    old = _live_dirs(path)
-    files_before = sum(len(_parquet_files(d)) for _, d in old)
-    df = read_table_latest(spark, root, name, keys) if keys else read_table(
-        spark, root, name
-    )
-    if df is None:  # manifest exists but every listed dir is gone
+    # the snapshot set this compaction rewrites, resolved ONCE: the rewrite
+    # reads exactly these dirs, and the swap keeps every other live snapshot
+    # as a late arrival, so an append committed meanwhile is never both
+    # rewritten and kept
+    live = _live_snapshots(path)
+    old = _live_dirs(path, live)
+    if not old:  # manifest exists but every listed dir is gone
         return empty
+    files_before = sum(len(_parquet_files(d)) for _, d in old)
+    if keys:
+        _check_latest_wins(path, name, keys)
+        df = _latest_wins(spark, old, keys)
+    else:
+        df = spark.read.parquet(*[d for _, d in old])
     if fold is not None:
         df = fold(df)
-    # write the compacted snapshot WITHOUT registering it: a reader during
+    # stage the compacted snapshot WITHOUT registering it: a reader during
     # this window still unions exactly the old live set
-    snap_name = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-    new_snap = os.path.join(path, snap_name)
-    n_rows, _ = _observed_write(df, new_snap, [])
+    staged = _stage(path, df)
     dead: list[str] = []
+    placed: list[str] = []
 
     def swap(snaps, meta):
         # CAS-style commit: keep snapshots appended while we were rewriting
         # (_commit keeps their recorded counts and stats)
-        late = [d for d in snaps if d not in live and d != snap_name]
-        meta.setdefault("record_count", {})[snap_name] = n_rows
+        late = [s for s in snaps if s not in live]
+        # freeze the dead list WHILE holding the lock, before the compacted
+        # snapshot is renamed into place: an appender blocked on the lock
+        # right now will rename+commit its snapshot the moment we release —
+        # its dir is still dot-prefixed (invisible to the listing) at this
+        # instant, so it can never land in `dead`. Deleting a post-release
+        # listing instead would race exactly that commit and rmtree a
+        # manifest-referenced directory.
+        dead.extend(d for d in _list_snapshot_dirs(path) if d not in late)
         meta["compacted"] = {"keys": keys}
-        # freeze the dead list WHILE holding the lock: an appender blocked
-        # on the lock right now will rename+commit its snapshot the moment
-        # we release — its dir is still dot-prefixed (invisible to the
-        # listing) at this instant, so it can never land in `dead`.
-        # Deleting a post-release listing instead would race exactly that
-        # commit and rmtree a manifest-referenced directory.
-        dead.extend(
-            d for d in _list_snapshot_dirs(path) if d != snap_name and d not in late
-        )
-        return [snap_name] + late
+        placed.append(_place(path, staged, meta))
+        return placed + late
 
     _commit(path, swap)
     # everything frozen above is dead: the old live dirs plus any orphans a
@@ -691,8 +810,8 @@ def compact_table(
     for d in dead:
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
     # dotted in-flight dirs belong to LIVE concurrent appenders — GC only
-    # stale ones (a crashed writer's abandoned data; 1 h is far beyond any
-    # single snapshot write)
+    # stale ones (a crashed or failed stage's abandoned data; 1 h is far
+    # beyond any single snapshot write)
     for d in os.listdir(path):
         dp = os.path.join(path, d)
         if d.startswith(".inflight-") and os.path.isdir(dp):
@@ -700,7 +819,7 @@ def compact_table(
                 shutil.rmtree(dp, ignore_errors=True)
     return {
         "files_before": files_before,
-        "files_after": len(_parquet_files(new_snap)),
+        "files_after": len(_parquet_files(os.path.join(path, placed[0]))),
         "snapshots_before": len(old),
         "legacy_files_adopted": legacy_files,
     }
@@ -716,8 +835,10 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
     Returns ``{table: snapshots dropped}`` for tables that dropped any."""
     mpath = table_path(root, marker)
     m = _read_manifest(mpath)
-    if lo is None or (m is None and os.path.isdir(mpath)):
-        return {}  # nothing pending, or a manifest-less marker: keep all
+    if lo is None or (m is None and os.path.isdir(mpath) and _live_dirs(mpath)):
+        # nothing pending, or a manifest-less marker with data: keep all (a
+        # marker dir holding only a failed stage's in-flight dir has none)
+        return {}
     cutoff = _snap_millis(m["snapshots"][-1]) if m and m["snapshots"] else -1
     if cutoff is None:
         return {}

@@ -136,26 +136,28 @@ def run(spark, args: argparse.Namespace) -> dict:
 
     labels = labels.persist()
     decisions = labels.join(new_sigs.select("id"), "id", "left_semi")
-    # materialize before state mutation; the run's counts are observed on
-    # the decisions write
+    # commit: the decisions output and both state snapshots are written
+    # together, then clusters is published and signatures (the marker)
+    # LAST. clusters records id stats, so a crashed attempt's snapshot
+    # rolls back on the rerun; it gets the label delta, which always holds
+    # the slice's ids. The run's counts are observed on the decisions write
     seen = Observation()
-    tables.write_table(
-        decisions.observe(
-            seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
-        ),
-        args.out,
-        "decisions",
+    tables.append_snapshots(
+        spark,
+        args.state,
+        [
+            ("clusters", labels.select("id", "cluster_id"), ["id"]),
+            ("signatures", new_sigs, ["id"]),
+        ],
+        writes=[lambda: tables.write_table(
+            decisions.observe(
+                seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
+            ),
+            args.out,
+            "decisions",
+        )],
     )
     n_new, n_kept = seen.get["n"], seen.get["kept"]
-
-    # commit: signatures (the marker) LAST; clusters records id stats, so a
-    # crashed attempt's snapshot rolls back on the rerun. clusters gets the
-    # label delta, which always holds the slice's ids
-    tables.append_snapshot(
-        labels.select("id", "cluster_id"), args.state, "clusters",
-        stats_cols=["id"],
-    )
-    tables.append_snapshot(new_sigs, args.state, "signatures", stats_cols=["id"])
     n_corpus = tables.row_count(args.state, "signatures")
     labels.unpersist()
     new_sigs.unpersist()

@@ -126,13 +126,6 @@ def run(spark, args: argparse.Namespace) -> dict:
     )
 
     pairs = pairs.persist()
-    # materialize before state mutation; the run's counts are observed on
-    # the pairs and keep writes
-    seen_pairs, seen_keep = Observation(), Observation()
-    tables.write_table(
-        pairs.observe(seen_pairs, F.count("*").alias("n")), args.out, "pairs"
-    )
-
     # keep decision for THIS batch: dup iff the pair links it to an older id
     # (prior vector, or smaller-id new vector). id_a < id_b by construction,
     # so the dup side of every pair is id_b when id_b is in the batch.
@@ -140,17 +133,28 @@ def run(spark, args: argparse.Namespace) -> dict:
     keep = batch.select("vec_id").join(
         dup_ids.withColumn("is_dup", F.lit(True)), "vec_id", "left"
     ).select("vec_id", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
-    tables.write_table(
-        keep.observe(seen_keep, F.count_if("is_dup").alias("n")), args.out, "keep"
+
+    # commit: the pairs and keep outputs and both state snapshots are
+    # written together, then sigs is published, the vecs marker LAST. The
+    # run's counts are observed on the pairs and keep writes
+    seen_pairs, seen_keep = Observation(), Observation()
+    tables.append_snapshots(
+        spark,
+        args.state,
+        [
+            ("sigs", sigs, ["id"]),
+            ("vecs", batch.select(F.col("vec_id").alias("id")), ["id"]),
+        ],
+        writes=[
+            lambda: tables.write_table(
+                pairs.observe(seen_pairs, F.count("*").alias("n")), args.out, "pairs"
+            ),
+            lambda: tables.write_table(
+                keep.observe(seen_keep, F.count_if("is_dup").alias("n")), args.out, "keep"
+            ),
+        ],
     )
     n_pairs, n_dups = seen_pairs.get["n"], seen_keep.get["n"]
-
-    # commit: sigs FIRST, vecs marker LAST
-    tables.append_snapshot(sigs, args.state, "sigs", stats_cols=["id"])
-    tables.append_snapshot(
-        batch.select(F.col("vec_id").alias("id")), args.state, "vecs",
-        stats_cols=["id"],
-    )
     n_corpus = tables.row_count(args.state, "vecs")
     pairs.unpersist()
     release_caches()

@@ -151,28 +151,30 @@ def run(spark, args: argparse.Namespace) -> dict:
         )
     decisions = bloom_gated_keep(new_h, prior_h, m_bits, k, bloom_words=words)
 
-    # materialize before state mutation; the run's counts are observed on
-    # the decisions write
-    seen = Observation()
-    tables.write_table(
-        decisions.observe(
-            seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
-        ),
-        args.out,
-        "decisions",
-    )
-    n_new, n_kept = seen.get["n"], seen.get["kept"]
-
-    # state commits: params first (idempotent — same content every run),
-    # then bloom, hashes LAST (the resume marker)
+    # state commits: params first (idempotent — same content every run);
+    # then the decisions output and both state snapshots are written
+    # together, and bloom is published, hashes LAST (the resume marker).
+    # The run's counts are observed on the decisions write
     if persisted is None:
         os.makedirs(args.state, exist_ok=True)
         tmp = params_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"m_bits": m_bits, "k": k}, f)
         os.replace(tmp, params_path)
-    tables.append_snapshot(bloom_build(new_h, m_bits, k), args.state, "bloom")
-    tables.append_snapshot(new_h, args.state, "hashes", stats_cols=["id"])
+    seen = Observation()
+    tables.append_snapshots(
+        spark,
+        args.state,
+        [("bloom", bloom_build(new_h, m_bits, k)), ("hashes", new_h, ["id"])],
+        writes=[lambda: tables.write_table(
+            decisions.observe(
+                seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
+            ),
+            args.out,
+            "decisions",
+        )],
+    )
+    n_new, n_kept = seen.get["n"], seen.get["kept"]
     n_corpus = tables.row_count(args.state, "hashes")
     new_h.unpersist()
 

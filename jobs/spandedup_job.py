@@ -113,30 +113,30 @@ def run(spark, args: argparse.Namespace) -> dict:
     fresh = owners.join(prior.select("seg"), "seg", "left_anti")
 
     cleaned = cleaned.persist()
-    # materialize before state mutation; the run's counts are observed on
-    # the cleaned write
+    # commit: the cleaned output and both state snapshots are written
+    # together, then segments is published, the docs marker LAST. The
+    # run's counts are observed on the cleaned write; segments_added is
+    # the record_count of the segments snapshot
     seen = Observation()
-    tables.write_table(
-        cleaned.observe(
-            seen, F.count("*").alias("n"), F.sum("n_removed").alias("removed")
-        ),
-        args.out,
-        "cleaned",
+    seg_snap, _ = tables.append_snapshots(
+        spark,
+        args.state,
+        [
+            ("segments", fresh, ["owner_id"]),
+            ("docs", cleaned.select(F.col("doc_id").alias("id")), ["id"]),
+        ],
+        writes=[lambda: tables.write_table(
+            cleaned.observe(
+                seen, F.count("*").alias("n"), F.sum("n_removed").alias("removed")
+            ),
+            args.out,
+            "cleaned",
+        )],
     )
     n_new, n_removed = seen.get["n"], int(seen.get["removed"] or 0)
-
-    # commit: segments FIRST, docs marker LAST; segments_added is the
-    # record_count of the segments snapshot
-    seg_snap = os.path.basename(tables.append_snapshot(
-        fresh, args.state, "segments", stats_cols=["owner_id"]
-    ))
     n_added = next(
         s["record_count"] for s in tables.list_snapshots(args.state, "segments")
-        if s["name"] == seg_snap
-    )
-    tables.append_snapshot(
-        cleaned.select(F.col("doc_id").alias("id")), args.state, "docs",
-        stats_cols=["id"],
+        if s["name"] == os.path.basename(seg_snap)
     )
     n_corpus = tables.row_count(args.state, "docs")
     cleaned.unpersist()

@@ -43,29 +43,55 @@ def crash_dfs(spark, crash_corpus):
 
 @pytest.fixture
 def crash_appends(monkeypatch):
-    """crash_appends(k, commit) is a context in which the k-th
-    tables.append_snapshot call raises "injected crash": after its snapshot
-    commits when ``commit``, before it writes anything otherwise."""
+    """crash_appends(k, commit) is a context in which the k-th snapshot
+    publish (tables._publish, the manifest commit that makes a staged
+    snapshot live) raises "injected crash": after it commits when
+    ``commit``, before it otherwise. The context yields the published
+    table names, the crashed one last."""
     from chapterbridge_ocr_worker_spark.sources import tables
 
     @contextlib.contextmanager
     def crash(k: int, commit: bool):
-        real = tables.append_snapshot
+        real = tables._publish
         calls = []
 
-        def append(df, root, name, *a, **kw):
-            calls.append(name)
+        def publish(path, staged):
+            calls.append(os.path.basename(path))
             if len(calls) != k:
-                return real(df, root, name, *a, **kw)
+                return real(path, staged)
             if commit:
-                real(df, root, name, *a, **kw)
-            raise RuntimeError(f"injected crash at append {k} ({name})")
+                real(path, staged)
+            raise RuntimeError(f"injected crash at publish {k} ({calls[-1]})")
 
         with monkeypatch.context() as m:
-            m.setattr(tables, "append_snapshot", append)
+            m.setattr(tables, "_publish", publish)
             yield calls
 
     return crash
+
+
+@pytest.fixture
+def fail_stage(monkeypatch):
+    """fail_stage(table) is a context in which the stage write of every
+    snapshot of ``table`` raises "injected stage failure" after its rows
+    are written into the in-flight dir."""
+    from chapterbridge_ocr_worker_spark.sources import tables
+
+    @contextlib.contextmanager
+    def fail(table: str):
+        real = tables._observed_write
+
+        def observed_write(df, path, *a, **kw):
+            out = real(df, path, *a, **kw)
+            if os.path.basename(os.path.dirname(path)) == table:
+                raise RuntimeError("injected stage failure")
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(tables, "_observed_write", observed_write)
+            yield
+
+    return fail
 
 
 def _table_state(spark, wh) -> dict:

@@ -270,3 +270,31 @@ def test_lsh_bucket_kernel_matches_jvm_signature(spark):
     }
     ker = {r["id"]: r["bucket"] for r in vector_signatures(emb, bits=10).collect()}
     assert jvm == ker and len(jvm) == 500
+
+
+def test_spread_starts_no_spark_job(spark):
+    """_spread decides the parallelism floor from the plan: on an adaptive
+    plan (an anti-join and a groupBy, like a weekly job's pending slice) it
+    starts no Spark job, where asking for the partition count would run the
+    upstream stages. A scan with fewer partitions than the parallelism is
+    spread; one with enough is returned as is."""
+    from chapterbridge_ocr_worker_spark.operators.fastpath import _spread
+
+    sc = spark.sparkContext
+    p = sc.defaultParallelism
+    pending = (
+        spark.range(200).join(spark.range(50), "id", "left_anti")
+        .groupBy((F.col("id") % 7).alias("k")).count()
+    )
+    narrow, wide = spark.range(0, 100, numPartitions=1), spark.range(0, 100, numPartitions=p)
+    sc.setJobGroup("spread-probe", "_spread")
+    try:
+        spread = [_spread(df) for df in (pending, narrow, wide)]
+        jobs = list(sc.statusTracker().getJobIdsForGroup("spread-probe"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert jobs == []
+    assert spread[2] is wide
+    assert spread[0].rdd.getNumPartitions() == spread[1].rdd.getNumPartitions() == p
+    assert sorted(spread[0].collect()) == sorted(pending.collect())

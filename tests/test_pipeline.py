@@ -176,7 +176,7 @@ def test_force_reprocesses_done_docs(spark, tmp_path):
 def test_crash_after_each_append_then_rerun_is_exact(
     spark, crash_dfs, clean_state, table_state, crash_appends, tmp_path, k
 ):
-    """A crash right after write_run's k-th table append, then a rerun
+    """A crash right after write_run's k-th table publish, then a rerun
     without the fault, leaves the tables a crash-free run leaves: lineage
     exactly-once, latest-wins ocr_output == golden, latest-wins ocr_json ==
     the crash-free rows, latest failures == the golden error set, and
@@ -184,6 +184,23 @@ def test_crash_after_each_append_then_rerun_is_exact(
     wh = str(tmp_path / "wh")
     with crash_appends(k, commit=True), pytest.raises(RuntimeError, match="injected crash"):
         write_run(spark, *crash_dfs, wh)
+    write_run(spark, *crash_dfs, wh)
+    assert table_state(wh) == clean_state
+
+
+@pytest.mark.parametrize("table", ["ocr_output", "failures", "checkpoint", "ocr_json", "lineage"])
+def test_failed_stage_publishes_nothing_then_rerun_is_exact(
+    spark, crash_dfs, clean_state, table_state, fail_stage, tmp_path, table
+):
+    """One table's write fails after its rows are written: write_run raises,
+    no table has a snapshot (every staged write stays in an invisible
+    in-flight dir), and a rerun leaves the tables a crash-free run
+    leaves."""
+    wh = str(tmp_path / "wh")
+    with fail_stage(table), pytest.raises(RuntimeError, match="injected stage failure"):
+        write_run(spark, *crash_dfs, wh)
+    for name in ("ocr_output", "failures", "checkpoint", "ocr_json", "lineage"):
+        assert tables.list_snapshots(wh, name) == [], name
     write_run(spark, *crash_dfs, wh)
     assert table_state(wh) == clean_state
 

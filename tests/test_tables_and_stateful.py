@@ -2,6 +2,8 @@
 compaction, rollback, row counts, pruned, latest-wins and z-ordered reads)
 and the stateful streaming operator."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -617,3 +619,102 @@ def test_box_statless_snapshot_is_conservative(spark, tmp_path):
     assert 9999 in {r["id"] for r in got}
     want = df.filter((F.col("x") == 10) & (F.col("y") == 40)).count() + 1
     assert len(got) == want
+
+
+def test_snapshot_names_follow_publish_order_not_stage_order(spark, tmp_path, monkeypatch):
+    """A two-table commit whose first table (state) starts writing only
+    after the second (the marker) finished its stage: the state snapshot is
+    still named with a commit millisecond at or before the marker's, so a
+    slice that breaks crawl order rolls nothing back. A name taken when a
+    stage starts writing would put the marker first and drop committed
+    state. The caller's job group reaches the stage threads' Spark jobs."""
+    import threading
+    import time as _time
+
+    root = str(tmp_path)
+    marker_staged = threading.Event()
+    real = tables._observed_write
+
+    def observed_write(df, path, *a, **kw):
+        out = real(df, path, *a, **kw)
+        if os.path.basename(os.path.dirname(path)) == "marker":
+            marker_staged.set()
+        return out
+
+    def late_state():
+        # runs in the state table's stage thread, before its write starts
+        assert marker_staged.wait(60)
+        _time.sleep(0.01)
+        return spark.createDataFrame([(20,), (21,)], "id: long")
+
+    monkeypatch.setattr(tables, "_observed_write", observed_write)
+    sc = spark.sparkContext
+    sc.setJobGroup("two-phase-commit", "append_snapshots")
+    try:
+        tables.append_snapshots(spark, root, [
+            ("state", late_state, ["id"]),
+            ("marker", spark.createDataFrame([(20,), (21,)], "id: long"), ["id"]),
+        ])
+        jobs = sc.statusTracker().getJobIdsForGroup("two-phase-commit")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(jobs) >= 2  # at least one write job per table
+    state, marker = (tables.list_snapshots(root, t)[-1]["name"] for t in ("state", "marker"))
+    assert tables._snap_millis(state) <= tables._snap_millis(marker)
+    assert tables.rollback_uncommitted(root, "marker", {"state": "id"}, 5) == {}
+    assert sorted(r["id"] for r in tables.read_table(spark, root, "state").collect()) == [20, 21]
+
+
+def test_failed_stage_publishes_no_table(spark, tmp_path, fail_stage):
+    """One table's stage fails after its rows are written: append_snapshots
+    raises it, no table of the commit gains a snapshot, and the written
+    rows sit in an in-flight dir no reader sees."""
+    root = str(tmp_path)
+    tables.append_snapshot(spark.createDataFrame([(1,)], "id: long"), root, "a")
+    with fail_stage("b"), pytest.raises(RuntimeError, match="injected stage failure"):
+        tables.append_snapshots(spark, root, [
+            ("a", spark.createDataFrame([(2,)], "id: long")),
+            ("b", spark.createDataFrame([(3,)], "id: long")),
+        ])
+    assert [r["id"] for r in tables.read_table(spark, root, "a").collect()] == [1]
+    assert tables.list_snapshots(root, "b") == []
+    assert tables.read_table(spark, root, "b") is None
+    assert tables.row_count(root, "b") == 0
+    assert any(d.startswith(".inflight-") for d in os.listdir(os.path.join(root, "b")))
+
+
+@pytest.mark.parametrize("keys", [None, ["id"]])
+def test_compaction_keeps_an_append_committed_during_its_read(spark, tmp_path, monkeypatch, keys):
+    """An append that commits once compaction has resolved its snapshot
+    set, as the rewrite starts reading, is kept as a late arrival and not
+    also rewritten: a 2-row table plus a 1-row append read back as
+    [1, 2, 3], not [1, 2, 3, 3]."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    root = str(tmp_path)
+
+    def one(i):
+        return spark.createDataFrame([(i,)], "id: long")
+
+    tables.append_snapshot(one(1), root, "t")
+    tables.append_snapshot(one(2), root, "t")
+    appended = []
+
+    def append_first(real):
+        def read(*a, **kw):
+            if not appended:
+                appended.append(tables.append_snapshot(one(3), root, "t"))
+            return real(*a, **kw)
+
+        return read
+
+    with monkeypatch.context() as m:
+        for owner, name in (
+            (tables, "read_table"), (tables, "read_table_latest"), (DataFrameReader, "parquet")
+        ):
+            m.setattr(owner, name, append_first(getattr(owner, name)))
+        tables.compact_table(spark, root, "t", keys=keys)
+    assert appended
+    assert sorted(r["id"] for r in tables.read_table(spark, root, "t").collect()) == [1, 2, 3]
+    assert tables.row_count(root, "t") == 3

@@ -229,6 +229,28 @@ def test_crash_after_state_append_then_rerun_is_exact(
         w.spec["check"](spark, w, state, out)
 
 
+def test_failed_stage_in_weekly_run_publishes_nothing(spark, weekly, fail_stage, tmp_path):
+    """dedup_job's weekly run fails while writing its clusters snapshot:
+    no state table gains a snapshot, so the rerun has nothing to roll back
+    and equals the crash-free run."""
+    w = weekly("dedup_job")
+    state = w.copy_state0(str(tmp_path / "state"))
+    before = {t: tables.list_snapshots(state, t) for t in w.spec["tables"]}
+    out = str(tmp_path / "out1")
+    with fail_stage("clusters"), pytest.raises(RuntimeError, match="injected stage failure"):
+        w.run(1, state, out)
+    spark.catalog.clearCache()
+    assert {t: tables.list_snapshots(state, t) for t in w.spec["tables"]} == before
+
+    stats, outputs, rows = w.run(1, state, out)
+    clean_stats, clean_outputs, clean_rows = w.clean[1]
+    assert rows == clean_rows
+    assert outputs == clean_outputs
+    assert stats == clean_stats
+    assert stats["rolled_back"] == {}
+    _check_dedup(spark, w, state, out)
+
+
 def test_weekly_dedup_appends_only_the_labels_it_recomputed(spark, weekly):
     """The weekly run's clusters snapshot is the label delta: the slice's
     docs plus the one prior doc (3) a new doc joined, not a relabeling of
