@@ -12,9 +12,15 @@ enqueue.py:73-87), and records failures without killing the daemon
 - dead-letter = filter rows with non-null ``error`` into the failures table.
 - lineage    = one row per completed doc with sha256 + byte size of its
   serialized output (the `assets` insert, supabase_client.py:180-203).
+- weekly_run = the weekly jobs' version: resume on a marker table, roll
+  back a crashed attempt, one commit with the marker last, compaction.
 """
 
 from __future__ import annotations
+
+import collections
+import functools
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,15 +41,121 @@ def pending_documents(docs: DataFrame, lineage: DataFrame | None) -> DataFrame:
     return docs.join(done, "doc_id", "left_anti")
 
 
-def pending_slice(
+class Commit(NamedTuple):
+    """What a weekly job's judge step hands weekly_run to commit."""
+
+    appends: list  # (table, df[, stats_cols]): state snapshots, in publish order
+    marker: DataFrame  # the marker snapshot: the slice's ids as ``id``
+    outputs: dict  # {name: df}: the run's ``--out`` files
+
+
+class WeeklyRun(NamedTuple):
+    """The protocol's part of a weekly job's stats line."""
+
+    mode: str  # "bootstrap", "incremental" or "resume-noop"
+    skipped: int  # slice rows an earlier run committed
+    counts: dict  # the judge's counts; every name reads 0 on a resume-noop
+    corpus: int  # marker rows after the run
+    compacted: dict  # {table: snapshots_before} of the tables compacted
+    rolled_back: dict  # {table: snapshots dropped} of a crashed attempt
+
+
+def weekly_run(
+    spark,
+    state: str,
+    out: str,
+    slice_df: DataFrame,
+    key: str,
+    marker: str,
+    rollback: dict,
+    judge,
+    compact: dict,
+    compact_after: int,
+) -> WeeklyRun:
+    """One run of a weekly job (jobs/{dedup,exactdedup,spandedup,
+    embdedup}_job.py) over ``slice_df`` against its ``state`` directory —
+    the reference's skip-done-work, upload, insert-asset, mark-done
+    sequence (main.py:107-120, 191-216) as one protocol:
+
+    1. resume: anti-join the slice on ``key`` against the ``id`` column of
+       the ``marker`` table, the table published LAST, so a committed id
+       is never judged twice. A fully committed slice is a resume-noop:
+       nothing is written and the stats carry the corpus size.
+    2. rollback: tables.rollback_uncommitted drops from the manifest every
+       snapshot a crashed attempt at this slice published to the
+       ``rollback`` tables (``{table: id column}``), so the judge reads
+       prior state plainly and every state table holds each row once.
+       Tables without an id column must absorb a redo on their own.
+    3. judge: ``judge(pending, prior, count)`` gets the pending rows, the
+       marker table as committed (None on the bootstrap run, which judges
+       against an empty prior) and ``count(df, name=aggregate, ...)``,
+       which returns ``df`` with those aggregates observed in its write
+       (every counted frame must be written by the commit). It returns a
+       Commit. Anything it persists goes through cache.persist_tracked.
+    4. commit: ONE tables.append_snapshots call stages the ``--out`` files,
+       the state snapshots and the marker snapshot (``["id"]`` stats)
+       together and publishes the state tables in order, the marker last.
+    5. counts, corpus size from the marker's manifest (tables.row_count),
+       cache release, then tables.compact_tables compacts each ``compact``
+       table (``{table: keys, fold or None}``) holding more than
+       ``compact_after`` live snapshots.
+
+    The table layer is called through its module attribute, so wrappers
+    installed on it (tracing, fault injection) see every call."""
+    from pyspark.sql import Observation
+
+    from ..sources import tables
+    from .cache import release_caches
+
+    prior = tables.read_table(spark, state, marker)
+    pending, sl = _pending_slice(slice_df, prior, key)
+    counts = collections.defaultdict(int)
+    if prior is not None and sl["n_skipped"] == sl["n_in"]:
+        corpus = tables.row_count(state, marker)
+        return WeeklyRun("resume-noop", sl["n_skipped"], counts, corpus, {}, {})
+    rolled_back = tables.rollback_uncommitted(state, marker, rollback, sl["lo"])
+
+    observed = []
+
+    def count(df: DataFrame, **aggs) -> DataFrame:
+        observed.append(Observation())
+        return df.observe(observed[-1], *[c.alias(n) for n, c in aggs.items()])
+
+    try:
+        commit = judge(pending, prior, count)
+        tables.append_snapshots(
+            spark,
+            state,
+            [*commit.appends, (marker, commit.marker, ["id"])],
+            writes=[
+                functools.partial(tables.write_table, df, out, name)
+                for name, df in commit.outputs.items()
+            ],
+        )
+    finally:
+        release_caches()
+    for obs in observed:
+        counts.update(obs.get)
+    corpus = tables.row_count(state, marker)
+    compacted = tables.compact_tables(spark, state, compact, compact_after)
+    return WeeklyRun(
+        "bootstrap" if prior is None else "incremental",
+        sl["n_skipped"],
+        counts,
+        corpus,
+        compacted,
+        rolled_back,
+    )
+
+
+def _pending_slice(
     slice_df: DataFrame, marker: DataFrame | None, key: str
 ) -> tuple[DataFrame, dict]:
-    """The weekly jobs' resume step (protocol in sources/tables.py): the
-    rows of ``slice_df`` whose ``key`` is not an ``id`` of the ``marker``
-    table, plus ONE aggregate over the slice joined to the marker ids:
-    ``{n_in, n_skipped, lo, hi}`` with lo/hi the min/max pending key
-    (None when nothing is pending). Marker ids are unique: each is appended
-    once, by the run that commits it."""
+    """weekly_run's resume step: the rows of ``slice_df`` whose ``key`` is
+    not an ``id`` of the ``marker`` table, plus ONE aggregate over the
+    slice joined to the marker ids: ``{n_in, n_skipped, lo, hi}`` with
+    lo/hi the min/max pending key (None when nothing is pending). Marker
+    ids are unique: each is appended once, by the run that commits it."""
     if marker is None:
         pending, flagged = slice_df, slice_df.withColumn("_done", F.lit(False))
     else:

@@ -524,7 +524,10 @@ def ivf_build_index(
     write_table(cent_df, index_path, "centroids")
     cents = [[float(x) for x in r["cvec"]] for r in cent_rows]
     append_snapshot(
-        _assign_cells(corpus, cents, id_col, vec_col), index_path, "assignments"
+        _assign_cells(corpus, cents, id_col, vec_col),
+        index_path,
+        "assignments",
+        stats_cols=["neighbor_id"],
     )
 
 
@@ -544,14 +547,25 @@ def ivf_append_index(
 ) -> None:
     """Grow the index with a new embedding batch: assign to the EXISTING
     centroids, snapshot-append the assignments (crash-safe; readers union
-    live snapshots). No prior row is touched or recomputed."""
-    from ..sources.tables import append_snapshot
+    live snapshots). No prior row is touched or recomputed. Only the ids
+    the index lacks are appended, so a redo after a crash adds each id
+    once; the check reads only the assignment snapshots whose recorded
+    neighbor_id range reaches the batch's."""
+    from ..sources.tables import append_snapshot, read_table_pruned
 
-    cents, _ = _load_centroids(new_vectors.sparkSession, index_path)
+    spark = new_vectors.sparkSession
+    cents, _ = _load_centroids(spark, index_path)
+    lo, hi = new_vectors.agg(F.min(id_col), F.max(id_col)).first()
+    held = read_table_pruned(spark, index_path, "assignments", "neighbor_id", lo, hi)
+    if held is not None:
+        new_vectors = new_vectors.join(
+            held.select(F.col("neighbor_id").alias(id_col)), id_col, "left_anti"
+        )
     append_snapshot(
         _assign_cells(new_vectors, cents, id_col, vec_col),
         index_path,
         "assignments",
+        stats_cols=["neighbor_id"],
     )
 
 

@@ -116,8 +116,3 @@ FAILURES = T.StructType(
 )
 
 ERROR_TRUNCATE = 10_000  # reference supabase_client.py:103
-
-
-def spark_schema_ddl(schema: T.StructType) -> str:
-    """DDL string form (useful for readStream which needs explicit schema)."""
-    return schema.simpleString()[7:-1]  # strip 'struct<' ... '>'

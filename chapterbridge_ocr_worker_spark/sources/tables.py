@@ -36,33 +36,8 @@ Scale notes baked in:
   in the manifest as ``record_count`` (Iceberg's per-file record_count), so
   row_count answers a table's size from metadata.
 
-Weekly-job protocol (jobs/dedup_job.py, exactdedup_job.py, spandedup_job.py,
-embdedup_job.py). Each job owns a state directory of tables and runs:
-
-1. resume: anti-join the slice against the job's MARKER table, the table it
-   appends LAST (operators.resume.pending_slice). A fully committed slice
-   is a resume-noop; otherwise the pending ids span [lo, hi].
-2. rollback (rollback_uncommitted): drop from the manifest every snapshot a
-   crashed attempt at this slice left in the other state tables, so prior
-   state reads are plain reads and every state table holds each row once.
-3. judge the pending rows, then commit the state tables through
-   append_snapshots with the marker last (the job's ``--out`` files are
-   staged with them, so they exist before any state publish), then
-   compaction (compact_tables).
-
-Rollback drops a snapshot only when both hold: (a) its recorded id-column
-stats reach the pending slice (max >= lo), and (b) it was committed after
-the marker's newest snapshot (by the commit millisecond in the snapshot
-names, taken at publish). When in doubt it keeps: snapshots without
-stats (compaction outputs, adopted legacy files), tables without a
-manifest and everything committed before the marker's newest snapshot stay.
-Rule (b) is what keeps a slice that breaks crawl order from dropping
-committed state, where (a) alone would match every committed snapshot.
-Caller contract: ids are unique across slices and crawl-ordered (every new
-id above every committed id); a slice that breaks it keeps all committed
-state but is judged against it as-is. Tables with no id column are exempt
-and must absorb a redo on their own — exactdedup's bloom words re-set bits
-that are already set, which the bit_or fold makes idempotent.
+The weekly jobs' resume / rollback / commit / compaction protocol that
+runs on these calls is operators.resume.weekly_run.
 """
 
 from __future__ import annotations
@@ -826,13 +801,28 @@ def compact_table(
 
 
 def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
-    """Iceberg rollback_to_snapshot for a crashed weekly-job attempt (the
-    rule is in the module docstring): for each ``{table: id column}``, drop
+    """Iceberg rollback_to_snapshot for a crashed weekly-job attempt
+    (operators.resume.weekly_run): for each ``{table: id column}``, drop
     from the manifest the snapshots whose recorded ``max(id column) >= lo``
     and that were committed after ``marker``'s newest snapshot. Metadata
     only: the dropped directories stay until the next compaction removes
     them; their manifest entries (counts, stats) go with the commit.
-    Returns ``{table: snapshots dropped}`` for tables that dropped any."""
+    Returns ``{table: snapshots dropped}`` for tables that dropped any.
+
+    A snapshot drops only when both hold: (a) its recorded id-column stats
+    reach the pending slice (max >= lo), and (b) it was committed after the
+    marker's newest snapshot (by the commit millisecond in the snapshot
+    names, taken at publish). When in doubt it keeps: snapshots without
+    stats (compaction outputs, adopted legacy files), tables without a
+    manifest and everything committed before the marker's newest snapshot
+    stay. Rule (b) is what keeps a slice that breaks crawl order from
+    dropping committed state, where (a) alone would match every committed
+    snapshot. Caller contract: ids are unique across slices and
+    crawl-ordered (every new id above every committed id); a slice that
+    breaks it keeps all committed state but is judged against it as-is.
+    Tables with no id column are exempt and must absorb a redo on their
+    own — exactdedup's bloom words re-set bits that are already set, which
+    the bit_or fold makes idempotent."""
     mpath = table_path(root, marker)
     m = _read_manifest(mpath)
     if lo is None or (m is None and os.path.isdir(mpath) and _live_dirs(mpath)):

@@ -11,7 +11,7 @@ without recomputing a single prior signature or pair.
         [--threshold 0.6] [--cores 8]
 
 State directory (owned by this job, carried run-to-run; the resume,
-rollback and compaction protocol is in sources/tables.py):
+rollback, commit and compaction protocol is operators.resume.weekly_run):
     signatures/     MinHash signature table (id, toks, sig, bands) of every
                     doc ever processed, appended per run and never
                     rewritten. Appended LAST: it is the resume marker.
@@ -22,6 +22,8 @@ rollback and compaction protocol is in sources/tables.py):
                     labels too (no stale labels between runs). Its
                     snapshots record id stats, so a crashed attempt's
                     snapshot rolls back before the redo reads it.
+    _checkpoints/   the connected-components rounds' reliable
+                    checkpoints, removed when the run ends.
     The band buckets and their caps are derived from the signatures'
     bands column each run. buckets/ and bucket_counts/ dirs left by older
     layouts of this state dir are ignored.
@@ -56,7 +58,6 @@ import sys
 # allow `python jobs/dedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -77,106 +78,75 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def run(spark, args: argparse.Namespace) -> dict:
     """One weekly run over ``args.documents``; returns the stats line."""
-    # reliable checkpoints for the connected-components rounds
-    spark.sparkContext.setCheckpointDir(os.path.join(args.state, "_checkpoints"))
-
-    from chapterbridge_ocr_worker_spark.operators.cache import release_caches
+    from chapterbridge_ocr_worker_spark.operators.cache import persist_tracked
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         minhash_signatures,
     )
-    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
+    from chapterbridge_ocr_worker_spark.operators.resume import Commit, weekly_run
     from chapterbridge_ocr_worker_spark.sources import tables
 
-    # resume: docs whose ids are already in the signature table were
-    # committed by a previous run and must not be re-appended
-    prior_sigs = tables.read_table(spark, args.state, "signatures")
-    docs, sl = pending_slice(
-        spark.read.parquet(args.documents).select("doc_id", "text"),
-        prior_sigs,
-        "doc_id",
-    )
-    n_skipped = sl["n_skipped"]
-    if prior_sigs is not None and n_skipped == sl["n_in"]:
-        # full rerun of an already-committed slice: answer from state,
-        # mutate nothing (idempotent recovery path)
-        return {
-            "mode": "resume-noop",
-            "docs_in": 0,
-            "skipped_done": n_skipped,
-            "kept": 0,
-            "dropped_as_dups": 0,
-            "corpus_total": tables.row_count(args.state, "signatures"),
-            "compacted": {},
-            "rolled_back": {},
-        }
-    rolled_back = tables.rollback_uncommitted(
-        args.state, "signatures", {"clusters": "id"}, sl["lo"]
-    )
-
-    # the slice is hashed ONCE: these rows are judged, then appended
-    new_sigs = minhash_signatures(docs).persist()
     cc_stats: dict = {}
 
-    # the first run is an incremental run over an empty prior; later runs
-    # read the prior labels the last run appended
-    mode = "bootstrap" if prior_sigs is None else "incremental"
-    prior_clusters = None
-    if prior_sigs is not None:
-        prior_clusters = tables.read_table_latest(
-            spark, args.state, "clusters", keys=["id"]
+    def judge(docs, prior_sigs, count):
+        # the slice is hashed ONCE: these rows are judged, then appended
+        new_sigs = persist_tracked(minhash_signatures(docs))
+        # the first run is an incremental run over an empty prior; later runs
+        # read the prior labels the last run appended
+        prior_clusters = None
+        if prior_sigs is not None:
+            prior_clusters = tables.read_table_latest(
+                spark, args.state, "clusters", keys=["id"]
+            )
+        labels = persist_tracked(incremental_dedup(
+            new_sigs,
+            new_sigs.limit(0) if prior_sigs is None else prior_sigs,
+            prior_clusters,
+            threshold=args.threshold,
+            cc_stats=cc_stats,
+        ))
+        decisions = labels.join(new_sigs.select("id"), "id", "left_semi")
+        # clusters gets the label delta, which always holds the slice's ids
+        return Commit(
+            appends=[("clusters", labels.select("id", "cluster_id"), ["id"])],
+            marker=new_sigs,
+            outputs={"decisions": count(
+                decisions, n=F.count("*"), kept=F.count_if(F.col("keep") == 1)
+            )},
         )
-    labels = incremental_dedup(
-        new_sigs,
-        new_sigs.limit(0) if prior_sigs is None else prior_sigs,
-        prior_clusters,
-        threshold=args.threshold,
-        cc_stats=cc_stats,
-    )
 
-    labels = labels.persist()
-    decisions = labels.join(new_sigs.select("id"), "id", "left_semi")
-    # commit: the decisions output and both state snapshots are written
-    # together, then clusters is published and signatures (the marker)
-    # LAST. clusters records id stats, so a crashed attempt's snapshot
-    # rolls back on the rerun; it gets the label delta, which always holds
-    # the slice's ids. The run's counts are observed on the decisions write
-    seen = Observation()
-    tables.append_snapshots(
-        spark,
-        args.state,
-        [
-            ("clusters", labels.select("id", "cluster_id"), ["id"]),
-            ("signatures", new_sigs, ["id"]),
-        ],
-        writes=[lambda: tables.write_table(
-            decisions.observe(
-                seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
-            ),
+    # reliable checkpoints for the connected-components rounds. Spark makes
+    # a fresh <uuid>/ dir under this one per call and never deletes it
+    sc = spark.sparkContext
+    sc.setCheckpointDir(os.path.join(args.state, "_checkpoints"))
+    try:
+        r = weekly_run(
+            spark,
+            args.state,
             args.out,
-            "decisions",
-        )],
-    )
-    n_new, n_kept = seen.get["n"], seen.get["kept"]
-    n_corpus = tables.row_count(args.state, "signatures")
-    labels.unpersist()
-    new_sigs.unpersist()
-    release_caches()
-
-    # clusters compact latest-wins per id (superseded labels drop out);
-    # signatures hold each row once (rollback), so they compact by union
-    compacted = tables.compact_tables(
-        spark, args.state, {"signatures": None, "clusters": ["id"]}, COMPACT_AFTER
-    )
+            spark.read.parquet(args.documents).select("doc_id", "text"),
+            "doc_id",
+            marker="signatures",
+            rollback={"clusters": "id"},
+            judge=judge,
+            # clusters compact latest-wins per id (superseded labels drop
+            # out); signatures hold each row once, so they compact by union
+            compact={"signatures": None, "clusters": ["id"]},
+            compact_after=COMPACT_AFTER,
+        )
+    finally:
+        checkpoints = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
+        checkpoints.getFileSystem(sc._jsc.hadoopConfiguration()).delete(checkpoints, True)
+    n, kept = r.counts["n"], r.counts["kept"]
     return {
-        "mode": mode,
-        "docs_in": n_new,
-        "skipped_done": n_skipped,
-        "kept": n_kept,
-        "dropped_as_dups": n_new - n_kept,
-        "corpus_total": n_corpus,
-        "compacted": compacted,
-        "rolled_back": rolled_back,
+        "mode": r.mode,
+        "docs_in": n,
+        "skipped_done": r.skipped,
+        "kept": kept,
+        "dropped_as_dups": n - kept,
+        "corpus_total": r.corpus,
+        "compacted": r.compacted,
+        "rolled_back": r.rolled_back,
         # closure telemetry: a long-running operator watches rounds / pair
         # counts drift instead of discovering divergence by eye
         **cc_stats,

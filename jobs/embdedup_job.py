@@ -16,7 +16,7 @@ and appends the batch's signatures to the persistent state.
         [--ivf-index /data/ivf] [--rebuild-if-skewed]
 
 State directory (owned by this job, carried run-to-run; the resume,
-rollback and compaction protocol is in sources/tables.py):
+rollback, commit and compaction protocol is operators.resume.weekly_run):
     sigs/   (id, vec, bucket) — the materialized LSH signature of every
             vector the corpus has committed, appended per run with id
             stats, so a crashed attempt's snapshot rolls back.
@@ -28,13 +28,15 @@ Outputs under --out:
             dup when it pairs with any prior vector or with a smaller-id
             new vector (keep-oldest, matching the dedup family).
 
-IVF maintenance (--ivf-index): the batch is also appended to the
-materialized IVF index (assigned to EXISTING centroids, one snapshot
-append) and the index's health stats (operators.similarity.ivf_index_stats)
-are printed with the run stats — the drift signal a long-running pipeline
-must watch. With --rebuild-if-skewed, a rebuild_recommended verdict
-triggers ivf_rebuild_index inline (one corpus-sized pass, paid only when
-the skew stat says recall is at risk).
+IVF maintenance (--ivf-index): before the state commit, the batch is also
+appended to the materialized IVF index (assigned to EXISTING centroids,
+one snapshot append of the ids the index lacks, so a crashed attempt's
+redo appends each id once) and the index's health stats
+(operators.similarity.ivf_index_stats) are printed with the run stats —
+the drift signal a long-running pipeline must watch. With
+--rebuild-if-skewed, a rebuild_recommended verdict triggers
+ivf_rebuild_index inline (one corpus-sized pass, paid only when the skew
+stat says recall is at risk).
 
 Caller contract (same as the sibling jobs): vec_ids are unique across
 batches and arrival-ordered — every new id greater than all committed ids.
@@ -52,7 +54,6 @@ import sys
 # allow `python jobs/embdedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -80,8 +81,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def run(spark, args: argparse.Namespace) -> dict:
     """One weekly run over ``args.embeddings``; returns the stats line."""
-    from chapterbridge_ocr_worker_spark.operators.cache import release_caches
-    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
+    from chapterbridge_ocr_worker_spark.operators.cache import persist_tracked
+    from chapterbridge_ocr_worker_spark.operators.resume import Commit, weekly_run
     from chapterbridge_ocr_worker_spark.operators.similarity import (
         incremental_cosine_neardup,
         ivf_append_index,
@@ -91,96 +92,67 @@ def run(spark, args: argparse.Namespace) -> dict:
     )
     from chapterbridge_ocr_worker_spark.sources import tables
 
-    # resume on the committed-batch marker table
-    done = tables.read_table(spark, args.state, "vecs")
-    batch, sl = pending_slice(
-        spark.read.parquet(args.embeddings).select("vec_id", "embedding"),
-        done,
-        "vec_id",
-    )
-    n_skipped = sl["n_skipped"]
-    if done is not None and n_skipped == sl["n_in"]:
-        return {
-            "mode": "resume-noop",
-            "vectors_in": 0,
-            "skipped_done": n_skipped,
-            "pairs": 0,
-            "dups": 0,
-            "corpus_vectors": tables.row_count(args.state, "vecs"),
-            "rolled_back": {},
-            "compacted": {},
-            "ivf": None,
-        }
-    rolled_back = tables.rollback_uncommitted(
-        args.state, "vecs", {"sigs": "id"}, sl["lo"]
-    )
+    extra = {"ivf": None}
 
-    # the first run judges the batch against an empty signature table
-    sigs = vector_signatures(batch, bits=args.bits)
-    prior = tables.read_table(spark, args.state, "sigs")
-    mode = "bootstrap" if prior is None else "incremental"
-    if prior is None:
-        prior = sigs.limit(0)
-    pairs = incremental_cosine_neardup(
-        batch, prior, threshold=args.threshold, bits=args.bits
-    )
+    def judge(batch, _, count):
+        # the first run judges the batch against an empty signature table
+        sigs = vector_signatures(batch, bits=args.bits)
+        prior = tables.read_table(spark, args.state, "sigs")
+        if prior is None:
+            prior = sigs.limit(0)
+        pairs = persist_tracked(incremental_cosine_neardup(
+            batch, prior, threshold=args.threshold, bits=args.bits
+        ))
+        # keep decision for THIS batch: dup iff the pair links it to an older
+        # id (prior vector, or smaller-id new vector). id_a < id_b by
+        # construction, so the dup side of every pair is id_b when id_b is
+        # in the batch.
+        dup_ids = pairs.select(F.col("id_b").alias("vec_id")).distinct()
+        keep = batch.select("vec_id").join(
+            dup_ids.withColumn("is_dup", F.lit(True)), "vec_id", "left"
+        ).select("vec_id", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
 
-    pairs = pairs.persist()
-    # keep decision for THIS batch: dup iff the pair links it to an older id
-    # (prior vector, or smaller-id new vector). id_a < id_b by construction,
-    # so the dup side of every pair is id_b when id_b is in the batch.
-    dup_ids = pairs.select(F.col("id_b").alias("vec_id")).distinct()
-    keep = batch.select("vec_id").join(
-        dup_ids.withColumn("is_dup", F.lit(True)), "vec_id", "left"
-    ).select("vec_id", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
+        # the index grows before the commit, so a crash anywhere redoes it;
+        # ivf_append_index skips the ids an earlier attempt appended
+        if args.ivf_index:
+            ivf_append_index(batch, args.ivf_index)
+            ivf = ivf_index_stats(spark, args.ivf_index)
+            ivf["rebuilt"] = False
+            if ivf["rebuild_recommended"] and args.rebuild_if_skewed:
+                ivf = ivf_rebuild_index(spark, args.ivf_index)
+                ivf["rebuilt"] = True
+            extra["ivf"] = ivf
+        return Commit(
+            appends=[("sigs", sigs, ["id"])],
+            marker=batch.select(F.col("vec_id").alias("id")),
+            outputs={
+                "pairs": count(pairs, pairs=F.count("*")),
+                "keep": count(keep, n=F.count("*"), dups=F.count_if("is_dup")),
+            },
+        )
 
-    # commit: the pairs and keep outputs and both state snapshots are
-    # written together, then sigs is published, the vecs marker LAST. The
-    # run's counts are observed on the pairs and keep writes
-    seen_pairs, seen_keep = Observation(), Observation()
-    tables.append_snapshots(
+    r = weekly_run(
         spark,
         args.state,
-        [
-            ("sigs", sigs, ["id"]),
-            ("vecs", batch.select(F.col("vec_id").alias("id")), ["id"]),
-        ],
-        writes=[
-            lambda: tables.write_table(
-                pairs.observe(seen_pairs, F.count("*").alias("n")), args.out, "pairs"
-            ),
-            lambda: tables.write_table(
-                keep.observe(seen_keep, F.count_if("is_dup").alias("n")), args.out, "keep"
-            ),
-        ],
-    )
-    n_pairs, n_dups = seen_pairs.get["n"], seen_keep.get["n"]
-    n_corpus = tables.row_count(args.state, "vecs")
-    pairs.unpersist()
-    release_caches()
-
-    ivf = None
-    if args.ivf_index:
-        ivf_append_index(batch, args.ivf_index)
-        ivf = ivf_index_stats(spark, args.ivf_index)
-        ivf["rebuilt"] = False
-        if ivf["rebuild_recommended"] and args.rebuild_if_skewed:
-            ivf = ivf_rebuild_index(spark, args.ivf_index)
-            ivf["rebuilt"] = True
-
-    compacted = tables.compact_tables(
-        spark, args.state, {"sigs": None, "vecs": None}, COMPACT_AFTER
+        args.out,
+        spark.read.parquet(args.embeddings).select("vec_id", "embedding"),
+        "vec_id",
+        marker="vecs",
+        rollback={"sigs": "id"},
+        judge=judge,
+        compact={"sigs": None, "vecs": None},
+        compact_after=COMPACT_AFTER,
     )
     return {
-        "mode": mode,
-        "vectors_in": sl["n_in"] - n_skipped,
-        "skipped_done": n_skipped,
-        "pairs": n_pairs,
-        "dups": n_dups,
-        "corpus_vectors": n_corpus,
-        "rolled_back": rolled_back,
-        "compacted": compacted,
-        "ivf": ivf,
+        "mode": r.mode,
+        "vectors_in": r.counts["n"],
+        "skipped_done": r.skipped,
+        "pairs": r.counts["pairs"],
+        "dups": r.counts["dups"],
+        "corpus_vectors": r.corpus,
+        "rolled_back": r.rolled_back,
+        "compacted": r.compacted,
+        **extra,
     }
 
 

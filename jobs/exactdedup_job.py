@@ -12,7 +12,7 @@ the persistent state, never re-hashing a prior document.
         [--m-bits 262144] [--k 5] [--cores 8]
 
 State directory (owned by this job, carried run-to-run; the resume,
-rollback and compaction protocol is in sources/tables.py):
+rollback, commit and compaction protocol is operators.resume.weekly_run):
     hashes/   (id, h) — the 33-byte/doc exact-dedup state, appended LAST
               per run: it is the resume marker.
     bloom_params.json  the (m_bits, k) the bitmap was built with —
@@ -53,7 +53,6 @@ import sys
 # allow `python jobs/exactdedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -80,6 +79,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 def run(spark, args: argparse.Namespace) -> dict:
     """One weekly run over ``args.documents``; returns the stats line.
     Raises ParamsConflict before touching state on a conflicting override."""
+    from chapterbridge_ocr_worker_spark.operators.cache import persist_tracked
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         BLOOM_K,
         BLOOM_M_BITS,
@@ -87,7 +87,7 @@ def run(spark, args: argparse.Namespace) -> dict:
         bloom_gated_keep,
         exact_hashes,
     )
-    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
+    from chapterbridge_ocr_worker_spark.operators.resume import Commit, weekly_run
     from chapterbridge_ocr_worker_spark.sources import tables
 
     # BITMAP PARAMS ARE STATE: bit positions are functions of (m_bits, k),
@@ -114,92 +114,68 @@ def run(spark, args: argparse.Namespace) -> dict:
         m_bits = args.m_bits or BLOOM_M_BITS
         k = args.k or BLOOM_K
 
-    # resume on the hashes table (the marker). It never holds pending ids,
-    # and bloom has no id column, so this job has nothing to roll back: a
-    # redo's duplicate bloom snapshot only re-sets bits under the bit_or fold
-    prior_h = tables.read_table(spark, args.state, "hashes")
-    docs, sl = pending_slice(
-        spark.read.parquet(args.documents).select("doc_id", "text"),
-        prior_h,
-        "doc_id",
-    )
-    n_skipped = sl["n_skipped"]
-    if prior_h is not None and n_skipped == sl["n_in"]:
-        return {
-            "mode": "resume-noop",
-            "docs_in": 0,
-            "skipped_done": n_skipped,
-            "kept": 0,
-            "dropped_as_dups": 0,
-            "corpus_total": tables.row_count(args.state, "hashes"),
-            "compacted": {},
-            "rolled_back": {},
-        }
-
-    new_h = exact_hashes(docs).persist()
-
-    # the first run judges the slice against an empty prior; its bitmap is
-    # then built from that empty prior
-    if prior_h is None:
-        mode, prior_h, words = "bootstrap", new_h.limit(0), None
-    else:
-        mode = "incremental"
-        words = (
-            tables.read_table(spark, args.state, "bloom")
-            .groupBy("widx")
-            .agg(F.bit_or("word").alias("word"))
+    def judge(docs, prior_h, count):
+        new_h = persist_tracked(exact_hashes(docs))
+        # the first run judges the slice against an empty prior; its bitmap
+        # is then built from that empty prior
+        words = None
+        if prior_h is None:
+            prior_h = new_h.limit(0)
+        else:
+            words = (
+                tables.read_table(spark, args.state, "bloom")
+                .groupBy("widx")
+                .agg(F.bit_or("word").alias("word"))
+            )
+        decisions = bloom_gated_keep(new_h, prior_h, m_bits, k, bloom_words=words)
+        # params are written before any state commit (idempotent — same
+        # content every run)
+        if persisted is None:
+            os.makedirs(args.state, exist_ok=True)
+            tmp = params_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump({"m_bits": m_bits, "k": k}, f)
+            os.replace(tmp, params_path)
+        return Commit(
+            appends=[("bloom", bloom_build(new_h, m_bits, k))],
+            marker=new_h,
+            outputs={"decisions": count(
+                decisions, n=F.count("*"), kept=F.count_if(F.col("keep") == 1)
+            )},
         )
-    decisions = bloom_gated_keep(new_h, prior_h, m_bits, k, bloom_words=words)
 
-    # state commits: params first (idempotent — same content every run);
-    # then the decisions output and both state snapshots are written
-    # together, and bloom is published, hashes LAST (the resume marker).
-    # The run's counts are observed on the decisions write
-    if persisted is None:
-        os.makedirs(args.state, exist_ok=True)
-        tmp = params_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"m_bits": m_bits, "k": k}, f)
-        os.replace(tmp, params_path)
-    seen = Observation()
-    tables.append_snapshots(
+    # the hashes table is the marker. Nothing rolls back: bloom has no id
+    # column, and a redo's duplicate bloom snapshot only re-sets bits under
+    # the bit_or fold
+    r = weekly_run(
         spark,
         args.state,
-        [("bloom", bloom_build(new_h, m_bits, k)), ("hashes", new_h, ["id"])],
-        writes=[lambda: tables.write_table(
-            decisions.observe(
-                seen, F.count("*").alias("n"), F.count_if(F.col("keep") == 1).alias("kept")
-            ),
-            args.out,
-            "decisions",
-        )],
-    )
-    n_new, n_kept = seen.get["n"], seen.get["kept"]
-    n_corpus = tables.row_count(args.state, "hashes")
-    new_h.unpersist()
-
-    # small-file hygiene: bloom snapshots fold at read time but their row
-    # count grows per append; compaction pre-folds them into one snapshot
-    # of at most m/64 word rows. Hashes compact by plain union (no
-    # superseded rows — the resume anti-join guarantees unique ids).
-    compacted = tables.compact_tables(
-        spark,
-        args.state,
-        {
+        args.out,
+        spark.read.parquet(args.documents).select("doc_id", "text"),
+        "doc_id",
+        marker="hashes",
+        rollback={},
+        judge=judge,
+        # bloom snapshots fold at read time but their row count grows per
+        # append; compaction pre-folds them into one snapshot of at most
+        # m/64 word rows. Hashes compact by plain union (each id is
+        # appended once)
+        compact={
             "hashes": None,
             "bloom": lambda d: d.groupBy("widx").agg(F.bit_or("word").alias("word")),
         },
-        COMPACT_AFTER,
+        compact_after=COMPACT_AFTER,
     )
+    n, kept = r.counts["n"], r.counts["kept"]
     return {
-        "mode": mode,
-        "docs_in": n_new,
-        "skipped_done": n_skipped,
-        "kept": n_kept,
-        "dropped_as_dups": n_new - n_kept,
-        "corpus_total": n_corpus,
-        "compacted": compacted,
-        "rolled_back": {},
+        "mode": r.mode,
+        "docs_in": n,
+        "skipped_done": r.skipped,
+        "kept": kept,
+        "dropped_as_dups": n - kept,
+        "corpus_total": r.corpus,
+        "compacted": r.compacted,
+        "rolled_back": r.rolled_back,
     }
 
 

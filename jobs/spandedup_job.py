@@ -14,7 +14,7 @@ prior corpus's text is never re-read or re-segmented.
         [--k 3] [--cores 8]
 
 State directory (owned by this job, carried run-to-run; the resume,
-rollback and compaction protocol is in sources/tables.py):
+rollback, commit and compaction protocol is operators.resume.weekly_run):
     segments/   (seg, owner_id) — every distinct segment the corpus has
                 ever owned, with the doc that owns it. Each run appends
                 ONLY the segments it newly owns (absent from all prior
@@ -48,7 +48,6 @@ import sys
 # allow `python jobs/spandedup_job.py` straight from a checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from chapterbridge_ocr_worker_spark.conf import get_spark  # noqa: E402
@@ -69,90 +68,57 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def run(spark, args: argparse.Namespace) -> dict:
     """One weekly run over ``args.documents``; returns the stats line."""
+    from chapterbridge_ocr_worker_spark.operators.cache import persist_tracked
     from chapterbridge_ocr_worker_spark.operators.curation import (
         doc_segments,
         incremental_segment_dedup,
     )
-    from chapterbridge_ocr_worker_spark.operators.resume import pending_slice
+    from chapterbridge_ocr_worker_spark.operators.resume import Commit, weekly_run
     from chapterbridge_ocr_worker_spark.sources import tables
 
-    # resume on the committed-docs marker table
-    done = tables.read_table(spark, args.state, "docs")
-    docs, sl = pending_slice(
-        spark.read.parquet(args.documents).select("doc_id", "text"), done, "doc_id"
-    )
-    n_skipped = sl["n_skipped"]
-    if done is not None and n_skipped == sl["n_in"]:
-        return {
-            "mode": "resume-noop",
-            "docs_in": 0,
-            "skipped_done": n_skipped,
-            "segments_removed": 0,
-            "segments_added": 0,
-            "corpus_docs": tables.row_count(args.state, "docs"),
-            "compacted": {},
-            "rolled_back": {},
-        }
-    rolled_back = tables.rollback_uncommitted(
-        args.state, "docs", {"segments": "owner_id"}, sl["lo"]
-    )
+    def judge(docs, _, count):
+        # each segment's globally-first owner among the slice's docs
+        owners = (
+            doc_segments(docs, args.k)
+            .groupBy("seg")
+            .agg(F.min(F.struct("doc_id", "seg_idx")).alias("own"))
+            .select("seg", F.col("own.doc_id").alias("owner_id"))
+        )
+        # the first run judges the slice against an empty segment set
+        prior = tables.read_table(spark, args.state, "segments")
+        if prior is None:
+            prior = owners.limit(0)
+        cleaned = persist_tracked(incremental_segment_dedup(docs, prior, k=args.k))
+        fresh = owners.join(prior.select("seg"), "seg", "left_anti")
+        return Commit(
+            appends=[("segments", count(fresh, added=F.count("*")), ["owner_id"])],
+            marker=cleaned.select(F.col("doc_id").alias("id")),
+            outputs={"cleaned": count(
+                cleaned, n=F.count("*"), removed=F.sum("n_removed")
+            )},
+        )
 
-    # each segment's globally-first owner among the slice's docs
-    owners = (
-        doc_segments(docs, args.k)
-        .groupBy("seg")
-        .agg(F.min(F.struct("doc_id", "seg_idx")).alias("own"))
-        .select("seg", F.col("own.doc_id").alias("owner_id"))
-    )
-    # the first run judges the slice against an empty segment set
-    prior = tables.read_table(spark, args.state, "segments")
-    mode = "bootstrap" if prior is None else "incremental"
-    if prior is None:
-        prior = owners.limit(0)
-    cleaned = incremental_segment_dedup(docs, prior, k=args.k)
-    fresh = owners.join(prior.select("seg"), "seg", "left_anti")
-
-    cleaned = cleaned.persist()
-    # commit: the cleaned output and both state snapshots are written
-    # together, then segments is published, the docs marker LAST. The
-    # run's counts are observed on the cleaned write; segments_added is
-    # the record_count of the segments snapshot
-    seen = Observation()
-    seg_snap, _ = tables.append_snapshots(
+    r = weekly_run(
         spark,
         args.state,
-        [
-            ("segments", fresh, ["owner_id"]),
-            ("docs", cleaned.select(F.col("doc_id").alias("id")), ["id"]),
-        ],
-        writes=[lambda: tables.write_table(
-            cleaned.observe(
-                seen, F.count("*").alias("n"), F.sum("n_removed").alias("removed")
-            ),
-            args.out,
-            "cleaned",
-        )],
-    )
-    n_new, n_removed = seen.get["n"], int(seen.get["removed"] or 0)
-    n_added = next(
-        s["record_count"] for s in tables.list_snapshots(args.state, "segments")
-        if s["name"] == os.path.basename(seg_snap)
-    )
-    n_corpus = tables.row_count(args.state, "docs")
-    cleaned.unpersist()
-
-    compacted = tables.compact_tables(
-        spark, args.state, {"segments": None, "docs": None}, COMPACT_AFTER
+        args.out,
+        spark.read.parquet(args.documents).select("doc_id", "text"),
+        "doc_id",
+        marker="docs",
+        rollback={"segments": "owner_id"},
+        judge=judge,
+        compact={"segments": None, "docs": None},
+        compact_after=COMPACT_AFTER,
     )
     return {
-        "mode": mode,
-        "docs_in": n_new,
-        "skipped_done": n_skipped,
-        "segments_removed": n_removed,
-        "segments_added": n_added,
-        "corpus_docs": n_corpus,
-        "compacted": compacted,
-        "rolled_back": rolled_back,
+        "mode": r.mode,
+        "docs_in": r.counts["n"],
+        "skipped_done": r.skipped,
+        "segments_removed": int(r.counts["removed"] or 0),
+        "segments_added": r.counts["added"],
+        "corpus_docs": r.corpus,
+        "compacted": r.compacted,
+        "rolled_back": r.rolled_back,
     }
 
 

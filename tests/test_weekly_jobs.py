@@ -1,7 +1,7 @@
-"""The weekly jobs' shared resume-and-rollback protocol (sources/tables.py),
-driven in-process: a crash right after any state append, then a rerun,
-leaves the outputs, every state table and the stats a crash-free run
-leaves."""
+"""The weekly jobs' shared resume-and-rollback protocol
+(operators.resume.weekly_run), driven in-process: a crash right after any
+state append, then a rerun, leaves the outputs, every state table and the
+stats a crash-free run leaves."""
 
 import importlib.util
 import os
@@ -157,10 +157,11 @@ class Weekly:
         state = self.copy_state0(str(root / "clean" / "state"))
         self.clean.append(self.run(1, state, str(root / "clean" / "out1")))
 
-    def run(self, i, state, out):
+    def run(self, i, state, out, *argv):
         """Run the job over slice i; returns (stats, outputs, state rows)."""
         args = self.job.parse_args(
-            [self.spec["flag"], self.inputs[i], "--state", state, "--out", out, *self.spec["argv"]]
+            [self.spec["flag"], self.inputs[i], "--state", state, "--out", out,
+             *self.spec["argv"], *argv]
         )
         stats = self.job.run(self.spark, args)
         outputs = {
@@ -198,8 +199,11 @@ def _without(stats, *keys):
     [
         ("dedup_job", 0, 1),
         ("dedup_job", 1, 1),
+        ("spandedup_job", 0, 1),
         ("spandedup_job", 1, 1),
+        ("embdedup_job", 0, 1),
         ("embdedup_job", 1, 1),
+        ("exactdedup_job", 0, 1),
         ("exactdedup_job", 1, 1),
     ],
 )
@@ -249,6 +253,56 @@ def test_failed_stage_in_weekly_run_publishes_nothing(spark, weekly, fail_stage,
     assert stats == clean_stats
     assert stats["rolled_back"] == {}
     _check_dedup(spark, w, state, out)
+
+
+def test_dedup_job_removes_its_checkpoints(weekly):
+    """The connected-components checkpoints of the bootstrap and of the
+    weekly run are gone from the state dir once each run ends."""
+    w = weekly("dedup_job")
+    for state in (w.state0, str(w.root / "clean" / "state")):
+        left = [f for _, _, fs in os.walk(os.path.join(state, "_checkpoints")) for f in fs]
+        assert left == [], state
+
+
+@pytest.fixture(scope="module")
+def ivf_weekly(spark, weekly, tmp_path_factory):
+    """embdedup_job's slice-0 IVF index, and a crash-free weekly run that
+    maintains a copy of it."""
+    from chapterbridge_ocr_worker_spark.operators.similarity import ivf_build_index
+
+    w = weekly("embdedup_job")
+    root = tmp_path_factory.mktemp("ivf")
+    base = str(root / "base")
+    ivf_build_index(spark.read.parquet(w.inputs[0]), base, n_centroids=2)
+    idx = shutil.copytree(base, str(root / "clean_ivf"))
+    clean = w.run(1, w.copy_state0(str(root / "state")), str(root / "out1"), "--ivf-index", idx)
+    return w, base, clean
+
+
+@pytest.mark.parametrize("commit", [True, False])
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_crash_in_weekly_run_with_ivf_index_then_rerun_is_exact(
+    spark, ivf_weekly, crash_appends, tmp_path, k, commit
+):
+    """embdedup_job --ivf-index publishes the index append (1), then sigs
+    (2), then the vecs marker (3). A crash at any publish, before or after
+    it commits, reruns to the crash-free state and outputs, and the index
+    holds each vector id once."""
+    w, base, (clean_stats, clean_outputs, clean_rows) = ivf_weekly
+    state = w.copy_state0(str(tmp_path / "state"))
+    idx = shutil.copytree(base, str(tmp_path / "ivf"))
+    out = str(tmp_path / "out1")
+    with crash_appends(k, commit), pytest.raises(RuntimeError, match="injected crash"):
+        w.run(1, state, out, "--ivf-index", idx)
+    spark.catalog.clearCache()
+
+    stats, outputs, rows = w.run(1, state, out, "--ivf-index", idx)
+    assert rows == clean_rows
+    assert outputs == clean_outputs
+    if stats["mode"] != "resume-noop":  # a committed marker leaves nothing to redo
+        assert _without(stats, "rolled_back") == _without(clean_stats, "rolled_back")
+    ids = Counter(r["neighbor_id"] for r in tables.read_table(spark, idx, "assignments").collect())
+    assert ids == Counter([0, 1, 2, 10, 11, 12])
 
 
 def test_weekly_dedup_appends_only_the_labels_it_recomputed(spark, weekly):
