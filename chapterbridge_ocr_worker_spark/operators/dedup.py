@@ -33,7 +33,7 @@ partitioning uniformity matters.)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .cache import persist_tracked
@@ -490,6 +490,17 @@ def simhash_signatures(
     return hashed.select("id", signature.alias("simhash"))
 
 
+def _cut(df: DataFrame) -> DataFrame:
+    """Run ``df`` now, as one action, and return its rows with the plan
+    lineage cut: a reliable ``checkpoint`` when the session has a
+    checkpoint dir (recoverable on executor loss), else a
+    ``localCheckpoint`` (executor-local blocks, fine for local[N]).
+    Metrics observed on ``df`` are ready when it returns."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -521,15 +532,16 @@ def connected_components(
     - per round: one groupBy(dst) shuffle over the symmetric edge list +
       two label-table joins, all hash-partitioned on node id — no
       all-pairs, no driver-side graph;
-    - every round eagerly checkpoints the label table, truncating the
-      iterative plan lineage (unbounded lineage is the classic iterative-
-      Spark failure mode: analysis time and stack depth grow per round).
-      Uses reliable ``checkpoint()`` when the session has a checkpoint dir
-      (set one in production — recoverable + GC-able), else
-      ``localCheckpoint`` (executor-local blocks, fine for local[N]);
-    - convergence = zero labels changed in a round; each round costs one
-      count() action, and near-dup graphs (small-diameter star-ish
-      clusters) converge in 2-4 rounds.
+    - every round is ONE action: an eager checkpoint of the label table
+      (_cut), with the round's moved-label count observed on the rows it
+      writes. The checkpoint truncates the iterative plan lineage
+      (unbounded lineage is the classic iterative-Spark failure mode:
+      analysis time and stack depth grow per round). It is reliable
+      ``checkpoint()`` when the session has a checkpoint dir (set one in
+      production — recoverable + GC-able), else ``localCheckpoint``
+      (executor-local blocks, fine for local[N]);
+    - convergence = zero labels changed in a round; near-dup graphs
+      (small-diameter star-ish clusters) converge in 2-4 rounds.
 
     The label table is O(|nodes|) longs — at 10^12 docs it is the same
     order as the doc-id column itself and partitions uniformly.
@@ -553,25 +565,16 @@ def connected_components(
         nodes = sym.select(F.col("src").alias(node_col)).distinct()
     labels = nodes.select(F.col(node_col).alias("id"), F.col(node_col).alias("label"))
 
-    sc = edges.sparkSession.sparkContext
-    try:
-        reliable = sc._jsc.sc().getCheckpointDir().isDefined()
-    except Exception:  # py4j surface moved; localCheckpoint still correct
-        reliable = False
-
-    labels = labels.localCheckpoint(eager=False)
     changed = 0
     rounds = 0
     for _ in range(max_iter):
-        jumped = _cc_round(labels, sym)
-        # LAZY checkpoint: the convergence count below is the action that
-        # materializes it — one job per round instead of two
-        new_labels = (
-            jumped.checkpoint(eager=False) if reliable
-            else jumped.localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter("moved").count()
-        labels = new_labels.drop("moved")
+        # the eager cut is the round's one action (a lazy checkpoint runs
+        # its shuffle stages in a SQL execution of its own anyway)
+        moved = Observation()
+        labels = _cut(
+            _cc_round(labels, sym).observe(moved, F.count_if("moved").alias("n"))
+        ).drop("moved")
+        changed = moved.get["n"]
         rounds += 1
         if changed == 0:
             break
@@ -691,8 +694,9 @@ def incremental_dedup(
       (prior cluster edges ∪ new-involving pairs) — a new doc that chains
       two prior clusters together merges their labels in this output.
     - the output is the run's DELTA of a rolling label table: a prior doc
-      appears iff the frontier closure relabeled it (the closure computes
-      those labels anyway — zero extra joins), so a state-keeping caller
+      appears iff the frontier closure relabeled it (it is a pair's
+      prior endpoint or a member of a prior cluster such an endpoint
+      belongs to), so a state-keeping caller
       (jobs/dedup_job.py) appends the output and reads the table back
       latest-wins per id, and prior labels never go stale across merges.
       Every untouched prior label is already current in that table.
@@ -716,9 +720,16 @@ def incremental_dedup(
     Scale shape: new-side rows drive every join (a week's crawl vs the
     corpus: |new| << |prior|), prior band rows enter through a semi-join
     on the buckets the new slice touches, and the label closure runs over
-    the FRONTIER only (components a new-involving pair touches; untouched
-    prior components are neither relabeled nor emitted). No prior
-    signature is recomputed and no prior pair re-scored. The signature
+    the CONTRACTED FRONTIER only: its nodes are the new docs and one label
+    node per prior cluster a new-involving pair touches (a prior endpoint
+    stands for its cluster, whose connectivity prior_clusters already
+    closed), so the iterative closure is pair-sized, not cluster-sized;
+    one join then gives each touched cluster's members their component's
+    label. Untouched prior components are neither relabeled nor emitted.
+    Each step is one Spark action: the pair stage ends in one eager cut
+    (_cut) that observes the pair count, and each closure round is one
+    more. No prior signature is recomputed and no prior pair re-scored.
+    The signature
     table is the only bucket state: prior band rows are exploded from its
     ``bands`` column (a columnar scan reads just that column), and the
     caps are counted over the touched buckets' rows, which are all of
@@ -729,12 +740,76 @@ def incremental_dedup(
     materialized (id, bh) table held 4000 rows over 3822 distinct
     buckets, and a per-bucket count table 3863 rows.
     """
-    from .fastpath import bucket_pair_sig_matches
-
     # the slice's rows feed the union, the band explode and the output ids:
     # one barrier, unless the caller already holds one
     if not new_sigs.is_cached:
         new_sigs = persist_tracked(new_sigs)
+    if prior_clusters is None:
+        prior_clusters = prior_sigs.select("id", F.col("id").alias("cluster_id"))
+    # the pair stage ends in ONE action, which also counts the pairs
+    n_pairs = Observation()
+    pairs = _cut(
+        _incremental_pairs(
+            new_sigs, prior_sigs, prior_clusters, threshold, min_est, max_bucket
+        ).observe(n_pairs, F.count(F.lit(1)).alias("n"))
+    )
+    if cc_stats is not None:
+        cc_stats["n_new_pairs"] = n_pairs.get["n"]
+
+    # keep/drop: the prior side of a mixed pair always wins; new-new pairs
+    # drop the greater id (keep-lowest-id, same rule as jaccard_keep)
+    drop_id = (
+        F.when(F.col("new_a") & ~F.col("new_b"), F.col("id_a"))
+        .when(F.col("new_b") & ~F.col("new_a"), F.col("id_b"))
+        .otherwise(F.col("id_b"))
+    )
+
+    # cluster labels over the CONTRACTED frontier: prior connectivity is
+    # already closed in prior_clusters, so a prior endpoint enters as its
+    # cluster's label node, and a label is its cluster's min member. A prior
+    # component no new-involving pair reaches cannot change and never enters
+    labels = connected_components(
+        pairs.select(
+            F.coalesce("la", "id_a").alias("id_a"),
+            F.coalesce("lb", "id_b").alias("id_b"),
+        ),
+        stats=cc_stats,
+    )
+    # expand: every member of a touched prior cluster takes the component
+    # label of its cluster's label node
+    members = prior_clusters.join(
+        labels.select(F.col("id").alias("cluster_id"), F.col("cluster_id").alias("c")),
+        "cluster_id",
+    ).select("id", F.col("c").alias("cluster_id"))
+
+    # rows: the new docs, every closure node and every member of a touched
+    # prior cluster, folded per id with the drop flags. Dropped ids are only
+    # ever NEW ids (the drop rule above), so prior rows keep=1; new docs
+    # outside the closure are singletons and fall back to their own id
+    flags = new_sigs.select("id", F.lit(0).alias("drop")).unionByName(
+        pairs.select(drop_id.alias("id"), F.lit(1).alias("drop"))
+    )
+    return (
+        labels.unionByName(members)
+        .unionByName(flags, allowMissingColumns=True)
+        .groupBy("id")
+        .agg(
+            (1 - F.coalesce(F.max("drop"), F.lit(0))).alias("keep"),
+            F.coalesce(F.min("cluster_id"), "id").alias("cluster_id"),
+        )
+    )
+
+
+def _incremental_pairs(
+    new_sigs: DataFrame, prior_sigs: DataFrame, prior_clusters: DataFrame,
+    threshold: float, min_est: float, max_bucket: int,
+) -> DataFrame:
+    """incremental_dedup's pair stage as one plan: every re-ranked pair with
+    a new side, ``(id_a, id_b, new_a, new_b, la, lb)``, where ``la`` /
+    ``lb`` is the prior endpoint's label in ``prior_clusters`` (null for a
+    new endpoint, or a prior one without a label row)."""
+    from .fastpath import bucket_pair_sig_matches
+
     # attach-only union: band rows are derived separately below, so the
     # persisted union never carries the bands column (narrower barrier)
     allsigs = persist_tracked(
@@ -784,79 +859,19 @@ def incremental_dedup(
     # exact re-rank, same stage as jaccard_pairs_lsh
     ta = allsigs.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     tb = allsigs.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
-    pairs = persist_tracked(
+    pairs = (
         est.join(ta, "id_a")
         .join(tb, "id_b")
         .filter(_jaccard(F.col("toks_a"), F.col("toks_b")) >= threshold)
-        .select("id_a", "id_b", "new_a", "new_b")
     )
-
-    if cc_stats is not None:
-        # pairs is persisted above, so this extra action is one cheap pass;
-        # only paid when the caller asked for telemetry
-        cc_stats["n_new_pairs"] = pairs.count()
-
-    # keep/drop: the prior side of a mixed pair always wins; new-new pairs
-    # drop the greater id (keep-lowest-id, same rule as jaccard_keep)
-    drop_id = (
-        F.when(F.col("new_a") & ~F.col("new_b"), F.col("id_a"))
-        .when(F.col("new_b") & ~F.col("new_a"), F.col("id_b"))
-        .otherwise(F.col("id_b"))
-    )
-    dropped = pairs.select(drop_id.alias("id")).distinct()
-
-    # cluster labels: prior connectivity enters as its (linear) cluster
-    # edge list — closure-equivalent to the prior pair relation, without
-    # touching a single prior pair. The closure itself is FRONTIER-LIMITED:
-    # min-label propagation only moves labels along edges, so a prior
-    # component no new-involving pair reaches cannot change — seed the CC
-    # with (a) the new pairs and (b) only the prior cluster edges whose
-    # label belongs to a component some new pair touched. The iterative
-    # closure is then |affected-components|-sized, not corpus-sized.
-    if prior_clusters is None:
-        prior_clusters = prior_sigs.select(
-            F.col("id"), F.col("id").alias("cluster_id")
-        )
-    cluster_edges = prior_clusters.filter(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias("id_a"), F.col("cluster_id").alias("id_b")
-    )
-    touched_prior = (
-        pairs.filter(~F.col("new_a"))
-        .select(F.col("id_a").alias("id"))
-        .unionByName(
-            pairs.filter(~F.col("new_b")).select(F.col("id_b").alias("id"))
-        )
-        .distinct()
-    )
-    # labels of the touched prior docs = the affected components; one hop
-    # suffices because cluster edges are star edges (member -> min label)
-    # and merges only ever travel through new-involving pairs
-    touched_labels = (
-        prior_clusters.join(touched_prior, "id", "left_semi")
-        .select(F.col("cluster_id").alias("id_b"))
-        .distinct()
-    )
-    rel_edges = cluster_edges.join(touched_labels, "id_b", "left_semi")
-    labels = connected_components(
-        rel_edges.unionByName(pairs.select("id_a", "id_b")),
-        stats=cc_stats,
-    )
-
-    # rows: the new docs plus the prior docs the closure labeled. dropped
-    # only ever contains NEW ids (the drop rule above), so prior rows get
-    # keep=1 through the same left join; new docs outside the closure are
-    # singletons and fall back to their own id
-    base = labels.select("id").unionByName(new_sigs.select("id")).distinct()
-    return (
-        base.join(dropped.withColumn("_drop", F.lit(1)), "id", "left")
-        .join(labels, "id", "left")
-        .select(
-            "id",
-            F.when(F.col("_drop").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("keep"),
-            F.coalesce("cluster_id", "id").alias("cluster_id"),
-        )
+    # a pair has at most one prior side (no prior-vs-prior candidates), so
+    # one join on that side labels it
+    prior_id = F.when(~F.col("new_a"), F.col("id_a")).when(~F.col("new_b"), F.col("id_b"))
+    lab = prior_clusters.select(F.col("id").alias("p"), F.col("cluster_id").alias("l"))
+    return pairs.join(lab, prior_id == lab["p"], "left").select(
+        "id_a", "id_b", "new_a", "new_b",
+        F.when(~F.col("new_a"), F.col("l")).alias("la"),
+        F.when(~F.col("new_b"), F.col("l")).alias("lb"),
     )
 
 

@@ -549,19 +549,26 @@ def ivf_append_index(
     centroids, snapshot-append the assignments (crash-safe; readers union
     live snapshots). No prior row is touched or recomputed. Only the ids
     the index lacks are appended, so a redo after a crash adds each id
-    once; the check reads only the assignment snapshots whose recorded
-    neighbor_id range reaches the batch's."""
-    from ..sources.tables import append_snapshot, read_table_pruned
+    once, and a batch the index already holds appends nothing; the check
+    reads only the assignment snapshots whose recorded neighbor_id range
+    reaches the batch's. A crawl-ordered batch reaches none, so it pays no
+    emptiness job."""
+    from ..sources import tables
 
     spark = new_vectors.sparkSession
     cents, _ = _load_centroids(spark, index_path)
     lo, hi = new_vectors.agg(F.min(id_col), F.max(id_col)).first()
-    held = read_table_pruned(spark, index_path, "assignments", "neighbor_id", lo, hi)
+    held = tables.read_table_pruned(spark, index_path, "assignments", "neighbor_id", lo, hi)
     if held is not None:
         new_vectors = new_vectors.join(
             held.select(F.col("neighbor_id").alias(id_col)), id_col, "left_anti"
         )
-    append_snapshot(
+        sel = tables.pruned_selection(
+            tables.table_path(index_path, "assignments"), {"neighbor_id": (lo, hi)}
+        )
+        if (sel is None or sel["paths"]) and new_vectors.isEmpty():
+            return
+    tables.append_snapshot(
         _assign_cells(new_vectors, cents, id_col, vec_col),
         index_path,
         "assignments",

@@ -372,23 +372,33 @@ def append_snapshots(
     failure while staging publishes nothing and raises the first failure
     in list order; its in-flight dirs stay invisible until compaction
     removes them (after 1 h)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
 
     def stage(name, df, *cols):
         built = df if isinstance(df, DataFrame) else df()
         return _stage(table_path(root, name), built, *cols)
 
-    tasks = [functools.partial(stage, *a) for a in appends] + list(writes)
-    if len(tasks) == 1:
-        staged = [tasks[0]()]
-    else:
-        with ThreadPoolExecutor(len(tasks)) as pool:
-            futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
-        # leaving the pool waited for every thread: nothing is still writing
-        staged = [f.result() for f in futures]
+    staged = _concurrently(
+        spark, [functools.partial(stage, *a) for a in appends] + list(writes)
+    )
     return [_publish(table_path(root, a[0]), s) for a, s in zip(appends, staged)]
+
+
+def _concurrently(spark: SparkSession, tasks: list) -> list:
+    """Run functions with no arguments, one thread each (a lone one
+    inline), and return their results in list order once all have ended,
+    or raise the first failure in list order. Threads start through
+    ``inheritable_thread_target``, so the caller's local properties (job
+    group and description) reach their Spark jobs."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    if len(tasks) <= 1:
+        return [t() for t in tasks]
+    with ThreadPoolExecutor(len(tasks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
+    # leaving the pool waited for every thread: nothing is still running
+    return [f.result() for f in futures]
 
 
 def append_snapshot(
@@ -864,14 +874,15 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
 def compact_tables(spark: SparkSession, root: str, how: dict, after: int) -> dict:
     """Compact each table of ``how`` (``{table: keys list, fold callable or
     None}``, as compact_table takes them) that holds more than ``after``
-    live snapshots. Returns ``{table: snapshots_before}`` for those."""
-    compacted = {}
-    for name, keys_or_fold in how.items():
-        if len(_live_snapshots(table_path(root, name)) or []) <= after:
-            continue
-        kw = {"fold": keys_or_fold} if callable(keys_or_fold) else {"keys": keys_or_fold}
-        compacted[name] = compact_table(spark, root, name, **kw)["snapshots_before"]
-    return compacted
+    live snapshots, concurrently (_concurrently). Returns ``{table:
+    snapshots_before}`` for those, in ``how`` order."""
+    due = [n for n in how if len(_live_snapshots(table_path(root, n)) or []) > after]
+
+    def compact(name):
+        kw = {"fold": how[name]} if callable(how[name]) else {"keys": how[name]}
+        return compact_table(spark, root, name, **kw)["snapshots_before"]
+
+    return dict(zip(due, _concurrently(spark, [functools.partial(compact, n) for n in due])))
 
 
 _ZORDER_BITS = 4  # quantization levels per z-order column: 2^4

@@ -22,8 +22,9 @@ rollback, commit and compaction protocol is operators.resume.weekly_run):
                     labels too (no stale labels between runs). Its
                     snapshots record id stats, so a crashed attempt's
                     snapshot rolls back before the redo reads it.
-    _checkpoints/   the connected-components rounds' reliable
-                    checkpoints, removed when the run ends.
+    _checkpoints/   the reliable checkpoints of the pair stage and of the
+                    connected-components rounds, removed when the run
+                    ends.
     The band buckets and their caps are derived from the signatures'
     bands column each run. buckets/ and bucket_counts/ dirs left by older
     layouts of this state dir are ignored.
@@ -115,8 +116,9 @@ def run(spark, args: argparse.Namespace) -> dict:
             )},
         )
 
-    # reliable checkpoints for the connected-components rounds. Spark makes
-    # a fresh <uuid>/ dir under this one per call and never deletes it
+    # reliable checkpoints for the pair stage and the connected-components
+    # rounds. Spark makes a fresh <uuid>/ dir under this one per call and
+    # never deletes it
     sc = spark.sparkContext
     sc.setCheckpointDir(os.path.join(args.state, "_checkpoints"))
     try:

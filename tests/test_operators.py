@@ -354,6 +354,58 @@ def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
     assert by_id[28]["keep"] == 0 and by_id[28]["cluster_id"] == 27  # near-dup
 
 
+def test_incremental_dedup_bridges_two_prior_clusters(spark, tmp_path):
+    """A new doc that near-dups a member of each of two multi-member prior
+    clusters ({10, 11} and {20, 21}) merges them: all five rows come back
+    labeled 10, equal to neardup_clusters over the union, and the new doc
+    is dropped. The new doc touches 11 and 21 only, so 10's and 20's rows
+    come from expanding the touched clusters, not from a pair."""
+    import random
+
+    from chapterbridge_ocr_worker_spark.operators.dedup import (
+        incremental_dedup,
+        materialize_signatures,
+        minhash_signatures,
+        neardup_clusters,
+    )
+
+    rng = random.Random(5)
+    vocab = rng.sample([f"tok{i:03d}" for i in range(4000)], 120)
+    x, y, fa, fb = vocab[:25], vocab[25:50], vocab[50:54], vocab[54:58]
+    # Jaccard: new~11 = new~21 = 0.70, 10~11 = 20~21 = 0.79; every other
+    # pair of these five is at most 0.57
+    texts = {
+        11: x + y[:10],
+        10: x[:21] + fa + y[:10],
+        21: y + x[:10],
+        20: y[:21] + fb + x[:10],
+        30: x + y,
+    }
+    all_docs = spark.createDataFrame(
+        [(i, " ".join(t)) for i, t in texts.items()], ["doc_id", "text"]
+    )
+    prior = all_docs.filter("doc_id < 30")
+    prior_clusters = neardup_clusters(prior, threshold=0.6)
+    assert {r["id"]: r["cluster_id"] for r in prior_clusters.collect()} == {
+        10: 10, 11: 10, 20: 20, 21: 20
+    }
+    got = {
+        r["id"]: (r["keep"], r["cluster_id"])
+        for r in incremental_dedup(
+            minhash_signatures(all_docs.filter("doc_id >= 30")),
+            materialize_signatures(prior, str(tmp_path / "sigs")),
+            prior_clusters,
+            threshold=0.6,
+        ).collect()
+    }
+    full = {
+        r["id"]: r["cluster_id"]
+        for r in neardup_clusters(all_docs, threshold=0.6).collect()
+    }
+    assert got == {10: (1, 10), 11: (1, 10), 20: (1, 10), 21: (1, 10), 30: (0, 10)}
+    assert {i: c for i, (_, c) in got.items()} == full
+
+
 def test_incremental_dedup_bucket_tables_equivalent(spark, tmp_path):
     """The one weekly path, fed a fresh parquet scan of the materialized
     signature table (how the dedup job and query read their prior state),
@@ -757,6 +809,32 @@ def test_ivf_index_build_append_query(spark, tmp_path):
         tuple(r) for r in ivf_topk(allv, qs, k=5, n_centroids=4, nprobe=2).collect()
     }
     assert via_index == inline
+
+
+def test_ivf_append_index_redo_appends_nothing(spark, tmp_path):
+    """Appending a batch the index already holds (the redo of an append
+    whose publish landed) adds no snapshot: after building from ids 0-1
+    and appending ids 10-11 twice, ``assignments`` holds two snapshots and
+    each id once."""
+    from chapterbridge_ocr_worker_spark.operators.similarity import (
+        ivf_append_index,
+        ivf_build_index,
+    )
+    from chapterbridge_ocr_worker_spark.sources import tables
+
+    def batch(ids):
+        return spark.createDataFrame(
+            [(i, [float(i), 1.0 - i, 0.5]) for i in ids],
+            "vec_id: long, embedding: array<float>",
+        )
+
+    idx = str(tmp_path / "ivf")
+    ivf_build_index(batch([0, 1]), idx, n_centroids=2)
+    ivf_append_index(batch([10, 11]), idx)
+    ivf_append_index(batch([10, 11]), idx)
+    assert [s["record_count"] for s in tables.list_snapshots(idx, "assignments")] == [2, 2]
+    held = tables.read_table(spark, idx, "assignments").select("neighbor_id")
+    assert sorted(r[0] for r in held.collect()) == [0, 1, 10, 11]
 
 
 def test_cosine_neardup_cap_drops_degenerate_bucket(spark):

@@ -158,16 +158,36 @@ def test_curate_topk_uses_window_group_limit(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_incremental_dedup_plan_hygiene(spark, tmp_path):
-    """incremental_dedup over a parquet prior-signature table: the prior
-    side must enter as a plain FileScan (no per-char hash fold re-derived
-    for prior docs — 'ascii(' may appear exactly once, for the NEW slice),
-    equi-joins only, no cartesian fallback."""
+def _incremental_pair_plan(docs, prior_sigs):
+    """The pre-cut pair stage of ``incremental_dedup(new, prior_sigs)`` with
+    its defaults (prior docs as singleton clusters), fed the persisted new
+    signatures incremental_dedup feeds it. incremental_dedup ends that
+    stage in a checkpoint, so the frame it returns shows the pairs only as
+    a LogicalRDD; the pair plan is pinned here instead."""
+    from pyspark.sql import functions as F
+
+    from chapterbridge_ocr_worker_spark.operators.cache import persist_tracked
     from chapterbridge_ocr_worker_spark.operators.dedup import (
-        incremental_dedup,
-        materialize_signatures,
+        _incremental_pairs,
         minhash_signatures,
     )
+
+    return _incremental_pairs(
+        persist_tracked(minhash_signatures(docs.filter("doc_id >= 20"))),
+        prior_sigs,
+        prior_sigs.select("id", F.col("id").alias("cluster_id")),
+        threshold=0.6,
+        min_est=0.35,
+        max_bucket=256,
+    )
+
+
+def test_incremental_dedup_plan_hygiene(spark, tmp_path):
+    """incremental_dedup's pair stage over a parquet prior-signature table:
+    the prior side must enter as a plain FileScan (no per-char hash fold
+    re-derived for prior docs — 'ascii(' may appear exactly once, for the
+    NEW slice), equi-joins only, no cartesian fallback."""
+    from chapterbridge_ocr_worker_spark.operators.dedup import materialize_signatures
 
     docs = spark.createDataFrame(
         [(i, f"w{i} common tokens shared {i % 3}") for i in range(30)],
@@ -176,10 +196,7 @@ def test_incremental_dedup_plan_hygiene(spark, tmp_path):
     prior_sigs = materialize_signatures(
         docs.filter("doc_id < 20"), str(tmp_path / "sigs")
     )
-    out = incremental_dedup(
-        minhash_signatures(docs.filter("doc_id >= 20")), prior_sigs
-    )
-    plan = pi.formatted(out)
+    plan = pi.formatted(_incremental_pair_plan(docs, prior_sigs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Scan parquet" in plan  # prior side reads the materialized table
@@ -194,7 +211,7 @@ def test_incremental_dedup_bucket_tables_plan(spark, tmp_path):
     band rows and caps come from the signature table's bands column, so
     this pin no longer requires the (id, bh) and (bh, n) table scans it
     pinned when those tables existed, (b) stay equi-joins, (c) keep the
-    new-slice-only hash fold."""
+    new-slice-only hash fold. Pinned on the pair stage's plan, as above."""
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         materialize_signatures,
@@ -207,10 +224,10 @@ def test_incremental_dedup_bucket_tables_plan(spark, tmp_path):
     )
     sig_path = str(tmp_path / "psigs")
     prior_sigs = materialize_signatures(docs.filter("doc_id < 20"), sig_path)
+    plan = pi.formatted(_incremental_pair_plan(docs, prior_sigs))
     out = incremental_dedup(
         minhash_signatures(docs.filter("doc_id >= 20")), prior_sigs
     )
-    plan = pi.formatted(out)
     assert "psigs]" in plan  # the prior side scans the signature table
     assert "_buckets" not in plan  # and no bucket-state table
     assert "CartesianProduct" not in plan

@@ -718,3 +718,58 @@ def test_compaction_keeps_an_append_committed_during_its_read(spark, tmp_path, m
     assert appended
     assert sorted(r["id"] for r in tables.read_table(spark, root, "t").collect()) == [1, 2, 3]
     assert tables.row_count(root, "t") == 3
+
+
+def _three_snapshot_tables(spark, root):
+    """Tables a and b with three one-row snapshots each, c with one."""
+    for i in range(3):
+        for name, base in (("a", 0), ("b", 10)):
+            tables.append_snapshot(spark.createDataFrame([(base + i,)], "id: long"), root, name)
+    tables.append_snapshot(spark.createDataFrame([(20,)], "id: long"), root, "c")
+
+
+def _ids(spark, root, name):
+    return sorted(r["id"] for r in tables.read_table(spark, root, name).collect())
+
+
+def test_compact_tables_compacts_due_tables_concurrently(spark, tmp_path, monkeypatch):
+    """One compact_tables call compacts both due tables at the same time
+    (each compaction waits for the other to start), each reads the same
+    rows after, and the result lists them in ``how`` order."""
+    import threading
+
+    root = str(tmp_path)
+    _three_snapshot_tables(spark, root)
+    both_started = threading.Barrier(2, timeout=60)
+    real = tables.compact_table
+
+    def compact_table(*a, **kw):
+        both_started.wait()
+        return real(*a, **kw)
+
+    monkeypatch.setattr(tables, "compact_table", compact_table)
+    got = tables.compact_tables(spark, root, {"b": None, "c": None, "a": ["id"]}, 2)
+    assert list(got.items()) == [("b", 3), ("a", 3)]
+    assert _ids(spark, root, "a") == [0, 1, 2]
+    assert _ids(spark, root, "b") == [10, 11, 12]
+    assert [len(tables.list_snapshots(root, t)) for t in "abc"] == [1, 1, 1]
+
+
+def test_compact_tables_failure_propagates(spark, tmp_path, monkeypatch):
+    """A compaction that raises fails the compact_tables call, and the
+    table compacted beside it still reads each of its rows exactly once."""
+    root = str(tmp_path)
+    _three_snapshot_tables(spark, root)
+    real = tables.compact_table
+
+    def compact_table(spark, root, name, **kw):
+        if name == "a":
+            raise RuntimeError("injected compaction failure")
+        return real(spark, root, name, **kw)
+
+    monkeypatch.setattr(tables, "compact_table", compact_table)
+    with pytest.raises(RuntimeError, match="injected compaction failure"):
+        tables.compact_tables(spark, root, {"a": ["id"], "b": None}, 2)
+    assert _ids(spark, root, "a") == [0, 1, 2]
+    assert _ids(spark, root, "b") == [10, 11, 12]
+    assert tables.row_count(root, "b") == 3
