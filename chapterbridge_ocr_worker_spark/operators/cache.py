@@ -15,12 +15,15 @@ is a blunt instrument — it drops caches the caller created too.
 Storage level is configurable through the ``SPARK_GRAFT_SIG_STORAGE`` env
 var (a ``pyspark.StorageLevel`` name): MEMORY_AND_DISK default; DISK_ONLY
 removes the memory-pressure failure mode on very dup-heavy corpora at the
-cost of re-read I/O. At extreme scale write the signature table out as a
-real table instead (see dedup._est_pairs docstring).
+cost of re-read I/O.
+
+The jobs' reliable checkpoint dirs have the same problem (Spark never
+deletes them); ``reliable_checkpoints`` owns their lifetime.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame
@@ -52,3 +55,20 @@ def release_caches() -> int:
         except Exception:
             pass  # session already stopped; nothing to release
     return n
+
+
+@contextlib.contextmanager
+def reliable_checkpoints(spark, root: str):
+    """Reliable checkpoints under ``<root>/_checkpoints`` for the body of
+    the ``with``: with a checkpoint dir set, connected_components and the
+    incremental dedup's pair stage checkpoint reliably (recoverable on
+    executor loss) instead of locally. Spark makes a fresh ``<uuid>/`` dir
+    there per setCheckpointDir call and never deletes it; it is removed
+    when the body ends, on success or failure."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(os.path.join(root, "_checkpoints"))
+    try:
+        yield
+    finally:
+        path = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)

@@ -96,14 +96,27 @@ def incremental_exact_dedup(
     The exact-hash sibling of incremental_dedup (same frozen-prior
     semantics): prior_hashes is the materialized ``exact_hashes`` output
     of everything processed before — 33 bytes/doc, the cheapest possible
-    dedup state. Scale shape: one narrow join on the 128-bit hash
-    (uniform by construction) + one groupBy over new rows only."""
-    new_h = exact_hashes(new_docs, text_col, id_col)
-    first_new = new_h.groupBy("h").agg(F.min("id").alias("first_new"))
-    seen = prior_hashes.select("h").distinct().withColumn("_prior", F.lit(1))
+    dedup state. The keep rule is keep_first_unseen."""
+    return keep_first_unseen(exact_hashes(new_docs, text_col, id_col), prior_hashes)
+
+
+def keep_first_unseen(new_h: DataFrame, prior_h: DataFrame) -> DataFrame:
+    """The exact-dedup keep rule over an ``(id, h)`` stream: ``(id, keep)``
+    per row of ``new_h`` with a non-null h — keep iff h is absent from
+    ``prior_h``'s h column AND id is the smallest id of ``new_h`` carrying
+    h. Content dedup keys on md5(normalized text), the crawl frontier on
+    md5(canonical URL); incremental_exact_dedup, bloom_gated_keep and
+    jobs/exactdedup_job.py all decide through this one function.
+
+    Scale shape: one groupBy over the new rows, then ONE exact left-semi
+    join of the new rows' distinct hashes against ``prior_h``. The prior
+    side is read in full (the join's build side holds every prior hash);
+    only the probe side is |new|-sized."""
+    first = new_h.groupBy("h").agg(F.min("id").alias("first_new"))
+    seen = first.select("h").join(prior_h.select("h"), "h", "left_semi")
     return (
-        new_h.join(first_new, "h")
-        .join(seen, "h", "left")
+        new_h.join(first, "h")
+        .join(seen.withColumn("_prior", F.lit(1)), "h", "left")
         .select(
             "id",
             F.when(
@@ -228,16 +241,11 @@ def materialize_signatures(
     family: int = 0,
 ) -> DataFrame:
     """Write the MinHash signature table (id, toks, sig, bands) to parquet
-    and return a fresh SCAN of it.
-
-    The extreme-scale alternative to the in-memory persist barrier
-    (_est_pairs): the signature plan has five consumers, and on a 100 TB
-    corpus the signatures themselves are tens of TB — too big to pin in
-    executor storage, and worth keeping anyway, because a later INCREMENTAL
-    run (incremental_dedup) band-joins next week's crawl against this very
-    table instead of recomputing the whole corpus. Every downstream
-    consumer becomes a plain columnar FileScan with pushdown (pinned by
-    tests/test_plans.test_sig_table_mode_scans_parquet).
+    and return a fresh SCAN of it — the prior side an INCREMENTAL run
+    (incremental_dedup) band-joins next week's crawl against instead of
+    recomputing the whole corpus; every consumer of it is a plain columnar
+    FileScan with pushdown (pinned by
+    tests/test_plans.test_incremental_dedup_plan_hygiene).
 
     Goes through sources.tables.write_table so the storage layout matches
     the rest of the warehouse; pass the returned frame (or a later
@@ -251,20 +259,6 @@ def materialize_signatures(
     root, name = os.path.split(table_path.rstrip("/"))
     write_table(sigs, root or ".", name)
     return df.sparkSession.read.parquet(table_path)
-
-
-def _sig_source(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    table_path: str | None,
-    family: int = 0,
-) -> DataFrame:
-    """Signature materialization barrier: parquet table when table_path is
-    given (scale path / feeds incremental runs), else a tracked persist."""
-    if table_path is not None:
-        return materialize_signatures(df, table_path, text_col, id_col, family)
-    return persist_tracked(minhash_signatures(df, text_col, id_col, family))
 
 
 def _cap_buckets(e: DataFrame, max_bucket: int) -> DataFrame:
@@ -310,7 +304,7 @@ def _est_pairs(sigs: DataFrame, min_est: float, max_bucket: int) -> DataFrame:
     self-join, and the attach joins), and without a materialization barrier
     each one re-runs the whole signature computation — measured 120 s+ vs
     ~5 s for the join itself at sf0.1. Same pattern as Spark ML's
-    MinHashLSH; at extreme scale write the signature table out instead.
+    MinHashLSH.
 
     Cache LIFETIME is caller-owned (operators return lazy plans and have no
     action of their own to unpersist after): long-lived drivers call
@@ -345,23 +339,17 @@ def minhash_candidates(
     id_col: str = "doc_id",
     min_est: float = 0.5,
     max_bucket: int = 256,
-    table_path: str | None = None,
     family: int = 0,
 ) -> DataFrame:
     """Candidate near-dup pairs with minhash-estimated Jaccard >= min_est.
 
     Persists the signature table internally (see _est_pairs); the CALLER
     owns the cache lifetime — call cache.release_caches() when done, or
-    set SPARK_GRAFT_SIG_STORAGE=DISK_ONLY to keep it off the executor heap.
-    table_path switches the barrier to a materialized parquet signature
-    table (see materialize_signatures) — the 100-TB mode."""
-    if table_path is not None:
-        sigs = materialize_signatures(df, table_path, text_col, id_col, family)
-    else:
-        sigs = persist_tracked(
-            minhash_signatures(df, text_col, id_col, family)
-            .select("id", "sig", "bands")  # toks not needed: keep it narrow
-        )
+    set SPARK_GRAFT_SIG_STORAGE=DISK_ONLY to keep it off the executor heap."""
+    sigs = persist_tracked(
+        minhash_signatures(df, text_col, id_col, family)
+        .select("id", "sig", "bands")  # toks not needed: keep it narrow
+    )
     return _est_pairs(sigs, min_est, max_bucket)
 
 
@@ -372,7 +360,6 @@ def jaccard_pairs_lsh(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 256,
-    table_path: str | None = None,
     family: int = 0,
 ) -> DataFrame:
     """Exact token-set Jaccard >= threshold over MinHash-LSH band candidates.
@@ -389,7 +376,7 @@ def jaccard_pairs_lsh(
     the DuckDB twin recomputes the identical portable-hash pipeline, so the
     output is engine-exact, not merely approximately equal.
     """
-    sigs = _sig_source(df, text_col, id_col, table_path, family)
+    sigs = persist_tracked(minhash_signatures(df, text_col, id_col, family))
     pairs = _est_pairs(sigs, min_est, max_bucket).select("id_a", "id_b")
     ta = sigs.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     tb = sigs.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
@@ -410,7 +397,6 @@ def jaccard_keep(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 256,
-    table_path: str | None = None,
 ) -> DataFrame:
     """The dedup DECISION: ids to keep — a doc is dropped iff it has a
     near-dup (jaccard_pairs_lsh semantics) with a smaller id.
@@ -422,9 +408,7 @@ def jaccard_keep(
     clusters it keeps one representative per cluster without an iterative
     connected-components pass.
     """
-    pairs = jaccard_pairs_lsh(
-        df, threshold, min_est, text_col, id_col, max_bucket, table_path
-    )
+    pairs = jaccard_pairs_lsh(df, threshold, min_est, text_col, id_col, max_bucket)
     dropped = pairs.select(F.col("id_b").alias("id")).distinct()
     return (
         df.select(F.col(id_col).alias("id"))
@@ -636,7 +620,6 @@ def neardup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 256,
-    table_path: str | None = None,
     cc_stats: dict | None = None,
 ) -> DataFrame:
     """Duplicate CLUSTERS: every doc labeled with the min doc_id of its
@@ -650,7 +633,7 @@ def neardup_clusters(
     doc count (one row per doc) regardless of pair-set size.
     """
     pairs = jaccard_pairs_lsh(
-        df, threshold, min_est, text_col, id_col, max_bucket, table_path
+        df, threshold, min_est, text_col, id_col, max_bucket
     ).select("id_a", "id_b")
     nodes = df.select(F.col(id_col).alias("id"))
     return connected_components(pairs, nodes, stats=cc_stats)
@@ -1147,14 +1130,14 @@ def excise_duplicate_substrings(
 
 
 # --- Bloom-filter membership gate -------------------------------------------
-# The 100-TB shape of "is this hash in the prior corpus?": an anti-join of a
-# weekly slice against 10^12 prior hashes shuffles the full prior table every
-# run. A Bloom bitmap over the prior hashes is ~10 bits/key (1.2 GB at 10^9
-# keys) and broadcastable; probing it answers "definitely not present" for
-# the overwhelmingly-novel majority of a crawl slice, so the exact confirm
-# join only ever sees the bloom-POSITIVE sliver (true dups + the deliberate
-# false-positive rate). The final keep/drop set is EXACT regardless of the
-# filter's false positives — the bloom is a prefilter, never the verdict.
+# A Bloom bitmap over the prior hashes is ~10 bits/key (1.2 GB at 10^9 keys)
+# and broadcastable; probing it answers "definitely not present" for the
+# overwhelmingly-novel majority of a crawl slice, so the exact confirm join
+# is PROBED only with the bloom-positive sliver (true dups + the deliberate
+# false-positive rate). That is all the gate shrinks: the confirm join's
+# build side is still every prior hash, so the prior table is read in full
+# either way. The final keep/drop set is EXACT regardless of the filter's
+# false positives — the bloom is a prefilter, never the verdict.
 
 BLOOM_M_BITS = 1 << 18  # bitmap size (bits); ~10 bits/key at 26k keys
 BLOOM_K = 5  # probes per key
@@ -1274,18 +1257,14 @@ def bloom_gated_incremental_exact(
     """incremental_exact_dedup with a Bloom prefilter: same (id, keep)
     output, bit-identical (the equivalence is pinned by test and by the
     shared SQL oracle), but the exact membership join against the prior
-    corpus runs ONLY over bloom-positive hashes. At a real crawl's novelty
-    rate (>90% new content) that cuts the confirm join's probe side by
-    ~10x; the bitmap itself is the only prior-corpus-sized artifact and it
-    is m/64 longs regardless of corpus size. Reference anchor: the resume
-    anti-join semantics of workers/ocr/enqueue.py:49-87, with the prior-
-    key set compressed from a table into a bitmap.
+    corpus is probed ONLY with bloom-positive hashes. At a real crawl's
+    novelty rate (>90% new content) that cuts the confirm join's probe
+    side by ~10x; its build side is still every prior hash. Reference
+    anchor: the resume anti-join semantics of workers/ocr/enqueue.py:49-87,
+    with the probe side prefiltered by a bitmap of the prior keys.
 
-    ``bloom_words``: a prebuilt (widx, word) bitmap table — the persistent
-    state a weekly job maintains by snapshot-appending each slice's bitmap
-    and folding with bit_or at read time (see jobs/exactdedup_job.py).
-    When given, the prior hash table is touched ONLY by the confirm join's
-    bloom-positive sliver; nothing rebuilds the bitmap from the corpus."""
+    ``bloom_words``: a prebuilt (widx, word) bitmap table; without it the
+    bitmap is built from ``prior_hashes``."""
     new_h = exact_hashes(new_docs, text_col, id_col)
     return bloom_gated_keep(
         new_h, prior_hashes, m_bits, k, bloom_words=bloom_words
@@ -1300,35 +1279,21 @@ def bloom_gated_keep(
     bloom_words: DataFrame | None = None,
 ) -> DataFrame:
     """The gate's core over any keyed ``(id, h)`` stream (h a 32-hex md5):
-    ``(id, keep)`` — keep iff h is absent from the prior set AND id is the
-    smallest new id carrying it. Content dedup keys on md5(normalized
-    text); the crawl frontier keys on md5(canonical URL) — same state
-    machine, same bitmap, same exactness guarantee."""
+    keep_first_unseen's ``(id, keep)``, with the prior membership join
+    probed only by the bloom-positive distinct hashes of ``new_h``. The
+    join's build side is every prior hash, as without the gate; a
+    bloom-negative hash is absent from the prior set by construction."""
     words = (
         bloom_words
         if bloom_words is not None
         else bloom_build(prior_hashes, m_bits, k)
     )
     gated = bloom_probe(new_h, words, m_bits, k)
-    # confirm join: only possibly-present hashes touch the prior table
+    # confirm join: only possibly-present hashes probe the prior table
     confirmed = (
         gated.filter(F.col("bloom_pos"))
         .select("h")
         .distinct()
-        .join(prior_hashes.select("h").distinct(), "h", "left_semi")
-        .withColumn("_prior", F.lit(1))
+        .join(prior_hashes.select("h"), "h", "left_semi")
     )
-    first_new = new_h.groupBy("h").agg(F.min("id").alias("first_new"))
-    return (
-        new_h.join(first_new, "h")
-        .join(confirmed, "h", "left")
-        .select(
-            "id",
-            F.when(
-                F.col("_prior").isNull() & (F.col("id") == F.col("first_new")),
-                F.lit(1),
-            )
-            .otherwise(F.lit(0))
-            .alias("keep"),
-        )
-    )
+    return keep_first_unseen(new_h, confirmed)

@@ -85,7 +85,8 @@ def weekly_run(
        snapshot a crashed attempt at this slice published to the
        ``rollback`` tables (``{table: id column}``), so the judge reads
        prior state plainly and every state table holds each row once.
-       Tables without an id column must absorb a redo on their own.
+       Every state table other than the marker needs an id column for
+       this.
     3. judge: ``judge(pending, prior, count)`` gets the pending rows, the
        marker table as committed (None on the bootstrap run, which judges
        against an empty prior) and ``count(df, name=aggregate, ...)``,
@@ -97,7 +98,7 @@ def weekly_run(
        together and publishes the state tables in order, the marker last.
     5. counts, corpus size from the marker's manifest (tables.row_count),
        cache release, then tables.compact_tables compacts each ``compact``
-       table (``{table: keys, fold or None}``) holding more than
+       table (``{table: latest-wins keys or None}``) holding more than
        ``compact_after`` live snapshots.
 
     The table layer is called through its module attribute, so wrappers

@@ -117,13 +117,14 @@ def url_frontier_dedup(
 ) -> DataFrame:
     """Crawl-frontier URL dedup: ``(id, keep)`` per NEW fetch — fetched
     iff its canonical URL was never seen in the prior corpus and it is
-    the oldest new fetch of that URL. The textbook Bloom deployment: at
-    10^12 seen URLs the frontier cannot anti-join the seen table per
-    slice, but it CAN probe a broadcast bitmap and confirm only the
-    bloom-positive sliver (operators.dedup.bloom_gated_keep — same state
-    machine as content dedup, keyed on md5(canonical URL); answers exact
-    at any false-positive rate). ``bloom_words``: persistent bitmap state
-    as maintained by jobs/exactdedup_job.py's table discipline."""
+    the oldest new fetch of that URL. The textbook Bloom deployment: a
+    broadcast bitmap of the seen URLs prefilters the slice, so the exact
+    confirm join against the seen table is probed only with the
+    bloom-positive sliver; its build side is still every seen URL hash
+    (operators.dedup.bloom_gated_keep — the same keep rule as content
+    dedup, keyed on md5(canonical URL); answers exact at any
+    false-positive rate). ``bloom_words``: a prebuilt (widx, word) bitmap
+    of the seen URLs."""
     from .dedup import BLOOM_K, BLOOM_M_BITS, bloom_gated_keep
 
     def keyed(df):

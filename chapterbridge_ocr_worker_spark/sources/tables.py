@@ -693,7 +693,6 @@ def compact_table(
     root: str,
     name: str,
     keys: list[str] | None = None,
-    fold=None,
 ) -> dict:
     """Rewrite all of a table's snapshots into one compacted snapshot —
     the Iceberg `rewrite_data_files` analogue. Every append_snapshot adds a
@@ -701,8 +700,8 @@ def compact_table(
     accumulates thousands of small files and every read pays the listing +
     open cost; compaction restores big-file scans. The rewrite goes through
     the same byte-sizing rebalance as an append, and the compacted
-    snapshot's record_count is observed in it (after ``keys``/``fold``
-    have dropped or folded rows).
+    snapshot's record_count is observed in it (after ``keys`` have
+    dropped superseded rows).
 
     ``keys``: compaction MERGES snapshots, which destroys the per-snapshot
     provenance read_table_latest's latest-wins depends on. For tables that
@@ -729,16 +728,7 @@ def compact_table(
     rewritten and kept. Run ONE compactor at
     a time (two concurrent compactions of the same table would each fold
     the other's output).
-
-    ``fold``: optional DataFrame -> DataFrame transform applied to the
-    unioned rows before the rewrite, for tables whose read-time semantics
-    are an aggregate over snapshots (e.g. a Bloom bitmap folded with
-    bit_or): fold(union of snapshots) must read identically to the union
-    under the table's own reader. Mutually exclusive with ``keys`` (a
-    folded table has no per-snapshot provenance to preserve).
     """
-    if fold is not None and keys is not None:
-        raise ValueError("compact_table: fold and keys are mutually exclusive")
     import shutil
 
     path = table_path(root, name)
@@ -765,8 +755,6 @@ def compact_table(
         df = _latest_wins(spark, old, keys)
     else:
         df = spark.read.parquet(*[d for _, d in old])
-    if fold is not None:
-        df = fold(df)
     # stage the compacted snapshot WITHOUT registering it: a reader during
     # this window still unions exactly the old live set
     staged = _stage(path, df)
@@ -829,10 +817,7 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
     dropping committed state, where (a) alone would match every committed
     snapshot. Caller contract: ids are unique across slices and
     crawl-ordered (every new id above every committed id); a slice that
-    breaks it keeps all committed state but is judged against it as-is.
-    Tables with no id column are exempt and must absorb a redo on their
-    own — exactdedup's bloom words re-set bits that are already set, which
-    the bit_or fold makes idempotent."""
+    breaks it keeps all committed state but is judged against it as-is."""
     mpath = table_path(root, marker)
     m = _read_manifest(mpath)
     if lo is None or (m is None and os.path.isdir(mpath) and _live_dirs(mpath)):
@@ -872,15 +857,14 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
 
 
 def compact_tables(spark: SparkSession, root: str, how: dict, after: int) -> dict:
-    """Compact each table of ``how`` (``{table: keys list, fold callable or
+    """Compact each table of ``how`` (``{table: latest-wins keys or
     None}``, as compact_table takes them) that holds more than ``after``
     live snapshots, concurrently (_concurrently). Returns ``{table:
     snapshots_before}`` for those, in ``how`` order."""
     due = [n for n in how if len(_live_snapshots(table_path(root, n)) or []) > after]
 
     def compact(name):
-        kw = {"fold": how[name]} if callable(how[name]) else {"keys": how[name]}
-        return compact_table(spark, root, name, **kw)["snapshots_before"]
+        return compact_table(spark, root, name, keys=how[name])["snapshots_before"]
 
     return dict(zip(due, _concurrently(spark, [functools.partial(compact, n) for n in due])))
 

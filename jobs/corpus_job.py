@@ -37,7 +37,8 @@ Outputs under --out:
     corpus/   the packed corpus: (doc_id, lang, bucket, shard_id,
               n_tokens, text) with PII redacted, parquet partitioned by
               bucket so a trainer reads shards bucket-parallel
-    _checkpoints/  reliable CC checkpoints (recoverable on executor loss)
+    _checkpoints/  reliable CC checkpoints (recoverable on executor loss),
+              emptied when the near-dup stage ends
 
 Prints ONE JSON line of funnel stats on stdout: doc counts after every
 gate (the number every pipeline owner watches — a gate suddenly eating
@@ -111,9 +112,11 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("corpus-job", cores=args.cores)
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(os.path.join(args.out, "_checkpoints"))
 
-    from chapterbridge_ocr_worker_spark.operators.cache import release_caches
+    from chapterbridge_ocr_worker_spark.operators.cache import (
+        release_caches,
+        reliable_checkpoints,
+    )
     from chapterbridge_ocr_worker_spark.operators.curation import (
         decontaminate_overlap,
         mix_sample,
@@ -144,19 +147,21 @@ def main(argv: list[str] | None = None) -> int:
         docs = docs.join(keep_urls, "doc_id", "left_semi")
         funnel["after_url_dedup"] = docs.count()
 
-    # 1. near-dup cluster dedup: one representative per transitive cluster
+    # 1. near-dup cluster dedup: one representative per transitive cluster,
+    # its connected-components rounds checkpointed reliably under --out
     cc_stats: dict = {}
-    clusters = neardup_clusters(
-        docs.select("doc_id", "text"), threshold=args.threshold, cc_stats=cc_stats
-    )
-    reps = clusters.filter(F.col("id") == F.col("cluster_id")).select(
-        F.col("id").alias("doc_id")
-    )
-    docs = docs.join(reps, "doc_id", "left_semi")
-    # materialize the post-dedup corpus so later gates re-read parquet
-    # instead of re-running the LSH pipeline per downstream action
-    dedup_path = os.path.join(args.out, "_stage_dedup")
-    docs.write.mode("overwrite").parquet(dedup_path)
+    with reliable_checkpoints(spark, args.out):
+        clusters = neardup_clusters(
+            docs.select("doc_id", "text"), threshold=args.threshold, cc_stats=cc_stats
+        )
+        reps = clusters.filter(F.col("id") == F.col("cluster_id")).select(
+            F.col("id").alias("doc_id")
+        )
+        docs = docs.join(reps, "doc_id", "left_semi")
+        # materialize the post-dedup corpus so later gates re-read parquet
+        # instead of re-running the LSH pipeline per downstream action
+        dedup_path = os.path.join(args.out, "_stage_dedup")
+        docs.write.mode("overwrite").parquet(dedup_path)
     release_caches()
     docs = spark.read.parquet(dedup_path)
     funnel["after_dedup"] = docs.count()

@@ -52,7 +52,10 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("curate-job", cores=args.cores)
     spark.sparkContext.setLogLevel("WARN")
 
-    from chapterbridge_ocr_worker_spark.operators.cache import release_caches
+    from chapterbridge_ocr_worker_spark.operators.cache import (
+        release_caches,
+        reliable_checkpoints,
+    )
     from chapterbridge_ocr_worker_spark.operators.dedup import neardup_clusters
     from chapterbridge_ocr_worker_spark.operators.textstats import (
         corpus_language_stats,
@@ -61,21 +64,18 @@ def main(argv: list[str] | None = None) -> int:
 
     docs = spark.read.parquet(args.documents).select("doc_id", "text")
 
-    # reliable (recoverable, GC-able) checkpoints for the iterative
-    # connected-components rounds: with a checkpoint dir set,
-    # connected_components uses checkpoint() instead of localCheckpoint(),
+    # reliable checkpoints for the iterative connected-components rounds,
     # so on a real cluster an executor loss mid-clustering is survivable.
     # --out is the job's durable storage, so co-locate them there.
-    spark.sparkContext.setCheckpointDir(os.path.join(args.out, "_checkpoints"))
-
     cc_stats: dict = {}
-    clusters = neardup_clusters(docs, threshold=args.threshold, cc_stats=cc_stats)
-    # representative = the doc whose id IS its cluster label (the min id)
-    reps = clusters.filter(F.col("id") == F.col("cluster_id")).select(
-        F.col("id").alias("doc_id")
-    )
-    kept = docs.join(reps, "doc_id", "left_semi")
-    kept.write.mode("overwrite").parquet(os.path.join(args.out, "kept_docs"))
+    with reliable_checkpoints(spark, args.out):
+        clusters = neardup_clusters(docs, threshold=args.threshold, cc_stats=cc_stats)
+        # representative = the doc whose id IS its cluster label (the min id)
+        reps = clusters.filter(F.col("id") == F.col("cluster_id")).select(
+            F.col("id").alias("doc_id")
+        )
+        kept = docs.join(reps, "doc_id", "left_semi")
+        kept.write.mode("overwrite").parquet(os.path.join(args.out, "kept_docs"))
     release_caches()  # the pair pipeline's signature caches are done
 
     kept = spark.read.parquet(os.path.join(args.out, "kept_docs"))

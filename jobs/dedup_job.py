@@ -79,7 +79,10 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def run(spark, args: argparse.Namespace) -> dict:
     """One weekly run over ``args.documents``; returns the stats line."""
-    from chapterbridge_ocr_worker_spark.operators.cache import persist_tracked
+    from chapterbridge_ocr_worker_spark.operators.cache import (
+        persist_tracked,
+        reliable_checkpoints,
+    )
     from chapterbridge_ocr_worker_spark.operators.dedup import (
         incremental_dedup,
         minhash_signatures,
@@ -117,11 +120,8 @@ def run(spark, args: argparse.Namespace) -> dict:
         )
 
     # reliable checkpoints for the pair stage and the connected-components
-    # rounds. Spark makes a fresh <uuid>/ dir under this one per call and
-    # never deletes it
-    sc = spark.sparkContext
-    sc.setCheckpointDir(os.path.join(args.state, "_checkpoints"))
-    try:
+    # rounds
+    with reliable_checkpoints(spark, args.state):
         r = weekly_run(
             spark,
             args.state,
@@ -136,9 +136,6 @@ def run(spark, args: argparse.Namespace) -> dict:
             compact={"signatures": None, "clusters": ["id"]},
             compact_after=COMPACT_AFTER,
         )
-    finally:
-        checkpoints = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
-        checkpoints.getFileSystem(sc._jsc.hadoopConfiguration()).delete(checkpoints, True)
     n, kept = r.counts["n"], r.counts["kept"]
     return {
         "mode": r.mode,

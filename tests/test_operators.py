@@ -1702,8 +1702,8 @@ def test_bloom_gate_stays_exact_under_heavy_false_positives(spark):
 
 def test_bloom_build_folds_incrementally(spark):
     """bit_or of two slices' bitmaps == the bitmap of the union — the
-    property that lets weekly runs append a bloom-words snapshot and
-    re-aggregate instead of rebuilding over the full corpus."""
+    property that lets a bitmap grow slice by slice with a re-aggregate
+    instead of a rebuild over the full corpus."""
     from pyspark.sql import functions as F
 
     from chapterbridge_ocr_worker_spark.operators.dedup import (

@@ -125,29 +125,6 @@ def test_q7_fact_chain_broadcasts_all_dims(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_sig_table_mode_scans_parquet(spark, tmp_path):
-    """table_path mode: the five signature consumers must read the
-    MATERIALIZED parquet table — no in-memory barrier, and crucially no
-    re-derivation of the signatures (the per-char hash fold must be absent
-    from the pair plan)."""
-    from chapterbridge_ocr_worker_spark.operators.dedup import jaccard_pairs_lsh
-
-    df = spark.createDataFrame(
-        [(i, f"w{i} common tokens shared {i % 3}") for i in range(30)],
-        ["doc_id", "text"],
-    )
-    sig_path = str(tmp_path / "sigs")
-    pairs = jaccard_pairs_lsh(df, table_path=sig_path)
-    plan = pi.formatted(pairs)
-    assert "sigs" in plan and "Scan parquet" in plan
-    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
-    # signature computation happened at write time, not in this plan:
-    # no token-hash fold (aggregate over split chars) anywhere
-    assert "ascii(" not in plan
-    assert "CartesianProduct" not in plan
-    assert pairs.count() >= 0  # and it actually runs off the table
-
-
 def test_curate_topk_uses_window_group_limit(spark):
     """The per-language top-k must compile to WindowGroupLimit (running
     top-k per group on both the partial and final side) — a plain Window

@@ -130,6 +130,10 @@ def test_dedup_job_cli_bootstrap_then_incremental(spark, tmp_path):
     assert state_labels == full_labels
 
 
+def _files_under(path):
+    return [f for _, _, fs in os.walk(path) for f in fs]
+
+
 def test_curate_job_cli(spark, tmp_path):
     words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
     rows = [
@@ -164,6 +168,8 @@ def test_curate_job_cli(spark, tmp_path):
     # the job must set a RELIABLE checkpoint dir on its durable storage so
     # connected_components survives executor loss on a real cluster
     assert os.path.isdir(os.path.join(out_dir, "_checkpoints"))
+    # ... and removes this run's checkpoints once clustering is done
+    assert _files_under(os.path.join(out_dir, "_checkpoints")) == []
     # closure telemetry surfaces in the stats JSON
     assert stats["cc_converged"] is True and stats["cc_rounds"] >= 1
 
@@ -212,6 +218,7 @@ def test_corpus_job_cli(spark, tmp_path):
     assert stats["after_mix"] == 3
     assert stats["docs_redacted"] == 1 and stats["pii_hits"] == 1  # doc 5
     assert stats["cc_converged"] is True
+    assert _files_under(os.path.join(out_dir, "_checkpoints")) == []
 
     final = spark.read.parquet(f"{out_dir}/corpus")
     got = {r["doc_id"]: r for r in final.collect()}
@@ -536,9 +543,9 @@ def test_corpus_job_substring_excise_stage(spark, tmp_path):
 
 def test_exactdedup_job_cli(spark, tmp_path):
     """The weekly exact-dedup entrypoint (jobs/exactdedup_job.py):
-    bootstrap materializes the hash + bloom state, the incremental run
-    judges a new slice through the folded-bitmap gate, a committed-slice
-    rerun is a no-op (crash recovery: tests/test_weekly_jobs.py)."""
+    bootstrap materializes the hashes state, the incremental run judges a
+    new slice against it, a committed-slice rerun is a no-op (crash
+    recovery: tests/test_weekly_jobs.py)."""
     texts = {i: f"exact doc body number {i}" for i in range(40)}
     texts[24] = texts[3]   # prior-vs-new dup
     texts[26] = texts[25]  # new-vs-new dup
@@ -590,6 +597,7 @@ def test_exactdedup_job_cli(spark, tmp_path):
     s2b = run(w2, str(tmp_path / "out2b"))
     assert s2b["mode"] == "resume-noop"
     assert s2b["skipped_done"] == 16 and s2b["corpus_total"] == 40
+    assert os.listdir(state) == ["hashes"]  # the marker is the only state
 
     # incremental-vs-full equivalence over the whole corpus: the union of
     # per-run decisions == plain keep-first exact dedup of all 40 docs
@@ -612,57 +620,40 @@ def test_exactdedup_job_cli(spark, tmp_path):
     assert {**dec1, **dec} == full_keep
 
 
-def test_exactdedup_job_bloom_fold_compaction(spark, tmp_path):
-    """Weekly bloom snapshots pile up; once past COMPACT_AFTER the job
-    compacts the bloom table with the bit_or FOLD (compact_table's fold
-    hook) — afterwards the table holds at most m/64 word rows in one
-    snapshot, and later runs still dedup exactly against it."""
+def test_exactdedup_job_compaction(spark, tmp_path):
+    """Weekly hashes snapshots pile up; once past COMPACT_AFTER the job
+    compacts the table into one snapshot, and later runs still dedup
+    exactly against it."""
     from chapterbridge_ocr_worker_spark.sources import tables
 
     state = str(tmp_path / "state")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
 
-    def run(i, rows, extra=(), expect_rc=0):
+    def run(i, rows):
         d = str(tmp_path / f"wk{i}")
         spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(d)
         out = subprocess.run(
             [sys.executable, os.path.join(repo, "jobs", "exactdedup_job.py"),
              "--documents", d, "--state", state,
-             "--out", str(tmp_path / f"o{i}"), "--cores", "4", *extra],
+             "--out", str(tmp_path / f"o{i}"), "--cores", "4"],
             capture_output=True, text=True, timeout=600, env=env,
         )
-        assert out.returncode == expect_rc, out.stderr[-2000:]
-        if expect_rc:
-            return out.stderr
+        assert out.returncode == 0, out.stderr[-2000:]
         return json.loads(
             [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
         )
 
-    # 5 tiny slices; the 5th repeats the 1st slice's texts (all drop).
-    # Bootstrap pins non-default bitmap params; later runs pass NO flags
-    # and must pick the persisted values up (the exact drops below prove
-    # the probes matched the bitmap), and a conflicting override is
-    # refused before touching state.
-    run(0, [(j, f"slice 0 doc {j}") for j in range(3)],
-        extra=("--m-bits", "4096", "--k", "3"))
-    err = run(99, [(999, "never processed")],
-              extra=("--m-bits", "8192"), expect_rc=2)
-    assert "conflicts with the state's persisted m_bits=4096" in err
-    for i in range(1, 4):
+    # 5 tiny slices; the 5th repeats the 1st slice's texts (all drop)
+    for i in range(4):
         run(i, [(i * 10 + j, f"slice {i} doc {j}") for j in range(3)])
     s5 = run(4, [(100 + j, f"slice 0 doc {j}") for j in range(3)])
     assert s5["dropped_as_dups"] == 3 and s5["kept"] == 0
-    # the 5th append pushed both tables past COMPACT_AFTER=4
-    assert s5["compacted"] == {"hashes": 5, "bloom": 5}
-    bloom = tables.read_table(spark, state, "bloom")
-    assert len(tables._live_snapshots(os.path.join(state, "bloom"))) == 1
-    # folded: one row per distinct word index, bounded by the PERSISTED
-    # m/64 (the bootstrap's --m-bits 4096, not the module default)
-    n = bloom.count()
-    assert n == bloom.select("widx").distinct().count() <= 4096 // 64
+    # the 5th append pushed the table past COMPACT_AFTER=4
+    assert s5["compacted"] == {"hashes": 5}
+    assert len(tables._live_snapshots(os.path.join(state, "hashes"))) == 1
     assert tables.read_table(spark, state, "hashes").count() == 15
 
-    # post-compaction run still gates exactly
+    # post-compaction run still dedups exactly
     s6 = run(5, [(200, "slice 1 doc 0"), (201, "brand new doc")])
     assert s6["dropped_as_dups"] == 1 and s6["kept"] == 1

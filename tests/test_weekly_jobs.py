@@ -106,23 +106,19 @@ def _check_exact(spark, w, state, out):
     assert got == full_keep
 
 
-def _bloom_folded(df):
-    return df.groupBy("widx").agg(F.bit_or("word").alias("word"))
-
-
 # per job: its two slices, input flag, extra argv, output dirs, state tables
-# (with a read-time fold where the table has one), the tables rollback owns,
-# and the assertions the CLI tests used to make after a simulated crash
+# (the marker published last), the tables rollback owns, and the assertions
+# the CLI tests used to make after a simulated crash
 JOBS = {
     "dedup_job": dict(
         slices=[_texts(DEDUP_TEXTS, range(24)), _texts(DEDUP_TEXTS, range(24, 40))],
         flag="--documents", argv=[], outputs=["decisions"],
-        tables={"signatures": None, "clusters": None}, rolls={"clusters"}, check=_check_dedup,
+        tables=["clusters", "signatures"], rolls={"clusters"}, check=_check_dedup,
     ),
     "spandedup_job": dict(
         slices=[_texts(SPAN_TEXTS, (0, 1, 2)), _texts(SPAN_TEXTS, (10, 11, 12))],
         flag="--documents", argv=["--k", "2"], outputs=["cleaned"],
-        tables={"segments": None, "docs": None}, rolls={"segments"}, check=_check_span,
+        tables=["segments", "docs"], rolls={"segments"}, check=_check_span,
     ),
     "embdedup_job": dict(
         slices=[
@@ -130,12 +126,12 @@ JOBS = {
             ([(10, E1), (11, E3), (12, E3)], "vec_id: long, embedding: array<float>"),
         ],
         flag="--embeddings", argv=[], outputs=["pairs", "keep"],
-        tables={"sigs": None, "vecs": None}, rolls={"sigs"}, check=_check_emb,
+        tables=["sigs", "vecs"], rolls={"sigs"}, check=_check_emb,
     ),
     "exactdedup_job": dict(
         slices=[_texts(EXACT_TEXTS, range(24)), _texts(EXACT_TEXTS, range(24, 40))],
         flag="--documents", argv=[], outputs=["decisions"],
-        tables={"hashes": None, "bloom": _bloom_folded}, rolls=set(), check=_check_exact,
+        tables=["hashes"], rolls=set(), check=_check_exact,
     ),
 }
 
@@ -167,10 +163,7 @@ class Weekly:
         outputs = {
             d: _rows(self.spark.read.parquet(os.path.join(out, d))) for d in self.spec["outputs"]
         }
-        rows = {}
-        for name, fold in self.spec["tables"].items():
-            df = tables.read_table(self.spark, state, name)
-            rows[name] = _rows(fold(df) if fold else df)
+        rows = {n: _rows(tables.read_table(self.spark, state, n)) for n in self.spec["tables"]}
         return stats, outputs, rows
 
     def copy_state0(self, dst):
@@ -211,15 +204,18 @@ def test_crash_after_state_append_then_rerun_is_exact(
     spark, weekly, crash_appends, tmp_path, name, slice_, k
 ):
     """Slice 1 is a weekly run on the bootstrapped state; slice 0 is the
-    bootstrap itself, crashed before its marker. The rerun rolls back the
-    crashed attempt's snapshots and must equal the crash-free run."""
+    bootstrap itself. The run crashes at its k-th publish, after it
+    commits when the marker's publish is still to come, before it commits
+    when it is the marker's own (exactdedup's marker is its only state
+    table). The rerun rolls back the crashed attempt's snapshots and must
+    equal the crash-free run."""
     w = weekly(name)
     state = str(tmp_path / "state")
     if slice_:
         w.copy_state0(state)
     out = str(tmp_path / f"out{slice_}")
     crash = pytest.raises(RuntimeError, match="injected crash")
-    with crash_appends(k, commit=True) as calls, crash:
+    with crash_appends(k, commit=k < len(w.spec["tables"])) as calls, crash:
         w.run(slice_, state, out)
     spark.catalog.clearCache()
 
@@ -262,6 +258,41 @@ def test_dedup_job_removes_its_checkpoints(weekly):
     for state in (w.state0, str(w.root / "clean" / "state")):
         left = [f for _, _, fs in os.walk(os.path.join(state, "_checkpoints")) for f in fs]
         assert left == [], state
+
+
+def test_exactdedup_judge_is_one_membership_join_on_hashes(spark, weekly, monkeypatch, tmp_path):
+    """exactdedup's weekly decisions scan the hashes marker once for h (the
+    exact membership join) and once for id (the resume anti-join, inside
+    the cached slice hashes), read no other table, and hold no Bloom
+    bitmap: no position explode, no widx join."""
+    import re
+
+    from chapterbridge_ocr_worker_spark.plans import inspect as pi
+
+    w = weekly("exactdedup_job")
+    plans = []
+    real = tables.write_table
+
+    def write_table(df, root, name):
+        plans.append(pi.formatted(df))
+        return real(df, root, name)
+
+    monkeypatch.setattr(tables, "write_table", write_table)
+    state = w.copy_state0(str(tmp_path / "state"))
+    assert w.run(1, state, str(tmp_path / "out1")) == w.clean[1]
+    [plan] = plans
+    scans = [
+        (re.search(r"Location: .*", b).group(0), re.search(r"ReadSchema: (.*)", b).group(1))
+        for b in plan.split("\n\n")
+        if re.match(r"\(\d+\) Scan parquet", b.strip())
+    ]
+    hashes = os.path.join(state, "hashes", "")
+    assert sorted(schema for loc, schema in scans if hashes in loc) == [
+        "struct<h:string>",
+        "struct<id:bigint>",
+    ]
+    assert all(hashes in loc or w.inputs[1] in loc for loc, _ in scans)
+    assert "explode" not in plan and "widx" not in plan
 
 
 @pytest.fixture(scope="module")
