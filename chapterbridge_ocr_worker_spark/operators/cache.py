@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 
@@ -64,11 +65,22 @@ def reliable_checkpoints(spark, root: str):
     incremental dedup's pair stage checkpoint reliably (recoverable on
     executor loss) instead of locally. Spark makes a fresh ``<uuid>/`` dir
     there per setCheckpointDir call and never deletes it; it is removed
-    when the body ends, on success or failure."""
+    when the body ends, on success or failure. A failed removal only
+    warns, so the body's own exception is the one that propagates.
+
+    Spark cannot unset a checkpoint dir, so the session still points at
+    the removed dir after the block: nothing in the session may
+    checkpoint after it (a later connected_components would recreate the
+    dir and leave it behind). Each job puts all of its checkpointing work
+    inside the block."""
     sc = spark.sparkContext
     sc.setCheckpointDir(os.path.join(root, "_checkpoints"))
     try:
         yield
     finally:
-        path = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
-        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+        run_dir = sc.getCheckpointDir()
+        try:
+            path = sc._jvm.org.apache.hadoop.fs.Path(run_dir)
+            path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+        except Exception as e:
+            warnings.warn(f"checkpoint dir {run_dir} not removed: {e}")

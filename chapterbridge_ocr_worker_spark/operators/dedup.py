@@ -105,15 +105,19 @@ def keep_first_unseen(new_h: DataFrame, prior_h: DataFrame) -> DataFrame:
     per row of ``new_h`` with a non-null h — keep iff h is absent from
     ``prior_h``'s h column AND id is the smallest id of ``new_h`` carrying
     h. Content dedup keys on md5(normalized text), the crawl frontier on
-    md5(canonical URL); incremental_exact_dedup, bloom_gated_keep and
-    jobs/exactdedup_job.py all decide through this one function.
+    md5(canonical URL); incremental_exact_dedup, bloom_gated_keep (through
+    _keep_first) and jobs/exactdedup_job.py all decide by this rule.
 
-    Scale shape: one groupBy over the new rows, then ONE exact left-semi
-    join of the new rows' distinct hashes against ``prior_h``. The prior
-    side is read in full (the join's build side holds every prior hash);
-    only the probe side is |new|-sized."""
+    Scale shape: one groupBy over the new rows and one over the prior
+    hashes (distinct), then ONE exact membership join of the new rows
+    against them: the prior side is read in full, once."""
+    return _keep_first(new_h, prior_h.select("h").distinct())
+
+
+def _keep_first(new_h: DataFrame, seen: DataFrame) -> DataFrame:
+    """keep_first_unseen's rule with the seen set given: ``seen`` holds
+    distinct h values (one h column), each already seen."""
     first = new_h.groupBy("h").agg(F.min("id").alias("first_new"))
-    seen = first.select("h").join(prior_h.select("h"), "h", "left_semi")
     return (
         new_h.join(first, "h")
         .join(seen.withColumn("_prior", F.lit(1)), "h", "left")
@@ -1252,7 +1256,6 @@ def bloom_gated_incremental_exact(
     k: int = BLOOM_K,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bloom_words: DataFrame | None = None,
 ) -> DataFrame:
     """incremental_exact_dedup with a Bloom prefilter: same (id, keep)
     output, bit-identical (the equivalence is pinned by test and by the
@@ -1261,14 +1264,9 @@ def bloom_gated_incremental_exact(
     novelty rate (>90% new content) that cuts the confirm join's probe
     side by ~10x; its build side is still every prior hash. Reference
     anchor: the resume anti-join semantics of workers/ocr/enqueue.py:49-87,
-    with the probe side prefiltered by a bitmap of the prior keys.
-
-    ``bloom_words``: a prebuilt (widx, word) bitmap table; without it the
-    bitmap is built from ``prior_hashes``."""
+    with the probe side prefiltered by a bitmap of the prior keys."""
     new_h = exact_hashes(new_docs, text_col, id_col)
-    return bloom_gated_keep(
-        new_h, prior_hashes, m_bits, k, bloom_words=bloom_words
-    )
+    return bloom_gated_keep(new_h, prior_hashes, m_bits, k)
 
 
 def bloom_gated_keep(
@@ -1276,24 +1274,19 @@ def bloom_gated_keep(
     prior_hashes: DataFrame,
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
-    bloom_words: DataFrame | None = None,
 ) -> DataFrame:
     """The gate's core over any keyed ``(id, h)`` stream (h a 32-hex md5):
     keep_first_unseen's ``(id, keep)``, with the prior membership join
     probed only by the bloom-positive distinct hashes of ``new_h``. The
     join's build side is every prior hash, as without the gate; a
     bloom-negative hash is absent from the prior set by construction."""
-    words = (
-        bloom_words
-        if bloom_words is not None
-        else bloom_build(prior_hashes, m_bits, k)
-    )
+    words = bloom_build(prior_hashes, m_bits, k)
     gated = bloom_probe(new_h, words, m_bits, k)
     # confirm join: only possibly-present hashes probe the prior table
     confirmed = (
         gated.filter(F.col("bloom_pos"))
         .select("h")
         .distinct()
-        .join(prior_hashes.select("h"), "h", "left_semi")
+        .join(prior_hashes.select("h").distinct(), "h", "left_semi")
     )
-    return keep_first_unseen(new_h, confirmed)
+    return _keep_first(new_h, confirmed)

@@ -113,7 +113,6 @@ def url_frontier_dedup(
     id_col: str = "doc_id",
     m_bits: int | None = None,
     k: int | None = None,
-    bloom_words: DataFrame | None = None,
 ) -> DataFrame:
     """Crawl-frontier URL dedup: ``(id, keep)`` per NEW fetch — fetched
     iff its canonical URL was never seen in the prior corpus and it is
@@ -123,8 +122,7 @@ def url_frontier_dedup(
     bloom-positive sliver; its build side is still every seen URL hash
     (operators.dedup.bloom_gated_keep — the same keep rule as content
     dedup, keyed on md5(canonical URL); answers exact at any
-    false-positive rate). ``bloom_words``: a prebuilt (widx, word) bitmap
-    of the seen URLs."""
+    false-positive rate)."""
     from .dedup import BLOOM_K, BLOOM_M_BITS, bloom_gated_keep
 
     def keyed(df):
@@ -138,5 +136,4 @@ def url_frontier_dedup(
         keyed(prior_df).select("h"),
         m_bits or BLOOM_M_BITS,
         k or BLOOM_K,
-        bloom_words=bloom_words,
     )

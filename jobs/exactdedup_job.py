@@ -22,9 +22,9 @@ Outputs under --out:
 
 Every run judges the slice's hashes with operators.dedup.keep_first_unseen
 against the committed hashes table (the bootstrap against an empty prior):
-one exact membership join whose probe side is the slice's distinct hashes
-and whose build side is every prior hash. Per-run state growth is |new|
-hash rows.
+one exact membership join of the slice's hashes against the distinct
+prior hashes, which reads every prior hash once. Per-run state growth is
+|new| hash rows.
 
 Prints one JSON stats line on stdout (logs on stderr).
 """

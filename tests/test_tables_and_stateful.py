@@ -348,6 +348,31 @@ def test_operator_cache_release(spark, tmp_path):
     assert release_caches() == 0  # idempotent
 
 
+def test_reliable_checkpoints_failed_cleanup_keeps_body_error():
+    """A checkpoint dir that cannot be removed only warns: the exception
+    the body raised is the one the caller sees."""
+    import types
+
+    from chapterbridge_ocr_worker_spark.operators.cache import reliable_checkpoints
+
+    class _Context:
+        def setCheckpointDir(self, d):
+            self.dir = f"{d}/run-uuid"
+
+        def getCheckpointDir(self):
+            return self.dir
+
+        @property
+        def _jvm(self):
+            raise RuntimeError("filesystem unavailable")
+
+    spark = types.SimpleNamespace(sparkContext=_Context())
+    with pytest.warns(UserWarning, match="run-uuid not removed"):
+        with pytest.raises(ValueError, match="body failed"):
+            with reliable_checkpoints(spark, "/state"):
+                raise ValueError("body failed")
+
+
 def test_snapshot_stats_prune_file_skipping(spark, tmp_path):
     """Manifest min/max stats (Iceberg column-stats analogue): a range read
     via read_table_pruned must (a) equal read_table + filter exactly,
