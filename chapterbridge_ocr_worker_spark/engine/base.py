@@ -17,14 +17,6 @@ from typing import Any, Protocol
 LineDict = dict[str, Any]
 
 
-class Tile(Protocol):
-    """A rectangular view of a decoded image, possibly contrast-enhanced."""
-
-    y_start: int
-    y_end: int
-    enhanced: bool
-
-
 class Engine(Protocol):
     """Minimal surface the adaptive pipeline needs from any OCR backend."""
 

@@ -12,10 +12,8 @@ and callers (bench sweeps, long-running jobs) call ``release_caches()``
 between logical units of work. ``spark.catalog.clearCache()`` also works but
 is a blunt instrument — it drops caches the caller created too.
 
-Storage level is configurable through the ``SPARK_GRAFT_SIG_STORAGE`` env
-var (a ``pyspark.StorageLevel`` name): MEMORY_AND_DISK default; DISK_ONLY
-removes the memory-pressure failure mode on very dup-heavy corpora at the
-cost of re-read I/O.
+Every tracked persist is MEMORY_AND_DISK: partitions that do not fit in
+executor memory spill to local disk instead of being recomputed.
 
 The jobs' reliable checkpoint dirs have the same problem (Spark never
 deletes them); ``reliable_checkpoints`` owns their lifetime.
@@ -31,15 +29,12 @@ from pyspark.sql import DataFrame
 
 _LIVE: list[DataFrame] = []
 
-DEFAULT_STORAGE = "MEMORY_AND_DISK"
-
 
 def persist_tracked(df: DataFrame) -> DataFrame:
-    """persist() with the module-tracked lifetime + configurable level."""
+    """persist() at MEMORY_AND_DISK with the module-tracked lifetime."""
     from pyspark import StorageLevel
 
-    name = os.environ.get("SPARK_GRAFT_SIG_STORAGE") or DEFAULT_STORAGE
-    out = df.persist(getattr(StorageLevel, name))
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE.append(out)
     return out
 

@@ -312,9 +312,7 @@ def _est_pairs(sigs: DataFrame, min_est: float, max_bucket: int) -> DataFrame:
 
     Cache LIFETIME is caller-owned (operators return lazy plans and have no
     action of their own to unpersist after): long-lived drivers call
-    operators.cache.release_caches() between units of work, or set
-    SPARK_GRAFT_SIG_STORAGE=DISK_ONLY to keep the barrier off the executor
-    heap.
+    operators.cache.release_caches() between units of work.
     """
     # r6 fastpath: candidate generation + signature-match counting fuse
     # into one bucket-grouped kernel (exact integers) — the old
@@ -348,8 +346,7 @@ def minhash_candidates(
     """Candidate near-dup pairs with minhash-estimated Jaccard >= min_est.
 
     Persists the signature table internally (see _est_pairs); the CALLER
-    owns the cache lifetime — call cache.release_caches() when done, or
-    set SPARK_GRAFT_SIG_STORAGE=DISK_ONLY to keep it off the executor heap."""
+    owns the cache lifetime — call cache.release_caches() when done."""
     sigs = persist_tracked(
         minhash_signatures(df, text_col, id_col, family)
         .select("id", "sig", "bands")  # toks not needed: keep it narrow

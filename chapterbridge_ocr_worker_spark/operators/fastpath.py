@@ -103,14 +103,6 @@ def ordered_sqnorm(V: np.ndarray) -> np.ndarray:
     return acc
 
 
-def ordered_pair_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """row-wise dot over paired rows (n, d)x(n, d) -> (n,), JVM fold order."""
-    acc = np.zeros(A.shape[0], dtype=np.float64)
-    for j in range(A.shape[1]):
-        acc += A[:, j] * B[:, j]
-    return acc
-
-
 def _topk_value_mask(scores: np.ndarray, k: int) -> np.ndarray:
     """Boolean mask (same shape as ``scores``, queries on axis 1) keeping,
     per column, every entry >= the k-th largest value plus every NaN —

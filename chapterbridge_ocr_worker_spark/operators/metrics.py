@@ -19,20 +19,6 @@ def _conf_bucket(conf: Column) -> Column:
     return F.least(F.floor(conf * 10), F.lit(9)).cast("int")
 
 
-def confidence_histogram(ocr_ok: DataFrame) -> DataFrame:
-    """10-bucket histogram of line confidences: bucket i = [i/10, (i+1)/10).
-
-    Built-in path: explode line confidences -> floor(conf*10) -> count.
-    """
-    return (
-        ocr_ok.select(F.explode("lines").alias("line"))
-        .select(_conf_bucket(F.col("line.confidence")).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("line_cnt"))
-        .orderBy("bucket")
-    )
-
-
 def checkpoint_rows(ocr_ok: DataFrame, wall_seconds: float) -> DataFrame:
     """One row per shuffle partition of the OCR stage, matching
     schemas.CHECKPOINT. docs_per_sec/chars_per_sec use the job wall clock

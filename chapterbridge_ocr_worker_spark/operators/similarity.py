@@ -566,7 +566,7 @@ def ivf_append_index(
         sel = tables.pruned_selection(
             tables.table_path(index_path, "assignments"), {"neighbor_id": (lo, hi)}
         )
-        if (sel is None or sel["paths"]) and new_vectors.isEmpty():
+        if sel["paths"] and new_vectors.isEmpty():
             return
     tables.append_snapshot(
         _assign_cells(new_vectors, cents, id_col, vec_col),
@@ -872,22 +872,6 @@ def _pq_sqd_q(a: Column, b: Column) -> Column:
         lambda acc, v: acc + v,
     )
     return F.round(s * F.lit(PQ_SCALE)).cast("long")
-
-
-def _pq_codebook_literal(sample_vecs, m: int, dsub: int) -> Column:
-    """cb[j][c] = subspace-j slice of sampled vector c, as a plan literal
-    (m * ksub * dsub doubles — a few KB, broadcast-equivalent)."""
-    return F.array(
-        *[
-            F.array(
-                *[
-                    F.array(*[F.lit(float(x)) for x in v[j * dsub : (j + 1) * dsub]])
-                    for v in sample_vecs
-                ]
-            )
-            for j in range(m)
-        ]
-    )
 
 
 def _pq_ds_expr(vec: Column, cb: Column, m: int, dsub: int) -> Column:

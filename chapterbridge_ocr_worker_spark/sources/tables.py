@@ -6,6 +6,16 @@ isn't in this container, so the same interface is backed by parquet
 directories; every call site goes through this module, making the swap a
 one-file change.
 
+A table dir is one of two things:
+- a MANIFEST TABLE (append_snapshot(s), compaction, rollback): its
+  ``_live_snapshots.json`` manifest is the only record of its snapshots.
+  A snapshot dir the manifest does not list (a failed or crashed commit's)
+  is no part of the table, and the next compaction deletes it. A table
+  with no manifest yet has no snapshots;
+- a PLAIN DIR (write_table: the jobs' ``--out`` files, IVF centroids, PQ
+  codebooks, search stats): parquet files overwritten as a whole and read
+  as one dir. It takes no snapshots: a commit to it raises.
+
 Scale notes baked in:
 - documents/media/output are written partitioned or bucketed by hash of the
   key they're joined/grouped on, so re-reads co-locate;
@@ -18,8 +28,8 @@ Scale notes baked in:
   directories through ``_live_dirs``;
 - every snapshot write is two phases, stage then publish (Iceberg writes
   the data files, then swaps the metadata pointer). Stage (``_stage``)
-  writes the rows into a dot-prefixed ``.inflight-*`` dir that no reader,
-  listing or adoption sees. Publish (``_publish``) is one ``_commit`` that
+  writes the rows into a dot-prefixed ``.inflight-*`` dir that no reader
+  or listing sees. Publish (``_publish``) is one ``_commit`` that
   names the snapshot ``snap-<commit millis>-<hex>`` at that moment, under
   the lock, and renames it into place, so names follow publish order. A
   multi-table commit (``append_snapshots``: write_run, the weekly jobs)
@@ -67,22 +77,23 @@ def _manifest_path(path: str) -> str:
 
 def _read_manifest(path: str) -> dict | None:
     """Manifest dict {"snapshots": [...], "compacted": {...}?}, or None when
-    the table has no manifest (legacy layout / plain parquet directory):
-    readers then fall back to listing."""
+    the file is absent (a table with no commit yet, or a plain dir). A
+    manifest that exists but cannot be read raises: taken as absent, the
+    next commit would publish a manifest without the committed snapshots
+    and compaction would then delete them."""
     import json
 
-    try:
-        with open(_manifest_path(path)) as f:
-            m = json.load(f)
-            m["snapshots"]  # schema check
-            return m
-    except (OSError, ValueError, KeyError):
+    if not os.path.exists(_manifest_path(path)):
         return None
+    with open(_manifest_path(path)) as f:
+        m = json.load(f)
+    m["snapshots"]  # schema check
+    return m
 
 
-def _live_snapshots(path: str) -> list[str] | None:
+def _live_snapshots(path: str) -> list[str]:
     m = _read_manifest(path)
-    return None if m is None else m["snapshots"]
+    return [] if m is None else m["snapshots"]
 
 
 def _write_manifest(path: str, m: dict) -> None:
@@ -127,9 +138,10 @@ class _manifest_lock:
 
 
 def _list_snapshot_dirs(path: str) -> list[str]:
-    """Committed snapshot dirs. Dot-prefixed dirs are in-flight writes
-    (another appender's data, not yet renamed+committed under the lock) and
-    must never be adopted, read, or GC'd as if they were snapshots."""
+    """Snapshot dirs placed in the table dir, listed or not. Dot-prefixed
+    dirs are in-flight writes (another appender's data, not yet renamed and
+    committed under the lock) and must never be GC'd as if they were
+    snapshots."""
     return sorted(
         d
         for d in os.listdir(path)
@@ -141,80 +153,52 @@ def _parquet_files(d: str) -> list[str]:
     return [f for f in os.listdir(d) if f.endswith(".parquet")]
 
 
-def _adopt_legacy_files(path: str) -> str | None:
-    """Fold top-level parquet files (pre-manifest plain layout, e.g. a
-    write_table output later appended to) into a synthetic snapshot dir so
-    their rows stay visible to manifest readers — without this, adoption
-    listed subdirs only and the legacy rows existed in NO snapshot: readers
-    silently dropped them and compaction's GC deleted them unrecoverably.
+def _commit(path: str, change) -> None:
+    """The one commit of every manifest-table write: a manifest
+    read-modify-write under _manifest_lock, published by one atomic swap.
 
-    Must be called while holding _manifest_lock. Returns the synthetic
-    snapshot name (caller registers it FIRST in the manifest — legacy rows
-    predate every append, so latest-wins must treat them as oldest), or
-    None when there is nothing to adopt."""
-    files = [
-        f
-        for f in os.listdir(path)
-        if os.path.isfile(os.path.join(path, f))
-        and (f.endswith(".parquet") or f == "_SUCCESS")
-    ]
-    if not any(f.endswith(".parquet") for f in files):
-        return None
-    snap_name = f"snap-{int(time.time() * 1000)}-legacy00"
-    snap = os.path.join(path, snap_name)
-    os.makedirs(snap, exist_ok=True)
-    for f in files:
-        os.rename(os.path.join(path, f), os.path.join(snap, f))
-    return snap_name
-
-
-def _commit(path: str, change) -> str | None:
-    """The one commit of every table write: a manifest read-modify-write
-    under _manifest_lock, published by one atomic swap.
-
-    In order: read the manifest; adopt legacy layouts (a table without a
-    manifest adopts its snapshot listing, and loose top-level parquet
-    becomes a synthetic OLDEST snapshot); apply ``change(snapshots,
-    meta)``, which returns the new live list (None keeps it) and may edit
-    ``meta``, the manifest's other keys; drop the per-snapshot entries of
-    snapshots no longer live; publish. Nothing is published when neither
-    the adoption nor the change altered the table. Returns the name of
-    the adopted legacy snapshot, or None."""
+    In order: read the manifest (a table without one starts from no
+    snapshots; a plain dir, holding top-level parquet, raises instead, so
+    its rows are never stranded outside the manifest); apply
+    ``change(snapshots, meta)``, which returns the new live list (None:
+    no change, nothing is published) and may edit ``meta``, the manifest's
+    other keys; drop the per-snapshot entries of snapshots no longer live;
+    publish."""
     with _manifest_lock(path):
         meta = _read_manifest(path)
-        adopted = meta is None
-        snaps = _list_snapshot_dirs(path) if adopted else meta.pop("snapshots")
-        meta = meta or {}
-        legacy = _adopt_legacy_files(path)
-        if legacy is not None:
-            snaps, adopted = [legacy] + snaps, True
-        new = change(snaps, meta)
-        if new is None and not adopted:
-            return None
-        snaps = snaps if new is None else new
+        if meta is None:
+            if _parquet_files(path):
+                raise RuntimeError(
+                    f"{path} is a plain parquet dir (write_table): it takes no snapshots"
+                )
+            meta = {"snapshots": []}
+        snaps = change(meta.pop("snapshots"), meta)
+        if snaps is None:
+            return
         live = set(snaps)
         for key in _PER_SNAPSHOT:
             kept = {s: v for s, v in meta.pop(key, {}).items() if s in live}
             if kept:
                 meta[key] = kept
         _write_manifest(path, {"snapshots": snaps, **meta})
-    return legacy
 
 
 def _live_dirs(path: str, live: list[str] | None = None) -> list[tuple[str, str]]:
     """``(name, dir)`` of each live snapshot in COMMIT order — the
     manifest's append order, which is what latest-wins must rank by (a name
     sort would tie-break two same-millisecond commits on random hex).
-    Manifest entries whose dir is gone are skipped. A table without a
-    manifest falls back to its sorted listing (name order ~ commit order),
-    or to the table dir itself when it holds parquet files (a plain parquet
-    directory); a table dir holding only in-flight writes has no snapshot.
-    ``live``: an already-read manifest list to resolve instead of reading
-    it again."""
+    Manifest entries whose dir is gone are skipped. A dir without a
+    manifest is a plain dir when it holds parquet files (``[(".", path)]``:
+    the dir itself) and otherwise has no snapshot (a new table, one whose
+    first commit failed, or one holding only in-flight writes). ``live``:
+    an already-read manifest list to resolve instead of reading it
+    again."""
     if live is None:
-        live = _live_snapshots(path)
-    if live is None:
-        live = _list_snapshot_dirs(path) or (["."] if _parquet_files(path) else [])
+        m = _read_manifest(path)
+        if m is not None:
+            live = m["snapshots"]
+        else:
+            live = ["."] if _parquet_files(path) else []
     out = []
     for s in live:
         d = os.path.normpath(os.path.join(path, s))
@@ -286,8 +270,8 @@ def _stage(
     ``path``, observing its row count and ``stats_cols`` min/max in the
     write (and, with ``file_stats_cols``, per-file min/max from a footer
     scan of the written files, keyed by file basename). The dir is dot-
-    prefixed, so no reader, listing, adoption or compaction GC (before
-    1 h) treats it as a snapshot until _place renames it."""
+    prefixed, so no reader, listing or compaction GC (before 1 h) treats
+    it as a snapshot until _place renames it."""
     inflight = os.path.join(path, f".inflight-{uuid.uuid4().hex}")
     n_rows, stats = _observed_write(
         df, inflight, stats_cols or [], rebalance=not file_stats_cols
@@ -444,9 +428,10 @@ def append_snapshot(
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame | None:
-    """Read a table (all LIVE snapshots). Returns None if it doesn't exist
-    yet. Tables without a manifest (legacy / plain parquet dirs) fall back
-    to directory listing."""
+    """Read a table: a manifest table's LIVE snapshots, or a plain dir
+    (write_table) as one dir. Returns None when there are none: the table
+    does not exist, or has no manifest and no parquet files (no commit
+    yet, or only a failed first commit's unlisted snapshot)."""
     path = table_path(root, name)
     if not os.path.isdir(path):
         return None
@@ -498,8 +483,9 @@ def pruned_selection(path: str, preds: dict) -> dict | None:
     predicates ``{col: (lo, hi)}``. Snapshot-level column_stats prune
     whole directories; file_stats (when the snapshot recorded them) prune
     individual files inside surviving directories. Returns
-    ``{paths, dirs_total, files_total, files_kept}`` or None for a
-    manifest-less legacy table."""
+    ``{paths, dirs_total, files_total, files_kept}``, or None for a dir
+    without a manifest: a plain dir (write_table), which records no stats,
+    or a table with no commit yet."""
     m = _read_manifest(path)
     if m is None:
         return None
@@ -564,7 +550,7 @@ def read_table_pruned_box(
         return out
 
     sel = pruned_selection(path, preds)
-    if sel is None:  # legacy table: no stats anywhere, plain filtered read
+    if sel is None:  # plain dir (or none yet): no stats, plain filtered read
         full = read_table(spark, root, name)
         return None if full is None else full.filter(_pred())
     if sel["dirs_total"] == 0:
@@ -574,13 +560,9 @@ def read_table_pruned_box(
     return spark.read.parquet(*sel["paths"]).filter(_pred())
 
 
-def _snap_millis(snap_name: str) -> int | None:
-    """Commit milliseconds embedded in a snapshot name, or None for names
-    this module didn't mint (legacy fallback listings)."""
-    try:
-        return int(snap_name.split("-")[1])
-    except (IndexError, ValueError):
-        return None
+def _snap_millis(snap_name: str) -> int:
+    """Commit milliseconds embedded in a snapshot name (_place minted it)."""
+    return int(snap_name.split("-")[1])
 
 
 def list_snapshots(root: str, name: str) -> list[dict]:
@@ -600,25 +582,15 @@ def list_snapshots(root: str, name: str) -> list[dict]:
 
 
 def row_count(root: str, name: str) -> int:
-    """Rows of the table as read_table reads it (0 when it doesn't exist):
-    the sum of the live snapshots' manifest record_count. Snapshots that
-    have none (written before counts were recorded, adopted legacy files,
-    manifest-less tables) are counted from their parquet footers, so no
-    row data is read."""
-    import pyarrow.parquet as pq
-
+    """Rows of a manifest table as read_table reads it (0 when it has no
+    snapshot): the sum of the live snapshots' manifest record_count, so no
+    data file is opened. Every snapshot _place mints records its count; a
+    live snapshot without one, or a plain dir, raises KeyError."""
     path = table_path(root, name)
     if not os.path.isdir(path):
         return 0
     counts = (_read_manifest(path) or {}).get("record_count", {})
-    return sum(
-        counts[s]
-        if s in counts
-        else sum(
-            pq.read_metadata(os.path.join(d, f)).num_rows for f in _parquet_files(d)
-        )
-        for s, d in _live_dirs(path)
-    )
+    return sum(counts[s] for s, _ in _live_dirs(path))
 
 
 def read_table_latest(
@@ -676,8 +648,8 @@ def _latest_wins(spark: SparkSession, dirs: list, keys: list[str]) -> DataFrame:
         *[x for i, (s, _) in enumerate(dirs) for x in (F.lit(s), F.lit(i))]
     )
     snap = F.regexp_extract(F.input_file_name(), r"/(snap-\d+-[0-9a-z]+)/", 1)
-    # rows outside any known snapshot (shouldn't happen post-adoption) rank
-    # oldest rather than erroring
+    # rows outside any snapshot (a plain dir's) rank oldest rather than
+    # erroring
     ord_col = F.coalesce(ordinal[snap], F.lit(-1))
     latest = F.max("_snap_ord").over(Window.partitionBy(*keys))
     return (
@@ -701,7 +673,8 @@ def compact_table(
     open cost; compaction restores big-file scans. The rewrite goes through
     the same byte-sizing rebalance as an append, and the compacted
     snapshot's record_count is observed in it (after ``keys`` have
-    dropped superseded rows).
+    dropped superseded rows). A plain dir or a table with no snapshot is
+    left as it is.
 
     ``keys``: compaction MERGES snapshots, which destroys the per-snapshot
     provenance read_table_latest's latest-wins depends on. For tables that
@@ -718,7 +691,10 @@ def compact_table(
     dropped. A crash before the swap leaves readers on the old snapshots
     (the in-flight dir is invisible, removed by a later compaction); a
     crash after the swap leaves orphan OLD dirs readers also never see —
-    no reader ever observes duplicated rows.
+    no reader ever observes duplicated rows. The swap deletes every
+    snapshot dir the manifest does not list: the old live dirs, and the
+    orphans of earlier crashed or failed commits (a failed first commit's
+    included).
 
     CONCURRENT APPEND SAFE: the live snapshot list is read once, and the
     rewrite reads exactly those dirs. The commit re-reads the manifest
@@ -732,23 +708,14 @@ def compact_table(
     import shutil
 
     path = table_path(root, name)
-    empty = {"files_before": 0, "files_after": 0, "snapshots_before": 0,
-             "legacy_files_adopted": 0}
-    if not os.path.isdir(path):
-        return empty
-    # adopt any legacy layout before reading (a commit with no change of its
-    # own), so the rewrite includes loose top-level rows instead of the GC
-    # deleting data that existed in no snapshot
-    legacy = _commit(path, lambda snaps, meta: None)
-    legacy_files = len(_parquet_files(os.path.join(path, legacy))) if legacy else 0
     # the snapshot set this compaction rewrites, resolved ONCE: the rewrite
     # reads exactly these dirs, and the swap keeps every other live snapshot
     # as a late arrival, so an append committed meanwhile is never both
     # rewritten and kept
     live = _live_snapshots(path)
     old = _live_dirs(path, live)
-    if not old:  # manifest exists but every listed dir is gone
-        return empty
+    if not old:  # no manifest, or every listed dir is gone
+        return {"files_before": 0, "files_after": 0, "snapshots_before": 0}
     files_before = sum(len(_parquet_files(d)) for _, d in old)
     if keys:
         _check_latest_wins(path, name, keys)
@@ -794,7 +761,6 @@ def compact_table(
         "files_before": files_before,
         "files_after": len(_parquet_files(os.path.join(path, placed[0]))),
         "snapshots_before": len(old),
-        "legacy_files_adopted": legacy_files,
     }
 
 
@@ -811,22 +777,19 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
     reach the pending slice (max >= lo), and (b) it was committed after the
     marker's newest snapshot (by the commit millisecond in the snapshot
     names, taken at publish). When in doubt it keeps: snapshots without
-    stats (compaction outputs, adopted legacy files), tables without a
-    manifest and everything committed before the marker's newest snapshot
-    stay. Rule (b) is what keeps a slice that breaks crawl order from
-    dropping committed state, where (a) alone would match every committed
-    snapshot. Caller contract: ids are unique across slices and
-    crawl-ordered (every new id above every committed id); a slice that
-    breaks it keeps all committed state but is judged against it as-is."""
-    mpath = table_path(root, marker)
-    m = _read_manifest(mpath)
-    if lo is None or (m is None and os.path.isdir(mpath) and _live_dirs(mpath)):
-        # nothing pending, or a manifest-less marker with data: keep all (a
-        # marker dir holding only a failed stage's in-flight dir has none)
+    stats (compaction outputs) and everything committed before the
+    marker's newest snapshot stay. A marker without a manifest (no commit
+    yet, or a failed first one) has no newest snapshot, so (b) holds for
+    every snapshot; a table without a manifest has none to drop. Rule (b)
+    is what keeps a slice that breaks crawl order from dropping committed
+    state, where (a) alone would match every committed snapshot. Caller
+    contract: ids are unique across slices and crawl-ordered (every new id
+    above every committed id); a slice that breaks it keeps all committed
+    state but is judged against it as-is."""
+    if lo is None:  # nothing pending
         return {}
-    cutoff = _snap_millis(m["snapshots"][-1]) if m and m["snapshots"] else -1
-    if cutoff is None:
-        return {}
+    marked = _live_snapshots(table_path(root, marker))
+    cutoff = _snap_millis(marked[-1]) if marked else -1
 
     def reaches(rng):
         try:
@@ -837,7 +800,7 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
     dropped = {}
     for name, col in id_cols.items():
         path = table_path(root, name)
-        if _read_manifest(path) is None:
+        if _read_manifest(path) is None:  # no snapshot to drop
             continue
 
         def drop(snaps, meta):
@@ -845,7 +808,7 @@ def rollback_uncommitted(root: str, marker: str, id_cols: dict, lo) -> dict:
             gone = {
                 s for s in snaps
                 if reaches(stats.get(s, {}).get(col))
-                and (_snap_millis(s) or -1) > cutoff
+                and _snap_millis(s) > cutoff
             }
             if not gone:
                 return None
@@ -861,7 +824,7 @@ def compact_tables(spark: SparkSession, root: str, how: dict, after: int) -> dic
     None}``, as compact_table takes them) that holds more than ``after``
     live snapshots, concurrently (_concurrently). Returns ``{table:
     snapshots_before}`` for those, in ``how`` order."""
-    due = [n for n in how if len(_live_snapshots(table_path(root, n)) or []) > after]
+    due = [n for n in how if len(_live_snapshots(table_path(root, n))) > after]
 
     def compact(name):
         return compact_table(spark, root, name, keys=how[name])["snapshots_before"]

@@ -94,6 +94,33 @@ def fail_stage(monkeypatch):
     return fail
 
 
+@pytest.fixture
+def fail_swap(monkeypatch):
+    """fail_swap(table, k) is a context in which the k-th manifest swap
+    (tables._write_manifest) of ``table`` raises "injected swap failure".
+    The swap is the last step of a commit, so an append's or compaction's
+    snapshot dir is already renamed into the table dir, unlisted."""
+    from chapterbridge_ocr_worker_spark.sources import tables
+
+    @contextlib.contextmanager
+    def fail(table: str, k: int = 1):
+        real = tables._write_manifest
+        calls = []
+
+        def write_manifest(path, m):
+            if os.path.basename(path) == table:
+                calls.append(path)
+                if len(calls) == k:
+                    raise RuntimeError(f"injected swap failure ({table}, commit {k})")
+            return real(path, m)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(tables, "_write_manifest", write_manifest)
+            yield
+
+    return fail
+
+
 def _table_state(spark, wh) -> dict:
     """What a reader sees: lineage with multiplicity, latest-wins ocr_output
     and ocr_json, the latest failures snapshot, and the doc_ids in any

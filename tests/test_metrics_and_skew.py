@@ -1,8 +1,8 @@
-"""Coverage for the metrics histogram and skew helpers."""
+"""Coverage for the checkpoint confidence histogram and skew helpers."""
 
 from pyspark.sql import functions as F
 
-from chapterbridge_ocr_worker_spark.operators.metrics import confidence_histogram
+from chapterbridge_ocr_worker_spark.operators.metrics import checkpoint_rows
 from chapterbridge_ocr_worker_spark.operators.skew import (
     repartition_by_cost,
     repartition_spans,
@@ -19,7 +19,9 @@ def _lines_df(spark):
 
 
 def test_confidence_histogram_buckets(spark):
-    hist = {r["bucket"]: r["line_cnt"] for r in confidence_histogram(_lines_df(spark)).collect()}
+    ok = _lines_df(spark).withColumn("text", F.lit("t"))
+    per_part = [r["metrics"]["conf_hist"] for r in checkpoint_rows(ok, 1.0).collect()]
+    hist = {b: n for b, n in enumerate(map(sum, zip(*per_part))) if n}
     assert hist == {0: 1, 1: 1, 9: 3}  # 0.95/0.99 clamp into bucket 9
 
 

@@ -1,4 +1,4 @@
-"""The table layer (sources/tables.py: manifest commits, legacy adoption,
+"""The table layer (sources/tables.py: manifest commits, plain dirs,
 compaction, rollback, row counts, pruned, latest-wins and z-ordered reads)
 and the stateful streaming operator."""
 
@@ -234,80 +234,65 @@ def test_compact_handles_missing_snapshot_dirs(spark, tmp_path):
     assert stats["files_after"] == 0
 
 
-def test_append_adopts_legacy_toplevel_files(spark, tmp_path):
-    """A plain-parquet table (write_table) later appended to: adoption must
-    fold the top-level files into a snapshot so their rows STAY VISIBLE —
-    the old subdir-only adoption stranded them in no snapshot (readers
-    silently dropped them and compaction deleted them unrecoverably)."""
-    import os
-
+def test_append_to_plain_dir_raises_and_keeps_its_rows(spark, tmp_path):
+    """A write_table dir is a plain dir, read as one dir: an append to it
+    raises instead of adopting its files into a snapshot, writes no
+    manifest, and leaves its rows readable as they were."""
     root = str(tmp_path)
-    path = tables.write_table(
-        spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]).coalesce(1),
-        root,
-        "t",
-    )
-    assert any(f.endswith(".parquet") for f in os.listdir(path))
-    tables.append_snapshot(spark.createDataFrame([(3, "c")], ["id", "v"]), root, "t")
-    # no loose top-level parquet remains, and ALL rows survive adoption
-    assert not any(
-        f.endswith(".parquet")
-        for f in os.listdir(path)
-        if os.path.isfile(os.path.join(path, f))
-    )
-    assert tables.read_table(spark, root, "t").count() == 3
-    # legacy rows rank OLDEST under latest-wins: an appended update beats
-    # the pre-adoption row for the same key
-    tables.append_snapshot(
-        spark.createDataFrame([(1, "new")], ["id", "v"]), root, "t"
-    )
-    got = {
-        r["id"]: r["v"]
-        for r in tables.read_table_latest(spark, root, "t", keys=["id"]).collect()
-    }
-    assert got == {1: "new", 2: "b", 3: "c"}
-    # compaction preserves everything (no data-deleting legacy GC)
-    stats = tables.compact_table(spark, root, "t", keys=["id"])
-    assert stats["legacy_files_adopted"] == 0  # adopted at append time
-    got2 = {
-        r["id"]: r["v"]
-        for r in tables.read_table_latest(spark, root, "t", keys=["id"]).collect()
-    }
-    assert got2 == got
+    rows = [(1, "a"), (2, "b")]
+    path = tables.write_table(spark.createDataFrame(rows, ["id", "v"]), root, "t")
+    with pytest.raises(RuntimeError, match="plain parquet dir"):
+        tables.append_snapshot(spark.createDataFrame([(3, "c")], ["id", "v"]), root, "t")
+    assert not os.path.exists(os.path.join(path, "_live_snapshots.json"))
+    assert sorted(tuple(r) for r in tables.read_table(spark, root, "t").collect()) == rows
+    assert tables.compact_table(spark, root, "t")["snapshots_before"] == 0
+    assert sorted(tuple(r) for r in tables.read_table(spark, root, "t").collect()) == rows
 
 
-@pytest.mark.parametrize("recover", ["compact_table", "append_snapshot"])
-def test_compact_adopts_legacy_toplevel_files(spark, tmp_path, recover):
-    """Mixed layout left by OLDER code (manifest exists, loose top-level
-    parquet invisible to it): the next commit, a compaction or an append,
-    folds the stranded rows into a snapshot instead of deleting them
-    (ADVICE r4)."""
-    import json
-    import os
-
+def test_failed_first_swap_leaves_no_snapshot(spark, tmp_path, fail_swap):
+    """A new table's first manifest swap fails after its snapshot dir was
+    renamed into place. With no manifest the table has no snapshot: the
+    dir is not read or counted, the next append's manifest lists only its
+    own snapshot, and the next compaction deletes the orphan dir."""
     root = str(tmp_path)
-    tables.append_snapshot(spark.createDataFrame([(3, "c")], ["id", "v"]), root, "t")
     path = tables.table_path(root, "t")
-    # simulate the old bug: loose parquet at top level, not in any snapshot
-    spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    # (the append above must not have touched the manifest)
-    m = json.load(open(os.path.join(path, "_live_snapshots.json")))
-    assert len(m["snapshots"]) == 1
-    assert tables.read_table(spark, root, "t").count() == 1  # rows stranded
-    if recover == "compact_table":
-        stats = tables.compact_table(spark, root, "t")
-        assert stats["legacy_files_adopted"] >= 1
-        assert tables.read_table(spark, root, "t").count() == 3  # recovered
-    else:
-        tables.append_snapshot(spark.createDataFrame([(4, "d")], ["id", "v"]), root, "t")
-        assert tables.read_table(spark, root, "t").count() == 3 + 1  # recovered
-    assert not any(
-        f.endswith(".parquet")
-        for f in os.listdir(path)
-        if os.path.isfile(os.path.join(path, f))
-    )
+    with fail_swap("t"), pytest.raises(RuntimeError, match="injected swap failure"):
+        tables.append_snapshot(spark.createDataFrame([(1,)], "id: long"), root, "t")
+    [orphan] = [d for d in os.listdir(path) if d.startswith("snap-")]
+    assert tables.read_table(spark, root, "t") is None
+    assert tables.row_count(root, "t") == 0
+    assert tables.list_snapshots(root, "t") == []
+
+    snap = tables.append_snapshot(spark.createDataFrame([(2,)], "id: long"), root, "t")
+    assert tables._live_snapshots(path) == [os.path.basename(snap)]
+    assert _ids(spark, root, "t") == [2]
+    assert tables.row_count(root, "t") == 1
+    tables.compact_table(spark, root, "t")
+    assert not os.path.exists(os.path.join(path, orphan))
+    assert _ids(spark, root, "t") == [2]
+
+
+@pytest.mark.parametrize("content", ["{not json", '{"compacted": {"keys": null}}'])
+def test_unreadable_manifest_raises_on_read_and_commit(spark, tmp_path, content):
+    """A manifest that exists but cannot be read is an error, not a table
+    without snapshots: a commit that took it as absent would publish a
+    manifest without the committed snapshot."""
+    root = str(tmp_path)
+    snap = tables.append_snapshot(spark.createDataFrame([(1,)], "id: long"), root, "t")
+    manifest = os.path.join(root, "t", "_live_snapshots.json")
+    with open(manifest, "w") as f:
+        f.write(content)
+    for call in (
+        lambda: tables.read_table(spark, root, "t"),
+        lambda: tables.row_count(root, "t"),
+        lambda: tables.append_snapshot(spark.createDataFrame([(2,)], "id: long"), root, "t"),
+        lambda: tables.compact_table(spark, root, "t"),
+    ):
+        with pytest.raises((ValueError, KeyError)):
+            call()
+    with open(manifest) as f:
+        assert f.read() == content
+    assert os.path.isdir(snap)
 
 
 def test_read_table_latest_same_millisecond_commits(spark, tmp_path):
@@ -474,11 +459,8 @@ def test_observed_stats_equal_read_back_min_max(spark, tmp_path):
 
 def test_row_count_equals_read_count(spark, tmp_path, monkeypatch):
     """row_count (recorded counts of the live snapshots) equals a full
-    read's count through appends, a rollback, plain and keyed compaction
-    (with an append committed during the rewrite), and on a table whose
-    older snapshots recorded no count."""
-    import json
-    import os
+    read's count through appends, a rollback, and plain and keyed
+    compaction (with an append committed during the rewrite)."""
     import time as _time
 
     root = str(tmp_path)
@@ -527,18 +509,6 @@ def test_row_count_equals_read_count(spark, tmp_path, monkeypatch):
     tables.compact_table(spark, root, "kt", keys=["id"])
     check("kt")
     assert tables.row_count(root, "kt") == 10
-    # snapshots written before counts were recorded: footer-counted
-    tables.append_snapshot(mk(100, 6), root, "old")
-    tables.append_snapshot(mk(200, 3), root, "old")
-    mpath = os.path.join(root, "old", "_live_snapshots.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    m["record_count"] = {m["snapshots"][1]: 3}
-    with open(mpath, "w") as f:
-        json.dump(m, f)
-    tables.append_snapshot(mk(300, 2), root, "old")
-    check("old")
-    assert tables.row_count(root, "old") == 11
     assert tables.row_count(root, "missing") == 0
 
 

@@ -229,6 +229,33 @@ def test_crash_after_state_append_then_rerun_is_exact(
         w.spec["check"](spark, w, state, out)
 
 
+@pytest.mark.parametrize(
+    "name,table", [(name, table) for name, spec in JOBS.items() for table in spec["tables"]]
+)
+def test_failed_first_swap_in_bootstrap_then_rerun_is_exact(
+    spark, weekly, fail_swap, tmp_path, name, table
+):
+    """The bootstrap's first manifest swap of one state table fails after
+    its snapshot dir was renamed into place. Without a manifest that dir
+    is no snapshot, so the rerun neither reads it (spandedup would judge
+    the slice against its own segments) nor takes the marker as committed,
+    rolls back what the attempt published before it, and equals the
+    crash-free bootstrap."""
+    w = weekly(name)
+    state, out = str(tmp_path / "state"), str(tmp_path / "out0")
+    with fail_swap(table), pytest.raises(RuntimeError, match="injected swap failure"):
+        w.run(0, state, out)
+    spark.catalog.clearCache()
+
+    stats, outputs, rows = w.run(0, state, out)
+    clean_stats, clean_outputs, clean_rows = w.clean[0]
+    assert rows == clean_rows
+    assert outputs == clean_outputs
+    assert _without(stats, "rolled_back") == _without(clean_stats, "rolled_back")
+    published = w.spec["tables"][: w.spec["tables"].index(table)]
+    assert stats["rolled_back"] == {t: 1 for t in published if t in w.spec["rolls"]}
+
+
 def test_failed_stage_in_weekly_run_publishes_nothing(spark, weekly, fail_stage, tmp_path):
     """dedup_job's weekly run fails while writing its clusters snapshot:
     no state table gains a snapshot, so the rerun has nothing to roll back
